@@ -51,46 +51,19 @@ object BpeTrain {
   private[graft] val Sep = "\u001f"
   private[graft] val MergeJ = "\u001e"
 
-  /** Per-process memo of a finished training run — (merge table,
-    * final segmentation state) — keyed by (session, dir, corpus
-    * fingerprint, k), the [[MinHashDedup]] labelCache discipline:
-    * `bpe_train` (the merge table) and `bpe_encode` (the segmented
-    * corpus) are two views of ONE training, so the second consumer
-    * must not re-run the k iterations. The state frame is already
-    * localCheckpoint'd (lineage one step deep); entries evict on
-    * fingerprint mismatch or stopped sessions, and
-    * [[clearBpeCache]] / `Lake.clearCaches` is the bulk release.
+  /** Memo of a finished training run — (merge table, final
+    * segmentation state) — keyed by k: `bpe_train` (the merge table)
+    * and `bpe_encode` (the segmented corpus) are two views of ONE
+    * training, so the second consumer must not re-run the k
+    * iterations. The state frame is already localCheckpoint'd (lineage
+    * one step deep).
     */
-  private val trainCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String, Int),
-      (Seq[(Int, String, String, Long)], DataFrame)]()
-
-  private[graft] def clearBpeCache(): Int = {
-    val n = trainCache.size()
-    trainCache.values().forEach { case (_, df) =>
-      try df.unpersist() catch { case _: Throwable => }
-    }
-    trainCache.clear()
-    n
-  }
+  private[graft] val trainMemo =
+    graft.Memo[(Seq[(Int, String, String, Long)], DataFrame)]()
 
   private def cachedTraining(spark: SparkSession, sfDir: String,
-      k: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
-    val fp = MinHashDedup.corpusFingerprint(spark, sfDir)
-    val it = trainCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val key = e.getKey
-      if (key._1.sparkContext.isStopped ||
-          (key._1 == spark && key._2 == sfDir && key._3 != fp)) {
-        try e.getValue._2.unpersist() catch { case _: Throwable => }
-        it.remove()
-      }
-    }
-    trainCache.computeIfAbsent((spark, sfDir, fp, k),
-      _ => trainDocs(Tables.documents(spark, sfDir), k))
-  }
+      k: Int): (Seq[(Int, String, String, Long)], DataFrame) =
+    trainMemo(spark, sfDir, k)(trainDocs(Tables.documents(spark, sfDir), k))
 
   def bpeTrain(spark: SparkSession, sfDir: String, k: Int = 8): DataFrame = {
     val (merges, _) = cachedTraining(spark, sfDir, k)
@@ -261,10 +234,14 @@ object BpeTrain {
         // boundary-flanked merge (see object scaladoc); the pattern and
         // replacement pass as literal COLUMNS — never spliced into an
         // expr string (token text is corpus data)
-        st = st
+        val next = st
           .withColumn("s", call_function("replace", col("s"),
             lit(Sep + a + ss + b + Sep), lit(Sep + a + MergeJ + b + Sep)))
           .localCheckpoint(true)
+        // the superseded state's blocks are dead once next is
+        // materialized (eager checkpoint): release them now, not at GC
+        GraphOps.unpersistCheckpoint(st)
+        st = next
         i += 1
       }
     }

@@ -18,32 +18,11 @@ object GraphOps {
 
   /** Persisted edge aggregate for [[graphPagerankUnrolled]] only (the
     * declared `graph_pagerank` needs no cache — its single collect_list
-    * consumer reads the aggregate once). Tiny (≤|nations|² rows).
-    * Keyed by the FACT TABLES' [[MinHashDedup.corpusFingerprint]]
-    * (ADVICE r11: a corpus rewritten in place at the same path must
-    * not be served a stale edge aggregate — the cachedNgramPairs
-    * discipline); stale fingerprints evict on the next access.
-    * Lifecycle follows [[MinHashDedup.evictStale]]: every access sweeps
-    * stopped-session entries, and unpersist is best-effort — on a
-    * stopped SparkContext it can throw, but the entry REMOVAL is what
-    * releases the reference (the stopped session's storage is already
-    * gone), so neither the sweep nor `Lake.clearCaches` may abort on it.
+    * consumer reads the aggregate once). Tiny (≤|nations|² rows),
+    * fingerprinted over the graph's upstream fact tables.
     */
-  private val unrolledEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), DataFrame]()
-
-  /** The graph's upstream tables — the fingerprint scope. */
-  private val EdgeTables =
-    Seq("lineitem", "orders", "customer", "supplier")
-
-  private[graft] def clearUnrolledEdgeCache(): Int = {
-    val n = unrolledEdgeCache.size()
-    unrolledEdgeCache.values().forEach(df =>
-      try df.unpersist() catch { case _: Throwable => })
-    unrolledEdgeCache.clear()
-    n
-  }
+  private[graft] val unrolledEdgeMemo =
+    graft.Memo[DataFrame]("lineitem", "orders", "customer", "supplier")
 
   /** `graph_pagerank` — weighted PageRank over the nation-level trade
     * graph: an edge u→v with weight w means suppliers in nation u
@@ -220,29 +199,20 @@ object GraphOps {
     // sized aggregate is additionally registered in the cache manager
     // (the dedup_cluster treatment): every fresh subtree canonicalizes
     // onto ONE InMemoryRelation and the fact tables are scanned once
-    // regardless of iteration count. Storage release is
-    // [[clearUnrolledEdgeCache]] / `Lake.clearCaches` (the memo
-    // discipline); the entry itself is ≤625 rows.
-    val fp = MinHashDedup.corpusFingerprint(spark, sfDir, EdgeTables)
-    def edgesF(): DataFrame = {
-      MinHashDedup.evictStale(unrolledEdgeCache,
-        (k: (SparkSession, String, String)) =>
-          k._1 == spark && k._2 == sfDir && k._3 != fp,
-        (k: (SparkSession, String, String)) => k._1)
-      unrolledEdgeCache.computeIfAbsent((spark, sfDir, fp), _ => {
-        val e = edgeAgg(spark, sfDir).persist()
-        // materialize NOW (bench r12): the unrolled plan has ~20 AQE
-        // query stages all reading this relation, and a LAZY cache lets
-        // the early stages race its population — each racer recomputes
-        // the corpus-sized 3-way join (measured 325 s of task time at
-        // sf0.1 vs ~1 s for one build). One eager count = one build.
-        e.count()
-        e
-      })
+    // regardless of iteration count; the entry itself is ≤625 rows.
+    val edges = unrolledEdgeMemo(spark, sfDir) {
+      val e = edgeAgg(spark, sfDir).persist()
+      // materialize NOW (bench r12): the unrolled plan has ~20 AQE
+      // query stages all reading this relation, and a LAZY cache lets
+      // the early stages race its population — each racer recomputes
+      // the corpus-sized 3-way join (measured 325 s of task time at
+      // sf0.1 vs ~1 s for one build). One eager count = one build.
+      e.count()
+      e
     }
     def outsF(): DataFrame =
-      edgesF().groupBy(col("u")).agg(sum(col("w")).as("outw"))
-    def ratioF(): DataFrame = edgesF().join(outsF(), "u")
+      edges.groupBy(col("u")).agg(sum(col("w")).as("outw"))
+    def ratioF(): DataFrame = edges.join(outsF(), "u")
       .select(col("u"), col("dst"),
         expr(s"(CAST(w AS DECIMAL(38,0)) * ${Scale}L) DIV outw").as("r"))
 
@@ -347,35 +317,20 @@ object GraphOps {
       .select(col("u"), col("v"), col("co"))
       .localCheckpoint(true)
 
-  /** Per-process memo of the co-purchase edge aggregate — TWO declared
-    * queries (`graph_triangles`, `graph_cc`) are views of the one
+  /** Memo of the co-purchase edge aggregate — TWO declared queries
+    * (`graph_triangles`, `graph_cc`) are views of the one
     * localCheckpoint'd edge artifact, so the second consumer must not
-    * re-pay the corpus pass (the BpeTrain/lm-memo discipline). Keyed
-    * on the lineitem fingerprint; entries are graph-sized; checkpoint
-    * blocks release with the RDD on entry removal/GC.
+    * re-pay the corpus pass. Entries are graph-sized.
     */
-  private val coEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String, Long), DataFrame]()
-
-  private[graft] def clearCoEdgeCache(): Int = {
-    val n = coEdgeCache.size()
-    coEdgeCache.clear()
-    n
-  }
+  private val coEdgeMemo = graft.Memo[DataFrame]("lineitem")
 
   private def cachedCoPurchaseEdges(spark: SparkSession, sfDir: String,
-      minCo: Long): DataFrame = {
-    val fp = MinHashDedup.corpusFingerprint(spark, sfDir, Seq("lineitem"))
-    MinHashDedup.evictStale(coEdgeCache,
-      (k: (SparkSession, String, String, Long)) =>
-        k._1 == spark && k._2 == sfDir && k._3 != fp,
-      (k: (SparkSession, String, String, Long)) => k._1)
-    coEdgeCache.computeIfAbsent((spark, sfDir, fp, minCo), _ =>
+      minCo: Long): DataFrame =
+    coEdgeMemo(spark, sfDir, minCo) {
       coPurchaseEdges(Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")),
-        minCo))
-  }
+        minCo)
+    }
 
   /** `graph_cc` — connected components of the co-purchase graph,
     * completing the graph trio (centrality `graph_pagerank`, local

@@ -356,86 +356,22 @@ object MinHashDedup {
     */
   val DefaultMaxDfAbs: Int = 10000
 
-  /** Per-process memo of the UN-thresholded pair similarities, keyed by
-    * (session, corpus dir, df caps): the threshold in this family only
-    * ever applies as the FINAL filter, so `dedup_ngram_jaccard` (θ=0.05),
-    * `dedup_cluster`'s edge set (θ=0.2), and any caller-chosen threshold
-    * are all views of ONE similarity pass — the compute-once/report-many
-    * shape a production dedup job has (same rationale as `labelCache`;
-    * same immutable-corpus assumption; released by `Lake.clearCaches`).
-    * The frame is bounded: only pairs sharing ≥1 under-cap shingle exist
-    * in it (never N²).
+  /** Memo of the UN-thresholded pair similarities, keyed by the df
+    * caps: the threshold in this family only ever applies as the FINAL
+    * filter, so `dedup_ngram_jaccard` (θ=0.05), `dedup_cluster`'s edge
+    * set (θ=0.2), and any caller-chosen threshold are all views of ONE
+    * similarity pass — the compute-once/report-many shape a production
+    * dedup job has. The frame is bounded: only pairs sharing ≥1
+    * under-cap shingle exist in it (never N²).
     */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String, Double, Int), DataFrame]()
-
-  /** Cheap corpus fingerprint (VERDICT r5 #8): sorted (path, length,
-    * mtime) of every file under the named tables (default: the
-    * documents table), MD5'd. One driver-side metadata listing per
-    * memoized call — no data is read — and it turns the memos'
-    * immutable-corpus assumption into an ENFORCED key component:
-    * rewriting the fixture in place changes file names/sizes/mtimes,
-    * so the next call computes fresh results instead of serving stale
-    * ones (no `Lake.clearCaches()` needed; the clear API remains the
-    * storage-release lever). A live lake would use its
-    * snapshot/version id — this is the parquet-dir equivalent.
-    */
-  private[graft] def corpusFingerprint(spark: SparkSession, sfDir: String,
-      tables: Seq[String] = Seq("documents")): String = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    tables.foreach { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$sfDir/$t.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) buf += s"$t|absent"
-      else {
-        val it = fs.listFiles(p, true)
-        while (it.hasNext) {
-          val f = it.next()
-          buf += s"${f.getPath}|${f.getLen}|${f.getModificationTime}"
-        }
-      }
-    }
-    val md = java.security.MessageDigest.getInstance("MD5")
-    buf.sorted.foreach(s => md.update((s + "\n").getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** Evict (and unpersist) memo entries for the same (session, dir)
-    * whose fingerprint no longer matches — a rewritten corpus must not
-    * strand the old persisted frames in executor storage. Every sweep
-    * also drops entries whose SparkSession has been STOPPED (ADVICE r7:
-    * otherwise frames keyed by other dirs or dead sessions stay pinned
-    * — holding SparkSession references — until an explicit
-    * `Lake.clearCaches()`); unpersist on a stopped session can throw,
-    * so it is best-effort — the entry removal is what releases the
-    * reference, the stopped session's storage is already gone.
-    */
-  private[operators] def evictStale[K](cache: java.util.concurrent.ConcurrentHashMap[
-      K, DataFrame], isStale: K => Boolean,
-      sessionOf: K => SparkSession): Unit = {
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val stopped = sessionOf(e.getKey).sparkContext.isStopped
-      if (stopped || isStale(e.getKey)) {
-        try e.getValue.unpersist() catch { case _: Throwable => }
-        it.remove()
-      }
-    }
-  }
+  private val pairMemo = graft.Memo[DataFrame]()
 
   private def cachedNgramPairs(spark: SparkSession, sfDir: String,
-      maxDfFrac: Double, maxDfAbs: Int = DefaultMaxDfAbs): DataFrame = {
-    val fp = corpusFingerprint(spark, sfDir)
-    evictStale(pairCache,
-      (k: (SparkSession, String, String, Double, Int)) =>
-        k._1 == spark && k._2 == sfDir && k._3 != fp,
-      (k: (SparkSession, String, String, Double, Int)) => k._1)
-    pairCache.computeIfAbsent((spark, sfDir, fp, maxDfFrac, maxDfAbs), _ =>
+      maxDfFrac: Double, maxDfAbs: Int = DefaultMaxDfAbs): DataFrame =
+    pairMemo(spark, sfDir, maxDfFrac, maxDfAbs) {
       ngramPairsDocs(Tables.documents(spark, sfDir), maxDfFrac, maxDfAbs)
-        .persist())
-  }
+        .persist()
+    }
 
   /** `dedup_containment` — directional containment similarity
     * C(A,B) = |A∩B| / min(|A|,|B|): the sub-document-duplication signal
@@ -443,7 +379,7 @@ object MinHashDedup {
     * tiny Jaccard (union is dominated by the long doc) but containment
     * 1.0. Standard alongside Jaccard in crawl dedup (quote/boilerplate
     * inclusion). Another VIEW of the memoized inverted-index pass
-    * (`pairCache` — same single similarity computation powers Jaccard
+    * (`pairMemo` — same single similarity computation powers Jaccard
     * thresholds, the cluster edge set, and this): the contained side is
     * the smaller shingle set, ties keep the a-side for determinism.
     */
@@ -594,8 +530,8 @@ object MinHashDedup {
       threshold: Double = 0.2, maxIter: Int = 20): DataFrame =
     cachedClusterLabels(spark, sfDir, threshold, maxIter)
 
-  /** Per-process memo of the resolved cluster labels, keyed by
-    * (session, corpus dir, threshold, maxIter). `dedup_cluster` and
+  /** Memo of the resolved cluster labels, keyed by threshold and
+    * maxIter. `dedup_cluster` and
     * `dedup_cluster_stats` are two views of ONE labels computation
     * (VERDICT r3 #2 — the stats query used to re-run the whole
     * similarity + CC pipeline); the first caller pays for the
@@ -606,32 +542,17 @@ object MinHashDedup {
     * production dedup job shares labels across its reporting queries
     * (compute once, derive survivors AND histogram from it).
     */
-  private val labelCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String, Double, Int), DataFrame]()
+  private val labelMemo = graft.Memo[DataFrame]()
 
-  /** Keyed on the corpus FINGERPRINT as well as (session, dir,
-    * threshold, maxIter) — see [[corpusFingerprint]]: an in-process
-    * rewrite of the corpus yields fresh labels on the next call (spec:
-    * "memo caches refresh on corpus rewrite"), while the stale entries
-    * are unpersisted eagerly so repeated rewrites cannot accumulate
-    * executor storage. [[clearLabelCache]] (via `Lake.clearCaches()`)
-    * remains the bulk storage-release lever for long-lived sessions.
-    */
   private def cachedClusterLabels(spark: SparkSession, sfDir: String,
-      threshold: Double, maxIter: Int): DataFrame = {
-    val fp = corpusFingerprint(spark, sfDir)
-    evictStale(labelCache,
-      (k: (SparkSession, String, String, Double, Int)) =>
-        k._1 == spark && k._2 == sfDir && k._3 != fp,
-      (k: (SparkSession, String, String, Double, Int)) => k._1)
-    labelCache.computeIfAbsent((spark, sfDir, fp, threshold, maxIter), _ =>
+      threshold: Double, maxIter: Int): DataFrame =
+    labelMemo(spark, sfDir, threshold, maxIter) {
       clusterFromPairs(Tables.documents(spark, sfDir),
         cachedNgramPairs(spark, sfDir, maxDfFrac = 0.3)
           .filter(col("jaccard") >= threshold)
           .select(col("a_id"), col("b_id")), maxIter)
-        .persist())
-  }
+        .persist()
+    }
 
   /** Materialize the pair-similarity and cluster-label memos for the
     * parameter points the DECLARED queries use (maxDfFrac 0.3; θ=0.2,
@@ -646,19 +567,6 @@ object MinHashDedup {
     cachedNgramPairs(spark, sfDir, maxDfFrac = 0.3).count()
     cachedClusterLabels(spark, sfDir, threshold = 0.2, maxIter = 20).count()
     ()
-  }
-
-  /** Unpersist every memoized labels and pair-similarity frame and drop
-    * both memos. Part of [[graft.Lake.clearCaches]]; returns the number
-    * of entries cleared.
-    */
-  private[graft] def clearLabelCache(): Int = {
-    val n = labelCache.size() + pairCache.size()
-    labelCache.values().forEach(df => { df.unpersist(); () })
-    labelCache.clear()
-    pairCache.values().forEach(df => { df.unpersist(); () })
-    pairCache.clear()
-    n
   }
 
   /** Core of `dedup_cluster` over any (doc_id, source, text) frame
@@ -703,6 +611,8 @@ object MinHashDedup {
           (coalesce(col("jlbl"), col("lbl")) < col("old_lbl")).as("changed"))
         .localCheckpoint(true)
       converged = next.filter(col("changed")).limit(1).count() == 0L
+      // the superseded round's blocks are dead once next is materialized
+      GraphOps.unpersistCheckpoint(labels)
       labels = next.drop("changed")
       i += 1
     }
@@ -713,11 +623,16 @@ object MinHashDedup {
           "with pointer doubling this needs a component of diameter " +
           s"> 2^$maxIter; refusing to emit partially-propagated cluster ids")
     }
-    labels
+    // checkpointed, so the result owns its blocks at its plan root and
+    // the last round's can go
+    val out = labels
       .select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
       .withColumn("is_survivor",
         when(col("doc_id") === col("cluster_id"), 1).otherwise(0))
       .orderBy(col("doc_id").asc)
+      .localCheckpoint(true)
+    GraphOps.unpersistCheckpoint(labels)
+    out
   }
 
   /** `dedup_cluster_stats` — the cluster-size histogram over

@@ -189,49 +189,18 @@ object Multimodal {
     * of blob bytes, so DuckDB recomputes it from the same integer
     * arithmetic and the hash gate is exact.
     */
-  /** Per-fixture memo of the corpus phash frame (asset_id, mime,
-    * phash — null for unqualified short assets): the 62-bit dHash is a
-    * 252-substr codegen tree, and `multimodal_phash` +
+  /** Memo of the corpus phash frame (asset_id, mime, phash — null for
+    * unqualified short assets): the 62-bit dHash is a 252-substr
+    * codegen tree, and `multimodal_phash` +
     * `multimodal_phash_incremental` are two views of the SAME
-    * fingerprints (the BpeTrain memo discipline — the second consumer
-    * must not re-pay the scan or a second codegen compile). 8 bytes +
-    * mime per asset, checkpointed; fingerprint-keyed, released by
-    * Lake.clearCaches.
+    * fingerprints — the second consumer must not re-pay the scan or a
+    * second codegen compile. 8 bytes + mime per asset, checkpointed.
     */
-  private val phashCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), DataFrame]()
-
-  // release via unpersistCheckpoint, not Dataset.unpersist (ADVICE
-  // r19, low): these frames end in localCheckpoint(true), whose blocks
-  // live on the checkpointed RDD — Dataset.unpersist only clears
-  // CacheManager entries and would leak the blocks until JVM exit
-  private[graft] def clearPhashCache(): Int = {
-    val n = phashCache.size()
-    phashCache.values().forEach { df =>
-      try graft.operators.GraphOps.unpersistCheckpoint(df)
-      catch { case _: Throwable => }
-    }
-    phashCache.clear()
-    n
-  }
+  private val phashMemo = graft.Memo[DataFrame]()
 
   private def cachedPhashFrame(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val fp = graft.operators.MinHashDedup
-      .corpusFingerprint(spark, sfDir)
-    val it = phashCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val key = e.getKey
-      if (key._1.sparkContext.isStopped ||
-          (key._1 == spark && key._2 == sfDir && key._3 != fp)) {
-        try graft.operators.GraphOps.unpersistCheckpoint(e.getValue)
-        catch { case _: Throwable => }
-        it.remove()
-      }
-    }
-    phashCache.computeIfAbsent((spark, sfDir, fp), _ =>
+      sfDir: String): DataFrame =
+    phashMemo(spark, sfDir)(
       syntheticAssets(spark, sfDir)
         .select(col("asset_id"), col("mime"),
           decode(col("blob"), "UTF-8").as("s"))
@@ -239,7 +208,6 @@ object Multimodal {
           when(length(col("s")) >= PhashMinChars, phashExpr(col("s")))
             .as("phash"))
         .localCheckpoint(true))
-  }
 
   def phashPairs(spark: SparkSession, sfDir: String,
       maxHamming: Int = 3): DataFrame =
@@ -528,48 +496,19 @@ object Multimodal {
   def audioDedupAssets(assets: DataFrame, maxHamming: Int): DataFrame =
     signatureContainmentPairs(audioFrames(assets), maxHamming)
 
-  /** Per-fixture memos of the corpus audio/video signature frames
-    * (r19 opt round): the frame fingerprints are ROW-LOCAL per asset,
-    * so a store/delta slice of the corpus frame ≡ the frame of the
-    * sliced corpus — the dedup, candidates and incremental rows per
-    * tier are three consumers of ONE decode+fingerprint pass (the
-    * [[cachedPhashFrame]] discipline lifted to the signature-set
-    * tiers). 8 bytes × frames per clip, checkpointed;
-    * fingerprint-keyed, released by `Lake.clearCaches`.
+  /** Memo of the corpus audio/video signature frames per tier (r19
+    * opt round): the frame fingerprints are ROW-LOCAL per asset, so a
+    * store/delta slice of the corpus frame ≡ the frame of the sliced
+    * corpus — the dedup, candidates and incremental rows per tier are
+    * three consumers of ONE decode+fingerprint pass (the
+    * [[cachedPhashFrame]] memo lifted to the signature-set tiers).
+    * 8 bytes × frames per clip, checkpointed.
     */
-  private val frameCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String, String), DataFrame]()
-
-  // unpersistCheckpoint for the same reason as clearPhashCache: the
-  // frames end in localCheckpoint(true) (ADVICE r19, low)
-  private[graft] def clearFrameCache(): Int = {
-    val n = frameCache.size()
-    frameCache.values().forEach { df =>
-      try graft.operators.GraphOps.unpersistCheckpoint(df)
-      catch { case _: Throwable => }
-    }
-    frameCache.clear()
-    n
-  }
+  private val frameMemo = graft.Memo[DataFrame]()
 
   private def cachedFrames(spark: SparkSession, sfDir: String,
-      tier: String, build: DataFrame => DataFrame): DataFrame = {
-    val fp = graft.operators.MinHashDedup.corpusFingerprint(spark, sfDir)
-    val it = frameCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val key = e.getKey
-      if (key._1.sparkContext.isStopped ||
-          (key._1 == spark && key._2 == sfDir && key._4 != fp)) {
-        try graft.operators.GraphOps.unpersistCheckpoint(e.getValue)
-        catch { case _: Throwable => }
-        it.remove()
-      }
-    }
-    frameCache.computeIfAbsent((spark, sfDir, tier, fp), _ =>
-      build(syntheticAssets(spark, sfDir)))
-  }
+      tier: String, build: DataFrame => DataFrame): DataFrame =
+    frameMemo(spark, sfDir, tier)(build(syntheticAssets(spark, sfDir)))
 
   private def corpusAudioFrames(spark: SparkSession,
       sfDir: String): DataFrame =

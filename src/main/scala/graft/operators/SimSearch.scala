@@ -1333,26 +1333,22 @@ object SimSearch {
       .select(col("src"), col("dst"))
   }
 
-  /** Memoized (visited walk, exact ground truth) for the DEFAULT
-    * serve settings, per fixture dir — the batch graph serve feeds
-    * THREE declared queries (`simsearch_graph`, `_delete`,
-    * `_filtered` differ only at emit/judge), so per the warm-phase
-    * policy (VERDICT r15 #1) the shared build runs once (warmGraph in
-    * Bench, reported under warm_ms.graph) and each row measures its
-    * own judge-side plan. Frames are localCheckpointed (eager,
-    * session-bound); [[clearGraphMemo]] releases them.
+  /** Memoized (visited walk, exact ground truth, edges) for the
+    * DEFAULT serve settings — the batch graph serve feeds THREE
+    * declared queries (`simsearch_graph`, `_delete`, `_filtered`
+    * differ only at emit/judge), so per the warm-phase policy (VERDICT
+    * r15 #1) the shared build runs once (warmGraph in Bench, reported
+    * under warm_ms.graph) and each row measures its own judge-side
+    * plan. Frames are localCheckpointed (eager, session-bound).
     */
   // INDEPENDENT memos per artifact (ADVICE r19, low: the bundled
   // 3-tuple memo made a cold `simsearch_graph_persisted` build the
   // full beam walk + exact judge just to obtain the edge frame — each
   // consumer now triggers only the artifacts it reads; warmGraph still
   // builds all three for the bench)
-  private val graphEdgesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val graphVisitedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val graphExactMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val graphEdgesMemo = graft.Memo[DataFrame]("embeddings")
+  private val graphVisitedMemo = graft.Memo[DataFrame]("embeddings")
+  private val graphExactMemo = graft.Memo[DataFrame]("embeddings")
 
   private def memoGraphFrame(spark: SparkSession,
       sfDir: String): DataFrame =
@@ -1361,20 +1357,20 @@ object SimSearch {
 
   private def graphEdgesArtifact(spark: SparkSession,
       sfDir: String): DataFrame =
-    graphEdgesMemo.computeIfAbsent(sfDir, _ =>
+    graphEdgesMemo(spark, sfDir)(
       neighborGraphEdges(memoGraphFrame(spark, sfDir), GraphDegree)
         .localCheckpoint(true)) // reused every hop — build once
 
   private def graphExactArtifact(spark: SparkSession,
       sfDir: String): DataFrame =
-    graphExactMemo.computeIfAbsent(sfDir, _ =>
+    graphExactMemo(spark, sfDir)(
       exactTopK(memoGraphFrame(spark, sfDir), 5, 10)
         .localCheckpoint(true))
 
   private def graphArtifacts(spark: SparkSession,
       sfDir: String): (DataFrame, DataFrame, DataFrame) = {
     val edges = graphEdgesArtifact(spark, sfDir)
-    val visited = graphVisitedMemo.computeIfAbsent(sfDir, _ =>
+    val visited = graphVisitedMemo(spark, sfDir)(
       graphVisited(memoGraphFrame(spark, sfDir), edges, 10, GraphBeam,
         GraphHops, 127))
     (visited, graphExactArtifact(spark, sfDir), edges)
@@ -1400,19 +1396,6 @@ object SimSearch {
       (graphVisited(e, edges, nQueries, beamWidth, hops, entryStride),
         exactTopK(e, k, nQueries).localCheckpoint(true))
     }
-
-  private[graft] def clearGraphMemo(): Int = {
-    import scala.jdk.CollectionConverters._
-    val memos =
-      Seq(graphEdgesMemo, graphVisitedMemo, graphExactMemo)
-    val n = memos.map(_.size()).sum
-    memos.foreach { m =>
-      m.values().asScala
-        .foreach(graft.operators.GraphOps.unpersistCheckpoint)
-      m.clear()
-    }
-    n
-  }
 
   def simsearchGraph(spark: SparkSession, sfDir: String, k: Int = 5,
       nQueries: Int = 10, degree: Int = GraphDegree,

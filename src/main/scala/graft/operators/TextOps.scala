@@ -584,25 +584,17 @@ object TextOps {
   def lmDocScore(spark: SparkSession, sfDir: String): DataFrame =
     cachedLmScores(spark, sfDir)
 
-  /** Per-(session, dir, corpus-fingerprint) memo of the LM scoring
-    * pass — `lm_doc_score` and `quality_lm_bucket` are both views of
-    * ONE scored frame (the compute-once/report-many shape of the ngram
-    * `pairCache`, same enforced-immutability fingerprint, released by
-    * `Lake.clearCaches`). The frame is one row per ≥2-token document.
+  /** Memo of the LM scoring pass — `lm_doc_score` and
+    * `quality_lm_bucket` are both views of ONE scored frame (the
+    * compute-once/report-many shape of the ngram pair memo). The frame
+    * is one row per ≥2-token document.
     */
-  private val lmCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), DataFrame]()
+  private val lmMemo = graft.Memo[DataFrame]()
 
-  private def cachedLmScores(spark: SparkSession, sfDir: String): DataFrame = {
-    val fp = MinHashDedup.corpusFingerprint(spark, sfDir)
-    MinHashDedup.evictStale(lmCache,
-      (k: (SparkSession, String, String)) =>
-        k._1 == spark && k._2 == sfDir && k._3 != fp,
-      (k: (SparkSession, String, String)) => k._1)
-    lmCache.computeIfAbsent((spark, sfDir, fp), _ =>
-      lmDocScoreDocs(Tables.documents(spark, sfDir)).persist())
-  }
+  private def cachedLmScores(spark: SparkSession, sfDir: String): DataFrame =
+    lmMemo(spark, sfDir) {
+      lmDocScoreDocs(Tables.documents(spark, sfDir)).persist()
+    }
 
   /** Materialize the LM-score memo — Bench's untimed warmup calls this
     * (the `warmBucketed` pattern, VERDICT r6 #1) so `lm_doc_score` and
@@ -613,13 +605,6 @@ object TextOps {
   private[graft] def warmLm(spark: SparkSession, sfDir: String): Unit = {
     cachedLmScores(spark, sfDir).count()
     ()
-  }
-
-  private[graft] def clearLmCache(): Int = {
-    val n = lmCache.size()
-    lmCache.values().forEach(df => { df.unpersist(); () })
-    lmCache.clear()
-    n
   }
 
   /** Core of `lm_doc_score` over any (doc_id, text) frame.
@@ -1123,37 +1108,28 @@ object TextOps {
     * only in the final mix input), so per the warm-phase policy the
     * shared plant + two curation days run once (warm_ms.curate in
     * Bench); each row then times its own mix/propagation side.
-    * Non-default benchMod computes fresh. [[Lake.clearCaches]]
-    * releases the memo (the scratch table reclaims with the run dir).
+    * Non-default benchMod computes fresh. The planted table's run dir
+    * is the entry's scratch dir.
     */
-  private val curateMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, DataFrame)]()
+  private val curateMemo = graft.Memo[(graft.Memo.ScratchDir, DataFrame)]()
 
   private[graft] def curatedCorpusToDate(spark: SparkSession,
       sfDir: String, benchMod: Int = 97): (String, DataFrame) = {
-    def build(): (String, DataFrame) = {
+    def build(): (graft.Memo.ScratchDir, DataFrame) = {
       val tbl = plantCorpusDays(spark, sfDir)
       val curated =
         curateDayFromCdf(spark, sfDir, tbl, 0, 1, benchMod)
           .unionByName(curateDayFromCdf(spark, sfDir, tbl, 1, 2, benchMod))
           .localCheckpoint(true)
-      (tbl, curated)
+      (graft.Memo.ScratchDir(tbl), curated)
     }
-    if (benchMod == 97) curateMemo.computeIfAbsent(sfDir, _ => build())
-    else build()
+    val (tbl, curated) =
+      if (benchMod == 97) curateMemo(spark, sfDir)(build()) else build()
+    (tbl.path, curated)
   }
 
   def warmCurate(spark: SparkSession, sfDir: String): Unit = {
     curatedCorpusToDate(spark, sfDir); ()
-  }
-
-  private[graft] def clearCurateMemo(): Int = {
-    import scala.jdk.CollectionConverters._
-    val n = curateMemo.size()
-    curateMemo.values().asScala.foreach { case (_, c) =>
-      graft.operators.GraphOps.unpersistCheckpoint(c)
-    }
-    curateMemo.clear(); n
   }
 
   /** `pipeline_takedown` — the DELETES day the v6 capstone's churn

@@ -52,41 +52,16 @@ object UnigramTrain {
   private val MaxWordLen = 24
   private val SeedMulti = 64
 
-  /** Per-process memo of one finished training — (score table rows,
-    * per-word segmentation frame) — keyed by (session, dir, corpus
-    * fingerprint): `unigram_train` and `unigram_fertility` are two
-    * views of ONE training (the BpeTrain memo discipline).
+  /** Memo of one finished training — (score table rows, per-word
+    * segmentation frame): `unigram_train` and `unigram_fertility` are
+    * two views of ONE training.
     */
-  private val trainCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String),
-      (Seq[(String, Long, Long)], DataFrame)]()
-
-  private[graft] def clearUnigramCache(): Int = {
-    val n = trainCache.size()
-    trainCache.values().forEach { case (_, df) =>
-      try df.unpersist() catch { case _: Throwable => }
-    }
-    trainCache.clear()
-    n
-  }
+  private val trainMemo =
+    graft.Memo[(Seq[(String, Long, Long)], DataFrame)]()
 
   private def cachedTraining(spark: SparkSession, sfDir: String)
-      : (Seq[(String, Long, Long)], DataFrame) = {
-    val fp = MinHashDedup.corpusFingerprint(spark, sfDir)
-    val it = trainCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val key = e.getKey
-      if (key._1.sparkContext.isStopped ||
-          (key._1 == spark && key._2 == sfDir && key._3 != fp)) {
-        try e.getValue._2.unpersist() catch { case _: Throwable => }
-        it.remove()
-      }
-    }
-    trainCache.computeIfAbsent((spark, sfDir, fp),
-      _ => trainWords(langWordCounts(spark, sfDir)))
-  }
+      : (Seq[(String, Long, Long)], DataFrame) =
+    trainMemo(spark, sfDir)(trainWords(langWordCounts(spark, sfDir)))
 
   /** ONE corpus pass: (lang, word, wfl) frequency aggregate under the
     * normText word model and the length qualification.

@@ -49,43 +49,16 @@ object WordpieceTrain {
   private[graft] val DefaultK = 6
   private[graft] val MaxWordLen = 24 // the unigram word qualification
 
-  /** Per-process memo of a finished training — (merge table rows,
-    * final (word, wf, s) state frame — checkpointed) keyed by
-    * (session, dir, corpus fingerprint, k): train/encode/fertility are
-    * three views of ONE training (the [[BpeTrain.trainCache]]
-    * discipline).
+  /** Memo of a finished training — (merge table rows, final
+    * (word, wf, s) state frame — checkpointed) keyed by k:
+    * train/encode/fertility are three views of ONE training.
     */
-  private val trainCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String, Int),
-      (Seq[(Int, String, String, Long, Long, Long, Long)], DataFrame)]()
-
-  private[graft] def clearWordpieceCache(): Int = {
-    val n = trainCache.size()
-    trainCache.values().forEach { case (_, df) =>
-      try GraphOps.unpersistCheckpoint(df) catch { case _: Throwable => }
-    }
-    trainCache.clear()
-    n
-  }
+  private val trainMemo = graft.Memo[
+    (Seq[(Int, String, String, Long, Long, Long, Long)], DataFrame)]()
 
   private def cachedTraining(spark: SparkSession, sfDir: String, k: Int)
-      : (Seq[(Int, String, String, Long, Long, Long, Long)], DataFrame) = {
-    val fp = MinHashDedup.corpusFingerprint(spark, sfDir)
-    val it = trainCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val key = e.getKey
-      if (key._1.sparkContext.isStopped ||
-          (key._1 == spark && key._2 == sfDir && key._3 != fp)) {
-        try GraphOps.unpersistCheckpoint(e.getValue._2)
-        catch { case _: Throwable => }
-        it.remove()
-      }
-    }
-    trainCache.computeIfAbsent((spark, sfDir, fp, k),
-      _ => trainWords(wordCounts(spark, sfDir), k))
-  }
+      : (Seq[(Int, String, String, Long, Long, Long, Long)], DataFrame) =
+    trainMemo(spark, sfDir, k)(trainWords(wordCounts(spark, sfDir), k))
 
   /** Bench-warmup hook (the warmBpe/warmUnigram discipline): the one
     * memoized training feeds three timed views; its cost reports as

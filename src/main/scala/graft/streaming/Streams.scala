@@ -1700,30 +1700,24 @@ object Streams {
     Seq(v0, v1, v2)
   }
 
-  /** The ONE stream-produced CDF table both twins read, memoized per
-    * fixture dir (VERDICT r18 #7): built once per process by the
-    * producer harness ([[streamWriteCdfTable]] — foreachBatch →
-    * version-fenced saveVersionCdf commits), then `stream_write_cdf_ok`
-    * declares its captured feed and `stream_cdf_apply_ok` replays that
-    * same feed into its streaming replica. Whichever twin runs first
-    * pays the build; the scratch dir reclaims at JVM exit like every
-    * streaming fixture.
+  /** The ONE stream-produced CDF table both twins read, memoized
+    * (VERDICT r18 #7): built once by the producer harness
+    * ([[streamWriteCdfTable]] — foreachBatch → version-fenced
+    * saveVersionCdf commits), then `stream_write_cdf_ok` declares its
+    * captured feed and `stream_cdf_apply_ok` replays that same feed
+    * into its streaming replica. Whichever twin runs first pays the
+    * build; the entry owns the harness dir around the table.
     */
-  private val producedCdfMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val producedCdfMemo = graft.Memo[graft.Memo.ScratchDir]("orders")
 
   private[graft] def producedCdfTable(spark: SparkSession,
-      sfDir: String): String =
-    producedCdfMemo.computeIfAbsent(sfDir, _ =>
-      streamWriteCdfTable(spark, "stream_cdf_pair",
-        cdfChurnSnapshots(spark, sfDir), Seq("o_orderkey")))
-
-  /** Release the produce→consume shared-fixture memo (Lake.clearCaches
-    * hygiene — the dirs themselves reclaim at JVM exit). Returns the
-    * number of entries dropped.
-    */
-  private[graft] def clearProducedCdfMemo(): Int = {
-    val n = producedCdfMemo.size(); producedCdfMemo.clear(); n
+      sfDir: String): String = {
+    val dir = producedCdfMemo(spark, sfDir) {
+      val tbl = streamWriteCdfTable(spark, "stream_cdf_pair",
+        cdfChurnSnapshots(spark, sfDir), Seq("o_orderkey"))
+      graft.Memo.ScratchDir(new java.io.File(tbl).getParent)
+    }
+    s"${dir.path}/table"
   }
 
   /** Core of [[streamCdfApplyOk]] over explicit commit snapshots —
@@ -1760,7 +1754,7 @@ object Streams {
     // replica seed + feed batches are ALREADY parquet artifacts of
     // this table (v=0 snapshot; the write-time `_cdf/v=<n>` captures —
     // capturedChanges(i, i+1) is a guarded read of exactly that dir),
-    // so seed by HARDLINK (the monitorFeedCache recipe; same tmpfs)
+    // so seed by HARDLINK (the monitorFeedMemo recipe; same tmpfs)
     // instead of paying a read+rewrite job per commit. Falls back to
     // the Spark write when the version is manifest-backed (clone) or
     // a post-start commit's capture is multi-file (the single-file
@@ -2264,22 +2258,13 @@ object Streams {
     * source read, one checkpoint, N monitors — and it collapses three
     * replay runs into one: each declared `stream_*_ok` row filters its
     * tag from the memoized result, so the replay cost is paid ONCE per
-    * fixture (the BpeTrain memo discipline; keyed on the events
-    * fingerprint, released by Lake.clearCaches). Branch outputs
+    * fixture. Branch outputs
     * normalize into a uniform TYPED schema (longs/doubles/int columns
     * — no serialization on the hash path), and every declared row's
     * oracle contract is unchanged: the same processors, the same
     * per-branch state, the same rows.
     */
-  private val monitorMuxCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), DataFrame]()
-
-  private[graft] def clearMonitorMuxCache(): Int = {
-    val n = monitorMuxCache.size()
-    monitorMuxCache.clear()
-    n
-  }
+  private val monitorMuxMemo = graft.Memo[DataFrame]("events")
 
   /** Bench-warmup hook (the warmBpe discipline): run the one
     * multiplexed replay so the three monitor rows measure their
@@ -2294,16 +2279,7 @@ object Streams {
 
   private def muxedMonitors(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val fp = graft.operators.MinHashDedup
-      .corpusFingerprint(spark, sfDir, Seq("events"))
-    val it = monitorMuxCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val key = e.getKey
-      if (key._1.sparkContext.isStopped ||
-          (key._1 == spark && key._2 == sfDir && key._3 != fp)) it.remove()
-    }
-    monitorMuxCache.computeIfAbsent((spark, sfDir, fp), _ => {
+    monitorMuxMemo(spark, sfDir) {
       val nl = lit(null)
       def uni(tag: String, df: DataFrame,
           l1: org.apache.spark.sql.Column, l2: org.apache.spark.sql.Column,
@@ -2351,7 +2327,7 @@ object Streams {
             col("user_id"), col("n_events"), nl,
             col("session_value"), nl, nl, nl))
       })
-    })
+    }
   }
 
   /** Scratch filesystem for the replay harnesses: /dev/shm only when it
@@ -2380,28 +2356,24 @@ object Streams {
     * max(ts) once; later callers HARDLINK the files into their own
     * feed dir (same tmpfs, so links are free; fileReplay's deliver
     * MOVES them, hence per-invocation links rather than a shared feed
-    * dir). Keyed by the events fixture's file listing fingerprint (the
-    * corpusFingerprint discipline — a regenerated fixture gets a fresh
-    * feed); the cache dir is reclaimed by a JVM shutdown hook, not
-    * per-invocation (it is the cache's lifetime).
+    * dir). The entry owns the feed dir; a JVM shutdown hook reclaims
+    * it too.
     */
-  private val monitorFeedCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (String, java.sql.Timestamp, Long)]()
+  private val monitorFeedMemo = graft.Memo[
+    (graft.Memo.ScratchDir, java.sql.Timestamp, Long)]("events")
 
   private[graft] def cachedEventsFeed(spark: SparkSession, sfDir: String,
       ev: DataFrame): (String, java.sql.Timestamp, Long) = {
-    val key = graft.operators.MinHashDedup
-      .corpusFingerprint(spark, sfDir, Seq("events"))
-    monitorFeedCache.computeIfAbsent(key, _ => {
+    val (dir, maxTs, n) = monitorFeedMemo(spark, sfDir) {
       val head = ev.agg(max(col("ts")), count(lit(1))).head()
       val dir = java.nio.file.Files
         .createTempDirectory(scratchBase, "graft_evfeed").toString
       ev.coalesce(8).write
         .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
       reclaimAtExit(dir)
-      (dir, head.getTimestamp(0), head.getLong(1))
-    })
+      (graft.Memo.ScratchDir(dir), head.getTimestamp(0), head.getLong(1))
+    }
+    (dir.path, maxTs, n)
   }
 
   /** `stream_sink` — checkpointed parquet sink (exactly-once into the

@@ -128,7 +128,7 @@ class BpeTrainSpec extends AnyFunSuite {
         s"doc $docId: merged units must re-expand to the original tokens")
     }
     // both queries rode ONE memoized training
-    assert(graft.operators.BpeTrain.clearBpeCache() >= 1)
+    assert(graft.operators.BpeTrain.trainMemo.clear() >= 1)
   }
 
   test("bpe_fertility equals the per-language aggregate of bpe_encode (third memo view)") {
@@ -156,7 +156,7 @@ class BpeTrainSpec extends AnyFunSuite {
         .as[Double].head()
       assert(ratio == chars.toDouble / units.toDouble, s"lang=$lang ratio")
     }
-    assert(graft.operators.BpeTrain.clearBpeCache() >= 1)
+    assert(graft.operators.BpeTrain.trainMemo.clear() >= 1)
   }
 
   test("pipeline_tokenize packs BPE units under pack_sequences' " +
@@ -187,7 +187,7 @@ class BpeTrainSpec extends AnyFunSuite {
     assert(packsPerSrc.forall(_ >= 1L), s"budget never bound: $packsPerSrc")
     assert(got.exists(_._5 > 0L), "no doc ever started mid-pack")
     // encode + tokenize rode ONE memoized training
-    assert(graft.operators.BpeTrain.clearBpeCache() >= 1)
+    assert(graft.operators.BpeTrain.trainMemo.clear() >= 1)
   }
 
   test("bpe_train equals the literal greedy merger on random corpora") {

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 
@@ -82,6 +83,26 @@ class ContractSpec extends AnyFunSuite {
   test("every oracleSql key has a queries implementation") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracleSql keys with no query impl: $orphans")
+  }
+
+  test("no ConcurrentHashMap in src/main outside Memo, Tables and TimeQ " +
+      "(operator memos go through graft.Memo)") {
+    val allowed = Set("graft/Memo.scala", "graft/sources/Tables.scala",
+      "graft/TimeQ.scala")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no $root under the cwd")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val offenders = files.filter { f =>
+      val rel = root.relativize(f).toString.replace('\\', '/')
+      !allowed.contains(rel) &&
+        new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+          .contains("ConcurrentHashMap")
+    }
+    assert(files.size > 10, s"source walk found only ${files.size} files")
+    assert(offenders.isEmpty,
+      s"declare memos with graft.Memo, not a ConcurrentHashMap: " +
+        offenders.mkString(", "))
   }
 
   test("entry (flagship) returns rows on sf0.001") {

@@ -106,9 +106,9 @@ class GraphMixSpec extends AnyFunSuite {
           s"directLineitemScans=${liScans.size}\n$plan")
       // the body populated the cache; count the release here (an
       // assert in finally would mask the primary failure)
-      assert(GraphOps.clearUnrolledEdgeCache() >= 1)
+      assert(GraphOps.unrolledEdgeMemo.clear() >= 1)
     } finally {
-      GraphOps.clearUnrolledEdgeCache() // idempotent; no-op after success
+      GraphOps.unrolledEdgeMemo.clear() // idempotent; no-op after success
       ()
     }
   }

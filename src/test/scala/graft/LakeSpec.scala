@@ -526,6 +526,45 @@ class LakeSpec extends AnyFunSuite {
     // and a cleared cache repopulates correctly on next use
     assert(MinHashDedup.dedupCluster(spark, TestSpark.sf, 0.2).count() > 0)
     assert(Lake.clearCaches() >= 2) // 1 label + 1 pair entry
+
+    // every release kind gives its storage back: a persisted frame
+    // (labels + pairs), checkpointed frames (the bpe and unigram
+    // trainings, the phash frame) and the co-edge memo (graph_triangles)
+    val sc = spark.sparkContext
+    def storageBytes(): Long =
+      sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
+    def held: String = sc.getRDDStorageInfo
+      .filter(i => i.memSize + i.diskSize > 0)
+      .map(i => s"rdd ${i.id} ${i.name} ${i.memSize + i.diskSize} B " +
+        i.callSite).mkString("; ")
+    // unpersisting is asynchronous: poll until storage stops moving
+    def settled(): Long = {
+      var last = -1L
+      var now = storageBytes()
+      var tries = 0
+      while (now != last && tries < 50) {
+        Thread.sleep(200); last = now; now = storageBytes(); tries += 1
+      }
+      now
+    }
+    val before = settled()
+    val sf = TestSpark.sf
+    MinHashDedup.dedupCluster(spark, sf, threshold = 0.2).count()
+    graft.operators.BpeTrain.bpeTrain(spark, sf).collect()
+    graft.operators.UnigramTrain.unigramTrain(spark, sf).collect()
+    graft.operators.Multimodal.phashPairs(spark, sf).collect()
+    graft.operators.GraphOps.graphTriangles(spark, sf).collect()
+    assert(storageBytes() > before, "the builds stored nothing")
+    val built = 6 // label + pair + bpe + unigram + phash + co-edge
+    val released = Lake.clearCaches()
+    assert(released >= built, s"released $released of $built entries")
+    // poll until the releases land (or give up after 10 s)
+    var after = storageBytes()
+    var waits = 0
+    while (after > before && waits < 50) {
+      Thread.sleep(200); after = storageBytes(); waits += 1
+    }
+    assert(after <= before, s"storage still held after clear: $held")
   }
 
   test("memo caches refresh on corpus rewrite (fingerprint-keyed, no clearCaches)") {
@@ -542,6 +581,32 @@ class LakeSpec extends AnyFunSuite {
     val n2 = MinHashDedup.dedupCluster(spark, dir, threshold = 0.2).count()
     assert(n1 === docs.count(), "first pass labels every doc")
     assert(n2 < n1, s"stale labels served after corpus rewrite: $n1 -> $n2")
+    // the graph-search memos are fingerprinted over embeddings: after an
+    // in-place rewrite the served result equals a fresh dir's result
+    import graft.operators.SimSearch
+    val emb = Tables.embeddings(spark, TestSpark.sf)
+    emb.write.parquet(s"$dir/embeddings.parquet")
+    val g1 = SimSearch.simsearchGraph(spark, dir).collect().toSeq
+    val kept = emb.filter(col("vec_id") % 2 === 0)
+    kept.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    // Tables' plan cache keeps the old file listing (nothing persisted
+    // over it triggers Spark's refresh-on-overwrite): refresh it, as
+    // REFRESH TABLE would
+    Tables.embeddings(spark, dir).queryExecution.analyzed.foreach {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation match {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.location.refresh()
+          case _ =>
+        }
+      case _ =>
+    }
+    val freshDir = Files.createTempDirectory("graft_fp").toString
+    kept.write.parquet(s"$freshDir/embeddings.parquet")
+    val g2 = SimSearch.simsearchGraph(spark, dir).collect().toSeq
+    assert(g2 === SimSearch.simsearchGraph(spark, freshDir).collect().toSeq,
+      "stale graph artifacts served after embeddings rewrite")
+    assert(g2 !== g1, "the rewrite did not change the result")
   }
 
   test("preview works on map-typed (unorderable) columns") {

@@ -52,7 +52,7 @@ class PagerankAttribution extends AnyFunSuite {
   }
 
   test("graph_pagerank_dist: cost splits into cold call vs warm call overhead") {
-    graft.operators.GraphOps.clearUnrolledEdgeCache()
+    graft.operators.GraphOps.unrolledEdgeMemo.clear()
     // NOTE (review r13): graphPagerankUnrolled is NOT lazy — the
     // per-iteration localCheckpoint(true) calls are eager, so even
     // "construction" runs the full iteration chain. The honest split
