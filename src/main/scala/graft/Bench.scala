@@ -101,20 +101,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle local dirs on fast scratch (see graft.Scratch scaladoc:
-    // the shuffle index-commit lock convoy finding, r19 opt round)
-    val spark = Scratch.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft_bench_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val cpus = Scratch.cpus
+    val spark = Scratch.driverSession()
     // untimed-but-REPORTED warmup (VERDICT r7 #3): each phase's cost is
     // emitted as warm_ms.<phase> in the JSON line, so the pre-paid
     // builds are visible in the artifact instead of silently excluded
@@ -154,8 +142,8 @@ object Bench {
     // first: the first parallel stage pays JIT + task-launch warmup
     // (measured 963 ms vs 268 ms steady on an idle box), which would
     // make pre read hotter than post on every run; see calibParMs
-    calibParMs(spark, cpus.toInt): Unit
-    val calibParPre = calibParMs(spark, cpus.toInt)
+    calibParMs(spark, cpus): Unit
+    val calibParPre = calibParMs(spark, cpus)
     warm("bucketed") { graft.sources.SinkQueries.warmBucketed(spark, sfDir) }
     warm("memos") { graft.operators.MinHashDedup.warmMemos(spark, sfDir) }
     warm("lm") { graft.operators.TextOps.warmLm(spark, sfDir) }
@@ -231,7 +219,7 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       currentQ = name
       if (sinceProbe >= 16) {
-        calibParSeries += calibParMs(spark, cpus.toInt, steps = 25000000L)
+        calibParSeries += calibParMs(spark, cpus, steps = 25000000L)
         sinceProbe = 0
       }
       sinceProbe += 1
@@ -326,7 +314,7 @@ object Bench {
     // summed executorRunTime of its tasks (listener-drained, exact).
     val warmFailedJson = warmupFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val calibPost = calibMs()
-    val calibParPost = calibParMs(spark, cpus.toInt)
+    val calibParPost = calibParMs(spark, cpus)
     val warmTotalMs = warmMs.values.sum
     val totalWithWarm = total + warmTotalMs / 1000.0
     // cpu_ms = summed executorCpuTime: the scheduler/JVM-pause-free

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named declared queries to files —
   * the optimization-round evidence artifact (plans/rNN/<q>_before.txt /
   * `_after.txt`). Not part of the driver contract; a diagnostics main.
@@ -19,20 +17,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle local dirs on fast scratch (see graft.Scratch scaladoc:
-    // the shuffle index-commit lock convoy finding, r19 opt round)
-    val spark = Scratch.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft_plandump_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val spark = Scratch.driverSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       SparkEntry.queries.get(n) match {

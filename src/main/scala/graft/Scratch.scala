@@ -81,4 +81,30 @@ object Scratch {
       sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "1000"))
     sparkLocalDir().fold(b2)(d => b2.config("spark.local.dir", d))
   }
+
+  /** Cores of the driver mains' session: $SPARK_GRAFT_CPUS, default 4. */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The one session graft.Bench, Verify, PlanDump and TimeQ run on:
+    * `local[cpus]` with one shuffle partition per core, UTC, no NTZ
+    * inference (the fixtures' tz-less timestamps read as LTZ), no UI, a
+    * per-process temp warehouse (the bucketed/catalog queries
+    * saveAsTable — keep it out of the CWD, and apart between
+    * concurrent mains), [[configure]]'s scratch settings and the graft
+    * extensions.
+    */
+  def driverSession(): org.apache.spark.sql.SparkSession = {
+    val spark = configure(org.apache.spark.sql.SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", java.nio.file.Files
+        .createTempDirectory("graft_wh").toString)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    GraftExtensions.install(spark)
+    spark
+  }
 }

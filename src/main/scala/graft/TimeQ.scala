@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Time named declared queries in isolation, N repetitions each — the
   * optimization-round microbench (full-run context excluded, so a row
   * whose cost differs here vs. graft.Bench is being slowed by RUN
@@ -16,18 +14,7 @@ object TimeQ {
     val reps = args(0).toInt
     val names = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Scratch.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft_timeq_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val spark = Scratch.driverSession()
     // SPARK_GRAFT_JOBLOG=1: per-job trace (start→end wall, job group /
     // description) — finds driver-side gaps between jobs that per-task
     // metrics can't see

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,22 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSet // optional: restrict to named queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle local dirs on fast scratch (see graft.Scratch scaladoc:
-    // the shuffle index-commit lock convoy finding, r19 opt round)
-    val spark = Scratch.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // bucketed/catalog queries saveAsTable — keep their warehouse out
-      // of the CWD (and per-process, so Verify and Bench never collide)
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft_verify_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val spark = Scratch.driverSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.nonEmpty && !only.contains(name)) ()

@@ -47,13 +47,7 @@ object SinkQueries {
     val cutoff = System.currentTimeMillis() - 30L * 60 * 1000
     Option(parent.listFiles()).getOrElse(Array.empty)
       .filter(d => d.isDirectory && d.lastModified() < cutoff)
-      .foreach { d =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        try rm(d) catch { case _: Exception => () }
-      }
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
     new java.io.File(parent,
       java.util.UUID.randomUUID().toString).toString
   }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming operators (SURVEY.md §2.I — mandated extension;
   * the reference has no streaming surface [SURVEY.md §1.1]).
@@ -878,12 +879,6 @@ class AsofProcessor
 
 object Streams {
 
-  private def deleteRec(f: java.io.File): Unit = {
-    val fs = f.listFiles()
-    if (fs != null) fs.foreach(deleteRec)
-    f.delete(); ()
-  }
-
   /** ONE static JVM shutdown hook draining a concurrent queue of
     * scratch dirs (ADVICE r17: the per-invocation
     * `Runtime.addShutdownHook` calls accumulated a Thread per replay
@@ -900,8 +895,7 @@ object Streams {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       var d = scratchReclaimQueue.poll()
       while (d != null) {
-        try deleteRec(new java.io.File(d))
-        catch { case _: Exception => () }
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
         d = scratchReclaimQueue.poll()
       }
     }))
@@ -1391,10 +1385,10 @@ object Streams {
     * was spec-verified but had no file-replay twin like the
     * watermark/sink/dedup/monitor rows; this closes the last §2.I
     * evidential asymmetry). Fifth consumer of the ONE multiplexed
-    * monitor replay: batch 0 delivers every event before the query
-    * starts (so each user's rows fold in one micro-batch — the regime
-    * where the processor's gap-and-island fold is EXACTLY
-    * batch-equivalent), and the far-future sentinel fires every
+    * monitor replay: batch 0 carries every event (so each user's rows
+    * fold in one micro-batch — the regime where the processor's
+    * gap-and-island fold is EXACTLY batch-equivalent), and the
+    * far-future sentinel fires every
     * still-armed session timer, flushing open sessions. The emitted
     * rows must therefore equal the batch gap-and-island oracle
     * (`stream_session`'s islands projected without the session_id
@@ -1478,7 +1472,7 @@ object Streams {
     val delta = docs.filter(col("doc_id") % 10 >= 8)
     val rowsPerBand = nPerm / bands
     val matches = fileReplay(spark, "stream_dedup_minhash_ok",
-      Seq(store, delta), Seq(8, 1), { stream =>
+      ToMemory { stream =>
         val s2 = stream.sparkSession
         import s2.implicits._
         stream
@@ -1502,7 +1496,7 @@ object Streams {
             org.apache.spark.sql.streaming.TimeMode.None(),
             OutputMode.Append())
           .toDF("n_id", "o_id")
-      })
+      })(_ => Seq(WriteBatch(store, 8), WriteBatch(delta)))
     // batch-side presentation: survivors = delta minus matched delta ids
     delta.join(matches.select(col("n_id").as("doc_id")).distinct(),
         Seq("doc_id"), "left_anti")
@@ -1543,7 +1537,7 @@ object Streams {
       maxHamming: Int): DataFrame = {
     import graft.operators.Multimodal
     val matches = fileReplay(spark, name,
-      Seq(store, delta), Seq(8, 1), { stream =>
+      ToMemory { stream =>
         val s2 = stream.sparkSession
         import s2.implicits._
         stream
@@ -1565,7 +1559,7 @@ object Streams {
             org.apache.spark.sql.streaming.TimeMode.None(),
             OutputMode.Append())
           .toDF("n_id", "o_id")
-      })
+      })(_ => Seq(WriteBatch(store, 8), WriteBatch(delta)))
     // batch-side presentation: delta survivors (store n_ids in the
     // match stream never hit a delta asset_id); null-phash delta
     // assets never entered the stream and survive by construction —
@@ -1615,7 +1609,7 @@ object Streams {
       centroidStride: Long, threshold: Double): DataFrame = {
     val cb = graft.operators.SimSearch.ivfCodebook(store, centroidStride)
     val matches = fileReplay(spark, name,
-      Seq(store, delta), Seq(8, 1), { stream =>
+      ToMemory { stream =>
         val s2 = stream.sparkSession
         import s2.implicits._
         graft.operators.SimSearch.ivfAssignCorpus(stream, cb)
@@ -1627,7 +1621,7 @@ object Streams {
             org.apache.spark.sql.streaming.TimeMode.None(),
             OutputMode.Append())
           .toDF("n_id", "o_id")
-      })
+      })(_ => Seq(WriteBatch(store, 8), WriteBatch(delta)))
     // batch-side presentation: delta survivors with their cell (store
     // n_ids in the match stream never hit a delta c_id — the anti-join
     // key is the post-filter)
@@ -1644,8 +1638,7 @@ object Streams {
     * streaming replica-maintenance job — Delta's CDF-source +
     * foreachBatch-merge shape): the `lake_write_cdf` planted churn
     * lands as three captured commits, a replica materializes at v0,
-    * and the captured feed file-replays commit-by-commit (commit 1 =
-    * the initial listing's micro-batch, commit 2 delivered after)
+    * and the captured feed file-replays one micro-batch per commit
     * through `foreachBatch`, each batch folding into the replica via
     * [[graft.sources.LakeIO.replayChanges]] (commit-ordered WITHIN a
     * batch too, so a trigger that picks up two commit files in one
@@ -1669,11 +1662,9 @@ object Streams {
     // process-memoized fixture instead of planting twice, and the pair
     // becomes the true round trip: stream-committed captures feeding a
     // stream-maintained replica
-    val dir = java.nio.file.Files
-      .createTempDirectory(scratchBase, "graft_stream_cdf_apply_ok")
-      .toString
-    streamCdfApplyFromTable(spark, dir,
-      producedCdfTable(spark, sfDir), Seq("o_orderkey"))
+    val tbl = producedCdfTable(spark, sfDir)
+    streamCdfApplyFromTable(spark, "stream_cdf_apply_ok",
+      Seq("o_orderkey"))(_ => tbl)
       .orderBy(col("o_orderkey").asc)
   }
 
@@ -1730,120 +1721,73 @@ object Streams {
       name: String, snapshots: Seq[DataFrame],
       keys: Seq[String]): DataFrame = {
     require(snapshots.size >= 2, "need at least two commits to stream")
-    val dir = java.nio.file.Files
-      .createTempDirectory(scratchBase, s"graft_$name").toString
-    val tbl = s"$dir/table"
-    snapshots.foreach { s =>
-      graft.sources.LakeIO.saveVersionCdf(s.repartition(4), tbl, keys)
-      ()
+    streamCdfApplyFromTable(spark, name, keys) { dir =>
+      val tbl = s"$dir/table"
+      snapshots.foreach { s =>
+        graft.sources.LakeIO.saveVersionCdf(s.repartition(4), tbl, keys)
+        ()
+      }
+      tbl
     }
-    streamCdfApplyFromTable(spark, dir, tbl, keys)
   }
 
-  /** The consumer harness over an EXISTING captured table: replica at
-    * v0, one feed file per captured commit, foreachBatch replay fold,
-    * rename swap. `dir` hosts replica/feed/checkpoint (fresh per call
-    * — a streaming checkpoint never spans invocations); `tbl` may be
-    * shared (the [[producedCdfTable]] pair fixture — VERDICT r18 #7).
+  /** The consumer harness over a captured table (`table` gets the
+    * replay's scratch dir and returns the table path; the table may be
+    * shared — the [[producedCdfTable]] pair fixture, VERDICT r18 #7):
+    * replica at v0, one feed batch per captured commit, foreachBatch
+    * replay fold, rename swap.
     */
   private[graft] def streamCdfApplyFromTable(spark: SparkSession,
-      dir: String, tbl: String, keys: Seq[String]): DataFrame = {
-    val nCommitsT =
-      graft.sources.LakeIO.listVersions(spark, tbl).size - 1
-    val replica = s"$dir/replica"
-    // replica seed + feed batches are ALREADY parquet artifacts of
-    // this table (v=0 snapshot; the write-time `_cdf/v=<n>` captures —
-    // capturedChanges(i, i+1) is a guarded read of exactly that dir),
-    // so seed by HARDLINK (the monitorFeedMemo recipe; same tmpfs)
-    // instead of paying a read+rewrite job per commit. Falls back to
-    // the Spark write when the version is manifest-backed (clone) or
-    // a post-start commit's capture is multi-file (the single-file
-    // delivery rule below).
-    def parquetFiles(d: java.io.File): Array[java.io.File] =
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    def linkInto(files: Array[java.io.File], dst: java.io.File): Unit = {
-      dst.mkdirs()
-      files.foreach { f =>
-        val tgt = new java.io.File(dst, f.getName).toPath
-        try java.nio.file.Files.createLink(tgt, f.toPath)
-        catch { case _: Exception =>
-          java.nio.file.Files.copy(f.toPath, tgt): Unit }
+      name: String, keys: Seq[String])(
+      table: String => String): DataFrame =
+    fileReplay(spark, name, ForEachBatch(
+      (dir: String, batch: DataFrame, _: Long) => {
+        val s = batch.sparkSession
+        // commit-ordered fold, then an atomic-as-possible rename swap
+        // (the LakeIO.swapInto window) — the replica is never read and
+        // overwritten in the same lazy plan
+        val replica = s"$dir/replica"
+        val next = graft.sources.LakeIO.replayChanges(
+          s.read.parquet(replica), batch, keys)
+        val tmp = s"$dir/replica_next"
+        next.write.mode("overwrite").parquet(tmp)
+        val rp = new org.apache.hadoop.fs.Path(replica)
+        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
+        fs.delete(rp, true)
+        if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), rp))
+          throw new java.io.IOException(s"replica swap failed at $tmp")
+      },
+      dir => spark.read.parquet(s"$dir/replica"))) { dir =>
+      val tbl = table(dir)
+      // replica seed + feed batches are ALREADY parquet artifacts of
+      // this table (v=0 snapshot; the write-time `_cdf/v=<n>` captures —
+      // capturedChanges(i, i+1) is a guarded read of exactly that dir),
+      // so they are linked instead of paying a read+rewrite job per
+      // commit. A manifest-backed version (clone) is written instead,
+      // and so is a later commit whose capture is several files
+      // (fileReplay's one-file rule).
+      def parquetFiles(d: String): Seq[java.io.File] =
+        Option(new java.io.File(d).listFiles()).toSeq.flatten
+          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      val v0files = parquetFiles(s"$tbl/v=0")
+      // emptiness guard (ADVICE r19, low): a missing/reaped v=0 dir must
+      // fail loudly at SEED time through loadVersion's clear error, not
+      // as a schema-inference error inside foreachBatch over an empty
+      // linked replica
+      if (new java.io.File(s"$tbl/v=0/_manifest").exists() ||
+          v0files.isEmpty)
+        graft.sources.LakeIO.loadVersion(spark, tbl, Some(0))
+          .write.parquet(s"$dir/replica")
+      else LinkBatch(v0files).stageInto(s"$dir/replica")
+      val nCommits =
+        graft.sources.LakeIO.listVersions(spark, tbl).size - 1
+      (1 to nCommits).map { v =>
+        val fls = parquetFiles(s"$tbl/_cdf/v=$v")
+        if (fls.nonEmpty && (v == 1 || fls.size == 1)) LinkBatch(fls)
+        else WriteBatch(
+          graft.sources.LakeIO.capturedChanges(spark, tbl, v - 1, v))
       }
     }
-    val v0dir = new java.io.File(s"$tbl/v=0")
-    // emptiness guard (ADVICE r19, low): a missing/reaped v=0 dir must
-    // fail loudly at SEED time through loadVersion's clear error, not
-    // as a schema-inference error inside foreachBatch over an empty
-    // hardlinked replica
-    val v0files = parquetFiles(v0dir)
-    if (new java.io.File(v0dir, "_manifest").exists() || v0files.isEmpty)
-      graft.sources.LakeIO.loadVersion(spark, tbl, Some(0))
-        .write.parquet(replica)
-    else linkInto(v0files, new java.io.File(replica))
-    // one feed file per commit (the fileReplay single-file rule: a
-    // running query can trigger between two moves, and a split batch
-    // must still carry whole commits — replayChanges handles a MERGED
-    // batch, but a commit split ACROSS batches would apply half a
-    // commit's churn; one file per commit makes that impossible).
-    // Batch 0 delivers pre-start (the initial listing is one
-    // micro-batch regardless of file count), so it may link multi-file
-    // captures too.
-    val feed = new java.io.File(s"$dir/feed"); feed.mkdirs()
-    val nCommits = nCommitsT
-    (0 until nCommits).foreach { i =>
-      val cdir = new java.io.File(s"$tbl/_cdf/v=${i + 1}")
-      val fls = parquetFiles(cdir)
-      if (fls.nonEmpty && (i == 0 || fls.length == 1))
-        linkInto(fls, new java.io.File(s"$dir/b$i"))
-      else
-        graft.sources.LakeIO.capturedChanges(spark, tbl, i, i + 1)
-          .coalesce(1).write.parquet(s"$dir/b$i")
-    }
-    def deliver(i: Int): Unit =
-      new java.io.File(s"$dir/b$i").listFiles()
-        .filter(_.getName.endsWith(".parquet")).zipWithIndex
-        .foreach { case (f, j) =>
-          java.nio.file.Files.move(f.toPath,
-            new java.io.File(feed, s"b$i-$j.parquet").toPath)
-          ()
-        }
-    deliver(0) // pre-start: the initial listing is one micro-batch
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    val schema = spark.read.parquet(feed.toString).schema
-    val q = s2.readStream.schema(schema).parquet(feed.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            _: Long) =>
-          val s = batch.sparkSession
-          // commit-ordered fold, then an atomic-as-possible rename
-          // swap (the LakeIO.swapInto window) — the replica is never
-          // read and overwritten in the same lazy plan
-          val next = graft.sources.LakeIO.replayChanges(
-            s.read.parquet(replica), batch.toDF(), keys)
-          val tmp = s"$dir/replica_next"
-          next.write.mode("overwrite").parquet(tmp)
-          val rp = new org.apache.hadoop.fs.Path(replica)
-          val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(rp, true)
-          if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), rp))
-            throw new java.io.IOException(s"replica swap failed at $tmp")
-          ()
-      }
-      .option("checkpointLocation", s"$dir/ckpt")
-      .start()
-    try {
-      q.processAllAvailable()
-      (1 until nCommits).foreach { i =>
-        deliver(i); q.processAllAvailable()
-      }
-    } finally q.stop()
-    // the RESULT is the replica dir — reclaim at JVM exit, not here
-    reclaimAtExit(dir)
-    spark.read.parquet(replica)
-  }
 
   /** `stream_write_cdf_ok` — the write-time CDF PRODUCED by a stream
     * (VERDICT r17 #5: `stream_cdf_apply_ok` landed the consumer; this
@@ -1851,11 +1795,11 @@ object Streams {
     * versioned table with write-time capture, foreachBatch →
     * [[graft.sources.LakeIO.saveVersionCdf]], commit-per-micro-batch):
     * the `lake_write_cdf` planted churn arrives as two micro-batches
-    * of change rows (one file per commit — the fileReplay atomicity
-    * rule), each batch folds its commits IN VERSION ORDER into the
-    * table head via applyChanges and publishes through saveVersionCdf,
-    * so every streamed commit lands CAPTURED. Idempotence under
-    * foreachBatch's at-least-once contract is a VERSION FENCE
+    * of change rows (one per commit), each batch folds its commits IN
+    * VERSION ORDER into the table head via applyChanges and publishes
+    * through saveVersionCdf, so every streamed commit lands CAPTURED.
+    * Idempotence under foreachBatch's at-least-once contract is a
+    * VERSION FENCE
     * ([[applyCommitsIdempotent]]): a commit whose stamp is ≤ the
     * table's head version was already applied by a previous attempt
     * and is SKIPPED — the monotonic-version fencing every
@@ -1898,51 +1842,19 @@ object Streams {
       name: String, snapshots: Seq[DataFrame],
       keys: Seq[String]): String = {
     require(snapshots.size >= 2, "need at least two commits to stream")
-    val dir = java.nio.file.Files
-      .createTempDirectory(scratchBase, s"graft_$name").toString
-    val tbl = s"$dir/table"
-    graft.sources.LakeIO.saveVersionCdf(
-      snapshots.head.repartition(4), tbl, keys)
-    // the feed: one churn file per commit, stamped with the version it
-    // must produce (the single-file rule — a trigger landing between
-    // two moves must still carry whole commits)
-    val nCommits = snapshots.size - 1
-    (0 until nCommits).foreach { i =>
-      graft.sources.LakeIO.snapshotDiff(snapshots(i), snapshots(i + 1),
-          keys, i + 1)
-        .coalesce(1).write.parquet(s"$dir/b$i")
+    fileReplay(spark, name, ForEachBatch(
+      (dir: String, batch: DataFrame, _: Long) =>
+        applyCommitsIdempotent(batch, s"$dir/table", keys),
+      dir => s"$dir/table")) { dir =>
+      graft.sources.LakeIO.saveVersionCdf(
+        snapshots.head.repartition(4), s"$dir/table", keys)
+      // the feed: one churn batch per commit, stamped with the version
+      // it must produce
+      (1 until snapshots.size).map { v =>
+        WriteBatch(graft.sources.LakeIO.snapshotDiff(snapshots(v - 1),
+          snapshots(v), keys, v))
+      }
     }
-    val feed = new java.io.File(s"$dir/feed"); feed.mkdirs()
-    def deliver(i: Int): Unit =
-      new java.io.File(s"$dir/b$i").listFiles()
-        .filter(_.getName.endsWith(".parquet")).zipWithIndex
-        .foreach { case (f, j) =>
-          java.nio.file.Files.move(f.toPath,
-            new java.io.File(feed, s"b$i-$j.parquet").toPath)
-          ()
-        }
-    deliver(0)
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    val schema = spark.read.parquet(feed.toString).schema
-    val q = s2.readStream.schema(schema).parquet(feed.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            _: Long) =>
-          applyCommitsIdempotent(batch.toDF(), tbl, keys)
-      }
-      .option("checkpointLocation", s"$dir/ckpt")
-      .start()
-    try {
-      q.processAllAvailable()
-      (1 until nCommits).foreach { i =>
-        deliver(i); q.processAllAvailable()
-      }
-    } finally q.stop()
-    // the RESULT reads the produced table — reclaim at JVM exit
-    reclaimAtExit(dir)
-    tbl
   }
 
   /** The producer's commit fold, VERSION-FENCED for at-least-once
@@ -2054,49 +1966,19 @@ object Streams {
     val delta = emb.filter(col("vec_id") % 10 >= 8)
       .select(col("vec_id"), col("embedding"))
     val (coarse, pqCb) = SimSearch.storeCodebooks(store)
-    val dir = java.nio.file.Files
-      .createTempDirectory(scratchBase, "graft_stream_index_append")
-      .toString
-    val index = s"$dir/index"
-    // day 0: the store's artifact (batch build), ingest=-1
-    SimSearch.encodeIvfPq(store, coarse, pqCb, m)
-      .withColumn("ingest", lit(-1L))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("ingest", "cent_id").parquet(index)
-    // the delta replays in two single-file micro-batches
-    val feed = new java.io.File(s"$dir/feed"); feed.mkdirs()
-    delta.filter(col("vec_id") % 2 === 0).coalesce(1)
-      .write.parquet(s"$dir/b0")
-    delta.filter(col("vec_id") % 2 =!= 0).coalesce(1)
-      .write.parquet(s"$dir/b1")
-    def deliver(i: Int): Unit =
-      new java.io.File(s"$dir/b$i").listFiles()
-        .filter(_.getName.endsWith(".parquet")).zipWithIndex
-        .foreach { case (f, j) =>
-          java.nio.file.Files.move(f.toPath,
-            new java.io.File(feed, s"b$i-$j.parquet").toPath)
-          ()
-        }
-    deliver(0)
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    val schema = spark.read.parquet(feed.toString).schema
-    val q = s2.readStream.schema(schema).parquet(feed.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          ingestIndexBatch(batch.toDF(), index, coarse, pqCb, m, batchId)
-      }
-      .option("checkpointLocation", s"$dir/ckpt")
-      .start()
-    try {
-      q.processAllAvailable()
-      deliver(1); q.processAllAvailable()
-    } finally q.stop()
-    reclaimAtExit(dir)
-    SimSearch.serveIvfPqArtifact(spark, index, emb, coarse, pqCb, k,
-      nQueries, m, nProbe)
+    fileReplay(spark, "stream_index_append", ForEachBatch(
+      (dir: String, batch: DataFrame, batchId: Long) =>
+        ingestIndexBatch(batch, s"$dir/index", coarse, pqCb, m, batchId),
+      dir => SimSearch.serveIvfPqArtifact(spark, s"$dir/index", emb,
+        coarse, pqCb, k, nQueries, m, nProbe))) { dir =>
+      // day 0: the store's artifact (batch build), ingest=-1
+      SimSearch.encodeIvfPq(store, coarse, pqCb, m)
+        .withColumn("ingest", lit(-1L))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("ingest", "cent_id").parquet(s"$dir/index")
+      Seq(WriteBatch(delta.filter(col("vec_id") % 2 === 0)),
+        WriteBatch(delta.filter(col("vec_id") % 2 =!= 0)))
+    }
   }
 
   /** One ingest micro-batch into the (ingest, cent_id)-partitioned
@@ -2126,110 +2008,163 @@ object Streams {
     }
   }
 
-  /** Shared file-replay harness for every declared `stream_*_ok` row:
-    * the batch frames replay as SEQUENTIAL micro-batches into a
-    * RocksDB-backed pipeline (MapState needs the multi-column-family
-    * store) on a CLONED session — the conf overrides were previously
-    * set-then-restored on the SHARED session and leaked to anything
-    * planned concurrently (an advisor finding); newSession() shares
-    * the SparkContext and catalog but owns its SQLConf. Returns the
-    * memory-sink rows RE-BOUND to the caller's session.
-    *
-    * Micro-batch ATOMICITY contract (review finding r13): the first
-    * batch moves into the feed BEFORE the query starts — the file
-    * source's initial listing takes every pre-existing file as ONE
-    * micro-batch regardless of file count (so it may write with
-    * several tasks) — and every LATER batch must be a SINGLE parquet
-    * file (writeTasks enforced 1), because the running query can
-    * trigger between two Files.move calls and split a multi-file
-    * batch, which breaks order-sensitive state (a split events batch
-    * can advance the watermark mid-batch and drop the remainder as
-    * late; a split delta batch flips the dedup keep-first rule).
+  /** One micro-batch of a [[fileReplay]], staged as parquet files
+    * before the query starts.
     */
-  private def fileReplay(spark: SparkSession, name: String,
-      batches: Seq[DataFrame], writeTasks: Seq[Int],
-      build: DataFrame => DataFrame,
-      batch0Dir: Option[String] = None): DataFrame = {
-    require(batches.nonEmpty && batches.size == writeTasks.size,
-      "one writeTasks entry per batch")
-    require(writeTasks.drop(1).forall(_ == 1),
-      "later batches must be single-file — a running query can split " +
-        "a multi-file move across micro-batches")
-    // ALL harness scratch (feed files, checkpoint, RocksDB working
-    // dirs) goes to fast scratch when available: the replay rows
-    // measure the PROCESSOR, and per-micro-batch checkpoint commits on
-    // spinning /tmp dominated their wall with high variance (a
-    // production state store sits on local SSD or memory). Everything
-    // under ONE dir, reclaimed in the finally.
+  private sealed trait ReplayBatch {
+    def stageInto(dst: String): Unit
+    def schema(spark: SparkSession): StructType
+  }
+
+  /** A frame written with `tasks` write tasks. */
+  private final case class WriteBatch(df: DataFrame, tasks: Int = 1)
+      extends ReplayBatch {
+    def stageInto(dst: String): Unit = df.coalesce(tasks).write.parquet(dst)
+    def schema(spark: SparkSession): StructType = df.schema
+  }
+
+  /** Existing parquet files, hardlinked (copied where a link fails, e.g.
+    * across filesystems) — the replay then pays no read+rewrite job.
+    */
+  private final case class LinkBatch(files: Seq[java.io.File])
+      extends ReplayBatch {
+    def stageInto(dst: String): Unit = {
+      val d = new java.io.File(dst); d.mkdirs()
+      files.foreach { f =>
+        val tgt = new java.io.File(d, f.getName).toPath
+        try java.nio.file.Files.createLink(tgt, f.toPath)
+        catch { case _: Exception =>
+          java.nio.file.Files.copy(f.toPath, tgt): Unit }
+      }
+    }
+    def schema(spark: SparkSession): StructType =
+      spark.read.parquet(files.head.toString).schema
+  }
+
+  /** Where a [[fileReplay]] query writes, and what the caller gets back. */
+  private sealed trait ReplaySink[T]
+
+  /** The memory sink over `build(stream)`; the rows come back collected
+    * into the caller's session.
+    */
+  private final case class ToMemory(build: DataFrame => DataFrame)
+      extends ReplaySink[DataFrame]
+
+  /** foreachBatch: each micro-batch folds into files under the scratch
+    * dir (given as the first argument), and `result` reads them once the
+    * query has stopped.
+    */
+  private final case class ForEachBatch[T](
+      fold: (String, DataFrame, Long) => Unit, result: String => T)
+      extends ReplaySink[T]
+
+  /** The file-replay harness behind every declared `stream_*_ok` row
+    * except `stream_sink_ok`: the batches `stage` returns replay as
+    * SEQUENTIAL micro-batches of a parquet file-source stream into
+    * `sink`, on the schema of batch 0.
+    *
+    * Scratch: one fresh dir under [[scratchBase]] (fast scratch: the
+    * rows measure the processor, and per-micro-batch checkpoint commits
+    * on a slow disk dominated their wall) holds the staged batches, the
+    * feed, the checkpoint and the RocksDB working dir;
+    * `stage` gets it for the caller's own artifacts (a replica, a
+    * table, an index). A [[ToMemory]] result is collected, so the dir is
+    * deleted; a [[ForEachBatch]] result reads files under it, so it is
+    * reclaimed at JVM exit.
+    *
+    * Micro-batch ATOMICITY contract (review finding r13): batch 0 is
+    * staged straight into the feed BEFORE the query starts, and the
+    * file source's initial listing takes every pre-existing file as ONE
+    * micro-batch, so batch 0 may be many files (written with several
+    * tasks). Every LATER batch is staged aside and moved into the feed
+    * after the previous one is processed, and must be a SINGLE file
+    * (required here): the running query can trigger between two file
+    * moves and split a multi-file batch, which breaks order-sensitive
+    * state — a split events batch can advance the watermark mid-batch
+    * and drop the remainder as late, a split delta batch flips the
+    * dedup keep-first rule, a commit split across batches applies half
+    * its churn.
+    *
+    * Session: a CLONED session — newSession() shares the SparkContext
+    * and catalog but owns its SQLConf and StreamingQueryManager, so
+    * neither the conf below nor the query name leaks into the caller's
+    * session (an advisor finding) — with 4 shuffle partitions, since
+    * every state-store task pays a fixed open/commit latency however
+    * few rows it holds, and the RocksDB state store (MapState needs its
+    * column families).
+    */
+  private def fileReplay[T](spark: SparkSession, name: String,
+      sink: ReplaySink[T])(stage: String => Seq[ReplayBatch]): T = {
     val dir = java.nio.file.Files
       .createTempDirectory(scratchBase, s"graft_$name").toString
-    val feed = new java.io.File(s"$dir/feed"); feed.mkdirs()
-    batches.zip(writeTasks).zipWithIndex.foreach { case ((df, t), i) =>
-      // batch 0 may come pre-written from the shared feed cache — the
-      // harness then only LINKS its files (b0 is materialized by
-      // deliver(0) below, not a Spark write)
-      if (i != 0 || batch0Dir.isEmpty)
-        df.coalesce(t).write.parquet(s"$dir/b$i")
-    }
-    batch0Dir.foreach { src =>
-      val b0 = new java.io.File(s"$dir/b0"); b0.mkdirs()
-      new java.io.File(src).listFiles()
-        .filter(_.getName.endsWith(".parquet")).foreach { f =>
-          val tgt = new java.io.File(b0, f.getName).toPath
-          try java.nio.file.Files.createLink(tgt, f.toPath)
-          catch { case _: Exception =>
-            java.nio.file.Files.copy(f.toPath, tgt): Unit }
-        }
-    }
-    def deliver(i: Int): Unit =
-      new java.io.File(s"$dir/b$i").listFiles()
-        .filter(_.getName.endsWith(".parquet")).zipWithIndex
-        .foreach { case (f, j) =>
-          java.nio.file.Files.move(f.toPath,
-            new java.io.File(feed, s"b$i-$j.parquet").toPath)
-        }
-    deliver(0) // pre-start: the initial listing is one micro-batch
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution." +
-        "streaming.state.RocksDBStateStoreProvider")
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    // changelog checkpointing: per-micro-batch commits upload the delta
-    // changelog instead of snapshotting SST files — the production
-    // setting for many small batches, and measured ~30-40% off the
-    // multi-batch replay rows' wall (the snapshot upload dominated at
-    // fixture state sizes)
-    s2.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled", "true")
-    s2.conf.set("spark.sql.streaming.stateStore.rocksdb.localRootDir",
-      s"$dir/rocksdb")
-    val stream = s2.readStream.schema(batches.head.schema)
-      .parquet(feed.toString)
-    val q = build(stream).writeStream
-      .format("memory").queryName(name)
-      .option("checkpointLocation", s"$dir/ckpt")
-      .outputMode(OutputMode.Append).start()
+    val collected = sink.isInstanceOf[ToMemory]
+    if (!collected) reclaimAtExit(dir)
     try {
-      q.processAllAvailable()
-      (1 until batches.size).foreach { i =>
-        deliver(i); q.processAllAvailable()
+      val batches = stage(dir)
+      require(batches.nonEmpty, s"$name: nothing to replay")
+      val feed = s"$dir/feed"
+      batches.head.stageInto(feed)
+      val later = batches.zipWithIndex.drop(1).map { case (b, i) =>
+        b.stageInto(s"$dir/b$i")
+        val files = new java.io.File(s"$dir/b$i").listFiles()
+          .filter(_.getName.endsWith(".parquet"))
+        require(files.length <= 1, s"$name: batch $i is " +
+          s"${files.length} files; a batch after the first must be one")
+        files.headOption.map(f =>
+          (f.toPath, java.nio.file.Paths.get(feed, s"b$i.parquet")))
       }
-    } finally { q.stop(); deleteRec(new java.io.File(dir)) }
-    // the memory sink registers its table in the session that started
-    // the query; re-bind the rows to the CALLER's session so the
-    // returned frame composes with its other frames
-    spark.createDataFrame(s2.table(name).collectAsList(),
-      s2.table(name).schema)
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution." +
+          "streaming.state.RocksDBStateStoreProvider")
+      s2.conf.set("spark.sql.shuffle.partitions", "4")
+      // changelog checkpointing: per-micro-batch commits upload the delta
+      // changelog instead of snapshotting SST files — the production
+      // setting for many small batches, and measured ~30-40% off the
+      // multi-batch replay rows' wall (the snapshot upload dominated at
+      // fixture state sizes)
+      s2.conf.set("spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled", "true")
+      s2.conf.set("spark.sql.streaming.stateStore.rocksdb.localRootDir",
+        s"$dir/rocksdb")
+      val stream = s2.readStream.schema(batches.head.schema(spark))
+        .parquet(feed)
+      val writer = sink match {
+        case ToMemory(build) =>
+          build(stream).writeStream.format("memory").queryName(name)
+            .outputMode(OutputMode.Append)
+        case ForEachBatch(fold, _) =>
+          stream.writeStream.foreachBatch {
+            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+                batchId: Long) => fold(dir, batch.toDF(), batchId)
+          }
+      }
+      val q = writer.option("checkpointLocation", s"$dir/ckpt").start()
+      try {
+        q.processAllAvailable()
+        for (move <- later) {
+          for ((src, dst) <- move) java.nio.file.Files.move(src, dst)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      sink match {
+        // the memory sink's table lives in the session that ran the
+        // query; re-bind its rows to the caller's session
+        case ToMemory(_) => spark.createDataFrame(
+          s2.table(name).collectAsList(), s2.table(name).schema)
+        case ForEachBatch(_, result) => result(dir)
+      }
+    } finally if (collected)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   /** Events-table replay for the declared streaming-monitor rows: the
-    * whole events table as micro-batch 1 (4 write tasks — pre-start
-    * delivery keeps it one batch), then a 72-hour far-future sentinel
-    * pushes the watermark past every day end so all days close; the
-    * sentinel series is filtered from the returned rows and the caller
-    * projects its monitor's schema. (The sentinel is a 1-partition
-    * range — range(1)'s default 32 tasks for one row cost 1.2 s of
-    * pure setup, measured.)
+    * whole events table (the memoized feed, linked) as micro-batch 1,
+    * then a 72-hour far-future sentinel pushes the watermark past every
+    * day end so all days close; the sentinel series is filtered from the
+    * returned rows and the caller projects its monitor's schema. (The
+    * sentinel is a 1-partition range — range(1)'s default 32 tasks for
+    * one row cost 1.2 s of pure setup, measured.)
     */
   private def replayMonitor(spark: SparkSession, sfDir: String,
       name: String, build: DataFrame => DataFrame): DataFrame = {
@@ -2243,8 +2178,10 @@ object Streams {
       .select(lit(-1L).as("event_id"), lit(sentinelTs).as("ts"),
         lit(-1L).as("user_id"), lit("__sentinel").as("event_type"),
         lit(0.0).as("value"), lit("{}").as("props"))
-    fileReplay(spark, name, Seq(ev, sentinel), Seq(8, 1), build,
-      batch0Dir = Some(feedDir))
+    val feed = new java.io.File(feedDir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).toSeq
+    fileReplay(spark, name, ToMemory(build))(_ =>
+      Seq(LinkBatch(feed), WriteBatch(sentinel)))
       .filter(col("event_type") =!= "__sentinel")
   }
 
@@ -2353,11 +2290,10 @@ object Streams {
     * r14 #1: the session/feed cost was re-paid per `stream_*_ok` row —
     * drift and changepoint each scanned events for max(ts) and wrote
     * the identical 8-file feed). First caller writes the feed + scans
-    * max(ts) once; later callers HARDLINK the files into their own
-    * feed dir (same tmpfs, so links are free; fileReplay's deliver
-    * MOVES them, hence per-invocation links rather than a shared feed
-    * dir). The entry owns the feed dir; a JVM shutdown hook reclaims
-    * it too.
+    * max(ts) once; each replay HARDLINKS the files into its own feed
+    * (same tmpfs, so links are free; the replay adds its later batches
+    * to that feed, so the cached dir is never the feed itself). The
+    * entry owns the feed dir; a JVM shutdown hook reclaims it too.
     */
   private val monitorFeedMemo = graft.Memo[
     (graft.Memo.ScratchDir, java.sql.Timestamp, Long)]("events")
@@ -2395,27 +2331,21 @@ object Streams {
     * technique that retires the spec-only `stream_watermark_late` row):
     * the events table is replayed through a REAL three-micro-batch
     * append-mode streaming aggregation —
-    *  1. every ON-TIME row in one batch, delivered BEFORE the query
-    *     starts (the initial listing is one micro-batch regardless of
-    *     file count, so it writes and reads in parallel; a post-start
-    *     multi-file batch could split and let the mid-run watermark
-    *     drop rows the contract calls on-time), parking the watermark
-    *     at max(ts) − 10 min;
+    *  1. every ON-TIME row in one batch, parking the watermark at
+    *     max(ts) − 10 min;
     *  2. the designated LATE set (rows older than max(ts) − 2 h with
     *     event_id % 7 = 0): every window they belong to ended ≥ 50 min
     *     below the watermark, so the streaming agg must drop ALL of
     *     them;
     *  3. one far-future sentinel row that pushes the watermark past
     *     every real window, so append mode finalizes and emits them.
-    * Batches are delivered as files moved into the source directory
-    * between processAllAvailable() calls — the data path stays fully
-    * distributed (the driver only renames files). The emitted result
-    * must equal the batch tumbling aggregate over the non-late rows —
-    * exactly what the DuckDB oracle computes — and `late_dropped`
-    * (rows fed minus rows aggregated) must equal the planted late-set
-    * size, which the oracle recomputes in SQL: an engine that stopped
-    * dropping late rows mismatches on both the window counts and the
-    * cardinality column.
+    * The three batches replay through [[fileReplay]]. The emitted
+    * result must equal the batch tumbling aggregate over the non-late
+    * rows — exactly what the DuckDB oracle computes — and
+    * `late_dropped` (rows fed minus rows aggregated) must equal the
+    * planted late-set size, which the oracle recomputes in SQL: an
+    * engine that stopped dropping late rows mismatches on both the
+    * window counts and the cardinality column.
     */
   def watermarkLateOk(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = graft.sources.Tables.events(spark, sfDir)
@@ -2427,75 +2357,17 @@ object Streams {
     val lateCut = new java.sql.Timestamp(maxTs.getTime - 2L * 3600 * 1000)
     val sentinelTs = new java.sql.Timestamp(maxTs.getTime + 3L * 3600 * 1000)
     val isLate = col("ts") < lit(lateCut) && pmod(col("event_id"), lit(7)) === 0
-    val dir = java.nio.file.Files
-      .createTempDirectory(scratchBase, "graft_wmk").toString
-    val feed = new java.io.File(s"$dir/feed"); feed.mkdirs()
-    // b1 is delivered BEFORE the query starts (the fileReplay batch-0
-    // rule: the initial listing takes every pre-existing file as ONE
-    // micro-batch), so it may write and read with several tasks — the
-    // old post-start coalesce(1) paid a single-threaded parquet encode
-    // of the whole on-time table
-    ev.filter(!isLate).coalesce(4).write.parquet(s"$dir/b1")
-    ev.filter(isLate).coalesce(1).write.parquet(s"$dir/b2")
     // 1-partition range: range(1)'s default 32 tasks for one row are
     // pure task-launch overhead (the replayMonitor sentinel finding)
-    spark.range(0L, 1L, 1L, 1)
+    val sentinel = spark.range(0L, 1L, 1L, 1)
       .select(lit(-1L).as("event_id"), lit(sentinelTs).as("ts"),
         lit(-1L).as("user_id"), lit("__sentinel").as("event_type"),
         lit(0.0).as("value"), lit("{}").as("props"))
-      .write.parquet(s"$dir/b3")
-    def deliver(batch: String): Unit =
-      new java.io.File(s"$dir/$batch").listFiles()
-        .filter(_.getName.endsWith(".parquet")).zipWithIndex
-        .foreach { case (f, i) =>
-          java.nio.file.Files.move(f.toPath,
-            new java.io.File(feed, s"$batch-$i.parquet").toPath)
-        }
-    def deliverPre(batch: String): Unit =
-      new java.io.File(s"$dir/$batch").listFiles()
-        .filter(_.getName.endsWith(".parquet")).zipWithIndex
-        .foreach { case (f, i) =>
-          java.nio.file.Files.move(f.toPath,
-            new java.io.File(feed, s"$batch-$i.parquet").toPath)
-        }
-    deliverPre("b1") // pre-start: one micro-batch regardless of files
-    val stream = spark.readStream.schema(ev.schema).parquet(feed.toString)
-    // the streaming agg state is window×type-sized (~3.6k groups at
-    // sf0.1): at the session's 32 shuffle partitions the HDFS state
-    // store pays 32 partitions × 3 batches of checkpoint I/O for a
-    // hand-rolled query; pin the stream (its partitioning is fixed at
-    // start) to 4 — the fileReplay harness setting; state-store tasks
-    // carry a ~250 ms open/commit latency each regardless of rows, so
-    // fewer partitions is strictly less blocked task time — and
-    // restore the session conf for the batch result
-    val shufKey = "spark.sql.shuffle.partitions"
-    val oldShuf = spark.conf.get(shufKey)
-    val q =
-      try {
-        spark.conf.set(shufKey, "4")
-        tumblingCounts(stream).writeStream
-          .format("memory").queryName("wmk_late_ok")
-          // on fast scratch with the rest of the harness (r19 opt:
-          // without it Spark puts the checkpoint + HDFS-backed state
-          // store on java.io.tmpdir — the slow root disk; 8 state
-          // partitions × 3 batches of delta/commit files there were
-          // ~6 s of blocked task time on ~1.7 s of cpu)
-          .option("checkpointLocation", s"$dir/ckpt")
-          .outputMode(OutputMode.Append).start()
-      } finally spark.conf.set(shufKey, oldShuf)
-    try {
-      q.processAllAvailable() // b1: the pre-start initial listing
-      Seq("b2", "b3").foreach { b =>
-        deliver(b); q.processAllAvailable()
-      }
-    } finally {
-      q.stop()
-      // the memory sink owns the result now; the staged table copy must
-      // not accumulate across walks/verify/bench runs
-      deleteRec(new java.io.File(dir))
-    }
-    val result = spark.table("wmk_late_ok")
-      .filter(col("event_type") =!= "__sentinel")
+    val result =
+      fileReplay(spark, "wmk_late_ok", ToMemory(tumblingCounts))(_ =>
+        Seq(WriteBatch(ev.filter(!isLate), 4),
+          WriteBatch(ev.filter(isLate)), WriteBatch(sentinel)))
+        .filter(col("event_type") =!= "__sentinel")
     val summary = result.agg((lit(evCount) - sum(col("n_events")))
       .cast("long").as("late_dropped"))
     result.crossJoin(broadcast(summary))
@@ -2515,23 +2387,26 @@ object Streams {
     * row-count spec; this makes it a value-level oracle row.)
     */
   def streamSinkOk(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink_ok").toString
-    val src = eventsFileStream(spark, sfDir)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"))
-    Seq(1, 2).foreach { _ =>
-      startParquetSink(src, s"$dir/out", s"$dir/ckpt").awaitTermination()
-    }
-    // the returned frame lazily reads $dir/out, so only the checkpoint
-    // is reclaimable here
-    deleteRec(new java.io.File(s"$dir/ckpt"))
-    spark.read.parquet(s"$dir/out")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        countDistinct(col("event_id")).as("n_distinct_events"),
-        sum(col("value").cast("decimal(18,4)")).cast("double")
-          .as("sum_value"))
-      .orderBy(col("event_type").asc)
+    val dir = java.nio.file.Files
+      .createTempDirectory(scratchBase, "graft_sink_ok").toString
+    try {
+      val src = eventsFileStream(spark, sfDir)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("value"))
+      Seq(1, 2).foreach { _ =>
+        startParquetSink(src, s"$dir/out", s"$dir/ckpt").awaitTermination()
+      }
+      val perType = spark.read.parquet(s"$dir/out")
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          countDistinct(col("event_id")).as("n_distinct_events"),
+          sum(col("value").cast("decimal(18,4)")).cast("double")
+            .as("sum_value"))
+      // one row per event type: collected, so the dir can go now
+      spark.createDataFrame(perType.collectAsList(), perType.schema)
+        .orderBy(col("event_type").asc)
+    } finally
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   /** File-replay source: read the events table as a stream (one file per

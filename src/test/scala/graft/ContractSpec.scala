@@ -105,6 +105,33 @@ class ContractSpec extends AnyFunSuite {
         offenders.mkString(", "))
   }
 
+  test("processAllAvailable in src/main only inside Streams.fileReplay " +
+      "(streaming rows replay through the one harness)") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    // (file, line index, inside the harness) for every code-line call
+    val calls = files.flatMap { f =>
+      val rel = root.relativize(f).toString.replace('\\', '/')
+      val lines = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        .split("\n").toSeq
+      // the harness body runs from its def to its member-level close
+      val from = lines.indexWhere(_.contains("def fileReplay"))
+      val to = if (from < 0) -1 else lines.indexWhere(_ == "  }", from)
+      lines.zipWithIndex.collect {
+        case (l, i) if l.contains("processAllAvailable") &&
+            !l.trim.startsWith("*") && !l.trim.startsWith("//") =>
+          (rel, i, rel == "graft/streaming/Streams.scala" &&
+            i > from && i < to)
+      }
+    }
+    assert(calls.exists(_._3), "fileReplay no longer drives its query")
+    val offenders = calls.filterNot(_._3).map(c => s"${c._1}:${c._2 + 1}")
+    assert(offenders.isEmpty,
+      "replay through Streams.fileReplay, not a hand-rolled driver " +
+        s"loop: ${offenders.mkString(", ")}")
+  }
+
   test("entry (flagship) returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

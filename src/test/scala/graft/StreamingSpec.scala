@@ -1041,4 +1041,29 @@ class StreamingSpec extends AnyFunSuite {
     val n2 = spark.read.parquet(s"$dir/out").count()
     assert(n1 > 0 && n1 === n2)
   }
+
+  test("stream_sink_ok leaves no graft_sink_ok scratch dir behind") {
+    // the roots a replay scratch dir can land under: /dev/shm when it has
+    // room, java.io.tmpdir otherwise
+    val roots = Seq(sys.props("java.io.tmpdir"), "/dev/shm").distinct
+      .map(new java.io.File(_)).filter(_.isDirectory)
+    def sinkDirs(): Int = roots.map(r => Option(r.listFiles()).toSeq
+      .flatten.count(_.getName.startsWith("graft_sink_ok"))).sum
+    val before = sinkDirs()
+    val rows = Streams.streamSinkOk(spark, TestSpark.sf).collect()
+    assert(rows.nonEmpty)
+    assert(sinkDirs() === before, "stream_sink_ok left its scratch dir")
+  }
+
+  test("stream_watermark_late_ok runs on its own session: an active " +
+      "query of the same name on the caller's session does not clash") {
+    val want = Streams.watermarkLateOk(spark, TestSpark.sf).collect().toSeq
+    val blocker = MemoryStream[Int].toDF().writeStream.format("memory")
+      .queryName("wmk_late_ok").start()
+    try {
+      val got = Streams.watermarkLateOk(spark, TestSpark.sf).collect().toSeq
+      assert(want.nonEmpty)
+      assert(got === want)
+    } finally blocker.stop()
+  }
 }
