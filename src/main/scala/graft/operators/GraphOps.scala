@@ -1,16 +1,16 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 import graft.sources.Tables
 
-/** Graph-centrality analytics over relational data (SURVEY.md §2.K
-  * extension family). `dedup_cluster` already covers connected
-  * components (min-label propagation + a GraphX Pregel twin); this
-  * module adds the SCORING side of graph analytics — PageRank over a
-  * graph derived from the fact tables — the other workhorse iterative
-  * dataflow (PageRank is the canonical example in both the Pregel and
-  * the Spark papers).
+/** Graph analytics over relational data (SURVEY.md §2.K extension
+  * family): PageRank over a graph derived from the fact tables, and
+  * the co-purchase graph family. Every iterative operator here — and
+  * `dedup_cluster`, through [[components]] — runs its rounds through
+  * the one [[fixpoint]] loop.
   */
 object GraphOps {
 
@@ -287,19 +287,15 @@ object GraphOps {
       minCo: Long = 2L): DataFrame =
     triangleEnum(cachedCoPurchaseEdges(spark, sfDir, minCo))
 
-  /** [[graphTriangles]] over any (ok, pk) basket frame. */
-  def triangleCoPurchase(li: DataFrame, minCo: Long): DataFrame =
-    triangleEnum(coPurchaseEdges(li, minCo))
-
-  /** The co-purchase edge aggregation shared by `graph_triangles` and
-    * `graph_cc` — positional i<j pairs over the sorted per-order part
+  /** The co-purchase edge aggregation behind the ten co-purchase graph
+    * rows — positional i<j pairs over the sorted per-order part
     * list = the a.pk < b.pk row-pair multiset (equal-part pairs
     * filtered), kept iff co-purchased in ≥ minCo orders. The edge set
     * is graph-sized (thousands of rows) but its lineage is a corpus
     * pass, and the consumers read it repeatedly (triangleEnum four
-    * times; ccEnum once per propagation round) — an eager cut makes
-    * the corpus pay once (the pagerank_dist lesson: 4 recomputations
-    * measured as 3.4 s wall / 19 s task time here).
+    * times; [[fixpoint]] once per rebind) — an eager cut
+    * makes the corpus pay once (the pagerank_dist lesson: 4
+    * recomputations measured as 3.4 s wall / 19 s task time here).
     */
   private[graft] def coPurchaseEdges(li: DataFrame,
       minCo: Long): DataFrame =
@@ -317,10 +313,11 @@ object GraphOps {
       .select(col("u"), col("v"), col("co"))
       .localCheckpoint(true)
 
-  /** Memo of the co-purchase edge aggregate — TWO declared queries
-    * (`graph_triangles`, `graph_cc`) are views of the one
-    * localCheckpoint'd edge artifact, so the second consumer must not
-    * re-pay the corpus pass. Entries are graph-sized.
+  /** Memo of the co-purchase edge aggregate — ten declared graph rows
+    * (triangles, cc, sssp, widest, labelprop, kcore, jaccard,
+    * clustcoef, closeness, betweenness) are views of the one
+    * localCheckpoint'd edge artifact, so no later consumer re-pays
+    * the corpus pass. Entries are graph-sized.
     */
   private val coEdgeMemo = graft.Memo[DataFrame]("lineitem")
 
@@ -343,12 +340,12 @@ object GraphOps {
     * without pinning a round count.
     *
     * Scale shape: the corpus pays ONCE (the shared
-    * [[coPurchaseEdges]] aggregation); every propagation round is one
-    * keyed join + min-aggregate over GRAPH-sized frames, labels
-    * localCheckpoint per round (lineage one round deep), and the
-    * convergence check is a 1-row count (the bounded-collect class).
-    * Rounds = graph diameter — small-world co-purchase graphs converge
-    * in a handful; for planetary graphs the alternating
+    * [[coPurchaseEdges]] aggregation); every round of [[components]]
+    * is a keyed join + min-aggregate and a pointer jump over
+    * GRAPH-sized frames, and the convergence check is a 1-row probe
+    * (the bounded-collect class). Rounds grow with log(diameter) —
+    * small-world co-purchase graphs converge in a handful; for
+    * planetary graphs the alternating
     * large-star/small-star contraction (Kiveris et al. 2014) is the
     * drop-in round-compressor with the same per-round join shape.
     */
@@ -371,10 +368,8 @@ object GraphOps {
     * Shape: frontier BFS on the shared [[cachedCoPurchaseEdges]]
     * artifact (third declared view of the one corpus pass) — per round
     * ONE keyed join of the frontier against the edge frame + an
-    * anti-join against settled vertices, all graph-sized on the cloned
-    * low-latency session (the ccEnum treatment: AQE off, 4 shuffle
-    * partitions, per-round localCheckpoint with superseded-block
-    * reclamation, conf restore in finally). Rounds = seed-set
+    * anti-join against settled vertices, all graph-sized (one level of
+    * [[fixpoint]]'s BFS shape). Rounds = seed-set
     * eccentricity, each touching frontier-sized frames only — at
     * planetary scale this is the textbook Pregel BFS with the frontier
     * as the message set.
@@ -427,9 +422,8 @@ object GraphOps {
     * Scale shape: the corpus pays once (the shared
     * [[cachedCoPurchaseEdges]] memo — fifth declared view of the one
     * pass); each round is ONE (label-keyed join + sum-by-(vertex,
-    * label) + per-vertex argmax window) over graph-sized frames on the
-    * cloned low-latency session, labels localCheckpoint'd per round
-    * with superseded-block release. Exactly k rounds, schedule-pinned,
+    * label) + per-vertex argmax window) over graph-sized frames, one
+    * [[fixpoint]] round each. Exactly k rounds, schedule-pinned,
     * so the oracle unrolls them as chained CTEs (the bpe_train
     * precedent) — no recursion, no convergence dependence.
     */
@@ -460,10 +454,9 @@ object GraphOps {
     * Scale shape: the corpus pays once (the shared
     * [[cachedCoPurchaseEdges]] memo — sixth declared view of the one
     * pass); each sweep is TWO keyed semi-joins of the edge frame
-    * against the surviving set + one count aggregate, all graph-sized
-    * on the cloned low-latency session, survivors localCheckpoint'd
-    * per sweep with superseded-block release — textbook distributed
-    * k-core (the Pregel peel), rounds bounded by the pin.
+    * against the surviving set + one count aggregate, all graph-sized,
+    * one [[fixpoint]] round per sweep — textbook distributed k-core
+    * (the Pregel peel), rounds bounded by the pin.
     */
   def graphKcore(spark: SparkSession, sfDir: String, minCo: Long = 2L,
       k: Int = 3, sweeps: Int = 4): DataFrame =
@@ -522,9 +515,8 @@ object GraphOps {
     * Shape: ONE multi-source BFS carrying (vertex, seed) pairs —
     * per round one keyed join of the labeled frontier against the
     * shared edge memo + an anti-join against settled pairs (the
-    * ssspEnum scaffolding with the seed label threaded through), on
-    * the cloned low-latency session with per-round localCheckpoint +
-    * superseded-block release. State is |V|·|reached seeds| pairs —
+    * ssspEnum scaffolding with the seed label threaded through). State
+    * is |V|·|reached seeds| pairs —
     * the seed sample bounds it, which is exactly why the sampled
     * estimator is the one that scales. Ninth declared view of the one
     * [[cachedCoPurchaseEdges]] corpus pass. The oracle is the
@@ -541,54 +533,25 @@ object GraphOps {
     * edge frame — the planted-graph harness for GraphMixSpec.
     */
   private[graft] def closenessEnum(edges: DataFrame, seedMod: Long,
-      maxDepth: Int): DataFrame = {
-    val spark0 = edges.sparkSession
-    val s2 = spark0.newSession()
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    val und = reboundUnd(s2, edges, Seq("u", "v"))
-    var dists = und.select(col("u").as("x")).distinct()
-      .filter(pmod(col("x"), lit(seedMod)) === 0)
-      .select(col("x"), col("x").as("s"), lit(0).as("dist"))
-      .localCheckpoint(true)
-    var frontier = dists
-    // the settled set accumulates as a LIST of per-round checkpointed
-    // frames, unioned lazily where read (r19 opt: re-checkpointing the
-    // whole union each round was a third O(settled) materialization
-    // job per round — the per-level frames are already materialized,
-    // and a lazy union of k in-memory blocks scans, never recomputes)
-    var levels = List(dists)
-    def settled() = levels.reduce(_ unionByName _)
-    // no conf restore (the kcoreEnum resolution, ADVICE r16): s2 is
-    // private to this call and the final aggregate below is s2-bound —
-    // the whole enum runs under one declared low-latency conf
-    var d = 1
-    var growing = true
-    while (growing && d <= maxDepth) {
-      val next = und
-        .join(frontier.select(col("x").as("u"), col("s")), "u")
+      maxDepth: Int): DataFrame =
+    fixpoint(edges, Seq("u", "v"), maxDepth, levels = true) { und =>
+      seedSet(und, seedMod).select(col("x"), col("x").as("s"),
+        lit(0).as("dist"))
+    }({ (und, frontier, settled, d) =>
+      und.join(frontier.select(col("x").as("u"), col("s")), "u")
         .select(col("v").as("x"), col("s")).distinct()
-        .join(settled().select(col("x"), col("s")), Seq("x", "s"),
+        .join(settled.select(col("x"), col("s")), Seq("x", "s"),
           "left_anti")
         .select(col("x"), col("s"), lit(d).as("dist"))
-        .localCheckpoint(true)
-      if (next.count() == 0) {
-        unpersistCheckpoint(next)
-        growing = false
-      } else {
-        levels ::= next
-        frontier = next
-        d += 1
-      }
+    }, emptyFrontier) { (_, settled, _) =>
+      settled.filter(col("dist") > 0)
+        .groupBy(col("x"))
+        .agg(count(lit(1)).as("n_seeds"), sum(col("dist")).as("total_dist"))
+        .select(col("x").as("part"), col("n_seeds"), col("total_dist"),
+          round(col("n_seeds").cast("double")
+            / col("total_dist").cast("double"), 4).as("closeness"))
+        .orderBy(col("part").asc)
     }
-    settled().filter(col("dist") > 0)
-      .groupBy(col("x"))
-      .agg(count(lit(1)).as("n_seeds"), sum(col("dist")).as("total_dist"))
-      .select(col("x").as("part"), col("n_seeds"), col("total_dist"),
-        round(col("n_seeds").cast("double")
-          / col("total_dist").cast("double"), 4).as("closeness"))
-      .orderBy(col("part").asc)
-  }
 
   /** `graph_betweenness` — seed-PAIR-sampled betweenness centrality,
     * the tenth classic (VERDICT r17 #8, the last centrality gap): how
@@ -632,70 +595,47 @@ object GraphOps {
       maxDepth: Int): DataFrame = {
     val Scale = 1000000L // 1e6 fixed point; with σ ≤ ~1e4 at the
     // depth cap, σ²·1e6 ≤ 1e14 stays far inside Long (oracle: HUGEINT)
-    val spark0 = edges.sparkSession
-    val s2 = spark0.newSession()
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    val und = reboundUnd(s2, edges, Seq("u", "v"))
-    var sp = und.select(col("u").as("x")).distinct()
-      .filter(pmod(col("x"), lit(seedMod)) === 0)
-      .select(col("x"), col("x").as("s"), lit(0).as("d"),
-        lit(1L).as("sig"))
-      .localCheckpoint(true)
-    var frontier = sp
-    // per-level checkpointed frames, unioned lazily (the closenessEnum
-    // r19 treatment: no O(settled) re-materialization per round)
-    var levels = List(sp)
-    def settled() = levels.reduce(_ unionByName _)
-    var d = 1
-    var growing = true
-    while (growing && d <= maxDepth) {
+    fixpoint(edges, Seq("u", "v"), maxDepth, levels = true) { und =>
+      seedSet(und, seedMod).select(col("x"), col("x").as("s"),
+        lit(0).as("d"), lit(1L).as("sig"))
+    }({ (und, frontier, settled, d) =>
       // level-synchronous σ: paths to a NEW vertex at depth d = the
       // integer sum of its depth-(d−1) parents' σ (one keyed join +
       // keyed aggregate; the anti-join keeps only first-reached pairs)
-      val next = und
-        .join(frontier.select(col("x").as("u"), col("s"), col("sig")),
+      und.join(frontier.select(col("x").as("u"), col("s"), col("sig")),
           "u")
         .groupBy(col("v").as("x"), col("s"))
         .agg(sum(col("sig")).as("sig"))
-        .join(settled().select(col("x"), col("s")), Seq("x", "s"),
+        .join(settled.select(col("x"), col("s")), Seq("x", "s"),
           "left_anti")
         .select(col("x"), col("s"), lit(d).as("d"), col("sig"))
-        .localCheckpoint(true)
-      if (next.count() == 0) {
-        unpersistCheckpoint(next)
-        growing = false
-      } else {
-        levels ::= next
-        frontier = next
-        d += 1
-      }
+    }, emptyFrontier) { (_, sp, _) =>
+      val pairs = sp
+        .filter(pmod(col("x"), lit(seedMod)) === 0 && col("x") > col("s"))
+        .select(col("s"), col("x").as("t"), col("d").as("dst"),
+          col("sig").as("sigst"))
+      val a = sp.select(col("s"), col("x").as("part"),
+        col("d").as("da"), col("sig").as("siga"))
+      val b = sp.select(col("s").as("t"), col("x").as("part"),
+        col("d").as("db"), col("sig").as("sigb"))
+      // v mediates (s, t) iff d(s,v) + d(v,t) = d(s,t); σ_st(v) =
+      // σ_sv·σ_vt (σ_vt = σ_tv — path reversal on an undirected graph)
+      a.join(b, Seq("part"))
+        .join(pairs, Seq("s", "t"))
+        .filter(col("da") + col("db") === col("dst")
+          && col("part") =!= col("s") && col("part") =!= col("t"))
+        .select(col("part"),
+          (col("siga") * col("sigb")).as("stress_term"),
+          expr(s"(siga * sigb * ${Scale}L) div sigst").as("bt_term"))
+        .groupBy(col("part"))
+        .agg(count(lit(1)).as("n_pairs"),
+          sum(col("stress_term")).as("stress"),
+          sum(col("bt_term")).as("bt_fp"))
+        .select(col("part"), col("n_pairs"), col("stress"), col("bt_fp"),
+          round(col("bt_fp").cast("double") / lit(Scale.toDouble), 6)
+            .as("betweenness"))
+        .orderBy(col("part").asc)
     }
-    val sp2 = settled()
-    val pairs = sp2
-      .filter(pmod(col("x"), lit(seedMod)) === 0 && col("x") > col("s"))
-      .select(col("s"), col("x").as("t"), col("d").as("dst"),
-        col("sig").as("sigst"))
-    val a = sp2.select(col("s"), col("x").as("part"),
-      col("d").as("da"), col("sig").as("siga"))
-    val b = sp2.select(col("s").as("t"), col("x").as("part"),
-      col("d").as("db"), col("sig").as("sigb"))
-    // v mediates (s, t) iff d(s,v) + d(v,t) = d(s,t); σ_st(v) =
-    // σ_sv·σ_vt (σ_vt = σ_tv — path reversal on an undirected graph)
-    a.join(b, Seq("part"))
-      .join(pairs, Seq("s", "t"))
-      .filter(col("da") + col("db") === col("dst")
-        && col("part") =!= col("s") && col("part") =!= col("t"))
-      .select(col("part"), (col("siga") * col("sigb")).as("stress_term"),
-        expr(s"(siga * sigb * ${Scale}L) div sigst").as("bt_term"))
-      .groupBy(col("part"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(col("stress_term")).as("stress"),
-        sum(col("bt_term")).as("bt_fp"))
-      .select(col("part"), col("n_pairs"), col("stress"), col("bt_fp"),
-        round(col("bt_fp").cast("double") / lit(Scale.toDouble), 6)
-          .as("betweenness"))
-      .orderBy(col("part").asc)
   }
 
   /** Clustering coefficient over an undirected (u, v, co) edge frame —
@@ -753,48 +693,26 @@ object GraphOps {
     */
   private[graft] def kcoreEnum(edges: DataFrame, k: Int,
       sweeps: Int): DataFrame = {
-    val spark0 = edges.sparkSession
-    val s2 = spark0.newSession()
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    val und = reboundUnd(s2, edges, Seq("u", "v"))
-    var verts = und.select(col("u").as("x")).distinct()
-      .localCheckpoint(true)
-    var n = verts.count()
-    // No conf restore here (ADVICE r16): s2 is private to this call and
-    // the returned serve query below is BOUND to s2, so the labelprop-
-    // inherited finally block restored nothing — it only flipped AQE
-    // back ON for the serve join while the sweeps had run without it.
-    // The serve query is the same graph-sized two-semi-join shape as a
-    // sweep; it now runs under the SAME low-latency settings the sweeps
-    // used, so the whole enum executes under one declared conf.
-    var r = 0
-    var converged = false
-    while (r < sweeps && !converged) {
+    // the peel is monotone: a sweep that drops nothing is the fixpoint,
+    // and the pinned sweeps left are no-ops
+    val peeledNothing = (verts: DataFrame, next: DataFrame) =>
+      verts.count() == next.count()
+    fixpoint(edges, Seq("u", "v"), sweeps, levels = false) { und =>
+      und.select(col("u").as("x")).distinct()
+    }({ (und, verts, _, _) =>
       // degree within the surviving set: both endpoints must survive
-      val stepped = und
-        .join(verts.select(col("x").as("u")), "u")
+      und.join(verts.select(col("x").as("u")), "u")
         .join(verts.select(col("x").as("v")), "v")
         .groupBy(col("u")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("u").as("x"))
-        .localCheckpoint(true)
-      val m = stepped.count()
-      // monotone: a sweep that drops nothing is the fixpoint — the
-      // remaining pinned sweeps are no-ops, skip them
-      converged = m == n
-      n = m
-      val prev = verts
-      verts = stepped
-      unpersistCheckpoint(prev)
-      r += 1
+    }, peeledNothing) { (und, verts, _) =>
+      und.join(verts.select(col("x").as("u")), "u")
+        .join(verts.select(col("x").as("v")), "v")
+        .groupBy(col("u")).agg(count(lit(1)).as("core_degree"))
+        .select(col("u").as("part"), col("core_degree"))
+        .orderBy(col("part").asc)
     }
-    und
-      .join(verts.select(col("x").as("u")), "u")
-      .join(verts.select(col("x").as("v")), "v")
-      .groupBy(col("u")).agg(count(lit(1)).as("core_degree"))
-      .select(col("u").as("part"), col("core_degree"))
-      .orderBy(col("part").asc)
   }
 
   /** Synchronous k-round weighted LPA over an undirected (u, v, co)
@@ -803,43 +721,24 @@ object GraphOps {
   private[graft] def labelpropEnum(edges: DataFrame,
       rounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark0 = edges.sparkSession
-    val s2 = spark0.newSession()
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    val und = reboundUnd(s2, edges, Seq("u", "v", "co"))
-    var labels = und.select(col("u")).distinct()
-      .select(col("u").as("x"), col("u").as("lbl"))
-      .localCheckpoint(true)
-    try {
-      var r = 0
-      while (r < rounds) {
-        // weighted neighbor-label vote: sum co per (vertex, label),
-        // argmax by (weight DESC, label ASC) — one keyed join + agg +
-        // window per round, all graph-sized
-        val votes = und
-          .join(labels.select(col("x").as("u"), col("lbl").as("nl")), "u")
-          .groupBy(col("v").as("x"), col("nl"))
-          .agg(sum(col("co")).as("w"))
-        val stepped = votes
-          .withColumn("rn", row_number().over(Window.partitionBy(col("x"))
-            .orderBy(col("w").desc, col("nl").asc)))
-          .filter(col("rn") === 1)
-          .select(col("x"), col("nl").as("lbl"))
-          .localCheckpoint(true)
-        val prev = labels
-        labels = stepped
-        unpersistCheckpoint(prev)
-        r += 1
-      }
-    } finally {
-      s2.conf.set("spark.sql.adaptive.enabled",
-        spark0.conf.get("spark.sql.adaptive.enabled", "true"))
-      s2.conf.set("spark.sql.shuffle.partitions",
-        spark0.conf.get("spark.sql.shuffle.partitions", "200"))
+    fixpoint(edges, Seq("u", "v", "co"), rounds, levels = false) { und =>
+      und.select(col("u")).distinct()
+        .select(col("u").as("x"), col("u").as("lbl"))
+    }({ (und, labels, _, _) =>
+      // weighted neighbor-label vote: sum co per (vertex, label),
+      // argmax by (weight DESC, label ASC) — one keyed join + agg +
+      // window per round, all graph-sized
+      und.join(labels.select(col("x").as("u"), col("lbl").as("nl")), "u")
+        .groupBy(col("v").as("x"), col("nl"))
+        .agg(sum(col("co")).as("w"))
+        .withColumn("rn", row_number().over(Window.partitionBy(col("x"))
+          .orderBy(col("w").desc, col("nl").asc)))
+        .filter(col("rn") === 1)
+        .select(col("x"), col("nl").as("lbl"))
+    }, (_, _) => false) { (_, labels, _) =>
+      labels.select(col("x").as("part"), col("lbl").as("community"))
+        .orderBy(col("part").asc)
     }
-    labels.select(col("x").as("part"), col("lbl").as("community"))
-      .orderBy(col("part").asc)
   }
 
   /** Widest-path fixpoint over an undirected (u, v, co) edge frame —
@@ -848,93 +747,141 @@ object GraphOps {
   private[graft] def widestEnum(edges: DataFrame,
       seedMod: Long): DataFrame = {
     val SeedCap = 1000000000L
-    val spark0 = edges.sparkSession
-    val s2 = spark0.newSession()
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    val und = reboundUnd(s2, edges, Seq("u", "v", "co"))
-    var caps = und.select(col("u").as("x")).distinct()
-      .select(col("x"),
-        when(pmod(col("x"), lit(seedMod)) === 0, lit(SeedCap))
-          .otherwise(lit(0L)).as("cap"))
-      .localCheckpoint(true)
-    try {
-      var changed = 1L
-      while (changed > 0) {
-        val nbrBest = und
-          .join(caps.select(col("x").as("u"), col("cap").as("ncap")), "u")
-          .select(col("v").as("x"),
-            least(col("ncap"), col("co")).as("cand"))
-          .groupBy(col("x")).agg(max(col("cand")).as("mx"))
-        val stepped = caps
-          .join(nbrBest, Seq("x"), "left")
-          .select(col("x"), col("cap"),
-            greatest(col("cap"), coalesce(col("mx"), lit(0L)))
-              .as("ncap"))
-          .localCheckpoint(true)
-        changed = stepped.filter(col("ncap") > col("cap")).count()
-        val prev = caps
-        caps = stepped.select(col("x"), col("ncap").as("cap"))
-        unpersistCheckpoint(prev)
-      }
-    } finally {
-      s2.conf.set("spark.sql.adaptive.enabled",
-        spark0.conf.get("spark.sql.adaptive.enabled", "true"))
-      s2.conf.set("spark.sql.shuffle.partitions",
-        spark0.conf.get("spark.sql.shuffle.partitions", "200"))
+    fixpoint(edges, Seq("u", "v", "co"), Int.MaxValue, levels = false) {
+      und => und.select(col("u").as("x")).distinct()
+        .select(col("x"), when(pmod(col("x"), lit(seedMod)) === 0,
+          lit(SeedCap)).otherwise(lit(0L)).as("cap"))
+    }({ (und, caps, _, _) =>
+      val nbrBest = und
+        .join(caps.select(col("x").as("u"), col("cap").as("ncap")), "u")
+        .select(col("v").as("x"), least(col("ncap"), col("co")).as("cand"))
+        .groupBy(col("x")).agg(max(col("cand")).as("mx"))
+      caps.select(col("x"), col("cap").as("prev"))
+        .join(nbrBest, Seq("x"), "left")
+        .select(col("x"), col("prev"),
+          greatest(col("prev"), coalesce(col("mx"), lit(0L))).as("cap"))
+    }, (_, next) => next.filter(col("cap") > col("prev")).isEmpty) {
+      (_, caps, _) => caps.filter(col("cap") > 0)
+        .select(col("x").as("part"), col("cap").as("capacity"))
+        .orderBy(col("part").asc)
     }
-    caps.filter(col("cap") > 0)
-      .select(col("x").as("part"), col("cap").as("capacity"))
-      .orderBy(col("part").asc)
   }
 
   /** Multi-source BFS over an undirected (u, v) edge frame — the
     * planted-graph harness for GraphMixSpec.
     */
   private[graft] def ssspEnum(edges: DataFrame, seedMod: Long,
-      maxDepth: Int): DataFrame = {
+      maxDepth: Int): DataFrame =
+    fixpoint(edges, Seq("u", "v"), maxDepth, levels = true) { und =>
+      seedSet(und, seedMod).select(col("x"), lit(0).as("dist"))
+    }({ (und, frontier, settled, d) =>
+      und.join(frontier.select(col("x").as("u")), "u")
+        .select(col("v").as("x")).distinct()
+        .join(settled.select(col("x")), Seq("x"), "left_anti")
+        .select(col("x"), lit(d).as("dist"))
+    }, emptyFrontier) { (_, settled, _) =>
+      settled.select(col("x").as("part"), col("dist"))
+        .orderBy(col("part").asc)
+    }
+
+  /** The one graph fixpoint loop. Every iterative graph operator —
+    * [[components]] (graph_cc, dedup_cluster), kcore, labelprop,
+    * widest, sssp, closeness and betweenness — supplies only its
+    * `seed` (round 0, built from the edge frame), its round `step` and
+    * its `tail`; this loop owns the rules they share.
+    *
+    * Session: rounds plan on a `newSession()` clone with AQE off and 4
+    * shuffle partitions. Iterates are graph-sized, so per-round AQE and
+    * scheduler latency dominated the wall otherwise; the clone keeps
+    * these settings off the caller's session.
+    *
+    * Edges: [[reboundUnd]] builds the undirected edge frame once, on
+    * the clone, and it is checkpointed like a round; `step` and `tail`
+    * get it as `und`.
+    *
+    * Rounds: each round's frame is localCheckpoint'd eagerly, so
+    * lineage stays one round deep. With `levels` (BFS) every level is
+    * kept: `step(und, newest, union of all levels, round)`, and the
+    * tail gets the union. Otherwise only the newest frame is kept:
+    * `step(und, newest, newest, round)`, and the superseded frame is
+    * released through [[unpersistCheckpoint]] once its successor is
+    * materialized.
+    *
+    * Stopping: after `maxRounds` rounds, or as soon as
+    * `stop(newest, next)` holds — an empty frontier (BFS: the empty
+    * level is released) or nothing changed (`next` is kept). The tail's
+    * third argument says whether `stop` fired.
+    *
+    * Tail session: the clone's two settings are set back to the
+    * caller's before the tail is built, so the tail and every consumer
+    * of the returned frame plan under the caller's settings (SQLConf is
+    * read per action).
+    *
+    * Release: on return, every checkpoint this call made that the
+    * returned plan does not read is released — the edge frame, unless
+    * the tail joins it; if anything throws, every live one is.
+    */
+  private[graft] def fixpoint(edges: DataFrame, cols: Seq[String],
+      maxRounds: Int, levels: Boolean)(seed: DataFrame => DataFrame)(
+      step: (DataFrame, DataFrame, DataFrame, Int) => DataFrame,
+      stop: (DataFrame, DataFrame) => Boolean)(
+      tail: (DataFrame, DataFrame, Boolean) => DataFrame): DataFrame = {
     val spark0 = edges.sparkSession
     val s2 = spark0.newSession()
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    val und = reboundUnd(s2, edges, Seq("u", "v"))
-    var dists = und.select(col("u").as("x")).distinct()
-      .filter(pmod(col("x"), lit(seedMod)) === 0)
-      .select(col("x"), lit(0).as("dist"))
-      .localCheckpoint(true)
-    var frontier = dists
-    // per-level checkpointed frames, unioned lazily (the closenessEnum
-    // r19 treatment: no O(settled) re-materialization per round)
-    var levels = List(dists)
-    def settled() = levels.reduce(_ unionByName _)
-    try {
-      var d = 1
-      var growing = true
-      while (growing && d <= maxDepth) {
-        val next = und
-          .join(frontier.select(col("x").as("u")), "u")
-          .select(col("v").as("x")).distinct()
-          .join(settled().select(col("x")), Seq("x"), "left_anti")
-          .select(col("x"), lit(d).as("dist"))
-          .localCheckpoint(true)
-        if (next.count() == 0) {
-          unpersistCheckpoint(next)
-          growing = false
-        } else {
-          levels ::= next
-          frontier = next
-          d += 1
-        }
-      }
-    } finally {
-      s2.conf.set("spark.sql.adaptive.enabled",
-        spark0.conf.get("spark.sql.adaptive.enabled", "true"))
-      s2.conf.set("spark.sql.shuffle.partitions",
-        spark0.conf.get("spark.sql.shuffle.partitions", "200"))
+    val knobs = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "4")
+    knobs.foreach { case (k, v) => s2.conf.set(k, v) }
+    var held = List.empty[DataFrame]
+    def cut(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(true)
+      held ::= c
+      c
     }
-    settled().select(col("x").as("part"), col("dist"))
-      .orderBy(col("part").asc)
+    def release(df: DataFrame): Unit = {
+      unpersistCheckpoint(df)
+      held = held.filterNot(_ eq df)
+    }
+    val out = try {
+      val und = cut(reboundUnd(s2, edges, cols))
+      var kept = List(cut(seed(und))) // newest first
+      def all = if (levels) kept.reduce(_ unionByName _) else kept.head
+      var round = 1
+      var stopped = false
+      while (!stopped && round <= maxRounds) {
+        val next = cut(step(und, kept.head, all, round))
+        stopped = stop(kept.head, next)
+        if (!levels) {
+          release(kept.head)
+          kept = List(next)
+        } else if (stopped) release(next)
+        else kept ::= next
+        round += 1
+      }
+      knobs.foreach { case (k, _) => s2.conf.set(k, spark0.conf.get(k)) }
+      tail(und, all, stopped)
+    } catch {
+      case NonFatal(e) =>
+        held.foreach(unpersistCheckpoint)
+        throw e
+    }
+    val read = out.queryExecution.analyzed.collect {
+      case l: LogicalRDD => l.rdd.id
+    }.toSet
+    held.filterNot(h => checkpointRdd(h).exists(r => read(r.id)))
+      .foreach(unpersistCheckpoint)
+    out
   }
+
+  /** [[fixpoint]]'s BFS stop: the new level reached nothing. */
+  private val emptyFrontier: (DataFrame, DataFrame) => Boolean =
+    (_, next) => next.isEmpty
+
+  /** The pinned seed set of the BFS operators: vertices with
+    * id % `seedMod` = 0, as `x`.
+    */
+  private def seedSet(und: DataFrame, seedMod: Long): DataFrame =
+    und.select(col("u").as("x")).distinct()
+      .filter(pmod(col("x"), lit(seedMod)) === 0)
 
   /** The undirected edge frame re-bound to the cloned low-latency
     * session, hash-partitioned by `u` and sorted ONCE (r19 opt round,
@@ -942,11 +889,12 @@ object GraphOps {
     * loop-invariant BIG side of every fixpoint round's neighbor join,
     * and the plain RDD re-bind erased its partitioning, so every round
     * re-shuffled (and re-sorted) the whole graph to join a dust-sized
-    * frontier. `localCheckpoint` preserves outputPartitioning and
-    * outputOrdering through the LogicalRDD leaf, so the per-round join
-    * now exchanges only the frontier/labels side. Partition count =
-    * the clone's pinned shuffle.partitions (conf, not a constant).
-    * `cols` = ("u", "v") plus any edge payload columns to carry.
+    * frontier. [[fixpoint]] localCheckpoints it, which preserves
+    * outputPartitioning and outputOrdering through the LogicalRDD leaf,
+    * so the per-round join exchanges only the frontier/labels side.
+    * Partition count = the clone's pinned shuffle.partitions (conf,
+    * not a constant). `cols` = ("u", "v") plus any edge payload
+    * columns to carry.
     */
   private def reboundUnd(s2: SparkSession, edges: DataFrame,
       cols: Seq[String]): DataFrame = {
@@ -956,99 +904,90 @@ object GraphOps {
     val und0 = edges.select(sel: _*).union(edges.select(swapped: _*))
     s2.createDataFrame(und0.rdd, und0.schema)
       .repartition(col("u")).sortWithinPartitions(col("u"))
-      .localCheckpoint(true)
   }
 
+  /** The materialized RDD behind a localCheckpoint'd frame: `Dataset
+    * .localCheckpoint` wraps it in a `LogicalRDD` leaf (a freshly
+    * derived `df.rdd` is a new lineage-mapped RDD with no blocks of its
+    * own).
+    */
+  private def checkpointRdd(df: DataFrame) =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
+
   /** Releases the block-manager memory behind a localCheckpoint'd frame
-    * that a fixpoint loop has superseded (ADVICE r14: without this,
-    * every propagation round leaves its checkpoint blocks pinned until
-    * GC, accumulating across rounds and invocations). `Dataset
-    * .localCheckpoint` wraps the materialized RDD in a `LogicalRDD`
-    * leaf — unpersisting THAT rdd (not a freshly-derived `df.rdd`,
-    * which is a new lineage-mapped RDD with no blocks of its own) is
-    * what frees the storage. Only ever called on frames the loop has
-    * already replaced, so nothing downstream can recompute from them.
+    * (ADVICE r14: without this, every propagation round leaves its
+    * checkpoint blocks pinned until GC, accumulating across rounds and
+    * invocations). Only ever called on frames nothing downstream reads
+    * any more.
     */
   private[graft] def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
+    checkpointRdd(df).foreach(_.unpersist(blocking = false))
 
-  /** Hash-min label propagation over an undirected (u, v) edge frame,
-    * with POINTER JUMPING: each round folds in both the neighbor
-    * minimum AND label(label(x)) — the label edge x→label(x) is a
-    * sound reachability shortcut (label(x) = m means m is reachable
-    * from x; label(m) = m′ means m′ is reachable from m, hence from
-    * x), so doubling only accelerates toward the same min-reachable
-    * fixpoint while cutting rounds from O(diameter) to O(log n) — the
-    * Shiloach–Vishkin-style hybrid every distributed CC implementation
-    * uses. Measured on the 6155-vertex sf0.1 graph: 8 rounds to the
-    * fixpoint at ~0.5 s/round; the per-round floor is plan-compile +
-    * job latency on dust-sized frames, not data (the pagerank_dist
-    * "iteration floor" finding) — it is iteration-fixed, never
-    * corpus-proportional, and the corpus-sized edge build runs once
-    * on the caller's session with full parallelism (memoized across
-    * graph_triangles and graph_cc).
+  /** Connected components of an undirected (u, v) edge frame:
+    * hash-min label propagation with POINTER JUMPING, to the fixpoint
+    * where every vertex carries the MINIMUM vertex id reachable from
+    * it. Each round (1) hops — every vertex takes the min of its own
+    * and its neighbors' labels (one keyed join + aggregate) — and (2)
+    * jumps — every vertex replaces its label with its label's label
+    * (labels ⋈ labels on lbl = x), halving pointer chains. The label
+    * edge x→label(x) is a sound reachability shortcut, so jumping only
+    * accelerates toward the same fixpoint while cutting rounds from
+    * O(diameter) to O(log diameter) (measured: a 100k-node path
+    * converges in 17 rounds), so maxIter = 20 covers any graph a dedup
+    * job can produce. One round per checkpoint: chaining two rounds
+    * into one plan re-executes the inner round once per reference
+    * (measured 3× the task time). If the loop exits unconverged it
+    * THROWS rather than emitting partially-propagated labels (VERDICT
+    * r2 #1 — the silent cap was the bug).
+    *
+    * `vertices` (column `x`) seeds the labels when given, so isolated
+    * vertices still get a row; otherwise the edge endpoints do. `tail`
+    * maps the converged (x, lbl) frame to the result.
     */
-  private[graft] def ccEnum(edges: DataFrame): DataFrame = {
-    // Rounds run on a CLONED session (the pagerank_dist treatment):
-    // AQE off + 4 shuffle partitions while the graph-sized iterates
-    // execute — per-round scheduler/AQE latency dominated the wall
-    // otherwise. Unlike pagerank_dist the result is VERTEX-sized
-    // (unbounded at scale), so no collect-rebind: instead the clone's
-    // conf is RESTORED after convergence, and the returned frame —
-    // whose lineage is one localCheckpoint + sort — plans any later
-    // action under the session's normal settings (SQLConf is read at
-    // planning time, per action).
-    val spark0 = edges.sparkSession
-    val s2 = spark0.newSession()
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    val und = reboundUnd(s2, edges, Seq("u", "v"))
-    var labels = und.select(col("u")).distinct()
-      .select(col("u").as("x"), col("u").as("lbl"))
-      .localCheckpoint(true)
-    // One hash-min + pointer-jump application: (x, prev, lbl). The
-    // und/ptr joins use fresh projections so two applications CHAIN
-    // into one plan without attribute ambiguity.
-    def stepOnce(lbls: DataFrame): DataFrame = {
+  private[graft] def components(edges: DataFrame,
+      vertices: Option[DataFrame], maxIter: Int)(
+      tail: DataFrame => DataFrame): DataFrame =
+    fixpoint(edges, Seq("u", "v"), maxIter, levels = false) { und =>
+      vertices.fold(und.select(col("u").as("x")).distinct())(v =>
+          und.sparkSession.createDataFrame(v.rdd, v.schema))
+        .select(col("x"), col("x").as("lbl"))
+    }({ (und, lbls, _, _) =>
       val nbrMin = und
         .join(lbls.select(col("x").as("u"), col("lbl").as("nl")), "u")
         .groupBy(col("v").as("x")).agg(min(col("nl")).as("mn"))
-      val ptr = lbls.select(col("x").as("px"), col("lbl").as("plbl"))
-      lbls.select(col("x"), col("lbl"))
+      val hopped = lbls.select(col("x"), col("lbl").as("prev"))
         .join(nbrMin, Seq("x"), "left")
-        .join(ptr, col("lbl") === col("px"), "left")
-        .select(col("x"), col("lbl").as("prev"),
-          least(col("lbl"), coalesce(col("mn"), col("lbl")),
-            coalesce(col("plbl"), col("lbl"))).as("lbl"))
+        .select(col("x"), col("prev"),
+          least(col("prev"), coalesce(col("mn"), col("prev"))).as("hop"))
+      // labels are always vertex ids, so the jump key always resolves;
+      // the left join + coalesce is belt-and-braces
+      hopped
+        .join(hopped.select(col("x").as("jx"), col("hop").as("jl")),
+          col("hop") === col("jx"), "left")
+        .select(col("x"), col("prev"),
+          coalesce(col("jl"), col("hop")).as("lbl"))
+    }, (_, next) => next.filter(col("lbl") < col("prev")).isEmpty) {
+      (_, lbls, converged) =>
+        if (!converged) throw new IllegalStateException(
+          s"connected components did not converge within maxIter=$maxIter " +
+            "rounds — with pointer doubling this needs a component of " +
+            s"diameter > 2^$maxIter; refusing to emit partially-propagated " +
+            "labels")
+        tail(lbls.select(col("x"), col("lbl")))
     }
-    // conf restore + superseded-checkpoint reclamation in try/finally:
-    // an exception mid-loop must not leave the clone mis-configured or
-    // prior rounds' checkpointed blocks pinned in the block manager.
-    try {
-      var changed = 1L
-      while (changed > 0) {
-        // ONE application per materialization. (A chained double-step
-        // per checkpoint was tried in r15 and REVERTED: without
-        // materializing the inner step, its join+agg subtree re-executes
-        // in each of the outer step's three references — measured 3×
-        // the task time at local[32], a net loss over the extra action.)
-        val stepped = stepOnce(labels).localCheckpoint(true)
-        changed = stepped.filter(col("lbl") < col("prev")).count()
-        val prev = labels
-        labels = stepped.select(col("x"), col("lbl"))
-        unpersistCheckpoint(prev)
-      }
-    } finally {
-      s2.conf.set("spark.sql.adaptive.enabled",
-        spark0.conf.get("spark.sql.adaptive.enabled", "true"))
-      s2.conf.set("spark.sql.shuffle.partitions",
-        spark0.conf.get("spark.sql.shuffle.partitions", "200"))
+
+  /** [[components]] of an undirected (u, v) edge frame as (part,
+    * component) — `graph_cc`'s core. Measured on the 6155-vertex sf0.1
+    * co-purchase graph: 7 rounds, the last of which changes nothing;
+    * the per-round floor is plan-compile + job latency on dust-sized
+    * frames, not data (the pagerank_dist "iteration floor" finding) —
+    * iteration-fixed, never corpus-proportional.
+    */
+  private[graft] def ccEnum(edges: DataFrame): DataFrame =
+    components(edges, None, maxIter = 20) {
+      _.select(col("x").as("part"), col("lbl").as("component"))
+        .orderBy(col("part").asc)
     }
-    labels.select(col("x").as("part"), col("lbl").as("component"))
-      .orderBy(col("part").asc)
-  }
 
   /** Degree-oriented triangle enumeration over any id-ordered
     * (u < v) undirected edge frame — [[graphTriangles]]'s core,

@@ -510,21 +510,12 @@ object MinHashDedup {
     * {A,B,C} keep A, even though A≁C directly). Every doc gets a row;
     * singletons are their own cluster.
     *
-    * Implementation: iterative min-label propagation with pointer
-    * doubling over the cached edge list. Each round does (1) a hop —
-    * every node takes the min of its own and its neighbors' labels
-    * (one keyed join + aggregate) — and (2) a jump — every node
-    * replaces its label with its label's label (labels ⋈ labels on
-    * lbl = id), halving pointer chains. Hop alone needs diameter
-    * rounds; hop+jump converges in O(log diameter) (measured: a
-    * 100k-node path converges in 17 rounds), so maxIter = 20 covers
-    * any graph a dedup job can produce. If the loop still exits
-    * unconverged it THROWS rather than emitting partially-propagated
-    * cluster ids (VERDICT r2 #1 — the silent cap was the bug). The
-    * edge list is persisted so each round doesn't recompute the
-    * similarity pipeline; labels are localCheckpoint'd to keep lineage
-    * bounded. GraphX's Pregel formulation of the same dataflow is
-    * `dedupClusterGraphX` below, spec-asserted equal.
+    * Implementation: [[GraphOps.components]] — the one
+    * connected-components loop, shared with `graph_cc` — over the
+    * similarity pairs, with every doc as a vertex, capped at `maxIter`
+    * rounds (it throws rather than emit unconverged labels). GraphX's
+    * Pregel formulation of the same dataflow is `dedupClusterGraphX`
+    * below, spec-asserted equal.
     */
   def dedupCluster(spark: SparkSession, sfDir: String,
       threshold: Double = 0.2, maxIter: Int = 20): DataFrame =
@@ -547,10 +538,9 @@ object MinHashDedup {
   private def cachedClusterLabels(spark: SparkSession, sfDir: String,
       threshold: Double, maxIter: Int): DataFrame =
     labelMemo(spark, sfDir, threshold, maxIter) {
-      clusterFromPairs(Tables.documents(spark, sfDir),
+      clusterLabels(Tables.documents(spark, sfDir),
         cachedNgramPairs(spark, sfDir, maxDfFrac = 0.3)
-          .filter(col("jaccard") >= threshold)
-          .select(col("a_id"), col("b_id")), maxIter)
+          .filter(col("jaccard") >= threshold), maxIter)
         .persist()
     }
 
@@ -575,65 +565,23 @@ object MinHashDedup {
     */
   def dedupClusterDocs(docs: DataFrame, threshold: Double = 0.2,
       maxIter: Int = 20): DataFrame =
-    clusterFromPairs(docs,
-      ngramJaccardDocs(docs, threshold).select(col("a_id"), col("b_id")),
-      maxIter)
+    clusterLabels(docs, ngramJaccardDocs(docs, threshold), maxIter)
 
-  /** Connected components over an explicit similarity-pair edge list. */
-  def clusterFromPairs(docs: DataFrame, pairs: DataFrame,
-      maxIter: Int = 20): DataFrame = {
-    val edges = pairs
-      .union(pairs.select(col("b_id"), col("a_id")))
-      .toDF("src", "dst")
-      .persist()
-    var labels = docs.select(col("doc_id").as("id"),
-      col("doc_id").as("lbl")).localCheckpoint(true)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // hop: min of own label and every neighbor's label
-      val incoming = edges
-        .join(labels, edges("src") === labels("id"))
-        .groupBy(col("dst").as("id2"))
-        .agg(min(col("lbl")).as("in_lbl"))
-      val hopped = labels
-        .join(incoming, labels("id") === incoming("id2"), "left")
-        .select(col("id"), col("lbl").as("old_lbl"),
-          least(col("lbl"), coalesce(col("in_lbl"), col("lbl"))).as("lbl"))
-      // jump (pointer doubling): lbl ← lbl(lbl). Labels are always doc
-      // ids (mins of doc ids), so the self-join key always resolves;
-      // the left join + coalesce is belt-and-braces.
-      val jumper = hopped.select(col("id").as("jid"), col("lbl").as("jlbl"))
-      val next = hopped
-        .join(jumper, hopped("lbl") === jumper("jid"), "left")
-        .select(col("id"),
-          coalesce(col("jlbl"), col("lbl")).as("lbl"),
-          (coalesce(col("jlbl"), col("lbl")) < col("old_lbl")).as("changed"))
+  /** (doc_id, cluster_id, is_survivor) over the (a_id, b_id) similarity
+    * pairs. Checkpointed, so the result owns its blocks at its plan root
+    * and the label memo's release frees them.
+    */
+  private def clusterLabels(docs: DataFrame, pairs: DataFrame,
+      maxIter: Int): DataFrame =
+    GraphOps.components(
+      pairs.select(col("a_id").as("u"), col("b_id").as("v")),
+      Some(docs.select(col("doc_id").as("x"))), maxIter) {
+      _.select(col("x").as("doc_id"), col("lbl").as("cluster_id"))
+        .withColumn("is_survivor",
+          when(col("doc_id") === col("cluster_id"), 1).otherwise(0))
+        .orderBy(col("doc_id").asc)
         .localCheckpoint(true)
-      converged = next.filter(col("changed")).limit(1).count() == 0L
-      // the superseded round's blocks are dead once next is materialized
-      GraphOps.unpersistCheckpoint(labels)
-      labels = next.drop("changed")
-      i += 1
     }
-    edges.unpersist()
-    if (!converged) {
-      throw new IllegalStateException(
-        s"dedup_cluster did not converge within maxIter=$maxIter rounds — " +
-          "with pointer doubling this needs a component of diameter " +
-          s"> 2^$maxIter; refusing to emit partially-propagated cluster ids")
-    }
-    // checkpointed, so the result owns its blocks at its plan root and
-    // the last round's can go
-    val out = labels
-      .select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
-      .withColumn("is_survivor",
-        when(col("doc_id") === col("cluster_id"), 1).otherwise(0))
-      .orderBy(col("doc_id").asc)
-      .localCheckpoint(true)
-    GraphOps.unpersistCheckpoint(labels)
-    out
-  }
 
   /** `dedup_cluster_stats` — the cluster-size histogram over
     * `dedup_cluster`'s labels: (cluster_size, n_clusters) rows, the

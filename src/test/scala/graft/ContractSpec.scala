@@ -105,31 +105,54 @@ class ContractSpec extends AnyFunSuite {
         offenders.mkString(", "))
   }
 
-  test("processAllAvailable in src/main only inside Streams.fileReplay " +
-      "(streaming rows replay through the one harness)") {
+  /** Every code line under src/main/scala that contains `needle`, as
+    * (file:line, inside one of `bodies`); a body is a (file, def) pair
+    * spanning from the def's line to its member-level close.
+    */
+  private def codeLines(needle: String,
+      bodies: Seq[(String, String)]): Seq[(String, Boolean)] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     val files = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    // (file, line index, inside the harness) for every code-line call
-    val calls = files.flatMap { f =>
+    files.flatMap { f =>
       val rel = root.relativize(f).toString.replace('\\', '/')
       val lines = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
         .split("\n").toSeq
-      // the harness body runs from its def to its member-level close
-      val from = lines.indexWhere(_.contains("def fileReplay"))
-      val to = if (from < 0) -1 else lines.indexWhere(_ == "  }", from)
+      val spans = bodies.collect { case (`rel`, d) =>
+        val from = lines.indexWhere(_.contains(d))
+        (from, if (from < 0) -1 else lines.indexWhere(_ == "  }", from))
+      }
       lines.zipWithIndex.collect {
-        case (l, i) if l.contains("processAllAvailable") &&
+        case (l, i) if l.contains(needle) &&
             !l.trim.startsWith("*") && !l.trim.startsWith("//") =>
-          (rel, i, rel == "graft/streaming/Streams.scala" &&
-            i > from && i < to)
+          (s"$rel:${i + 1}", spans.exists { case (a, b) => i > a && i < b })
       }
     }
-    assert(calls.exists(_._3), "fileReplay no longer drives its query")
-    val offenders = calls.filterNot(_._3).map(c => s"${c._1}:${c._2 + 1}")
+  }
+
+  test("processAllAvailable in src/main only inside Streams.fileReplay " +
+      "(streaming rows replay through the one harness)") {
+    val calls = codeLines("processAllAvailable",
+      Seq("graft/streaming/Streams.scala" -> "def fileReplay"))
+    assert(calls.exists(_._2), "fileReplay no longer drives its query")
+    val offenders = calls.filterNot(_._2).map(_._1)
     assert(offenders.isEmpty,
       "replay through Streams.fileReplay, not a hand-rolled driver " +
         s"loop: ${offenders.mkString(", ")}")
+  }
+
+  test("newSession() in src/main only inside GraphOps.fixpoint, " +
+      "graphPagerankUnrolledPlan and Streams.fileReplay (graph loops " +
+      "run through the one fixpoint loop)") {
+    val graph = "graft/operators/GraphOps.scala"
+    val calls = codeLines("newSession()", Seq(graph -> "def fixpoint",
+      graph -> "def graphPagerankUnrolledPlan",
+      "graft/streaming/Streams.scala" -> "def fileReplay"))
+    val offenders = calls.filterNot(_._2).map(_._1)
+    assert(offenders.isEmpty,
+      "run graph iterations through GraphOps.fixpoint, not a " +
+        s"hand-rolled session clone: ${offenders.mkString(", ")}")
+    assert(calls.count(_._2) === 3, s"expected one clone per place: $calls")
   }
 
   test("entry (flagship) returns rows on sf0.001") {

@@ -463,6 +463,45 @@ class GraphMixSpec extends AnyFunSuite {
     }
   }
 
+  test("graph fixpoints keep no checkpoint beyond their result's own " +
+      "plan leaves") {
+    // the loop-invariant edge frame and every superseded round are
+    // released; only the checkpoints the result reads stay persisted
+    val sc = spark.sparkContext
+    val planted = Seq((0L, 1L), (1L, 2L), (2L, 3L), (17L, 18L),
+      (40L, 41L)).toDF("u", "v")
+    val runs = Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)](
+      "cc" -> (GraphOps.ccEnum(_)),
+      "sssp" -> (GraphOps.ssspEnum(_, seedMod = 17L, maxDepth = 12)))
+    runs.foreach { case (name, run) =>
+      val before = sc.getPersistentRDDs.keySet
+      val out = run(planted)
+      out.collect()
+      val leaves = out.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.toSet
+      val extra = sc.getPersistentRDDs.keySet -- before -- leaves
+      assert(extra.isEmpty, s"$name still holds rdds $extra")
+    }
+  }
+
+  test("a fixpoint whose step throws releases every checkpoint it made") {
+    val sc = spark.sparkContext
+    val planted = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("u", "v")
+    val before = sc.getPersistentRDDs.keySet
+    val ex = intercept[IllegalStateException] {
+      GraphOps.fixpoint(planted, Seq("u", "v"), 5, levels = false)(
+        _.select(col("u").as("x")).distinct())({ (und, last, _, round) =>
+        if (round == 2) throw new IllegalStateException("planted failure")
+        last.join(und.select(col("v").as("x")), "x").distinct()
+      }, (_, _) => false)((_, last, _) => last)
+    }
+    assert(ex.getMessage === "planted failure")
+    val extra = sc.getPersistentRDDs.keySet -- before
+    assert(extra.isEmpty, s"a failed loop still holds rdds $extra")
+  }
+
   test("graph_closeness: planted path/star values are exact; the " +
       "depth cap truncates; self-distance is excluded") {
     // seeds under mod 17: 0, 17, 34 (50/52 are not — 51 would be!).

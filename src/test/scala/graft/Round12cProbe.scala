@@ -139,11 +139,13 @@ object Round12cProbe {
       assert(heavy.getLong(1) == h && heavy.getLong(2) > 0)
     }
 
-    GraphOps.triangleCoPurchase(baskets(3000L), 2L).count() // warm
+    GraphOps.triangleEnum(GraphOps.coPurchaseEdges(baskets(3000L), 2L))
+      .count() // warm
     Seq(("1x", 15000L), ("5x", 75000L), ("25x", 375000L)).foreach {
       case (tag, n) =>
         val t0 = System.nanoTime()
-        val tri = GraphOps.triangleCoPurchase(baskets(n), 2L).count()
+        val tri = GraphOps.triangleEnum(
+          GraphOps.coPurchaseEdges(baskets(n), 2L)).count()
         val t1 = System.nanoTime()
         println(f"R12CPROBE $tag graph_triangles ${(t1 - t0) / 1e9}%.2f s" +
           f" triangles=$tri orders=$n")
