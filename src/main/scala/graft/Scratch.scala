@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Fast local scratch for SHUFFLE files (`spark.local.dir`) — the
   * round-19 optimization round's fleet-wide finding: thread-dump
   * sampling of the bench showed up to 24 of 32 task threads BLOCKED in
@@ -15,9 +17,7 @@ package graft
   *
   * Production analogue (optimization guide §9): shuffle on fast local
   * SSD/NVMe — nobody runs shuffle-heavy Spark against a slow shared
-  * disk. This is the same setting the streaming harnesses already
-  * apply to their checkpoint/feed scratch (Streams.scratchBase,
-  * ADVICE r14).
+  * disk. The same base holds every query's scratch data ([[dir]]).
   *
   * Resolution order: $SPARK_GRAFT_LOCAL_DIR when set (cluster
   * operators parameterize placement); /dev/shm when writable with
@@ -44,28 +44,75 @@ object Scratch {
     sys.env.get("SPARK_GRAFT_LOCAL_DIR")
       .orElse(shmIfUsable("graft_spark_local"))
 
-  /** Fast base for the sink/lake queries' scratch DATA dirs (same
-    * resolution + production analogue as the shuffle dir; the
-    * streaming harnesses already sit on it via Streams.scratchBase):
-    * the lake rows' commit chains are read-after-write sequences of
-    * small parquet snapshots + captures, and paying the slow
-    * disk-backed java.io.tmpdir for each was the same convoy the
-    * shuffle finding removed. Falls back to java.io.tmpdir.
-    *
-    * Resolved ONCE per process (ADVICE r19, low): the /dev/shm
-    * headroom check re-ran per call, so a mid-process headroom dip
-    * silently flipped the base to java.io.tmpdir — the sink sweep
-    * (SinkQueries.uniqueRunDir's idle-dir reaper) then never saw its
-    * shm-side `*_runs` siblings again and tmpfs accumulated until JVM
-    * exit. A stable base keeps the sweep and its dirs on one root for
-    * the JVM lifetime.
+  /** Base of the scratch root: $SPARK_GRAFT_LOCAL_DIR, else /dev/shm
+    * with the 8 GiB rule above, else java.io.tmpdir. Resolved ONCE per
+    * process (ADVICE r19, low): re-checking the /dev/shm headroom per
+    * call let a mid-process dip flip later scratch onto another
+    * filesystem, out of reach of the owner that deletes it.
     */
   private lazy val fastTmpBase: String =
     sys.env.get("SPARK_GRAFT_LOCAL_DIR")
       .orElse(shmIfUsable("graft_sink_scratch"))
       .getOrElse(sys.props("java.io.tmpdir"))
 
-  def fastTmpDir(): String = fastTmpBase
+  private val rootPrefix = "graft_sinks_"
+
+  /** The per-process scratch root `<base>/graft_sinks_<pid>_<jvmStartHex>`
+    * that every [[dir]] lives under. Created on first use; a JVM
+    * shutdown hook deletes it, and creating it sweeps the roots that
+    * exited processes left behind ([[sweepStale]]).
+    */
+  private[graft] lazy val root: String = {
+    val startHex = java.lang.management.ManagementFactory
+      .getRuntimeMXBean.getStartTime.toHexString
+    val r = new java.io.File(fastTmpBase,
+      s"$rootPrefix${ProcessHandle.current().pid()}_$startHex")
+    r.mkdirs()
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteQuietly(r)))
+    sweepStale(new java.io.File(fastTmpBase), System.currentTimeMillis())
+    r.getAbsolutePath
+  }
+
+  private val dirSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A fresh, empty directory under [[root]], named after `name`. Every
+    * call gets its own, so a frame read from an earlier call's directory
+    * stays readable after a later call of the same row. Owners may
+    * delete it early; whatever is left goes with the root at exit.
+    */
+  def dir(name: String): String = {
+    val d = new java.io.File(root, s"${name}_${dirSeq.incrementAndGet()}")
+    if (!d.mkdirs())
+      throw new java.io.IOException(s"cannot create scratch dir $d")
+    d.getAbsolutePath
+  }
+
+  /** Deletes each scratch root under `base` whose pid is not a live
+    * process and whose newest file is more than 30 minutes older than
+    * `now` (the idle guard covers a pid that is not visible from this
+    * process). Returns the deleted roots.
+    */
+  private[graft] def sweepStale(base: java.io.File,
+      now: Long): Seq[java.io.File] = {
+    val named = (rootPrefix + "(\\d+)_.*").r
+    def newest(f: java.io.File): Long =
+      try {
+        val s = java.nio.file.Files.walk(f.toPath)
+        try s.iterator().asScala.map(_.toFile.lastModified()).max
+        finally s.close()
+      } catch { case scala.util.control.NonFatal(_) => now }
+    val stale = Option(base.listFiles()).toSeq.flatten.filter { f =>
+      f.getName match {
+        case named(pid) => f.isDirectory &&
+          !ProcessHandle.of(pid.toLong).isPresent &&
+          newest(f) < now - 30L * 60 * 1000
+        case _ => false
+      }
+    }
+    stale.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    stale
+  }
 
   /** Apply to a builder: the fast local dir (no-op when none
     * resolves) + a codegen class cache sized for this library's query
@@ -88,10 +135,9 @@ object Scratch {
   /** The one session graft.Bench, Verify, PlanDump and TimeQ run on:
     * `local[cpus]` with one shuffle partition per core, UTC, no NTZ
     * inference (the fixtures' tz-less timestamps read as LTZ), no UI, a
-    * per-process temp warehouse (the bucketed/catalog queries
-    * saveAsTable — keep it out of the CWD, and apart between
-    * concurrent mains), [[configure]]'s scratch settings and the graft
-    * extensions.
+    * scratch warehouse (the bucketed/catalog queries saveAsTable — keep
+    * it out of the CWD, and apart between concurrent mains),
+    * [[configure]]'s scratch settings and the graft extensions.
     */
   def driverSession(): org.apache.spark.sql.SparkSession = {
     val spark = configure(org.apache.spark.sql.SparkSession.builder())
@@ -100,8 +146,7 @@ object Scratch {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", dir("warehouse"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftExtensions.install(spark)

@@ -44,17 +44,6 @@ object TimeQ {
       SparkEntry.queries.get(n) match {
         case None => System.err.println(s"[timeq] unknown query: $n")
         case Some(fn) =>
-          // SPARK_GRAFT_PRECOMPILE=1: compile-only codegen warm before
-          // rep1 (r20 opt round) — measures how much of the bench-cold
-          // rep1 cost is Janino compilation the CodegenWarm cache
-          // priming removes. Plan construction here must be pure for
-          // the query (see SparkEntry.pureConstruction).
-          if (sys.env.contains("SPARK_GRAFT_PRECOMPILE")) {
-            val t0 = System.nanoTime()
-            val nf = CodegenWarm.precompile(fn(spark, sfDir))
-            println(f"[timeq] $n precompile frags=$nf took=${
-              (System.nanoTime() - t0) / 1e9}%.3fs")
-          }
           (1 to reps).foreach { r =>
             org.apache.spark.graft.Instrument.drain(spark.sparkContext)
             val task0 = clock.runMs.get(); val cpu0 = clock.cpuMs.get()

@@ -66,7 +66,7 @@ object Multimodal {
     * write inherits upstream partitioning, read is scan→project.
     */
   def multimodalSchema(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = graft.sources.SinkQueries.tmpBase(sfDir) + "/multimodal_schema"
+    val out = graft.Scratch.dir("multimodal_schema")
     syntheticAssets(spark, sfDir)
       .select(col("asset_id"),
         struct(col("blob"), col("mime"), col("width"), col("height"),

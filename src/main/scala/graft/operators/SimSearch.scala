@@ -265,20 +265,6 @@ object SimSearch {
     }
   }
 
-  /** [[simsearchIvf]] with the learned codebook: same plan shape (inlined
-    * centroids, scan→project assignment, keyed probe join) — only the
-    * codebook quality differs. kCents defaults to the stride codebook's
-    * size so recall comparisons are at equal cell count.
-    */
-  def simsearchIvfLearned(spark: SparkSession, sfDir: String, k: Int = 5,
-      nQueries: Int = 10, kCents: Int = -1, nProbe: Int = 2): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-    val nCents =
-      if (kCents > 0) kCents
-      else ivfCodebook(emb, centroidStride = 127).length
-    ivfSearch(emb, ivfCodebookKmeans(emb, nCents), k, nQueries, nProbe)
-  }
-
   /** `simsearch_ivf_kmeans` — IVF with a LEARNED codebook as a declared,
     * fully-oracled path (VERDICT r13 #4): a deterministic integer-space
     * Lloyd's k-means replaces the stride sample. Every quantity is
@@ -557,19 +543,6 @@ object SimSearch {
     */
   private val MaxPqCodebook = 256
 
-  /** Per-invocation artifact directory for the persisted-index rows
-    * (ADVICE r14: a FIXED path races under concurrent invocations —
-    * one run's Overwrite/Append can interleave with another's read,
-    * serving a half-written or doubly-appended index). Each call gets
-    * a UUID-suffixed subdir; accumulation is bounded by an entry-time
-    * sweep of sibling dirs idle >30 min (live concurrent runs finish
-    * well inside that, so the sweep can't yank a dir a running query
-    * still reads). Values are unaffected — the path never feeds the
-    * oracle hash.
-    */
-  private def uniqueArtifactDir(sfDir: String, name: String): String =
-    graft.sources.SinkQueries.uniqueRunDir(sfDir, name)
-
   /** Core of [[simsearchPq]] over any (vec_id, embedding) frame. */
   def pqOver(emb: DataFrame, k: Int, nQueries: Int, centroidStride: Long,
       m: Int): DataFrame =
@@ -657,15 +630,6 @@ object SimSearch {
         round(dot(slice(col("q_emb"),
           col("s") * lit(sub) + lit(1), lit(sub)), col("subvec"))
           * lit(1000000.0), 0).cast("long").as("pdot_u"))
-  }
-
-  /** Probe-only: the bare code-assignment pipeline (c_id, s, code). */
-  private[graft] def pqCodesDebug(emb: DataFrame,
-      cb: Array[(Long, Array[Float], Double)], m: Int): DataFrame = {
-    val sub = pqSubDim(cb, m)
-    emb.select(col("vec_id").as("c_id"),
-      posexplode(array(pqCodeCols(cb, m, sub, col("embedding")): _*))
-        .as(Seq("s", "code")))
   }
 
   /** Shared PQ tail: sum the per-subspace lookups per candidate, rank,
@@ -762,7 +726,7 @@ object SimSearch {
     val coarse = ivfCodebook(emb, coarseStride)
     val pqCb = ivfCodebook(emb, pqStride).take(MaxPqCodebook)
     val sub = pqSubDim(pqCb, m)
-    val out = uniqueArtifactDir(sfDir, "simsearch_index_persisted")
+    val out = graft.Scratch.dir("simsearch_index_persisted")
     // BUILD: one corpus scan encodes (coarse cell, m PQ codes)
     ivfAssignCorpus(emb, coarse)
       .select(col("c_id"), col("cent_id"),
@@ -817,7 +781,7 @@ object SimSearch {
     val coarse = ivfCodebook(store, coarseStride)
     val pqCb = ivfCodebook(store, pqStride).take(MaxPqCodebook)
     val sub = pqSubDim(pqCb, m)
-    val out = uniqueArtifactDir(sfDir, "simsearch_index_incremental")
+    val out = graft.Scratch.dir("simsearch_index_incremental")
     def encode(part: DataFrame) = ivfAssignCorpus(part, coarse)
       .select(col("c_id"), col("cent_id"),
         posexplode(array(pqCodeCols(pqCb, m, sub, col("c_emb")): _*))
@@ -870,7 +834,7 @@ object SimSearch {
     val coarse = ivfCodebook(emb, coarseStride)
     val pqCb = ivfCodebook(emb, pqStride).take(MaxPqCodebook)
     val sub = pqSubDim(pqCb, m)
-    val out = uniqueArtifactDir(sfDir, "simsearch_index_delete")
+    val out = graft.Scratch.dir("simsearch_index_delete")
     // build: the persisted artifact (simsearch_index_persisted's shape)
     ivfAssignCorpus(emb, coarse)
       .select(col("c_id"), col("cent_id"),
@@ -932,7 +896,7 @@ object SimSearch {
     val coarse = ivfCodebook(emb, coarseStride)
     val pqCb = ivfCodebook(emb, pqStride).take(MaxPqCodebook)
     val sub = pqSubDim(pqCb, m)
-    val out = uniqueArtifactDir(sfDir, "simsearch_index_compact")
+    val out = graft.Scratch.dir("simsearch_index_compact")
     ivfAssignCorpus(emb, coarse)
       .select(col("c_id"), col("cent_id"),
         posexplode(array(pqCodeCols(pqCb, m, sub, col("c_emb")): _*))
@@ -1223,7 +1187,7 @@ object SimSearch {
         .filter(col("rn") <= k)
         .select(col("q_id"), col("c_id"))
     }
-    val out = uniqueArtifactDir(sfDir, "simsearch_index_rebuild")
+    val out = graft.Scratch.dir("simsearch_index_rebuild")
     val served = Seq(
       ("old", oldCb, serveUnder(oldCb, None)),
       ("rebuilt", newCb, serveUnder(newCb, Some(out + "/index"))))
@@ -1595,8 +1559,7 @@ object SimSearch {
       k: Int = 5, nQueries: Int = 10, degree: Int = GraphDegree,
       beamWidth: Int = GraphBeam, hops: Int = GraphHops,
       entryStride: Long = 127): DataFrame = {
-    val dir = graft.sources.SinkQueries.uniqueRunDir(sfDir,
-      "simsearch_graph_persisted")
+    val dir = graft.Scratch.dir("simsearch_graph_persisted")
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val e = graphFrame(emb)
@@ -2335,7 +2298,7 @@ object SimSearch {
     //
     // r14 driver-latency trim (VERDICT r13 "what's wrong" #1: 5.6 s
     // wall on 2.0 s cpu — sequential job gaps, the pagerank disease):
-    // job attribution (Round14Probe) put 21 of the ~39 jobs in the
+    // job attribution (r14 probe) put 21 of the ~39 jobs in the
     // mllib k-means|| fit alone (~2 jobs/iteration + init passes) and
     // 2 more in redundant stride-codebook collects. Fixes: (a) ONE
     // stride-codebook collect shared by the ivf probe and the learned-

@@ -1182,8 +1182,7 @@ object TextOps {
     */
   private[graft] def plantCorpusDays(spark: SparkSession,
       sfDir: String): String = {
-    val out = graft.sources.SinkQueries.uniqueRunDir(sfDir,
-      "pipeline_curate_v6")
+    val out = graft.Scratch.dir("pipeline_curate_v6")
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
         col("text"))

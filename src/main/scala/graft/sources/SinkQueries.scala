@@ -16,42 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object SinkQueries {
 
-  // Per-process unique scratch root (ADVICE r1): a fixed path keyed only
-  // by sfDir let two concurrent processes on the same sfDir (Bench and
-  // Verify) race on the same sink dirs, and Int hashCode collisions
-  // could alias different sfDirs. pid+startTime is unique per JVM;
-  // stable within one, so each query's save→read-back round-trip still
-  // reuses its own dir across calls in a session.
-  private val processTag: String = {
-    val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
-    s"${rt.getName.takeWhile(_ != '@')}_${rt.getStartTime.toHexString}"
-  }
-
-  private[graft] def tmpBase(sfDir: String): String = {
-    val h = Integer.toHexString(sfDir.hashCode)
-    s"${graft.Scratch.fastTmpDir()}/graft_sinks_${processTag}_$h"
-  }
-
-  /** Per-invocation scratch directory (ADVICE r15: the versioned-lake
-    * queries wrote to a FIXED path with rmDir at entry, so two
-    * overlapping invocations could interleave rmDir/saveVersion and
-    * read a half-written version chain — the same race ADVICE r14
-    * flagged for the persisted index). Each call gets a UUID-suffixed
-    * subdir; accumulation is bounded by an entry-time sweep of sibling
-    * dirs idle >30 min (live concurrent runs finish well inside that).
-    * Values are unaffected — the path never feeds the oracle hash.
-    */
-  private[graft] def uniqueRunDir(sfDir: String, name: String): String = {
-    val parent = new java.io.File(tmpBase(sfDir) + s"/${name}_runs")
-    parent.mkdirs()
-    val cutoff = System.currentTimeMillis() - 30L * 60 * 1000
-    Option(parent.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.lastModified() < cutoff)
-      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-    new java.io.File(parent,
-      java.util.UUID.randomUUID().toString).toString
-  }
-
   // Fixed writer task count for the scratch-sink queries (VERDICT r2
   // #6): letting the write inherit the scan's split count made file
   // counts — and so bench IO time — vary with AQE coalescing and file
@@ -62,7 +26,7 @@ object SinkQueries {
 
   /** `sink_parquet` — overwrite-save + read-back (novlake save_dataset). */
   def sinkParquet(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/sink_parquet"
+    val out = graft.Scratch.dir("sink_parquet")
     val df = Tables.orders(spark, sfDir)
       .filter(col("o_totalprice") > 400000.0)
       .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -76,7 +40,7 @@ object SinkQueries {
     * (partition values round-trip, including '#' URL-escaping).
     */
   def sinkPartitioned(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/sink_partitioned"
+    val out = graft.Scratch.dir("sink_partitioned")
     val df = Tables.part(spark, sfDir)
       .select("p_partkey", "p_brand", "p_size")
     LakeIO.savePartitioned(df, out, Seq("p_brand"))
@@ -99,7 +63,7 @@ object SinkQueries {
     * the column).
     */
   def scanPartitionPrune(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/scan_partition_prune"
+    val out = graft.Scratch.dir("scan_partition_prune")
     LakeIO.savePartitioned(
       Tables.part(spark, sfDir).select("p_partkey", "p_brand", "p_size"),
       out, Seq("p_brand"))
@@ -113,7 +77,7 @@ object SinkQueries {
     * read-back must contain exactly both.
     */
   def sinkAppend(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/sink_append"
+    val out = graft.Scratch.dir("sink_append")
     val ord = Tables.orders(spark, sfDir)
       .select("o_orderkey", "o_orderstatus")
     LakeIO.saveDataset(ord.filter(col("o_orderstatus") === "F")
@@ -141,7 +105,7 @@ object SinkQueries {
     * data); the scan itself stays one pass with pushdown intact.
     */
   def sinkSchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/sink_schema_evolution"
+    val out = graft.Scratch.dir("sink_schema_evolution")
     val ord = Tables.orders(spark, sfDir)
     LakeIO.saveDataset(ord.filter(col("o_orderstatus") === "F")
       .select("o_orderkey", "o_totalprice")
@@ -160,7 +124,7 @@ object SinkQueries {
     * parquet-native — SURVEY.md §2.A, §7.4).
     */
   def sinkReplacePartition(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/sink_replace_partition"
+    val out = graft.Scratch.dir("sink_replace_partition")
     val ord = Tables.orders(spark, sfDir)
       .filter(col("o_orderstatus").isin("F", "O"))
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -180,7 +144,7 @@ object SinkQueries {
     * BOTH cluster columns is asserted in SinkSpec.
     */
   def sinkZorder(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/sink_zorder"
+    val out = graft.Scratch.dir("sink_zorder")
     val df = Tables.orders(spark, sfDir)
       .select("o_orderkey", "o_custkey", "o_totalprice")
     LakeIO.saveZOrdered(df, out, "o_custkey", "o_totalprice", writerTasks)
@@ -262,7 +226,7 @@ object SinkQueries {
 
   /** `source_csv` — CSV ingest round-trip (header + schema inference). */
   def sourceCsv(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/source_csv"
+    val out = graft.Scratch.dir("source_csv")
     Tables.nation(spark, sfDir)
       .repartition(1) // 25 rows — one file, always
       .write.mode("overwrite").option("header", "true").csv(out)
@@ -276,7 +240,7 @@ object SinkQueries {
     * only Avro core libs are present, not the spark-avro connector).
     */
   def sourceOrc(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/source_orc"
+    val out = graft.Scratch.dir("source_orc")
     Tables.supplier(spark, sfDir)
       .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
       .repartition(writerTasks, col("s_suppkey"))
@@ -295,7 +259,7 @@ object SinkQueries {
     * schema-on-read inference costs a full extra pass).
     */
   def sourceXml(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/source_xml"
+    val out = graft.Scratch.dir("source_xml")
     val src = Tables.nation(spark, sfDir)
       .select("n_nationkey", "n_name", "n_regionkey")
     src
@@ -316,7 +280,7 @@ object SinkQueries {
     * one doc ↔ one line exactly.
     */
   def sourceText(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/source_text"
+    val out = graft.Scratch.dir("source_text")
     Tables.documents(spark, sfDir)
       .select(regexp_replace(col("text"), "[\\r\\n]+", " ").as("value"))
       .repartition(writerTasks)
@@ -345,7 +309,7 @@ object SinkQueries {
 
   /** `source_json` — JSON-lines ingest round-trip. */
   def sourceJson(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/source_json"
+    val out = graft.Scratch.dir("source_json")
     Tables.events(spark, sfDir)
       .select("event_id", "user_id", "event_type")
       .repartition(writerTasks, col("event_id"))
@@ -396,7 +360,7 @@ object SinkQueries {
     * frame: which rows parse, which fields NULL, where raw lines land.
     */
   def sourceJsonCorrupt(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/source_json_corrupt"
+    val out = graft.Scratch.dir("source_json_corrupt")
     val lines = Seq(
       """{"id": 1, "name": "alpha", "v": 10.5}""",
       """{"id": 2, "name": "beta", "v": 20.0}""",
@@ -444,7 +408,7 @@ object SinkQueries {
     */
   def lakeReport(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.registerAll(spark, sfDir)
-    new graft.Lake(spark, tmpBase(sfDir) + "/report_wh")
+    new graft.Lake(spark, graft.Scratch.dir("report_wh"))
       .report("documents", Seq("lang", "source"), Seq("n_chars"))
   }
 
@@ -453,7 +417,7 @@ object SinkQueries {
     */
   def lakeReportCounts(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.registerAll(spark, sfDir)
-    new graft.Lake(spark, tmpBase(sfDir) + "/report_wh")
+    new graft.Lake(spark, graft.Scratch.dir("report_wh"))
       .report("documents", Seq("lang"))
   }
 
@@ -477,13 +441,12 @@ object SinkQueries {
     * the double arithmetic agrees bit-for-bit across engines.
     */
   def mergeUpsert(spark: SparkSession, sfDir: String): DataFrame = {
-    val wh = tmpBase(sfDir) + "/merge_wh"
+    val wh = graft.Scratch.dir("merge_wh")
     val lake = new graft.Lake(spark, wh)
     val ord = Tables.orders(spark, sfDir)
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
     val target = ord.filter(col("o_orderstatus") === "F")
       .drop("o_orderstatus")
-    // re-seed every call → the query is idempotent under re-runs
     LakeIO.saveDataset(
       target.repartition(writerTasks, col("o_orderkey")), s"$wh/merge_orders")
     val batch = ord.filter(col("o_totalprice") > 400000.0)
@@ -535,7 +498,7 @@ object SinkQueries {
     * history row.
     */
   def sinkCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    val wh = tmpBase(sfDir) + "/compact_wh"
+    val wh = graft.Scratch.dir("compact_wh")
     val lake = new graft.Lake(spark, wh)
     val df = Tables.orders(spark, sfDir)
       .filter(col("o_totalprice") > 300000.0)
@@ -545,13 +508,6 @@ object SinkQueries {
     lake.load("compact_orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
       .orderBy(col("o_orderkey").asc)
-  }
-
-  private def rmDir(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    ()
   }
 
   /** History rows joined with each retained version's read-back row
@@ -579,13 +535,10 @@ object SinkQueries {
     * snapshots of shrinking filters land in v=0/1/2, and the history
     * read-back must report exactly those versions, the pinned per-write
     * file count, the latest flag on v2 only, and each snapshot's exact
-    * row count. Scratch is deleted first so the query is idempotent
-    * within a process (saveVersion otherwise appends v3, v4, ... on
-    * re-invocation).
+    * row count.
     */
   def lakeHistory(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/lake_history"
-    rmDir(spark, out)
+    val out = graft.Scratch.dir("lake_history")
     val ord = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_totalprice"))
     Seq(400000.0, 300000.0, 200000.0).foreach { t =>
@@ -609,8 +562,7 @@ object SinkQueries {
     * the pinned read.
     */
   def lakeTimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/lake_tt"
-    rmDir(spark, out)
+    val out = graft.Scratch.dir("lake_tt")
     val ord = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_totalprice"))
     Seq(200000.0, 300000.0, 400000.0).foreach { t =>
@@ -626,6 +578,29 @@ object SinkQueries {
         .select(lit(v).as("version"), col("n_rows"), col("revenue"))
     }
     perVersion.reduce(_ unionByName _).orderBy(col("version").asc)
+  }
+
+  /** The planted churn of the CDF lake rows, as three snapshots of
+    * orders: v0 = the base slice (keys % 3 ≠ 0); v1 = every key but
+    * % 19 = 0, with % 7 = 0 repriced by +1000; v2 = v1 less % 23 = 0,
+    * with % 11 = 0 repriced by +2000. `lake_changes` and
+    * `lake_apply_changes` commit v0/v1; `lake_write_cdf`,
+    * `lake_restore_cdf`, `lake_vacuum_cdf` and the streaming-CDF twins
+    * commit all three.
+    */
+  private[graft] def churnSnapshots(spark: SparkSession,
+      sfDir: String): Seq[DataFrame] = {
+    val base = Tables.orders(spark, sfDir)
+      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+    def reprice(df: DataFrame, mod: Int, by: Double) =
+      df.withColumn("o_totalprice",
+        when(pmod(col("o_orderkey"), lit(mod)) === 0,
+          col("o_totalprice") + by)
+          .otherwise(col("o_totalprice")))
+    val v1 = reprice(base.filter(pmod(col("o_orderkey"), lit(19)) =!= 0),
+      7, 1000.0)
+    Seq(base.filter(pmod(col("o_orderkey"), lit(3)) =!= 0), v1,
+      reprice(v1.filter(pmod(col("o_orderkey"), lit(23)) =!= 0), 11, 2000.0))
   }
 
   /** `lake_changes` — row-level change-data-feed between two pinned
@@ -645,19 +620,10 @@ object SinkQueries {
     * sides hash-mismatches.
     */
   def lakeChanges(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = uniqueRunDir(sfDir, "lake_changes")
-    val base = Tables.orders(spark, sfDir)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    LakeIO.saveVersion(
-      base.filter(pmod(col("o_orderkey"), lit(3)) =!= 0)
-        .repartition(writerTasks), out)
-    LakeIO.saveVersion(
-      base.filter(pmod(col("o_orderkey"), lit(19)) =!= 0)
-        .withColumn("o_totalprice",
-          when(pmod(col("o_orderkey"), lit(7)) === 0,
-            col("o_totalprice") + 1000.0)
-            .otherwise(col("o_totalprice")))
-        .repartition(writerTasks), out)
+    val out = graft.Scratch.dir("lake_changes")
+    churnSnapshots(spark, sfDir).take(2).foreach { v =>
+      LakeIO.saveVersion(v.repartition(writerTasks), out)
+    }
     LakeIO.changes(spark, out, 0, 1, Seq("o_orderkey"))
       .orderBy(col("o_orderkey").asc, col("_change_type").asc)
   }
@@ -683,7 +649,7 @@ object SinkQueries {
     * — no text re-shuffles (the dedup_incremental shape).
     */
   def dedupIncrementalCdf(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = uniqueRunDir(sfDir, "dedup_incr_cdf")
+    val out = graft.Scratch.dir("dedup_incr_cdf")
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
     LakeIO.saveVersion(docs.filter(col("doc_id") % 10 < 8)
@@ -714,19 +680,10 @@ object SinkQueries {
     * postimages hash-mismatches.
     */
   def lakeApplyChanges(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = uniqueRunDir(sfDir, "lake_apply_changes")
-    val base = Tables.orders(spark, sfDir)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    LakeIO.saveVersion(
-      base.filter(pmod(col("o_orderkey"), lit(3)) =!= 0)
-        .repartition(writerTasks), out)
-    LakeIO.saveVersion(
-      base.filter(pmod(col("o_orderkey"), lit(19)) =!= 0)
-        .withColumn("o_totalprice",
-          when(pmod(col("o_orderkey"), lit(7)) === 0,
-            col("o_totalprice") + 1000.0)
-            .otherwise(col("o_totalprice")))
-        .repartition(writerTasks), out)
+    val out = graft.Scratch.dir("lake_apply_changes")
+    churnSnapshots(spark, sfDir).take(2).foreach { v =>
+      LakeIO.saveVersion(v.repartition(writerTasks), out)
+    }
     LakeIO.applyChanges(
       LakeIO.loadVersion(spark, out, Some(0)),
       LakeIO.changes(spark, out, 0, 1, Seq("o_orderkey")),
@@ -750,7 +707,7 @@ object SinkQueries {
     * parquet) and clone-of-clone flattening.
     */
   def lakeClone(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = uniqueRunDir(sfDir, "lake_clone")
+    val out = graft.Scratch.dir("lake_clone")
     val ord = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_totalprice"))
     LakeIO.saveVersion(
@@ -769,36 +726,20 @@ object SinkQueries {
     * ([[LakeIO.saveVersionCdf]]; VERDICT r15's one documented lake
     * caveat: `lake_changes`' snapshot diff stamps every row with the
     * range-end version and cannot attribute intermediate commits —
-    * this is the capture that can). Three commits land with planted
-    * churn: v0 = the base slice (keys % 3 ≠ 0), v1 = the lake_changes
-    * churn (drop % 19, reprice % 7 by +1000), v2 = a second churn ON
-    * TOP of v1 (drop % 23, reprice % 11 by +2000). The captured feed
-    * over (0, 2] must then contain commit-1 rows stamped 1 AND
-    * commit-2 rows stamped 2 — per-commit fidelity the oracle
+    * this is the capture that can). Three commits land with the
+    * planted churn ([[churnSnapshots]]; v2 churns ON TOP of v1). The
+    * captured feed over (0, 2] must then contain commit-1 rows stamped
+    * 1 AND commit-2 rows stamped 2 — per-commit fidelity the oracle
     * recomputes as two independent snapshot diffs; a capture that
     * stamps wrong versions, misses a commit, or lets the range prune
     * drop rows hash-mismatches. (v0's insert-only feed is written too
     * but excluded by the range — the prune is part of the contract.)
     */
   def lakeWriteCdf(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = uniqueRunDir(sfDir, "lake_write_cdf")
-    val base = Tables.orders(spark, sfDir)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+    val out = graft.Scratch.dir("lake_write_cdf")
     val keys = Seq("o_orderkey")
-    val v0 = base.filter(pmod(col("o_orderkey"), lit(3)) =!= 0)
-    LakeIO.saveVersionCdf(v0.repartition(writerTasks), out, keys)
-    val v1 = base.filter(pmod(col("o_orderkey"), lit(19)) =!= 0)
-      .withColumn("o_totalprice",
-        when(pmod(col("o_orderkey"), lit(7)) === 0,
-          col("o_totalprice") + 1000.0)
-          .otherwise(col("o_totalprice")))
-    LakeIO.saveVersionCdf(v1.repartition(writerTasks), out, keys)
-    val v2 = v1.filter(pmod(col("o_orderkey"), lit(23)) =!= 0)
-      .withColumn("o_totalprice",
-        when(pmod(col("o_orderkey"), lit(11)) === 0,
-          col("o_totalprice") + 2000.0)
-          .otherwise(col("o_totalprice")))
-    LakeIO.saveVersionCdf(v2.repartition(writerTasks), out, keys)
+    churnSnapshots(spark, sfDir).foreach(v =>
+      LakeIO.saveVersionCdf(v.repartition(writerTasks), out, keys))
     LakeIO.capturedChanges(spark, out, 0, 2)
       .orderBy(col("o_orderkey").asc, col("_commit_version").asc,
         col("_change_type").asc)
@@ -820,7 +761,7 @@ object SinkQueries {
     */
   def lakeBranch(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Relational.dec
-    val out = uniqueRunDir(sfDir, "lake_branch")
+    val out = graft.Scratch.dir("lake_branch")
     val ord = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_totalprice"))
     def slice(t: Double) = ord.filter(col("o_totalprice") > t)
@@ -874,7 +815,7 @@ object SinkQueries {
     * beyond the key match.
     */
   def lakeMergeBranch(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = uniqueRunDir(sfDir, "lake_merge_branch")
+    val out = graft.Scratch.dir("lake_merge_branch")
     val base = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     val keys = Seq("o_orderkey")
@@ -924,24 +865,10 @@ object SinkQueries {
     * hash-mismatches.
     */
   def lakeRestoreCdf(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = uniqueRunDir(sfDir, "lake_restore_cdf")
-    val base = Tables.orders(spark, sfDir)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+    val out = graft.Scratch.dir("lake_restore_cdf")
     val keys = Seq("o_orderkey")
-    val v0 = base.filter(pmod(col("o_orderkey"), lit(3)) =!= 0)
-    LakeIO.saveVersionCdf(v0.repartition(writerTasks), out, keys)
-    val v1 = base.filter(pmod(col("o_orderkey"), lit(19)) =!= 0)
-      .withColumn("o_totalprice",
-        when(pmod(col("o_orderkey"), lit(7)) === 0,
-          col("o_totalprice") + 1000.0)
-          .otherwise(col("o_totalprice")))
-    LakeIO.saveVersionCdf(v1.repartition(writerTasks), out, keys)
-    val v2 = v1.filter(pmod(col("o_orderkey"), lit(23)) =!= 0)
-      .withColumn("o_totalprice",
-        when(pmod(col("o_orderkey"), lit(11)) === 0,
-          col("o_totalprice") + 2000.0)
-          .otherwise(col("o_totalprice")))
-    LakeIO.saveVersionCdf(v2.repartition(writerTasks), out, keys)
+    churnSnapshots(spark, sfDir).foreach(v =>
+      LakeIO.saveVersionCdf(v.repartition(writerTasks), out, keys))
     LakeIO.restoreVersionCdf(spark, out, 1, keys)
     LakeIO.capturedChanges(spark, out, 2, 3)
       .orderBy(col("o_orderkey").asc, col("_change_type").asc)
@@ -961,7 +888,7 @@ object SinkQueries {
     * which the oracle recomputes from the snapshot definitions.
     */
   def lakeRestore(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = uniqueRunDir(sfDir, "lake_restore")
+    val out = graft.Scratch.dir("lake_restore")
     val ord = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_totalprice"))
     Seq(200000.0, 300000.0, 400000.0).foreach { t =>
@@ -982,13 +909,6 @@ object SinkQueries {
     perVersion.reduce(_ unionByName _).orderBy(col("version").asc)
   }
 
-  /** `lake_vacuum` — snapshot retention (`Lake.vacuum` /
-    * LakeIO.vacuumVersions) declared as a query (VERDICT r7 #5): four
-    * snapshots, keep the newest two; the post-vacuum history must show
-    * ONLY v2/v3 (v0/v1 physically deleted, n_dropped = 2), the latest
-    * pointer still on the newest version, and the retained snapshots'
-    * contents untouched (exact row counts).
-    */
   /** `lake_vacuum_safe` — CLONE-AWARE retention declared as a query
     * (VERDICT r16 #1: `vacuumVersions` deleting a version a shallow-
     * clone manifest pins was the one place a supported op silently
@@ -1007,7 +927,7 @@ object SinkQueries {
     */
   def lakeVacuumSafe(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Relational.dec
-    val out = uniqueRunDir(sfDir, "lake_vacuum_safe")
+    val out = graft.Scratch.dir("lake_vacuum_safe")
     val ord = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_totalprice"))
     LakeIO.saveVersion(
@@ -1028,7 +948,9 @@ object SinkQueries {
     // (eager: the clone dir is deleted next to release the pin)
     val cloneRows = LakeIO.loadVersion(spark, s"$out/clone", Some(0))
       .count()
-    rmDir(spark, s"$out/clone")
+    val clone = new org.apache.hadoop.fs.Path(s"$out/clone")
+    clone.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(clone, true)
     val dropped = LakeIO.vacuumVersions(spark, s"$out/src", keep = 1)
     val finalVersions = LakeIO.listVersions(spark, s"$out/src")
     LakeIO.loadVersion(spark, s"$out/src", Some(2))
@@ -1058,7 +980,7 @@ object SinkQueries {
     * LakeSpec pins both refusals; this row is the supported read.)
     */
   def lakeSchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = uniqueRunDir(sfDir, "lake_schema_evo")
+    val out = graft.Scratch.dir("lake_schema_evo")
     val ord = Tables.orders(spark, sfDir)
     LakeIO.saveVersion(ord.select(col("o_orderkey"), col("o_totalprice"))
       .filter(col("o_totalprice") > 400000.0).repartition(writerTasks), out)
@@ -1096,26 +1018,13 @@ object SinkQueries {
     * churn-rule moduli and pins the lifecycle constants.
     */
   def lakeVacuumCdf(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = uniqueRunDir(sfDir, "lake_vacuum_cdf")
-    val base = Tables.orders(spark, sfDir)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+    val out = graft.Scratch.dir("lake_vacuum_cdf")
     val keys = Seq("o_orderkey")
-    val v0 = base.filter(pmod(col("o_orderkey"), lit(3)) =!= 0)
-    LakeIO.saveVersionCdf(v0.repartition(writerTasks), out, keys)
-    val v1 = base.filter(pmod(col("o_orderkey"), lit(19)) =!= 0)
-      .withColumn("o_totalprice",
-        when(pmod(col("o_orderkey"), lit(7)) === 0,
-          col("o_totalprice") + 1000.0)
-          .otherwise(col("o_totalprice")))
-    LakeIO.saveVersionCdf(v1.repartition(writerTasks), out, keys)
-    val v2 = v1.filter(pmod(col("o_orderkey"), lit(23)) =!= 0)
-      .withColumn("o_totalprice",
-        when(pmod(col("o_orderkey"), lit(11)) === 0,
-          col("o_totalprice") + 2000.0)
-          .otherwise(col("o_totalprice")))
-    LakeIO.saveVersionCdf(v2.repartition(writerTasks), out, keys)
+    val churn = churnSnapshots(spark, sfDir)
+    churn.foreach(v =>
+      LakeIO.saveVersionCdf(v.repartition(writerTasks), out, keys))
     // the uncaptured commit the guard must remember PAST its vacuum
-    val v3 = v2.filter(pmod(col("o_orderkey"), lit(29)) =!= 0)
+    val v3 = churn(2).filter(pmod(col("o_orderkey"), lit(29)) =!= 0)
     LakeIO.saveVersion(v3.repartition(writerTasks), out)
     val v4 = v3.withColumn("o_totalprice",
       when(pmod(col("o_orderkey"), lit(13)) === 0,
@@ -1144,9 +1053,15 @@ object SinkQueries {
         col("tail_rows"), col("tail_update_keys"))
   }
 
+  /** `lake_vacuum` — snapshot retention (`Lake.vacuum` /
+    * LakeIO.vacuumVersions) declared as a query (VERDICT r7 #5): four
+    * snapshots, keep the newest two; the post-vacuum history must show
+    * ONLY v2/v3 (v0/v1 physically deleted, n_dropped = 2), the latest
+    * pointer still on the newest version, and the retained snapshots'
+    * contents untouched (exact row counts).
+    */
   def lakeVacuum(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpBase(sfDir) + "/lake_vacuum"
-    rmDir(spark, out)
+    val out = graft.Scratch.dir("lake_vacuum")
     val ord = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_totalprice"))
     Seq(400000.0, 300000.0, 200000.0, 100000.0).foreach { t =>

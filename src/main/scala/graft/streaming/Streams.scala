@@ -879,34 +879,6 @@ class AsofProcessor
 
 object Streams {
 
-  /** ONE static JVM shutdown hook draining a concurrent queue of
-    * scratch dirs (ADVICE r17: the per-invocation
-    * `Runtime.addShutdownHook` calls accumulated a Thread per replay
-    * in a long-lived driver that re-runs these queries — bench loops,
-    * repeated hash+timing passes — unbounded until JVM exit). Callers
-    * whose RESULT frame lazily reads the scratch dir enqueue here
-    * instead of registering their own hook; the hook is installed
-    * once, lazily, on first use.
-    */
-  private val scratchReclaimQueue =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  private lazy val scratchReclaimHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var d = scratchReclaimQueue.poll()
-      while (d != null) {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
-        d = scratchReclaimQueue.poll()
-      }
-    }))
-  }
-
-  private[graft] def reclaimAtExit(dir: String): Unit = {
-    scratchReclaimHook
-    scratchReclaimQueue.add(dir)
-    ()
-  }
-
   /** `stream_tumbling` — 1h tumbling count/sum per event_type with a
     * 10-minute watermark.
     */
@@ -1668,29 +1640,6 @@ object Streams {
       .orderBy(col("o_orderkey").asc)
   }
 
-  /** The planted churn both streaming-CDF twins share: lake_write_cdf's
-    * three commits over orders (base slice; drop %19 + reprice %7;
-    * drop %23 + reprice %11 on top).
-    */
-  private def cdfChurnSnapshots(spark: SparkSession,
-      sfDir: String): Seq[DataFrame] = {
-    val base = graft.sources.Tables.orders(spark, sfDir)
-      .select(col("o_orderkey"), col("o_orderstatus"),
-        col("o_totalprice"))
-    val v0 = base.filter(pmod(col("o_orderkey"), lit(3)) =!= 0)
-    val v1 = base.filter(pmod(col("o_orderkey"), lit(19)) =!= 0)
-      .withColumn("o_totalprice",
-        when(pmod(col("o_orderkey"), lit(7)) === 0,
-          col("o_totalprice") + 1000.0)
-          .otherwise(col("o_totalprice")))
-    val v2 = v1.filter(pmod(col("o_orderkey"), lit(23)) =!= 0)
-      .withColumn("o_totalprice",
-        when(pmod(col("o_orderkey"), lit(11)) === 0,
-          col("o_totalprice") + 2000.0)
-          .otherwise(col("o_totalprice")))
-    Seq(v0, v1, v2)
-  }
-
   /** The ONE stream-produced CDF table both twins read, memoized
     * (VERDICT r18 #7): built once by the producer harness
     * ([[streamWriteCdfTable]] — foreachBatch → version-fenced
@@ -1705,7 +1654,8 @@ object Streams {
       sfDir: String): String = {
     val dir = producedCdfMemo(spark, sfDir) {
       val tbl = streamWriteCdfTable(spark, "stream_cdf_pair",
-        cdfChurnSnapshots(spark, sfDir), Seq("o_orderkey"))
+        graft.sources.SinkQueries.churnSnapshots(spark, sfDir),
+        Seq("o_orderkey"))
       graft.Memo.ScratchDir(new java.io.File(tbl).getParent)
     }
     s"${dir.path}/table"
@@ -1822,21 +1772,6 @@ object Streams {
       producedCdfTable(spark, sfDir), 0, 2)
       .orderBy(col("o_orderkey").asc, col("_commit_version").asc,
         col("_change_type").asc)
-
-  /** Core of [[streamWriteCdfOk]] over explicit commit snapshots — the
-    * planted-churn harness for StreamingSpec's idempotence and
-    * produce→consume round-trip tests. Seeds the table at v0 (captured)
-    * and streams each later snapshot's churn as a micro-batch into the
-    * version-fenced commit fold; returns the produced table's captured
-    * (0, last] feed bound to the CALLER's session, and the table path
-    * for round-trip consumers.
-    */
-  private[graft] def streamWriteCdfCore(spark: SparkSession,
-      name: String, snapshots: Seq[DataFrame],
-      keys: Seq[String]): DataFrame =
-    graft.sources.LakeIO.capturedChanges(spark,
-      streamWriteCdfTable(spark, name, snapshots, keys),
-      0, snapshots.size - 1)
 
   private[graft] def streamWriteCdfTable(spark: SparkSession,
       name: String, snapshots: Seq[DataFrame],
@@ -2063,14 +1998,12 @@ object Streams {
     * SEQUENTIAL micro-batches of a parquet file-source stream into
     * `sink`, on the schema of batch 0.
     *
-    * Scratch: one fresh dir under [[scratchBase]] (fast scratch: the
-    * rows measure the processor, and per-micro-batch checkpoint commits
-    * on a slow disk dominated their wall) holds the staged batches, the
-    * feed, the checkpoint and the RocksDB working dir;
-    * `stage` gets it for the caller's own artifacts (a replica, a
-    * table, an index). A [[ToMemory]] result is collected, so the dir is
-    * deleted; a [[ForEachBatch]] result reads files under it, so it is
-    * reclaimed at JVM exit.
+    * Scratch: one [[graft.Scratch.dir]] holds the staged batches, the
+    * feed, the checkpoint and the RocksDB working dir; `stage` gets it
+    * for the caller's own artifacts (a replica, a table, an index). A
+    * [[ToMemory]] result is collected, so the dir is deleted here; a
+    * [[ForEachBatch]] result reads files under it, so it stays until the
+    * scratch root goes at exit.
     *
     * Micro-batch ATOMICITY contract (review finding r13): batch 0 is
     * staged straight into the feed BEFORE the query starts, and the
@@ -2095,10 +2028,8 @@ object Streams {
     */
   private def fileReplay[T](spark: SparkSession, name: String,
       sink: ReplaySink[T])(stage: String => Seq[ReplayBatch]): T = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(scratchBase, s"graft_$name").toString
+    val dir = graft.Scratch.dir(name)
     val collected = sink.isInstanceOf[ToMemory]
-    if (!collected) reclaimAtExit(dir)
     try {
       val batches = stage(dir)
       require(batches.nonEmpty, s"$name: nothing to replay")
@@ -2267,25 +2198,6 @@ object Streams {
     }
   }
 
-  /** Scratch filesystem for the replay harnesses: /dev/shm only when it
-    * has real headroom (ADVICE r14: containers commonly cap it at
-    * 64 MB — canWrite alone would pick a tmpfs too small for the feed
-    * parquet + RocksDB working set and fail with ENOSPC where
-    * java.io.tmpdir worked). 1 GiB covers the largest replay (full
-    * events table + state + changelog) with slack.
-    */
-  private def scratchBase: java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val shmUsable =
-      try {
-        new java.io.File("/dev/shm").canWrite &&
-          java.nio.file.Files.getFileStore(shm)
-            .getUsableSpace >= (1L << 30)
-      } catch { case _: java.io.IOException => false }
-    if (shmUsable) shm
-    else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-  }
-
   /** Per-fixture MEMOIZED events feed for the monitor replays (VERDICT
     * r14 #1: the session/feed cost was re-paid per `stream_*_ok` row —
     * drift and changepoint each scanned events for max(ts) and wrote
@@ -2293,7 +2205,7 @@ object Streams {
     * max(ts) once; each replay HARDLINKS the files into its own feed
     * (same tmpfs, so links are free; the replay adds its later batches
     * to that feed, so the cached dir is never the feed itself). The
-    * entry owns the feed dir; a JVM shutdown hook reclaims it too.
+    * entry owns the feed dir.
     */
   private val monitorFeedMemo = graft.Memo[
     (graft.Memo.ScratchDir, java.sql.Timestamp, Long)]("events")
@@ -2302,11 +2214,9 @@ object Streams {
       ev: DataFrame): (String, java.sql.Timestamp, Long) = {
     val (dir, maxTs, n) = monitorFeedMemo(spark, sfDir) {
       val head = ev.agg(max(col("ts")), count(lit(1))).head()
-      val dir = java.nio.file.Files
-        .createTempDirectory(scratchBase, "graft_evfeed").toString
+      val dir = graft.Scratch.dir("evfeed")
       ev.coalesce(8).write
         .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
-      reclaimAtExit(dir)
       (graft.Memo.ScratchDir(dir), head.getTimestamp(0), head.getLong(1))
     }
     (dir.path, maxTs, n)
@@ -2387,8 +2297,7 @@ object Streams {
     * row-count spec; this makes it a value-level oracle row.)
     */
   def streamSinkOk(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(scratchBase, "graft_sink_ok").toString
+    val dir = graft.Scratch.dir("graft_sink_ok")
     try {
       val src = eventsFileStream(spark, sfDir)
         .select(col("event_id"), col("user_id"), col("event_type"),

@@ -155,6 +155,19 @@ class ContractSpec extends AnyFunSuite {
     assert(calls.count(_._2) === 3, s"expected one clone per place: $calls")
   }
 
+  test("scratch space in src/main comes only from Scratch (temp dirs, " +
+      "java.io.tmpdir and /dev/shm outside Scratch and Lake.forUser)") {
+    val found = Seq("createTempDirectory", "\"java.io.tmpdir\"",
+      "\"/dev/shm\"").flatMap(codeLines(_,
+        Seq("graft/Lake.scala" -> "def forUser")))
+    assert(found.exists(_._2), "Lake.forUser no longer names its fallback")
+    val offenders = found.collect {
+      case (at, false) if !at.startsWith("graft/Scratch.scala:") => at
+    }
+    assert(offenders.isEmpty,
+      s"get scratch space from Scratch.dir: ${offenders.mkString(", ")}")
+  }
+
   test("entry (flagship) returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -12,7 +12,7 @@ class LakeSpec extends AnyFunSuite {
   val spark = TestSpark.spark
 
   private def newLake(): Lake =
-    Lake(spark, Files.createTempDirectory("graft_lake").toString)
+    Lake(spark, Scratch.dir("lake"))
       .attachFixtures(TestSpark.sf)
 
   test("scd2Apply: change closes+opens, no-op is silent, insert starts at the new version") {

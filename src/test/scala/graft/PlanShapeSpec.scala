@@ -44,8 +44,7 @@ class PlanShapeSpec extends AnyFunSuite {
       s"expected a p_brand PartitionFilter, got ${f.partitionFilters}:\n$ep")
     // files actually opened = the one matching brand directory, out of
     // 25 brand partitions on disk ('#' URL-escapes to %23 in the path)
-    val out = new java.io.File(
-      graft.sources.SinkQueries.tmpBase(sf) + "/scan_partition_prune")
+    val out = new java.io.File(f.relation.location.rootPaths.head.toUri)
     def parquets(d: java.io.File): Int =
       d.listFiles().map(c => if (c.isDirectory) parquets(c)
         else if (c.getName.endsWith(".parquet")) 1 else 0).sum

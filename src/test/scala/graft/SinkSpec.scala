@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{LakeIO, Tables}
-import graft.operators.Relational
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.{LakeIO, SinkQueries, Tables}
+import graft.operators.{Multimodal, Relational}
 
 /** Lake-utility round-trips (SURVEY.md §2.A — the reference's own code
   * surface): write modes, dynamic partition overwrite, compaction,
@@ -13,8 +13,7 @@ import graft.operators.Relational
 class SinkSpec extends AnyFunSuite {
   val spark = TestSpark.spark
   val sf = TestSpark.sf
-  private def tmp(): String =
-    Files.createTempDirectory("graft_sinkspec").toString
+  private def tmp(): String = Scratch.dir("sinkspec")
 
   test("saveDataset overwrite round-trips exactly") {
     val out = tmp() + "/t"
@@ -218,5 +217,20 @@ class SinkSpec extends AnyFunSuite {
     val m = LakeIO.tableMeta(Tables.orders(spark, sf))
     assert(m.filter(col("col_name") === "o_orderkey")
       .filter(col("data_type") === "bigint").count() === 1)
+  }
+
+  // each call of a scratch-writing row gets its own directory, so a
+  // frame built by an earlier call still reads its files after a later
+  // call of the same row
+  Seq[(String, (SparkSession, String) => DataFrame)](
+    "sink_parquet" -> SinkQueries.sinkParquet,
+    "lake_history" -> SinkQueries.lakeHistory,
+    "multimodal_schema" -> Multimodal.multimodalSchema
+  ).foreach { case (name, row) =>
+    test(s"$name: an earlier result survives a later call of the row") {
+      val a = row(spark, sf)
+      val b = row(spark, sf)
+      assert(a.collect() === b.collect())
+    }
   }
 }

@@ -1043,12 +1043,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream_sink_ok leaves no graft_sink_ok scratch dir behind") {
-    // the roots a replay scratch dir can land under: /dev/shm when it has
-    // room, java.io.tmpdir otherwise
-    val roots = Seq(sys.props("java.io.tmpdir"), "/dev/shm").distinct
-      .map(new java.io.File(_)).filter(_.isDirectory)
-    def sinkDirs(): Int = roots.map(r => Option(r.listFiles()).toSeq
-      .flatten.count(_.getName.startsWith("graft_sink_ok"))).sum
+    // the sink's scratch dir lands under the process's scratch root
+    val root = new java.io.File(graft.Scratch.root)
+    def sinkDirs(): Int = Option(root.listFiles()).toSeq.flatten
+      .count(_.getName.startsWith("graft_sink_ok"))
     val before = sinkDirs()
     val rows = Streams.streamSinkOk(spark, TestSpark.sf).collect()
     assert(rows.nonEmpty)

@@ -14,8 +14,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft_warehouse").toString)
+      .config("spark.sql.warehouse.dir", Scratch.dir("warehouse"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
