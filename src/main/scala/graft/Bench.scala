@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   /** Machine-factor calibration (VERDICT r15): a FIXED amount of
     * deterministic in-memory work (400M xorshift64 steps, single
@@ -92,7 +93,7 @@ object Bench {
         val sf = if (root.has("sf")) root.get("sf").asText() else ""
         Some(QuietRef(p, sf, wall, mid))
       } catch {
-        case scala.util.control.NonFatal(e) =>
+        case NonFatal(e) =>
           System.err.println(s"[bench] quiet ref $p unreadable: $e")
           None
       }
@@ -131,7 +132,7 @@ object Bench {
       val t0 = System.nanoTime()
       try body
       catch {
-        case scala.util.control.NonFatal(e) =>
+        case NonFatal(e) =>
           warmupFailed += phase
           System.err.println(s"[bench] warmup '$phase' FAILED: ${e.getMessage}")
       }
@@ -241,7 +242,7 @@ object Bench {
           }
         } else fn(spark, sfDir).count()
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           // a failed query must not masquerade as a fast success
           errors += name
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
@@ -330,7 +331,7 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("target/bench_last.json"),
       (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write target/bench_last.json: $e")
     }
     spark.stop()

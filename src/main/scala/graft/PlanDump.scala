@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Dump `.explain("formatted")` for named declared queries to files —
   * the optimization-round evidence artifact (plans/rNN/<q>_before.txt /
   * `_after.txt`). Not part of the driver contract; a diagnostics main.
@@ -34,7 +36,7 @@ object PlanDump {
               txt.getBytes("UTF-8"))
             System.err.println(s"[plandump] wrote $n ($suffix)")
           } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[plandump] $n FAILED: ${e.getMessage}")
           }
       }

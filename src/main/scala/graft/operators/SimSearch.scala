@@ -5,12 +5,26 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
-/** Similarity search over embedding columns (SURVEY.md §2.K
-  * `simsearch_knn`): brute-force cosine top-k as the exact baseline, and
-  * an LSH-bucketed approximate variant as the 100 TB scale path.
+/** Similarity search over embedding columns (SURVEY.md §2.K): exact
+  * brute-force cosine top-k, range search, and the ANN tiers — LSH
+  * buckets, IVF cells (stride, k-means and integer-Lloyd codebooks), PQ
+  * and IVF-PQ codes with their persisted-index lifecycle, and the
+  * bounded-degree neighbor graph.
   *
-  * Vector math uses higher-order functions (`zip_with` + `aggregate`) —
-  * codegen-friendly, no UDF serialization in the hot loop.
+  * Every row is built from one set of shared steps, so a scoring or
+  * tie-break rule lives in one place:
+  *  - [[queryFrame]] / [[corpusFrame]]: `(q_id, q_emb, q_nrm)` and
+  *    `(c_id, c_emb, c_nrm)` over a `(vec_id, embedding)` frame;
+  *  - [[cosSim]] / [[scorePairs]]: the 4dp cosine of a (query, corpus)
+  *    pair, self-matches dropped;
+  *  - [[topK]]: per-query `row_number` over (score DESC, c_id ASC);
+  *  - [[probeCells]]: the top-`nProbe` IVF cells of each query;
+  *  - [[encodeIvfPq]] / [[serveIvfPq]]: the IVF-PQ code frame and its
+  *    serve (probe → optional tombstone mask → LUT score → top-k), in
+  *    memory or over a persisted artifact read by [[readCells]].
+  *
+  * Vector math runs through the codegen'd VectorExpressions kernels —
+  * no UDF serialization in the hot loop.
   */
 object SimSearch {
 
@@ -26,6 +40,46 @@ object SimSearch {
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (l2norm(a) * l2norm(b))
+
+  /** `(q_id, q_emb, q_nrm, extra…)` for the rows `isQuery` selects.
+    * `nrm` is the norm column: computed per row unless the frame
+    * already carries one.
+    */
+  private def queryFrame(emb: DataFrame, isQuery: Column,
+      extra: Seq[Column] = Nil,
+      nrm: Column = l2norm(col("embedding"))): DataFrame = {
+    emb.filter(isQuery).select(Seq(col("vec_id").as("q_id"),
+      col("embedding").as("q_emb"), nrm.as("q_nrm")) ++ extra: _*)
+  }
+
+  /** `(c_id, c_emb, c_nrm, extra…)` — norms once per row, not per pair. */
+  private def corpusFrame(emb: DataFrame, extra: Seq[Column] = Nil,
+      nrm: Column = l2norm(col("embedding"))): DataFrame = {
+    emb.select(Seq(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
+      nrm.as("c_nrm")) ++ extra: _*)
+  }
+
+  /** The family's score: cosine from the per-row norms, rounded to 4dp
+    * (the oracle-stable precision every cosine row shares).
+    */
+  private def cosSim: Column = {
+    round(dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4)
+  }
+
+  /** (query, corpus) candidate pairs → self-matches dropped, `cos_sim`
+    * scored.
+    */
+  private def scorePairs(pairs: DataFrame): DataFrame =
+    pairs.filter(col("q_id") =!= col("c_id")).withColumn("cos_sim", cosSim)
+
+  /** Per-partition top-`k` by (`score` DESC, c_id ASC) — ties to the
+    * lowest id, the rule every oracle mirrors; keeps `rn`.
+    */
+  private def topK(scored: DataFrame, k: Int, score: String = "cos_sim",
+      partitionBy: Seq[Column] = Seq(col("q_id"))): DataFrame =
+    scored.withColumn("rn", row_number().over(Window.partitionBy(
+        partitionBy: _*).orderBy(col(score).desc, col("c_id").asc)))
+      .filter(col("rn") <= k)
 
   /** `simsearch_knn` — exact brute-force top-k: for each of a small set
     * of query vectors, the k nearest corpus vectors by cosine.
@@ -44,26 +98,11 @@ object SimSearch {
     * representations (DedupSpec runs it over int8-dequantized vectors
     * to witness that `embedding_quantize` preserves neighbor quality).
     */
-  def knnOver(emb: DataFrame, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    // norms once per row, not per pair — the per-pair work is a single
-    // zip_with/aggregate dot product (identical arithmetic to
-    // dot/(‖a‖·‖b‖), so oracle-stable at 4dp rounding)
-    val queries = emb.filter(col("vec_id") < nQueries.toLong)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        l2norm(col("embedding")).as("q_nrm"))
-    val corpus = emb.select(col("vec_id").as("c_id"),
-      col("embedding").as("c_emb"), l2norm(col("embedding")).as("c_nrm"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id").asc)
-    corpus.crossJoin(broadcast(queries))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos_sim", round(
-        dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+  def knnOver(emb: DataFrame, k: Int = 5, nQueries: Int = 10): DataFrame =
+    topK(scorePairs(corpusFrame(emb).crossJoin(broadcast(
+        queryFrame(emb, col("vec_id") < nQueries.toLong)))), k)
       .select(col("q_id"), col("c_id"), col("cos_sim"), col("rn"))
       .orderBy(col("q_id").asc, col("rn").asc)
-  }
 
   /** `simsearch_range` — radius (range) search, the OTHER half of the
     * production vector-store read API (FAISS `range_search`): for each
@@ -89,20 +128,15 @@ object SimSearch {
 
   /** Core of `simsearch_range` over any (vec_id, embedding) frame. */
   def rangeOver(emb: DataFrame, minSim: Double,
-      nQueries: Int): DataFrame = {
-    val queries = emb.filter(col("vec_id") < nQueries.toLong)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        l2norm(col("embedding")).as("q_nrm"))
-    val corpus = emb.select(col("vec_id").as("c_id"),
-      col("embedding").as("c_emb"), l2norm(col("embedding")).as("c_nrm"))
-    corpus.crossJoin(broadcast(queries))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos_sim", round(
-        dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4))
-      .filter(col("cos_sim") >= minSim)
+      nQueries: Int): DataFrame =
+    inRange(scorePairs(corpusFrame(emb).crossJoin(broadcast(
+      queryFrame(emb, col("vec_id") < nQueries.toLong)))), minSim)
+
+  /** The radius tail shared by both range rows. */
+  private def inRange(scored: DataFrame, minSim: Double): DataFrame =
+    scored.filter(col("cos_sim") >= minSim)
       .select(col("q_id"), col("c_id"), col("cos_sim"))
       .orderBy(col("q_id").asc, col("c_id").asc)
-  }
 
   /** `simsearch_range_ivf` — range search at ANN scale: the IVF cell
     * probe bounds the candidate set (nProbe cells per query, the
@@ -127,17 +161,8 @@ object SimSearch {
   /** Core of `simsearch_range_ivf` over any frame + pinned codebook. */
   def rangeIvfOver(emb: DataFrame,
       codebook: Array[(Long, Array[Float], Double)], minSim: Double,
-      nQueries: Int, nProbe: Int): DataFrame = {
-    val corpusCells = ivfAssignCorpus(emb, codebook)
-    val queryCells = ivfQueryCells(emb, codebook, nQueries, nProbe)
-    corpusCells.join(broadcast(queryCells), "cent_id")
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos_sim", round(
-        dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4))
-      .filter(col("cos_sim") >= minSim)
-      .select(col("q_id"), col("c_id"), col("cos_sim"))
-      .orderBy(col("q_id").asc, col("c_id").asc)
-  }
+      nQueries: Int, nProbe: Int): DataFrame =
+    inRange(ivfScored(emb, codebook, nQueries, nProbe), minSim)
 
   /** `simsearch_lsh` — approximate NN via random-hyperplane LSH (SimHash
     * buckets): sign of the dot product against `nBits` fixed pseudo-random
@@ -170,13 +195,9 @@ object SimSearch {
         col("bucket"))
     val corpus = e.select(col("vec_id").as("c_id"),
       col("embedding").as("c_emb"), col("bucket"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id").asc)
-    corpus.join(broadcast(queries), "bucket")
+    topK(corpus.join(broadcast(queries), "bucket")
       .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos_sim", round(cosine(col("q_emb"), col("c_emb")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      .withColumn("cos_sim", round(cosine(col("q_emb"), col("c_emb")), 4)), k)
       .select(col("q_id"), col("c_id"), col("cos_sim"), col("rn"))
       .orderBy(col("q_id").asc, col("rn").asc)
   }
@@ -209,21 +230,20 @@ object SimSearch {
     * shared by the declared stride query and the learned-codebook path.
     */
   def ivfSearch(emb: DataFrame, codebook: Array[(Long, Array[Float], Double)],
-      k: Int, nQueries: Int, nProbe: Int): DataFrame = {
-    // keep=1: one compiled argmax loop per row — a scan→project plan
-    val corpusCells = ivfAssignCorpus(emb, codebook)
-    val queryCells = ivfQueryCells(emb, codebook, nQueries, nProbe)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id").asc)
-    corpusCells.join(broadcast(queryCells), "cent_id")
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos_sim", round(
-        dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      k: Int, nQueries: Int, nProbe: Int): DataFrame =
+    topK(ivfScored(emb, codebook, nQueries, nProbe), k)
       .select(col("q_id"), col("c_id"), col("cos_sim"), col("rn"))
       .orderBy(col("q_id").asc, col("rn").asc)
-  }
+
+  /** IVF candidates of the first `nQueries` queries: every corpus row in
+    * one of a query's `nProbe` probed cells, `cos_sim` scored.
+    */
+  private def ivfScored(emb: DataFrame,
+      codebook: Array[(Long, Array[Float], Double)], nQueries: Int,
+      nProbe: Int): DataFrame =
+    scorePairs(ivfAssignCorpus(emb, codebook).join(broadcast(probeCells(
+      queryFrame(emb, col("vec_id") < nQueries.toLong), codebook, nProbe)),
+      "cent_id"))
 
   /** Stride-sampled codebook, collected driver-side: (cent_id, vector,
     * ‖vector‖). Bounded by construction (C = N/stride — a codebook is
@@ -365,9 +385,7 @@ object SimSearch {
       transform(c, v => floor(v.cast("double") * lit(1e6) + lit(0.5))
         .cast("float")),
       array(lit(1.0f)))
-    val corpusCells = emb
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-        l2norm(col("embedding")).as("c_nrm"))
+    val corpusCells = corpusFrame(emb)
       .withColumn("cent_id",
         graft.functions.VectorExpressions.nearestCentroidCol(
           quantF(col("c_emb")), cb.map(_._1), augCents))
@@ -378,12 +396,10 @@ object SimSearch {
     }.toSeq.toDF("cent_id", "c2", "nsq")
     val wq = Window.partitionBy(col("q_id"))
       .orderBy(col("score").desc, col("cent_id").asc)
-    val queryCells = emb.filter(col("vec_id") < nQueries.toLong)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        l2norm(col("embedding")).as("q_nrm"),
-        transform(col("embedding"),
+    val queryCells = queryFrame(emb, col("vec_id") < nQueries.toLong,
+        Seq(transform(col("embedding"),
           v => floor(v.cast("double") * lit(1e6) + lit(0.5)).cast("double"))
-          .as("xqd"))
+          .as("xqd")))
       .crossJoin(broadcast(cbDf))
       .withColumn("score",
         aggregate(zip_with(col("xqd"), col("c2"), (a, b) => a * b),
@@ -391,51 +407,34 @@ object SimSearch {
       .withColumn("cell_rn", row_number().over(wq))
       .filter(col("cell_rn") <= nProbe)
       .select(col("q_id"), col("q_emb"), col("q_nrm"), col("cent_id"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id").asc)
-    corpusCells.join(broadcast(queryCells), "cent_id")
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos_sim", round(
-        dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    topK(scorePairs(corpusCells.join(broadcast(queryCells), "cent_id")), k)
       .select(col("q_id"), col("c_id"), col("cos_sim"), col("rn"))
       .orderBy(col("q_id").asc, col("rn").asc)
   }
 
-  /** Per-centroid cosine as struct(sim, -cent_id) columns: struct
-    * ordering compares sim first, then the smaller cent_id wins ties —
-    * the same ranking as a (cell_sim DESC, cent_id ASC) sort, computed
-    * per row with codegen'd FloatVecDot against literal centroid vectors.
+  /** Query→probe-cell assignment: each query row of `queries` (a
+    * [[queryFrame]], extra columns kept) with its top-`nProbe` cells by
+    * cosine (cell_cos DESC, cent_id ASC) as `cent_id` and their rank
+    * `cell_rn`. The codebook joins as a BROADCAST LOCAL RELATION —
+    * |queries|·C rows, both sides bounded — not as inlined literals: a
+    * C-way array of 64-float struct literals took seconds of
+    * whole-stage-codegen compile at C≈200 (data belongs in rows, not
+    * the plan).
     */
-  /** Query→probe-cell assignment: top-`nProbe` cells per query by
-    * cosine, via a BROADCAST LOCAL-RELATION codebook join + a keyed
-    * row_number — |queries|·C rows total, both sides bounded. The
-    * first cut sorted an ARRAY of C inlined struct expressions per
-    * row; each struct carried a 64-float literal, and at C≈200 the
-    * ~13k-literal tree took seconds of whole-stage-codegen compile
-    * (the pqLutFrame lesson on the query side: data belongs in rows,
-    * not the plan). Same cosine expression and (cos DESC, cent ASC)
-    * order as the struct form — bit-identical, oracle unchanged.
-    */
-  private def ivfQueryCells(emb: DataFrame,
-      codebook: Array[(Long, Array[Float], Double)], nQueries: Int,
+  private def probeCells(queries: DataFrame,
+      codebook: Array[(Long, Array[Float], Double)],
       nProbe: Int): DataFrame = {
-    val spark = emb.sparkSession
+    val spark = queries.sparkSession
     import spark.implicits._
-    val cbDf = codebook.toSeq.map { case (id, v, nrm) => (id, v, nrm) }
-      .toDF("cent_id", "c_v", "cnrm")
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("cell_cos").desc, col("cent_id").asc)
-    emb.filter(col("vec_id") < nQueries.toLong)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        l2norm(col("embedding")).as("q_nrm"))
-      .crossJoin(broadcast(cbDf))
+    val cbDf = codebook.toSeq.toDF("cent_id", "c_v", "cnrm")
+    queries.crossJoin(broadcast(cbDf))
       .withColumn("cell_cos",
         dot(col("q_emb"), col("c_v")) / (col("q_nrm") * col("cnrm")))
-      .withColumn("cell_rn", row_number().over(wq))
+      .withColumn("cell_rn", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("cell_cos").desc, col("cent_id").asc)))
       .filter(col("cell_rn") <= nProbe)
-      .select(col("q_id"), col("q_emb"), col("q_nrm"), col("cent_id"))
+      .select(queries.columns.map(col) ++
+        Seq(col("cent_id"), col("cell_rn")): _*)
   }
 
   /** Corpus→cell assignment: argmax cosine over the inlined codebook via
@@ -447,10 +446,9 @@ object SimSearch {
     * one compiled C×dim argmax loop per row, vs a C-way expression tree.
     */
   def ivfAssignCorpus(emb: DataFrame,
-      codebook: Array[(Long, Array[Float], Double)]): DataFrame =
-    emb
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-        l2norm(col("embedding")).as("c_nrm"))
+      codebook: Array[(Long, Array[Float], Double)],
+      extra: Seq[Column] = Nil): DataFrame =
+    corpusFrame(emb, extra)
       .withColumn("cent_id",
         graft.functions.VectorExpressions.nearestCentroidCol(col("c_emb"),
           codebook.map(_._1),
@@ -635,21 +633,19 @@ object SimSearch {
   /** Shared PQ tail: sum the per-subspace lookups per candidate, rank,
     * keep top-k. Expects (q_id, c_id, pdot_u) rows (m per candidate).
     */
-  private def pqTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score_u").desc, col("c_id").asc)
-    scored
+  private def pqTopK(scored: DataFrame, k: Int): DataFrame =
+    approxTail(topK(scored
       .filter(col("c_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("c_id"))
-      .agg(sum(col("pdot_u")).as("score_u"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"),
+      .agg(sum(col("pdot_u")).as("score_u")), k, "score_u"))
+
+  /** Fixed-point score → 6dp `approx_score`, in rank order. */
+  private def approxTail(ranked: DataFrame): DataFrame =
+    ranked.select(col("q_id"), col("c_id"),
         round(col("score_u").cast("double") / 1000000.0, 6)
           .as("approx_score"),
         col("rn"))
       .orderBy(col("q_id").asc, col("rn").asc)
-  }
 
   /** `simsearch_ivfpq` — the canonical production ANN read path
     * (FAISS's IVFPQ structure; OPQ rotation and residual encoding
@@ -681,21 +677,63 @@ object SimSearch {
       coarse: Array[(Long, Array[Float], Double)],
       pqCb: Array[(Long, Array[Float], Double)], k: Int, nQueries: Int,
       m: Int, nProbe: Int): DataFrame = {
+    serveIvfPq(encodeIvfPq(emb, coarse, pqCb, m), emb, coarse, pqCb, k,
+      nQueries, m, nProbe)
+  }
+
+  /** The IVFPQ ENCODE pass — (c_id, cent_id, s, code) under pinned
+    * codebooks: ONE corpus scan, coarse cell + m PQ codes, all narrow
+    * compute. Row-local and deterministic, so batch-encode ≡
+    * stream-encode ≡ store-encode ∪ delta-encode per row.
+    */
+  private[graft] def encodeIvfPq(part: DataFrame,
+      coarse: Array[(Long, Array[Float], Double)],
+      pqCb: Array[(Long, Array[Float], Double)], m: Int): DataFrame = {
     val sub = pqSubDim(pqCb, m)
-    // one corpus scan: coarse cell + m PQ codes, all narrow compute
-    val corpus = ivfAssignCorpus(emb, coarse)
+    ivfAssignCorpus(part, coarse)
       .select(col("c_id"), col("cent_id"),
         posexplode(array(pqCodeCols(pqCb, m, sub, col("c_emb")): _*))
           .as(Seq("s", "code")))
-    val queryCells = ivfQueryCells(emb, coarse, nQueries, nProbe)
-      .select(col("q_id"), col("cent_id"))
-    val lut = pqLutFrame(emb.filter(col("vec_id") < nQueries.toLong)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-      pqCb, m, sub)
-    pqTopK(corpus
-      .join(broadcast(queryCells), Seq("cent_id"))
-      .join(broadcast(lut), Seq("q_id", "s", "code")), k)
   }
+
+  /** The IVFPQ SERVE pass over a (c_id, cent_id, s, code) code frame —
+    * in memory, or a persisted artifact via [[readCells]]: cell probe →
+    * optional tombstone anti-join on c_id → LUT scoring → top-k. The
+    * mask applies BETWEEN the probe and the LUT join (candidates are
+    * already cell-pruned); the embedding column never reaches the
+    * code side.
+    */
+  private def serveIvfPq(codes: DataFrame, emb: DataFrame,
+      coarse: Array[(Long, Array[Float], Double)],
+      pqCb: Array[(Long, Array[Float], Double)], k: Int, nQueries: Int,
+      m: Int, nProbe: Int,
+      tombstones: Option[DataFrame] = None): DataFrame = {
+    def queries = queryFrame(emb, col("vec_id") < nQueries.toLong)
+    val probed = codes.join(broadcast(probeCells(queries, coarse, nProbe)
+      .select(col("q_id"), col("cent_id"))), Seq("cent_id"))
+    val live = tombstones.fold(probed)(probed.join(_, Seq("c_id"), "left_anti"))
+    pqTopK(live.join(broadcast(pqLutFrame(queries, pqCb, m,
+      pqSubDim(pqCb, m))), Seq("q_id", "s", "code")), k)
+  }
+
+  /** A cent_id-partitioned artifact read back: `cols` plus `cent_id`,
+    * rebound to the codebook's LONG ids (partition-column inference
+    * reads the dir values as INT).
+    */
+  private def readCells(spark: SparkSession, path: String,
+      cols: String*): DataFrame = {
+    spark.read.parquet(path)
+      .select(cols.map(col) :+ col("cent_id").cast("long").as("cent_id"): _*)
+  }
+
+  /** [[serveIvfPq]] over the persisted artifact at `indexPath`. */
+  private[graft] def serveIvfPqArtifact(spark: SparkSession,
+      indexPath: String, emb: DataFrame,
+      coarse: Array[(Long, Array[Float], Double)],
+      pqCb: Array[(Long, Array[Float], Double)], k: Int, nQueries: Int,
+      m: Int, nProbe: Int, tombstones: Option[DataFrame] = None): DataFrame =
+    serveIvfPq(readCells(spark, indexPath, "c_id", "s", "code"), emb,
+      coarse, pqCb, k, nQueries, m, nProbe, tombstones)
 
   /** `simsearch_index_persisted` — the index-as-ARTIFACT round trip,
     * the production separation every vector store ships (FAISS
@@ -723,31 +761,10 @@ object SimSearch {
       k: Int = 5, nQueries: Int = 10, coarseStride: Long = 127,
       pqStride: Long = 61, m: Int = 4, nProbe: Int = 2): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val coarse = ivfCodebook(emb, coarseStride)
-    val pqCb = ivfCodebook(emb, pqStride).take(MaxPqCodebook)
-    val sub = pqSubDim(pqCb, m)
+    val (coarse, pqCb) = storeCodebooks(emb, coarseStride, pqStride)
     val out = graft.Scratch.dir("simsearch_index_persisted")
-    // BUILD: one corpus scan encodes (coarse cell, m PQ codes)
-    ivfAssignCorpus(emb, coarse)
-      .select(col("c_id"), col("cent_id"),
-        posexplode(array(pqCodeCols(pqCb, m, sub, col("c_emb")): _*))
-          .as(Seq("s", "code")))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cent_id").parquet(out)
-    // SERVE: reads only the persisted index (partition-column type
-    // inference reads the dir values as INT — rebind to the codebook's
-    // LONG ids for the probe join)
-    val corpus = spark.read.parquet(out)
-      .select(col("c_id"), col("s"), col("code"),
-        col("cent_id").cast("long").as("cent_id"))
-    val queryCells = ivfQueryCells(emb, coarse, nQueries, nProbe)
-      .select(col("q_id"), col("cent_id"))
-    val lut = pqLutFrame(emb.filter(col("vec_id") < nQueries.toLong)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-      pqCb, m, sub)
-    pqTopK(corpus
-      .join(broadcast(queryCells), Seq("cent_id"))
-      .join(broadcast(lut), Seq("q_id", "s", "code")), k)
+    writeCells(encodeIvfPq(emb, coarse, pqCb, m), out)
+    serveIvfPqArtifact(spark, out, emb, coarse, pqCb, k, nQueries, m, nProbe)
   }
 
   /** `simsearch_index_incremental` — daily-delta maintenance of the
@@ -778,31 +795,13 @@ object SimSearch {
     val store = emb.filter(col("vec_id") % 10 < 8)
     val delta = emb.filter(col("vec_id") % 10 >= 8)
     // yesterday's pinned quantizers: store-side samples only
-    val coarse = ivfCodebook(store, coarseStride)
-    val pqCb = ivfCodebook(store, pqStride).take(MaxPqCodebook)
-    val sub = pqSubDim(pqCb, m)
+    val (coarse, pqCb) = storeCodebooks(store, coarseStride, pqStride)
     val out = graft.Scratch.dir("simsearch_index_incremental")
-    def encode(part: DataFrame) = ivfAssignCorpus(part, coarse)
-      .select(col("c_id"), col("cent_id"),
-        posexplode(array(pqCodeCols(pqCb, m, sub, col("c_emb")): _*))
-          .as(Seq("s", "code")))
-    // day 0: the store's index (the persisted artifact)
-    encode(store).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cent_id").parquet(out)
-    // day 1: ONLY the delta encodes; append into the same layout
-    encode(delta).write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("cent_id").parquet(out)
-    val corpus = spark.read.parquet(out)
-      .select(col("c_id"), col("s"), col("code"),
-        col("cent_id").cast("long").as("cent_id"))
-    val queryCells = ivfQueryCells(emb, coarse, nQueries, nProbe)
-      .select(col("q_id"), col("cent_id"))
-    val lut = pqLutFrame(emb.filter(col("vec_id") < nQueries.toLong)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-      pqCb, m, sub)
-    pqTopK(corpus
-      .join(broadcast(queryCells), Seq("cent_id"))
-      .join(broadcast(lut), Seq("q_id", "s", "code")), k)
+    // day 0: the store's index; day 1: ONLY the delta encodes, appended
+    writeCells(encodeIvfPq(store, coarse, pqCb, m), out)
+    writeCells(encodeIvfPq(delta, coarse, pqCb, m), out,
+      org.apache.spark.sql.SaveMode.Append)
+    serveIvfPqArtifact(spark, out, emb, coarse, pqCb, k, nQueries, m, nProbe)
   }
 
   /** `simsearch_index_delete` — the REMOVE side of the index
@@ -831,37 +830,11 @@ object SimSearch {
       pqStride: Long = 61, m: Int = 4, nProbe: Int = 2,
       delMod: Long = 13): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val coarse = ivfCodebook(emb, coarseStride)
-    val pqCb = ivfCodebook(emb, pqStride).take(MaxPqCodebook)
-    val sub = pqSubDim(pqCb, m)
+    val (coarse, pqCb) = storeCodebooks(emb, coarseStride, pqStride)
     val out = graft.Scratch.dir("simsearch_index_delete")
-    // build: the persisted artifact (simsearch_index_persisted's shape)
-    ivfAssignCorpus(emb, coarse)
-      .select(col("c_id"), col("cent_id"),
-        posexplode(array(pqCodeCols(pqCb, m, sub, col("c_emb")): _*))
-          .as(Seq("s", "code")))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cent_id").parquet(out + "/index")
-    // delete batch: ids only — the index is immutable under deletes
-    emb.filter(pmod(col("vec_id"), lit(delMod)) === 0)
-      .select(col("vec_id").as("c_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(out + "/tombstones")
-    // serve: index scan -> cell probe (DPP) -> tombstone anti-join ->
-    // LUT scoring -> top-k; the embedding column never re-enters
-    val corpus = spark.read.parquet(out + "/index")
-      .select(col("c_id"), col("s"), col("code"),
-        col("cent_id").cast("long").as("cent_id"))
-    val mask = spark.read.parquet(out + "/tombstones")
-    val queryCells = ivfQueryCells(emb, coarse, nQueries, nProbe)
-      .select(col("q_id"), col("cent_id"))
-    val lut = pqLutFrame(emb.filter(col("vec_id") < nQueries.toLong)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-      pqCb, m, sub)
-    pqTopK(corpus
-      .join(broadcast(queryCells), Seq("cent_id"))
-      .join(mask, Seq("c_id"), "left_anti")
-      .join(broadcast(lut), Seq("q_id", "s", "code")), k)
+    writeIndexAndTombstones(emb, coarse, pqCb, m, delMod, out)
+    serveIvfPqArtifact(spark, out + "/index", emb, coarse, pqCb, k,
+      nQueries, m, nProbe, Some(spark.read.parquet(out + "/tombstones")))
   }
 
   /** `simsearch_index_compact` — the COMPACTION event the tombstone
@@ -893,40 +866,39 @@ object SimSearch {
       pqStride: Long = 61, m: Int = 4, nProbe: Int = 2,
       delMod: Long = 13): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val coarse = ivfCodebook(emb, coarseStride)
-    val pqCb = ivfCodebook(emb, pqStride).take(MaxPqCodebook)
-    val sub = pqSubDim(pqCb, m)
+    val (coarse, pqCb) = storeCodebooks(emb, coarseStride, pqStride)
     val out = graft.Scratch.dir("simsearch_index_compact")
-    ivfAssignCorpus(emb, coarse)
-      .select(col("c_id"), col("cent_id"),
-        posexplode(array(pqCodeCols(pqCb, m, sub, col("c_emb")): _*))
-          .as(Seq("s", "code")))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cent_id").parquet(out + "/index")
+    writeIndexAndTombstones(emb, coarse, pqCb, m, delMod, out)
+    // COMPACT: one anti-join pass over the codes into the same layout;
+    // the serve then needs no mask — deletes are physical
+    writeCells(spark.read.parquet(out + "/index")
+      .join(spark.read.parquet(out + "/tombstones"), Seq("c_id"),
+        "left_anti"), out + "/compacted")
+    serveIvfPqArtifact(spark, out + "/compacted", emb, coarse, pqCb, k,
+      nQueries, m, nProbe)
+  }
+
+  /** Writes a frame with a `cent_id` column as a cent_id-partitioned
+    * artifact.
+    */
+  private def writeCells(df: DataFrame, path: String,
+      mode: org.apache.spark.sql.SaveMode =
+        org.apache.spark.sql.SaveMode.Overwrite): Unit =
+    df.write.mode(mode).partitionBy("cent_id").parquet(path)
+
+  /** The delete rows' build: the IVFPQ artifact at `out/index` and the
+    * delete batch — ids only, vec_id % delMod = 0 — at `out/tombstones`;
+    * the index files are never touched by a delete.
+    */
+  private def writeIndexAndTombstones(emb: DataFrame,
+      coarse: Array[(Long, Array[Float], Double)],
+      pqCb: Array[(Long, Array[Float], Double)], m: Int, delMod: Long,
+      out: String): Unit = {
+    writeCells(encodeIvfPq(emb, coarse, pqCb, m), out + "/index")
     emb.filter(pmod(col("vec_id"), lit(delMod)) === 0)
       .select(col("vec_id").as("c_id"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(out + "/tombstones")
-    // COMPACT: one anti-join pass over the codes, rewritten into the
-    // same cent_id-partitioned layout; the mask then retires
-    spark.read.parquet(out + "/index")
-      .join(spark.read.parquet(out + "/tombstones"), Seq("c_id"),
-        "left_anti")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cent_id").parquet(out + "/compacted")
-    // serve: the compacted artifact, NO mask join — deletes are now
-    // physical
-    val corpus = spark.read.parquet(out + "/compacted")
-      .select(col("c_id"), col("s"), col("code"),
-        col("cent_id").cast("long").as("cent_id"))
-    val queryCells = ivfQueryCells(emb, coarse, nQueries, nProbe)
-      .select(col("q_id"), col("cent_id"))
-    val lut = pqLutFrame(emb.filter(col("vec_id") < nQueries.toLong)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-      pqCb, m, sub)
-    pqTopK(corpus
-      .join(broadcast(queryCells), Seq("cent_id"))
-      .join(broadcast(lut), Seq("q_id", "s", "code")), k)
   }
 
   /** `simsearch_index_health` — the "has the quantizer drifted, should
@@ -1022,47 +994,10 @@ object SimSearch {
     */
   private[graft] val DriftOffset = 100000000L
 
-  /** The IVFPQ ENCODE pass as a reusable frame — (c_id, cent_id, s,
-    * code) under pinned codebooks (simsearch_index_persisted's build
-    * side, exposed for the streaming ingest twin: encode is row-local
-    * and deterministic, so batch-encode ≡ stream-encode per row).
-    */
-  private[graft] def encodeIvfPq(part: DataFrame,
-      coarse: Array[(Long, Array[Float], Double)],
-      pqCb: Array[(Long, Array[Float], Double)], m: Int): DataFrame = {
-    val sub = pqSubDim(pqCb, m)
-    ivfAssignCorpus(part, coarse)
-      .select(col("c_id"), col("cent_id"),
-        posexplode(array(pqCodeCols(pqCb, m, sub, col("c_emb")): _*))
-          .as(Seq("s", "code")))
-  }
-
-  /** The IVFPQ SERVE pass over a persisted cent_id-partitioned code
-    * artifact (simsearch_index_persisted's read side, exposed for the
-    * streaming ingest twin): cell probe (DPP) → LUT scoring → top-k;
-    * the embedding column never re-enters the plan.
-    */
-  private[graft] def serveIvfPqArtifact(spark: SparkSession,
-      indexPath: String, emb: DataFrame,
-      coarse: Array[(Long, Array[Float], Double)],
-      pqCb: Array[(Long, Array[Float], Double)], k: Int, nQueries: Int,
-      m: Int, nProbe: Int): DataFrame = {
-    val sub = pqSubDim(pqCb, m)
-    val corpus = spark.read.parquet(indexPath)
-      .select(col("c_id"), col("s"), col("code"),
-        col("cent_id").cast("long").as("cent_id"))
-    val queryCells = ivfQueryCells(emb, coarse, nQueries, nProbe)
-      .select(col("q_id"), col("cent_id"))
-    val lut = pqLutFrame(emb.filter(col("vec_id") < nQueries.toLong)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-      pqCb, m, sub)
-    pqTopK(corpus
-      .join(broadcast(queryCells), Seq("cent_id"))
-      .join(broadcast(lut), Seq("q_id", "s", "code")), k)
-  }
-
-  /** Pinned store-side codebooks for the incremental/streaming index
-    * forms (yesterday's quantizers — the simsearch_index_incremental
+  /** The IVFPQ codebook pair over `store`: the coarse stride sample and
+    * the PQ stride sample capped at [[MaxPqCodebook]]. For the
+    * incremental and streaming index forms these are the pinned
+    * store-side quantizers (yesterday's — the simsearch_index_incremental
     * contract).
     */
   private[graft] def storeCodebooks(store: DataFrame,
@@ -1114,78 +1049,25 @@ object SimSearch {
   def simsearchIndexRebuild(spark: SparkSession, sfDir: String,
       k: Int = 5, nQueries: Int = 10, coarseStride: Long = 127,
       nProbe: Int = 2, tvRebuild: Double = 0.05): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-    val shifted = emb.select(
-      (col("vec_id") + lit(DriftOffset)).as("vec_id"),
-      transform(col("embedding"), x => abs(x)).as("embedding"))
-    val now = emb.unionByName(shifted)
+    val (emb, now, queries, exact) = driftHarness(spark, sfDir, k, nQueries)
     val oldCb = ivfCodebook(emb, coarseStride)
     val newCb = ivfCodebook(now, coarseStride)
     // (1) the health verdict under the PINNED old codebook
     val health = indexHealthOver(now, col("c_id") < DriftOffset, oldCb,
       tvRebuild).select(col("tv"), col("rebuild"))
-    val isQuery = col("vec_id") < nQueries.toLong ||
-      (col("vec_id") >= DriftOffset &&
-        col("vec_id") < DriftOffset + nQueries)
-    val queries = now.filter(isQuery)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        l2norm(col("embedding")).as("q_nrm"))
-    // (4a) ground truth: exact KNN over the drifted corpus
-    val wx = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id").asc)
-    val exact = now.select(col("vec_id").as("c_id"),
-        col("embedding").as("c_emb"), l2norm(col("embedding")).as("c_nrm"))
-      .crossJoin(broadcast(queries))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos_sim", round(
-        dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4))
-      .withColumn("rn", row_number().over(wx))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"))
-      .localCheckpoint(true) // two judge consumers; never recompute
     // (2)+(3): encode under a codebook, serve the probe from the index
     // rows (the rebuilt one additionally round-trips its persisted
     // cent_id-partitioned artifact — the index_persisted contract)
     def serveUnder(cb: Array[(Long, Array[Float], Double)],
         persistTo: Option[String]): DataFrame = {
-      val spark2 = now.sparkSession
-      import spark2.implicits._
       val encoded = ivfAssignCorpus(now, cb)
-      val index = persistTo match {
-        case Some(out) =>
-          encoded.select(col("c_id"), col("c_emb"), col("c_nrm"),
-              col("cent_id"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .partitionBy("cent_id").parquet(out)
-          spark2.read.parquet(out)
-            .select(col("c_id"), col("c_emb"), col("c_nrm"),
-              col("cent_id").cast("long").as("cent_id"))
-        case None => encoded
+      val index = persistTo.fold(encoded) { out =>
+        writeCells(encoded.select(col("c_id"), col("c_emb"), col("c_nrm"),
+          col("cent_id")), out)
+        readCells(spark, out, "c_id", "c_emb", "c_nrm")
       }
-      val cbDf = cb.toSeq.map { case (id, v, nrm) => (id, v, nrm) }
-        .toDF("cent_id", "c_v", "cnrm")
-      val wq = Window.partitionBy(col("q_id"))
-        .orderBy(col("cell_cos").desc, col("cent_id").asc)
-      val queryCells = queries
-        .crossJoin(broadcast(cbDf))
-        .withColumn("cell_cos",
-          dot(col("q_emb"), col("c_v")) / (col("q_nrm") * col("cnrm")))
-        .withColumn("cell_rn", row_number().over(wq))
-        .filter(col("cell_rn") <= nProbe)
-        .select(col("q_id"), col("q_emb"), col("q_nrm"), col("cent_id"))
-      val wk = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos_sim").desc, col("c_id").asc)
-      index
-        .join(broadcast(queryCells), Seq("cent_id"))
-        .filter(col("q_id") =!= col("c_id"))
-        .withColumn("cos_sim", round(
-          dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")),
-          4))
-        .withColumn("rn", row_number().over(wk))
-        .filter(col("rn") <= k)
-        .select(col("q_id"), col("c_id"))
+      topK(scorePairs(index.join(broadcast(probeCells(queries, cb, nProbe)),
+        Seq("cent_id"))), k).select(col("q_id"), col("c_id"))
     }
     val out = graft.Scratch.dir("simsearch_index_rebuild")
     val served = Seq(
@@ -1216,6 +1098,28 @@ object SimSearch {
           .cast("double") / lit((2 * nQueries * k).toDouble), 4))
       .crossJoin(broadcast(health))
       .orderBy(col("idx").asc, col("q_id").asc)
+  }
+
+  /** The drift harness both rebuild rows share: the fixture corpus
+    * `emb`; the drifted corpus `now` = emb ∪ its component-wise |x|
+    * twins at vec_id + [[DriftOffset]]; the 2·nQueries queries spanning
+    * both halves; and the exact top-k judge over `now`, checkpointed —
+    * both indexes are judged against it, never recomputed.
+    */
+  private def driftHarness(spark: SparkSession, sfDir: String, k: Int,
+      nQueries: Int): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val emb = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding"))
+    val now = emb.unionByName(emb.select(
+      (col("vec_id") + lit(DriftOffset)).as("vec_id"),
+      transform(col("embedding"), x => abs(x)).as("embedding")))
+    val queries = queryFrame(now, col("vec_id") < nQueries.toLong ||
+      (col("vec_id") >= DriftOffset && col("vec_id") < DriftOffset + nQueries))
+    val exact = topK(scorePairs(corpusFrame(now)
+        .crossJoin(broadcast(queries))), k)
+      .select(col("q_id"), col("c_id"))
+      .localCheckpoint(true)
+    (emb, now, queries, exact)
   }
 
   /** `simsearch_graph` — GRAPH-STRUCTURED ANN (VERDICT r18 #5; the
@@ -1370,15 +1274,10 @@ object SimSearch {
     val e = graphFrame(emb)
     val (visited, exact) = graphServeOf(spark, sfDir, e, k, nQueries,
       degree, beamWidth, hops, entryStride)
-    val cb = ivfCodebook(emb, entryStride)
-    val ivfScored = ivfAssignCorpus(emb, cb)
-      .join(broadcast(ivfQueryCells(emb, cb, nQueries, nProbe)), "cent_id")
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos_sim", round(
-        dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4))
+    val ivf = ivfScored(emb, ivfCodebook(emb, entryStride), nQueries, nProbe)
       .select(col("q_id"), col("c_id"), col("cos_sim"))
     judgeRows("graph", visited, exact, k)
-      .unionByName(judgeRows("ivf", ivfScored, exact, k))
+      .unionByName(judgeRows("ivf", ivf, exact, k))
       .orderBy(col("idx").asc, col("q_id").asc)
   }
 
@@ -1390,13 +1289,10 @@ object SimSearch {
       .withColumn("bkt", lshBucket(col("embedding"), 8))
 
   private def graphQueries(e: DataFrame, nQueries: Int): DataFrame =
-    e.filter(col("vec_id") < nQueries.toLong)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
+    queryFrame(e, col("vec_id") < nQueries.toLong, nrm = col("nrm"))
 
   private def graphCorpus(e: DataFrame): DataFrame =
-    e.select(col("vec_id").as("c_id"),
-      col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
+    corpusFrame(e, nrm = col("nrm"))
 
   /** The greedy beam walk: visited (q_id, c_id, cos_sim) after `hops`
     * rounds of beam-`beamWidth` expansion from the stride entry
@@ -1415,22 +1311,14 @@ object SimSearch {
     val queries = graphQueries(e, nQueries)
     val corpus = graphCorpus(e)
     def scoreOf(nodes: DataFrame): DataFrame =
-      nodes.join(corpus, "c_id").join(broadcast(queries), "q_id")
-        .filter(col("q_id") =!= col("c_id"))
-        .withColumn("cos_sim", round(
-          dot(col("q_emb"), col("c_emb"))
-            / (col("q_nrm") * col("c_nrm")), 4))
+      scorePairs(nodes.join(corpus, "c_id").join(broadcast(queries), "q_id"))
         .select(col("q_id"), col("c_id"), col("cos_sim"))
     var visited = scoreOf(queries.select(col("q_id"))
       .crossJoin(e.filter(pmod(col("vec_id"), lit(entryStride)) === 0)
         .select(col("vec_id").as("c_id"))))
       .localCheckpoint(true)
-    val wB = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id").asc)
     for (_ <- 1 to hops) {
-      val frontier = visited
-        .withColumn("rn", row_number().over(wB))
-        .filter(col("rn") <= beamWidth)
+      val frontier = topK(visited, beamWidth)
         .select(col("q_id"), col("c_id").as("src"))
         .join(edges, "src")
         .select(col("q_id"), col("dst").as("c_id")).distinct()
@@ -1449,18 +1337,10 @@ object SimSearch {
     * truth for the tombstone path).
     */
   private def exactTopK(e: DataFrame, k: Int, nQueries: Int,
-      corpusFilter: Column = lit(true)): DataFrame = {
-    val wB = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id").asc)
-    graphCorpus(e).filter(corpusFilter)
-      .crossJoin(broadcast(graphQueries(e, nQueries)))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos_sim", round(
-        dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4))
-      .withColumn("rn", row_number().over(wB))
-      .filter(col("rn") <= k)
+      corpusFilter: Column = lit(true)): DataFrame =
+    topK(scorePairs(graphCorpus(e).filter(corpusFilter)
+      .crossJoin(broadcast(graphQueries(e, nQueries)))), k)
       .select(col("q_id"), col("c_id"))
-  }
 
   /** One (idx, q_id, hits, recall, candidates_scanned) row per query
     * from a scored candidate set, judged against `exact`.
@@ -1469,12 +1349,15 @@ object SimSearch {
     * were paid for).
     */
   private def judgeRows(idx: String, scored: DataFrame, exact: DataFrame,
-      k: Int, serveFilter: Column = lit(true)): DataFrame = {
-    val wB = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id").asc)
-    val serve = scored.filter(serveFilter)
-      .withColumn("rn", row_number().over(wB))
-      .filter(col("rn") <= k).select(col("q_id"), col("c_id"))
+      k: Int, serveFilter: Column = lit(true)): DataFrame =
+    judged(idx, scored, topK(scored.filter(serveFilter), k)
+      .select(col("q_id"), col("c_id")), exact, k)
+
+  /** The (idx, q_id, hits, recall, candidates_scanned) report of a
+    * served top-k against `exact`; every scored node counts as scanned.
+    */
+  private def judged(idx: String, scored: DataFrame, serve: DataFrame,
+      exact: DataFrame, k: Int): DataFrame = {
     val hits = serve.join(exact, Seq("q_id", "c_id"), "left_semi")
       .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
     scored.groupBy(col("q_id"))
@@ -1645,33 +1528,18 @@ object SimSearch {
       col("label").as("c_label"))
     val qLabels = embL.filter(col("vec_id") < nQueries.toLong)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"))
-    val wB = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id").asc)
-    val serve = visited.join(labels, "c_id")
+    val serve = topK(visited.join(labels, "c_id")
       .join(broadcast(qLabels), "q_id")
-      .filter(col("c_label") === col("q_label"))
-      .withColumn("rn", row_number().over(wB))
-      .filter(col("rn") <= k).select(col("q_id"), col("c_id"))
-    val exact = graphCorpus(e).join(labels, "c_id")
+      .filter(col("c_label") === col("q_label")), k)
+      .select(col("q_id"), col("c_id"))
+    val exact = topK(graphCorpus(e).join(labels, "c_id")
       .crossJoin(broadcast(graphQueries(e, nQueries)
         .join(qLabels, "q_id")))
       .filter(col("q_id") =!= col("c_id")
         && col("c_label") === col("q_label"))
-      .withColumn("cos_sim", round(
-        dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4))
-      .withColumn("rn", row_number().over(wB))
-      .filter(col("rn") <= k)
+      .withColumn("cos_sim", cosSim), k)
       .select(col("q_id"), col("c_id"))
-    val hits = serve.join(exact, Seq("q_id", "c_id"), "left_semi")
-      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-    visited.groupBy(col("q_id"))
-      .agg(count(lit(1)).as("candidates_scanned"))
-      .join(hits, Seq("q_id"), "left_outer")
-      .select(lit("graph_filt").as("idx"), col("q_id"),
-        coalesce(col("hits"), lit(0L)).as("hits"),
-        round(coalesce(col("hits"), lit(0L)) / lit(k.toDouble), 4)
-          .as("recall"),
-        col("candidates_scanned"))
+    judged("graph_filt", visited, serve, exact, k)
       .orderBy(col("q_id").asc)
   }
 
@@ -1730,67 +1598,23 @@ object SimSearch {
   def simsearchIndexRebuildTuned(spark: SparkSession, sfDir: String,
       k: Int = 5, nQueries: Int = 10, coarseStride: Long = 127,
       oldProbe: Int = 2, maxProbe: Int = 6): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-    val shifted = emb.select(
-      (col("vec_id") + lit(DriftOffset)).as("vec_id"),
-      transform(col("embedding"), x => abs(x)).as("embedding"))
-    val now = emb.unionByName(shifted)
+    val (emb, now, queries, exact) = driftHarness(spark, sfDir, k, nQueries)
     val oldCb = ivfCodebook(emb, coarseStride)
     val newCb = ivfCodebook(now, coarseStride)
-    val isQuery = col("vec_id") < nQueries.toLong ||
-      (col("vec_id") >= DriftOffset &&
-        col("vec_id") < DriftOffset + nQueries)
-    val queries = now.filter(isQuery)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        l2norm(col("embedding")).as("q_nrm"))
-    val wx = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id").asc)
-    val exact = now.select(col("vec_id").as("c_id"),
-        col("embedding").as("c_emb"), l2norm(col("embedding")).as("c_nrm"))
-      .crossJoin(broadcast(queries))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos_sim", round(
-        dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4))
-      .withColumn("rn", row_number().over(wx))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"))
-      .localCheckpoint(true) // one judge, two indexes — never recompute
     // (sum_hits, candidates) per probe setting 1..maxP under a codebook
     def sweep(cb: Array[(Long, Array[Float], Double)],
         maxP: Int): DataFrame = {
-      val spark2 = now.sparkSession
-      import spark2.implicits._
-      val cbDf = cb.toSeq.map { case (id, v, nrm) => (id, v, nrm) }
-        .toDF("cent_id", "c_v", "cnrm")
-      val wq = Window.partitionBy(col("q_id"))
-        .orderBy(col("cell_cos").desc, col("cent_id").asc)
-      val queryCells = queries
-        .crossJoin(broadcast(cbDf))
-        .withColumn("cell_cos",
-          dot(col("q_emb"), col("c_v")) / (col("q_nrm") * col("cnrm")))
-        .withColumn("cell_rn", row_number().over(wq))
-        .filter(col("cell_rn") <= maxP)
-        .select(col("q_id"), col("q_emb"), col("q_nrm"),
-          col("cent_id"), col("cell_rn"))
       // each candidate admits at probe settings cell_rn..maxP: ONE
       // cell-probe join, exploded to its admitting settings (≤ maxP×)
       val cand = ivfAssignCorpus(now, cb)
-        .join(broadcast(queryCells), Seq("cent_id"))
+        .join(broadcast(probeCells(queries, cb, maxP)), Seq("cent_id"))
         .filter(col("q_id") =!= col("c_id"))
         .withColumn("p",
           explode(sequence(col("cell_rn"), lit(maxP))))
       val scanned = cand.groupBy(col("p"))
         .agg(count(lit(1)).as("candidates_scanned"))
-      val wk = Window.partitionBy(col("p"), col("q_id"))
-        .orderBy(col("cos_sim").desc, col("c_id").asc)
-      val hits = cand
-        .withColumn("cos_sim", round(
-          dot(col("q_emb"), col("c_emb"))
-            / (col("q_nrm") * col("c_nrm")), 4))
-        .withColumn("rn", row_number().over(wk))
-        .filter(col("rn") <= k)
+      val hits = topK(cand.withColumn("cos_sim", cosSim), k,
+          partitionBy = Seq(col("p"), col("q_id")))
         .join(exact, Seq("q_id", "c_id"), "left_semi")
         .groupBy(col("p")).agg(count(lit(1)).as("sum_hits"))
       scanned.join(hits, Seq("p"), "left_outer")
@@ -1960,26 +1784,18 @@ object SimSearch {
     val emb = Tables.embeddings(spark, sfDir)
     val cand = pqOver(emb, nCand, nQueries, centroidStride, m)
       .select(col("q_id"), col("c_id"))
-    val queries = emb.filter(col("vec_id") < nQueries.toLong)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        l2norm(col("embedding")).as("q_nrm"))
     // corpus side ships ONLY (c_id, c_emb): the candidate norm is
     // computed AFTER the cand join, on |q|·nCand rows — computing it
     // here would burn O(|corpus|·dim) flops for rows the shortlist
     // never touches (review finding r13)
     val corpus = emb.select(col("vec_id").as("c_id"),
       col("embedding").as("c_emb"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id").asc)
-    cand
+    topK(cand
       .join(corpus, Seq("c_id")) // keyed candidate-vector fetch
-      .join(broadcast(queries), Seq("q_id"))
-      .withColumn("cos_sim", round(
-        dot(col("q_emb"), col("c_emb")) /
-          (col("q_nrm") * l2norm(col("c_emb"))),
-        4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      .join(broadcast(queryFrame(emb, col("vec_id") < nQueries.toLong)),
+        Seq("q_id"))
+      .withColumn("c_nrm", l2norm(col("c_emb")))
+      .withColumn("cos_sim", cosSim), k)
       .select(col("q_id"), col("c_id"), col("cos_sim"), col("rn"))
       .orderBy(col("q_id").asc, col("rn").asc)
   }
@@ -2012,25 +1828,14 @@ object SimSearch {
   /** Pre-filter exact top-k over any (vec_id, embedding, label) frame:
     * candidates restricted to `label = query.label` by the join itself.
     */
-  def filteredKnnOver(emb: DataFrame, k: Int, nQueries: Int): DataFrame = {
-    val queries = emb.filter(col("vec_id") < nQueries.toLong)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        l2norm(col("embedding")).as("q_nrm"), col("label").as("q_label"))
-    val corpus = emb.select(col("vec_id").as("c_id"),
-      col("embedding").as("c_emb"), l2norm(col("embedding")).as("c_nrm"),
-      col("label").as("c_label"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id").asc)
-    corpus
-      .join(broadcast(queries),
+  def filteredKnnOver(emb: DataFrame, k: Int, nQueries: Int): DataFrame =
+    topK(corpusFrame(emb, Seq(col("label").as("c_label")))
+      .join(broadcast(queryFrame(emb, col("vec_id") < nQueries.toLong,
+        Seq(col("label").as("q_label")))),
         col("c_label") === col("q_label") && col("q_id") =!= col("c_id"))
-      .withColumn("cos_sim", round(
-        dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      .withColumn("cos_sim", cosSim), k)
       .select(col("q_id"), col("c_id"), col("cos_sim"), col("rn"))
       .orderBy(col("q_id").asc, col("rn").asc)
-  }
 
   /** POST-filter order (the contrast case, library-only): unfiltered
     * exact top-k FIRST, attribute predicate AFTER. Cheaper when the
@@ -2078,54 +1883,17 @@ object SimSearch {
       nProbe: Int = 2): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     val codebook = ivfCodebook(emb, centroidStride)
-    // corpus assignment: same scan→project kernel as ivfAssignCorpus,
-    // carrying the filter attribute through
-    val corpusCells = emb
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-        l2norm(col("embedding")).as("c_nrm"), col("label").as("c_label"))
-      .withColumn("cent_id",
-        graft.functions.VectorExpressions.nearestCentroidCol(col("c_emb"),
-          codebook.map(_._1),
-          codebook.map { case (_, v, nrm) => v.map(_.toDouble / nrm) }))
-    val queryCells = ivfQueryCellsWithLabel(emb, codebook, nQueries, nProbe)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id").asc)
-    corpusCells
+    val queryCells = probeCells(queryFrame(emb,
+        col("vec_id") < nQueries.toLong, Seq(col("label").as("q_label"))),
+      codebook, nProbe).withColumnRenamed("cent_id", "q_cent")
+    topK(ivfAssignCorpus(emb, codebook, Seq(col("label").as("c_label")))
       .join(broadcast(queryCells),
         col("cent_id") === col("q_cent") &&
           col("c_label") === col("q_label") &&
           col("q_id") =!= col("c_id"))
-      .withColumn("cos_sim", round(
-        dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      .withColumn("cos_sim", cosSim), k)
       .select(col("q_id"), col("c_id"), col("cos_sim"), col("rn"))
       .orderBy(col("q_id").asc, col("rn").asc)
-  }
-
-  /** [[ivfQueryCells]] carrying the query's filter attribute (and with
-    * the probe-cell id renamed so the downstream join can name both
-    * sides). Same ranking arithmetic — bit-identical probe selection.
-    */
-  private def ivfQueryCellsWithLabel(emb: DataFrame,
-      codebook: Array[(Long, Array[Float], Double)], nQueries: Int,
-      nProbe: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val cbDf = codebook.toSeq.map { case (id, v, nrm) => (id, v, nrm) }
-      .toDF("cent_id", "c_v", "cnrm")
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("cell_cos").desc, col("cent_id").asc)
-    emb.filter(col("vec_id") < nQueries.toLong)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        l2norm(col("embedding")).as("q_nrm"), col("label").as("q_label"))
-      .crossJoin(broadcast(cbDf))
-      .withColumn("cell_cos",
-        dot(col("q_emb"), col("c_v")) / (col("q_nrm") * col("cnrm")))
-      .withColumn("cell_rn", row_number().over(wq))
-      .filter(col("cell_rn") <= nProbe)
-      .select(col("q_id"), col("q_emb"), col("q_nrm"), col("q_label"),
-        col("cent_id").as("q_cent"))
   }
 
   /** `simsearch_ivfpq_residual` — IVFPQ with RESIDUAL ENCODING, the
@@ -2227,7 +1995,8 @@ object SimSearch {
     val corpus = ivfAssignCorpus(emb, coarse)
       .select(col("c_id"), col("cent_id"),
         posexplode(array(codeCols: _*)).as(Seq("s", "code")))
-    val queryCells = ivfQueryCells(emb, coarse, nQueries, nProbe)
+    val queryCells = probeCells(
+        queryFrame(emb, col("vec_id") < nQueries.toLong), coarse, nProbe)
       .select(col("q_id"), col("cent_id"))
     // bounded collect: the nQueries query vectors (the codebook class)
     val qRows = emb.filter(col("vec_id") < nQueries.toLong)
@@ -2252,23 +2021,14 @@ object SimSearch {
     } yield (qid, cid,
       units6(ldot(q, cv.map(_.toDouble), 0, dim))))
       .toDF("q_id", "cent_id", "cdot_u")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score_u").desc, col("c_id").asc)
-    corpus
+    approxTail(topK(corpus
       .join(broadcast(queryCells), Seq("cent_id"))
       .join(broadcast(lut), Seq("q_id", "s", "code"))
       .filter(col("c_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("c_id"), col("cent_id"))
       .agg(sum(col("pdot_u")).as("res_u"))
       .join(broadcast(cdot), Seq("q_id", "cent_id"))
-      .withColumn("score_u", col("res_u") + col("cdot_u"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"),
-        round(col("score_u").cast("double") / 1000000.0, 6)
-          .as("approx_score"),
-        col("rn"))
-      .orderBy(col("q_id").asc, col("rn").asc)
+      .withColumn("score_u", col("res_u") + col("cdot_u")), k, "score_u"))
   }
 
   /** `ann_recall` — the ANN quality report (VERDICT r5 #4 + r7 #7):
@@ -2872,14 +2632,10 @@ object SimSearch {
       .select(col("q_id"), col("c_id"), col("rn").as("vec_rn"))
 
     // ---- fusion: fixed-point RRF over the two rank lists ----
-    val wF = Window.partitionBy(col("q_id"))
-      .orderBy(col("rrf_u").desc, col("c_id").asc)
-    lexTop.join(vecTop, Seq("q_id", "c_id"), "full_outer")
+    topK(lexTop.join(vecTop, Seq("q_id", "c_id"), "full_outer")
       .withColumn("rrf_u",
         coalesce(expr("1000000 DIV (60 + lex_rn)"), lit(0L))
-          + coalesce(expr("1000000 DIV (60 + vec_rn)"), lit(0L)))
-      .withColumn("rn", row_number().over(wF))
-      .filter(col("rn") <= k)
+          + coalesce(expr("1000000 DIV (60 + vec_rn)"), lit(0L))), k, "rrf_u")
       .select(col("q_id"), col("c_id"),
         coalesce(col("lex_rn"), lit(0)).as("lex_rn"),
         coalesce(col("vec_rn"), lit(0)).as("vec_rn"),

@@ -17,27 +17,30 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * driver or assumes single-file inputs.
   */
 object Tables {
-  /** Per-session catalog cache: a DataFrame is an immutable lazy plan,
-    * so reusing it avoids re-reading parquet footers and re-running
-    * analysis for every one of the ~90 contract queries (the fixed
-    * per-query overhead that dominates the bench at small scale — the
-    * role Glue/metastore schema caching plays in the reference).
-    */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  val allTables: Seq[String] = Seq(
+    "region", "nation", "supplier", "customer", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // bound the cache: a long-lived service iterating many sessions/dirs
-    // must not pin stopped sessions via cache keys
-    if (cache.size > 256) cache.clear()
-    cache.computeIfAbsent((spark, sfDir, name), { _ =>
+  /** Per-session catalog cache, one [[graft.Memo]] per fixture table: a
+    * DataFrame is an immutable lazy plan, so reusing it avoids
+    * re-reading parquet footers and re-running analysis for every one of
+    * the ~90 contract queries (the fixed per-query overhead that
+    * dominates the bench at small scale — the role Glue/metastore schema
+    * caching plays in the reference). Each memo is fingerprinted over
+    * its own `<name>.parquet`, so an in-place rewrite misses (a fresh
+    * file listing) and sweeps the stale entry.
+    */
+  private val memos: Map[String, graft.Memo[DataFrame]] =
+    allTables.map(t => t -> graft.Memo[DataFrame](t)).toMap
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    memos(name)(spark, sfDir) {
       if (name == "events") eventsUncached(spark, sfDir)
       else {
         preferLtzTimestamps(spark)
         normalizeNtz(spark.read.parquet(s"$sfDir/$name.parquet"))
       }
-    })
-  }
+    }
 
   /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark 4's vectorized
     * reader rejects outright (PARQUET_TYPE_ILLEGAL). Read it as raw ns
@@ -110,10 +113,6 @@ object Tables {
     normalizeEventTs(eventsRaw(spark, d))
   def documents(spark: SparkSession, d: String): DataFrame = table(spark, d, "documents")
   def embeddings(spark: SparkSession, d: String): DataFrame = table(spark, d, "embeddings")
-
-  val allTables: Seq[String] = Seq(
-    "region", "nation", "supplier", "customer", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Register every fixture table as a temp view so `spark.sql` queries
     * (the engine's Athena-SQL-passthrough equivalent) can reference them

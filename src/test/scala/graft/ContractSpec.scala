@@ -85,10 +85,9 @@ class ContractSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracleSql keys with no query impl: $orphans")
   }
 
-  test("no ConcurrentHashMap in src/main outside Memo, Tables and TimeQ " +
+  test("no ConcurrentHashMap in src/main outside Memo and TimeQ " +
       "(operator memos go through graft.Memo)") {
-    val allowed = Set("graft/Memo.scala", "graft/sources/Tables.scala",
-      "graft/TimeQ.scala")
+    val allowed = Set("graft/Memo.scala", "graft/TimeQ.scala")
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"no $root under the cwd")
     val files = java.nio.file.Files.walk(root).iterator().asScala
@@ -166,6 +165,55 @@ class ContractSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"get scratch space from Scratch.dir: ${offenders.mkString(", ")}")
+  }
+
+  test("SimSearch's ANN core is written once: the cosine score, the " +
+      "probe codebook, the artifact cent_id rebind and the IVF-PQ encode " +
+      "appear only inside their helpers") {
+    val sim = "graft/operators/SimSearch.scala"
+    val rules = Seq(
+      "dot(col(\"q_emb\"), col(\"c_emb\"))" -> Seq("def cosSim"),
+      ".toDF(\"cent_id\", \"c_v\", \"cnrm\")" -> Seq("def probeCells"),
+      "col(\"cent_id\").cast(\"long\")" -> Seq("def readCells"),
+      // pqOverCodebook's raw-embedding encode has no coarse cell
+      "posexplode(array(pqCodeCols(" ->
+        Seq("def encodeIvfPq", "def pqOverCodebook"))
+    val found = rules.map { case (needle, defs) =>
+      needle -> codeLines(needle, defs.map(sim -> _))
+        .filter(_._1.startsWith(sim + ":"))
+    }
+    val offenders = found.flatMap { case (needle, at) =>
+      at.collect { case (line, false) => s"$line $needle" }
+    }
+    assert(offenders.isEmpty, "call the SimSearch helper instead of " +
+      s"re-inlining it:\n${offenders.mkString("\n")}")
+    found.foreach { case (needle, at) =>
+      assert(at.exists(_._2), s"no helper holds $needle any more")
+    }
+  }
+
+  test("no catch-all Throwable handler in src/main outside LakeIO's " +
+      "abort-and-rethrow sites (failures are caught as NonFatal)") {
+    val offenders = codeLines(": Throwable =>", Nil).map(_._1)
+      .filterNot(_.startsWith("graft/sources/LakeIO.scala:"))
+    assert(offenders.isEmpty,
+      s"catch NonFatal, not Throwable: ${offenders.mkString(", ")}")
+  }
+
+  test("Verify.dump records each failed query in failures.json") {
+    def failuresJson(out: String): String = new String(
+      java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(out, "failures.json")), "UTF-8")
+    val bad = Scratch.dir("verify_failed")
+    assert(Verify.dump(spark, Scratch.dir("verify_empty_sf"), bad,
+      Set("agg_group_sum")) === Seq("agg_group_sum"))
+    assert(failuresJson(bad).startsWith(
+      "[{\"query\":\"agg_group_sum\",\"error\":\""), failuresJson(bad))
+    assert(new java.io.File(bad, "oracle_sql.json").isFile)
+    val good = Scratch.dir("verify_clean")
+    assert(Verify.dump(spark, TestSpark.sf, good, Set("agg_group_sum"))
+      .isEmpty)
+    assert(failuresJson(good) === "[]")
   }
 
   test("entry (flagship) returns rows on sf0.001") {

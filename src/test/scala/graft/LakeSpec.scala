@@ -589,18 +589,6 @@ class LakeSpec extends AnyFunSuite {
     val g1 = SimSearch.simsearchGraph(spark, dir).collect().toSeq
     val kept = emb.filter(col("vec_id") % 2 === 0)
     kept.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    // Tables' plan cache keeps the old file listing (nothing persisted
-    // over it triggers Spark's refresh-on-overwrite): refresh it, as
-    // REFRESH TABLE would
-    Tables.embeddings(spark, dir).queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.refresh()
-          case _ =>
-        }
-      case _ =>
-    }
     val freshDir = Files.createTempDirectory("graft_fp").toString
     kept.write.parquet(s"$freshDir/embeddings.parquet")
     val g2 = SimSearch.simsearchGraph(spark, dir).collect().toSeq
