@@ -15,29 +15,6 @@ object TimeQ {
     val names = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Scratch.driverSession()
-    // SPARK_GRAFT_JOBLOG=1: per-job trace (start→end wall, job group /
-    // description) — finds driver-side gaps between jobs that per-task
-    // metrics can't see
-    if (sys.env.contains("SPARK_GRAFT_JOBLOG")) {
-      val t0 = System.nanoTime()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          private val starts =
-            new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-          override def onJobStart(
-              e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            starts.put(e.jobId, System.nanoTime())
-            ()
-          }
-          override def onJobEnd(
-              e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val s = starts.remove(e.jobId)
-            val now = System.nanoTime()
-            val dur = if (s == null) -1 else (now - s) / 1000000
-            println(f"[job] id=${e.jobId} at=${(now - t0) / 1000000}ms dur=${dur}ms")
-          }
-        })
-    }
     SparkEntry.queries("agg_group_sum")(spark, sfDir).count() // session warm
     val clock = org.apache.spark.graft.Instrument.install(spark.sparkContext)
     names.foreach { n =>

@@ -108,7 +108,7 @@ case class MinSigImperative(
   * still correct to 1 ulp of that conversion, and past the first the
   * accumulators widen (the documented DECIMAL(38,·) escalation).
   *
-  * Buffer layout: [0] = n, [1..d] = Σ snap4(x_i), then Σ l_i·l_j for
+  * Buffer layout: [0] = n, [1..d] = Σ Fixed4.snap(x_i), then Σ l_i·l_j for
   * upper-triangle pairs (i ≤ j) in row-major order. NULL vectors are
   * skipped (SQL aggregate null semantics — the oracle's
   * `embedding[t.i]` indexing NULL-propagates into a NULL the SUM also
@@ -143,10 +143,6 @@ case class VectorMomentsImperative(
 
   override def createAggregationBuffer(): Array[Long] = new Array[Long](bufLen)
 
-  private def snap4(v: Double): Long =
-    java.math.BigDecimal.valueOf(v)
-      .setScale(4, java.math.RoundingMode.HALF_UP).unscaledValue().longValue()
-
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v != null) {
@@ -159,7 +155,7 @@ case class VectorMomentsImperative(
       }
       val l = new Array[Long](d)
       var i = 0
-      while (i < d) { l(i) = snap4(arr.getFloat(i).toDouble); i += 1 }
+      while (i < d) { l(i) = graft.Fixed4.snap(arr.getFloat(i).toDouble); i += 1 }
       buf(0) += 1L
       i = 0
       while (i < d) { buf(1 + i) += l(i); i += 1 }

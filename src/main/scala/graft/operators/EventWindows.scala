@@ -509,7 +509,7 @@ object EventWindows {
   }
 
   /** `stream_state_ttl` — batch (event-time) shape of TTL'd keyed state
-    * (Streams.runningTotalsWithTtl / TtlRunningTotalProcessor): per
+    * (Streams.runningTotalsWithTtl, a TTL'd RunningTotalProcessor): per
     * user, the purchase count and total that would still be live under
     * a 30-minute state TTL at corpus end — i.e. only purchases within
     * 30 minutes of that user's most recent purchase. The wall-clock

@@ -85,9 +85,9 @@ class ContractSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracleSql keys with no query impl: $orphans")
   }
 
-  test("no ConcurrentHashMap in src/main outside Memo and TimeQ " +
-      "(operator memos go through graft.Memo)") {
-    val allowed = Set("graft/Memo.scala", "graft/TimeQ.scala")
+  test("no ConcurrentHashMap in src/main outside Memo " +
+      "(memos go through graft.Memo)") {
+    val allowed = Set("graft/Memo.scala")
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"no $root under the cwd")
     val files = java.nio.file.Files.walk(root).iterator().asScala
@@ -105,8 +105,8 @@ class ContractSpec extends AnyFunSuite {
   }
 
   /** Every code line under src/main/scala that contains `needle`, as
-    * (file:line, inside one of `bodies`); a body is a (file, def) pair
-    * spanning from the def's line to its member-level close.
+    * (file:line, inside one of `bodies`); a body is a (file, declaration)
+    * pair, spanning as [[ContractSpec.bodySpan]] says.
     */
   private def codeLines(needle: String,
       bodies: Seq[(String, String)]): Seq[(String, Boolean)] = {
@@ -117,16 +117,46 @@ class ContractSpec extends AnyFunSuite {
       val rel = root.relativize(f).toString.replace('\\', '/')
       val lines = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
         .split("\n").toSeq
-      val spans = bodies.collect { case (`rel`, d) =>
-        val from = lines.indexWhere(_.contains(d))
-        (from, if (from < 0) -1 else lines.indexWhere(_ == "  }", from))
-      }
-      lines.zipWithIndex.collect {
-        case (l, i) if l.contains(needle) &&
-            !l.trim.startsWith("*") && !l.trim.startsWith("//") =>
-          (s"$rel:${i + 1}", spans.exists { case (a, b) => i > a && i < b })
-      }
+      ContractSpec.codeLinesIn(lines, needle,
+        bodies.collect { case (`rel`, d) => d })
+        .map { case (n, inside) => (s"$rel:$n", inside) }
     }
+  }
+
+  test("codeLines spans: a brace-less member ends before the next one, a " +
+      "braced body at its own-indent close, a column-0 class at its close") {
+    import ContractSpec.{bodySpan, codeLinesIn}
+    val src = Seq(
+      "object A {",
+      "  def one(x: Int): Int = needle(x)",
+      "",
+      "  def two(x: Int): Int = {",
+      "    needle(x)",
+      "  }",
+      "",
+      "  def three(x: Int): Int =",
+      "    needle(x) +",
+      "      1",
+      "  val after = needle(0)",
+      "}",
+      "class B(x: Int)",
+      "    extends A {",
+      "  def m: Int = {",
+      "    1",
+      "  }",
+      "  val n = needle(2)",
+      "}",
+      "val tail = needle(3)")
+    assert(bodySpan(src, "def one") === Some((1, 2)))
+    assert(bodySpan(src, "def two") === Some((3, 5)))
+    assert(bodySpan(src, "def three") === Some((7, 9)))
+    assert(bodySpan(src, "class B") === Some((12, 18)))
+    assert(bodySpan(src, "def none") === None)
+    assert(codeLinesIn(src, "needle", Seq("def one", "def three")) ===
+      Seq(2 -> true, 5 -> false, 9 -> true, 11 -> false, 18 -> false,
+        20 -> false))
+    assert(codeLinesIn(src, "needle", Seq("class B")).filter(_._2) ===
+      Seq(18 -> true))
   }
 
   test("processAllAvailable in src/main only inside Streams.fileReplay " +
@@ -189,6 +219,31 @@ class ContractSpec extends AnyFunSuite {
       s"re-inlining it:\n${offenders.mkString("\n")}")
     found.foreach { case (needle, at) =>
       assert(at.exists(_._2), s"no helper holds $needle any more")
+    }
+  }
+
+  test("Streams' stateful-processor kit is written once: the 4dp snap, " +
+      "the bucket rule, the seen-store loop, the interval join and the " +
+      "event-time wiring appear only inside their shared pieces") {
+    val streams = "graft/streaming/Streams.scala"
+    val rules = Seq(
+      "setScale(4, java.math.RoundingMode.HALF_UP)" ->
+        ("graft/Fixed4.scala" -> "object Fixed4"),
+      "java.lang.Math.floorMod(tsUs" -> (streams -> "object ClosedBucketMonitor"),
+      "seen.get().toArray" -> (streams -> "class SeenStoreDedup["),
+      "click_ts <= purchase_ts" -> (streams -> "def clickPurchase("),
+      "unix_micros(col(\"ts\")).as[Long], col(\"value\").as[Double])" ->
+        (streams -> "def keyedMonitor["))
+    val found = rules.map { case (needle, body) =>
+      needle -> codeLines(needle, Seq(body))
+    }
+    val offenders = found.flatMap { case (needle, at) =>
+      at.collect { case (line, false) => s"$line $needle" }
+    }
+    assert(offenders.isEmpty, "use the shared piece instead of re-copying " +
+      s"it:\n${offenders.mkString("\n")}")
+    found.foreach { case (needle, at) =>
+      assert(at.exists(_._2), s"no shared piece holds $needle any more")
     }
   }
 
@@ -404,6 +459,43 @@ class ContractSpec extends AnyFunSuite {
       if (bad.isEmpty) None
       else Some(s"outputs collection columns ${bad.mkString(",")} — " +
         "serialize with array_join/to_json before declaring")
+    }
+  }
+}
+
+object ContractSpec {
+  /** The 0-based (first, last) lines of the member declared on the first
+    * line that contains `decl`, or None when no line does. A braced body
+    * ends at the first later line that is `}` at the declaration's own
+    * indentation; a brace-less one ends before the next non-blank line
+    * indented no deeper than the declaration.
+    */
+  def bodySpan(lines: Seq[String], decl: String): Option[(Int, Int)] = {
+    def indent(l: String): Int = l.indexWhere(_ != ' ')
+    val from = lines.indexWhere(_.contains(decl))
+    if (from < 0) None
+    else {
+      val at = indent(lines(from))
+      val next = lines.indexWhere(l =>
+        l.trim.nonEmpty && indent(l) <= at, from + 1)
+      Some(from -> (
+        if (next < 0) lines.size - 1
+        else if (indent(lines(next)) == at && lines(next).trim.startsWith("}"))
+          next
+        else next - 1))
+    }
+  }
+
+  /** The code lines (comment lines skipped) of one source that contain
+    * `needle`, as (1-based line, inside the body of one of `decls`).
+    */
+  def codeLinesIn(lines: Seq[String], needle: String,
+      decls: Seq[String]): Seq[(Int, Boolean)] = {
+    val spans = decls.flatMap(bodySpan(lines, _))
+    lines.zipWithIndex.collect {
+      case (l, i) if l.contains(needle) &&
+          !l.trim.startsWith("*") && !l.trim.startsWith("//") =>
+        (i + 1, spans.exists { case (a, b) => i >= a && i <= b })
     }
   }
 }
