@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.{LakeIO, Tables}
+import graft.sources.{LakeIO, Tables, VersionLog}
 
 /** The user-facing facade — the Spark-native equivalent of novlake's
   * `Lake` class, which is the reference's entire public API surface
@@ -215,19 +215,20 @@ class Lake(val spark: SparkSession, val warehouse: String) {
     */
   def compact(name: String, targetFileBytes: Long): (Int, Int) = {
     val path = pathOf(name)
-    val versions = LakeIO.listVersions(spark, path)
-    if (versions.nonEmpty) {
-      val cur = s"$path/v=${versions.last}"
-      val before = LakeIO.dataFiles(spark, cur).length
-      val n = LakeIO.packedFileCount(spark, cur, targetFileBytes)
-      val compacted = spark.read.parquet(cur).repartition(n)
-      // on a capture-enabled table, the content-identical rewrite
-      // records an EMPTY change set so captured range reads spanning
-      // it keep working instead of refusing on a needless hole — and
-      // the capture seals atomically with the commit (ADVICE r18)
-      val v = LakeIO.saveVersionRewrite(compacted, path)
-      (before, LakeIO.dataFiles(spark, s"$path/v=$v").length)
-    } else LakeIO.compactToSize(spark, path, targetFileBytes)
+    val log = new VersionLog(spark, path)
+    log.versions.lastOption match {
+      case Some(head) =>
+        // through the log, so a clone head reads and counts its manifest
+        val files = log.files(head)
+        val compacted = log.read(head)
+          .repartition(LakeIO.packedFileCount(files, targetFileBytes))
+        // on a capture-enabled table the content-identical rewrite
+        // records an EMPTY change set, so captured range reads spanning
+        // it keep working instead of refusing on a needless hole
+        val v = LakeIO.saveVersionRewrite(compacted, path)
+        (files.length, log.files(v).length)
+      case None => LakeIO.compactToSize(spark, path, targetFileBytes)
+    }
   }
 
   /** novlake `Lake.preview(table, n)` ≈ SELECT * LIMIT n — deterministic:

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,6 +20,11 @@ import org.apache.spark.sql.functions._
   * here — small-file compaction is the caller's choice via
   * `repartition(n)`. Partitioned writes use Hive-style key=value dirs so
   * reads get partition pruning for free.
+  *
+  * The versioned table (`saveVersion` … `vacuumVersions`) keeps its
+  * on-disk layout — snapshot dirs, commit log, captures, clone manifests
+  * and pins — behind [[VersionLog]], which names every path, does every
+  * listing and runs the commit protocol; nothing here spells the layout.
   */
 object LakeIO {
 
@@ -164,191 +170,63 @@ object LakeIO {
   }
 
   def upsert(df: DataFrame, path: String, keys: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val target = spark.read.parquet(path)
+    val target = df.sparkSession.read.parquet(path)
     val src = requireUniqueSourceKeys(df, keys, "upsert")
     val survivors = target.join(src.select(keys.map(col): _*), keys, "left_anti")
-    val merged = survivors.unionByName(src)
-    val tmp = path.stripSuffix("/") + "__upsert_tmp"
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-    swapInto(spark, tmp, path)
+    rewrite(survivors.unionByName(src), path)
   }
 
-  /** Replace `path` with the dataset at `tmp` via filesystem rename —
-    * one write instead of two, the shortest possible unavailability
-    * window without a transactional format (the window is the gap
+  /** Replace the dataset at `path` with `df`, which may read it: write
+    * `df` to `tmp` (default: a `__rewrite_tmp` sibling), then delete
+    * `path` and rename `tmp` into place — one write, the shortest
+    * unavailability window without a transactional format (the gap
     * between delete and rename; a crash there leaves the data intact at
     * `tmp`), and no stale scratch copy left behind.
     */
-  private def swapInto(spark: SparkSession, tmp: String, path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val src = new org.apache.hadoop.fs.Path(tmp)
-    val fs = dst.getFileSystem(conf)
+  private[graft] def rewrite(df: DataFrame, path: String,
+      tmp: Option[String] = None): Unit = {
+    val from = tmp.getOrElse(path.stripSuffix("/") + "__rewrite_tmp")
+    df.write.mode(SaveMode.Overwrite).parquet(from)
+    val dst = new Path(path)
+    val fs = VersionLog.fs(df.sparkSession, dst)
     fs.delete(dst, true)
-    if (!fs.rename(src, dst)) {
+    if (!fs.rename(new Path(from), dst)) {
       throw new java.io.IOException(
-        s"rename $tmp -> $path failed; data preserved at $tmp")
+        s"rename $from -> $path failed; data preserved at $from")
     }
   }
 
   /** Versioned snapshot write ("time travel by directory version" —
-    * SURVEY.md §7.4): each save lands in `path/v=<n>/` and `latest`
+    * SURVEY.md §7.4): each save lands in its own version dir and `latest`
     * resolution is max(n). Readers pin a version for reproducible
     * training runs; writers never mutate a published snapshot.
     *
-    * Publishes through the RESERVE → WRITE → SEAL protocol
-    * ([[commitVersion]]) — a racing second writer fails loudly at the
-    * reservation, before any data write (VERDICT r18 #1: the
-    * single-writer assumption is now enforced, not assumed).
+    * Publishes through [[VersionLog.publish]]'s RESERVE → WRITE → SEAL
+    * protocol — a racing second writer fails loudly at the reservation,
+    * before any data write (VERDICT r18 #1: the single-writer assumption
+    * is enforced, not assumed).
     */
   def saveVersion(df: DataFrame, path: String): Int =
     commitVersion(df, path, captureKeys = None)
 
-  /** Next version number from the live directory listing, the
-    * append-only commit log AND in-flight reservations: the log
-    * survives vacuum, so a retention pass can never cause a version
-    * number to be reused (a reused number would silently alias two
-    * different commits in any pinned reader, clone manifest, or CDF
-    * artifact that recorded the old one), and a crashed commit's
-    * reservation keeps its number burned for the same reason.
-    */
-  private def nextVersion(spark: SparkSession, path: String): Int =
-    (listVersions(spark, path) ++ listCommits(spark, path) ++
-      listInflight(spark, path)).foldLeft(-1)(math.max) + 1
-
-  // ---- commit protocol (VERDICT r18 #1 + ADVICE r18 atomic CDF) ----
-  //
-  // Every version publishes in three steps against the PERSISTENT
-  // commit log at `path/_commits/`:
-  //
-  //   1. RESERVE — exclusive-create `_commits/_inflight_v=<n>`. Two
-  //      writers racing the same head both compute the same n; exactly
-  //      one create succeeds and the loser fails LOUDLY here, before
-  //      any data write (no parquet-dir collision, no version
-  //      aliasing). The reservation also burns the number: nextVersion
-  //      reads in-flight markers, so even a crashed commit's n is
-  //      never reused.
-  //   2. WRITE — the snapshot dir `v=<n>`, then (captured commits) the
-  //      write-time CDF `_cdf/v=<n>`. While the in-flight marker
-  //      exists the version is INVISIBLE: [[listVersions]] subtracts
-  //      in-flight numbers, so no reader resolves a half-written
-  //      snapshot as latest and no capture guard counts it as a
-  //      commit. ADVICE r18 (medium): the capture now lands BEFORE the
-  //      commit becomes visible — a failed capture can no longer leave
-  //      a committed-but-uncaptured version that every spanning
-  //      [[capturedChanges]] range refuses on forever.
-  //   3. SEAL — rename `_inflight_v=<n>` → `v=<n>` in `_commits/`: one
-  //      atomic metadata op that publishes snapshot and capture
-  //      together. Sealed markers are the commit log ([[listCommits]])
-  //      and are NEVER deleted (vacuum reclaims snapshots, not
-  //      history — VERDICT r17 #1).
-  //
-  // RECOVERY RULE for a reserved-but-unsealed marker (writer crashed;
-  // a clean failure aborts and cleans up after itself): the version
-  // was never published — readers never saw it, feeds never counted
-  // it. If `v=<n>` data exists the write finished but the seal didn't:
-  // either seal by hand (rename the marker) after verifying the dir,
-  // or delete dir + `_cdf/v=<n>` + marker. If no `v=<n>` dir exists
-  // just delete the marker. Either way nothing downstream referenced
-  // n. All driver-side, one tiny file per commit.
-
-  private def commitsDir(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_commits")
-
-  private def inflightName(v: Int) = s"_inflight_v=$v"
-
-  /** Step 1: exclusive-create the reservation. Loud failure = a
-    * concurrent writer holds (or a crashed writer left) this number.
+  /** Step 1 of the commit protocol ([[VersionLog.reserve]]): a loud
+    * failure means a concurrent writer holds (or a crashed writer left)
+    * this number.
     */
   private[graft] def reserveCommit(spark: SparkSession, path: String,
-      version: Int): Unit = {
-    val dir = commitsDir(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    val marker = fs.makeQualified(
-      new org.apache.hadoop.fs.Path(dir, inflightName(version)))
-    // The reservation needs a TRULY atomic create-if-absent. Hadoop's
-    // FileSystem.createNewFile default is check-then-create — a TOCTOU
-    // window two racing threads BOTH won in testing on the local FS —
-    // so file:// goes through O_EXCL (java.nio createFile, the POSIX
-    // exclusive-create syscall). HDFS keeps createNewFile: its create
-    // is exclusive server-side. (Object stores without atomic create,
-    // e.g. raw S3, need an external lock service for multi-writer —
-    // the same caveat Delta documents for S3 single-cluster mode.)
-    val created =
-      if (marker.toUri.getScheme == "file")
-        try {
-          java.nio.file.Files.createFile(
-            java.nio.file.Paths.get(marker.toUri.getPath))
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        }
-      else fs.createNewFile(marker)
-    if (!created)
-      throw new IllegalStateException(
-        s"commit v=$version at $path is already reserved — a CONCURRENT " +
-          "WRITER is committing (this lake is single-writer per table, " +
-          "now enforced at reservation), or a crashed writer left the " +
-          s"reservation behind. Recovery: if $path/v=$version exists " +
-          "and is complete, seal it (rename _commits/_inflight_v=" +
-          s"$version to _commits/v=$version); otherwise delete the " +
-          "marker (and any partial v-dir) — the version was never " +
-          "published, so nothing references it")
-  }
-
-  /** Step 3: atomically publish — the in-flight marker becomes the
-    * permanent commit-log entry.
-    */
-  private def sealCommit(spark: SparkSession, path: String,
-      version: Int): Unit = {
-    val dir = commitsDir(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(dir, inflightName(version)),
-        new org.apache.hadoop.fs.Path(dir, s"v=$version")))
-      throw new java.io.IOException(
-        s"seal of commit v=$version at $path failed — the reservation " +
-          "marker could not be renamed; the version remains unpublished " +
-          "(see the recovery rule in the commit-protocol notes)")
-  }
-
-  /** Clean-failure abort: delete whatever step 2 wrote plus the
-    * reservation, so the number is reclaimed and no partial state
-    * remains. Best-effort — a failure here leaves the crash-recovery
-    * state the rule above documents.
-    */
-  private def abortCommit(spark: SparkSession, path: String,
       version: Int): Unit =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/v=$version"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_cdf/v=$version"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(commitsDir(path),
-        inflightName(version)), false)
-      ()
-    } catch { case scala.util.control.NonFatal(_) => () }
+    new VersionLog(spark, path).reserve(version)
 
   /** In-flight (reserved, unsealed) version numbers. */
   private[graft] def listInflight(spark: SparkSession,
-      path: String): Seq[Int] = {
-    val dir = commitsDir(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("_inflight_v="))
-      .map(_.stripPrefix("_inflight_v=").toInt)
-      .sorted
-  }
+      path: String): Seq[Int] =
+    new VersionLog(spark, path).inflight
 
   /** The shared publish path behind [[saveVersion]] /
-    * [[saveVersionCdf]] / the compaction rewrite — reserve, write
-    * data (+ capture), seal; clean failures abort and rethrow.
+    * [[saveVersionCdf]] / the compaction rewrite.
     *
-    * @param captureKeys Some(keys) = write-time CDF capture (diff vs
-    *        the previous head, every-row-insert for the first commit)
+    * @param captureKeys Some(keys) = write-time CDF capture
+    *        ([[VersionLog.capture]]'s rule)
     * @param captureEmpty record a ZERO-ROW capture when the table has
     *        `_cdf` (the content-identical maintenance commit —
     *        compaction rewrites files, not rows; without it the
@@ -358,101 +236,53 @@ object LakeIO {
       captureKeys: Option[Seq[String]],
       captureEmpty: Boolean = false,
       knownDiff: Option[DataFrame] = None): Int = {
-    val spark = df.sparkSession
-    val prev = listVersions(spark, path).lastOption
-    // captured commits validate schema compatibility BEFORE any write
-    // (ADVICE r18: the drift guard used to fire inside the capture
-    // diff, AFTER the snapshot published — the failure then left a
-    // committed-but-uncaptured hole with no backfill op)
-    for (_ <- captureKeys; p <- prev)
-      requireAligned(loadVersion(spark, path, Some(p)), "previous head",
-        df, "incoming commit", "saveVersionCdf")
-    val next = nextVersion(spark, path)
-    reserveCommit(spark, path, next)
-    try {
-      df.write.mode(SaveMode.ErrorIfExists).parquet(s"$path/v=$next")
+    val log = new VersionLog(df.sparkSession, path)
+    // a captured commit loads the previous head ONCE: it is validated
+    // against `df` BEFORE any write (ADVICE r18: a drift guard firing
+    // inside the capture diff, after the snapshot published, left a
+    // committed-but-uncaptured hole) and then diffed against
+    val prev =
+      if (captureKeys.isEmpty) None else log.versions.lastOption.map(log.read)
+    prev.foreach(requireAligned(_, "previous head", df, "incoming commit",
+      "saveVersionCdf"))
+    log.publish { v =>
+      df.write.mode(SaveMode.ErrorIfExists).parquet(log.dir(v).toString)
       val capture: Option[DataFrame] = captureKeys match {
         // known-diff fast path (saveVersionCdfKnownDiff): the caller's
         // exact change set IS the capture — no snapshot re-diff join
         case Some(_) if knownDiff.isDefined && prev.isDefined =>
-          knownDiff.map(_.withColumn("_commit_version", lit(next)))
-        case Some(keys) => Some(prev match {
-          case None =>
-            // first commit: every row is an insert
-            loadVersion(spark, path, Some(next))
-              .withColumn("_change_type", lit("insert"))
-              .withColumn("_commit_version", lit(next))
-          case Some(p) => changes(spark, path, p, next, keys)
-        })
-        case None if captureEmpty && cdfEnabled(spark, path) =>
+          knownDiff.map(_.withColumn("_commit_version", lit(v)))
+        case Some(keys) => Some(log.capture(prev, v, keys))
+        case None if captureEmpty && log.captureEnabled =>
           Some(df.limit(0)
             .withColumn("_change_type", lit("none"))
-            .withColumn("_commit_version", lit(next)))
+            .withColumn("_commit_version", lit(v)))
         case None => None
       }
-      capture.foreach(_.write.mode(SaveMode.ErrorIfExists)
-        .parquet(s"$path/_cdf/v=$next"))
-      sealCommit(spark, path, next)
-      next
-    } catch {
-      case e: Throwable =>
-        abortCommit(spark, path, next)
-        throw e
+      capture.foreach(log.writeCapture(v, _))
     }
-  }
-
-  private def cdfEnabled(spark: SparkSession, path: String): Boolean = {
-    val cdfRoot = new org.apache.hadoop.fs.Path(s"$path/_cdf")
-    cdfRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(cdfRoot)
   }
 
   /** All versions EVER committed at `path` per the persistent commit
-    * log, unioned with the live directory listing (tables written
-    * before the log existed, or populated by hand, have no `_commits`
-    * entries — the listing keeps them covered; for such pre-log tables
-    * a vacuumed commit is still invisible, the pre-r18 behavior).
+    * log, unioned with the live directory listing ([[VersionLog.commits]]).
     */
   private[graft] def listCommits(spark: SparkSession,
-      path: String): Seq[Int] = {
-    val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logged =
-      if (!fs.exists(dir)) Seq.empty[Int]
-      else fs.listStatus(dir).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toInt)
-    (logged ++ listVersions(spark, path)).distinct.sorted
-  }
+      path: String): Seq[Int] =
+    new VersionLog(spark, path).commits
 
-  /** PUBLISHED (sealed) versions with live snapshot dirs. A version
-    * whose commit is still in-flight (reserved, unsealed — see the
-    * commit-protocol notes) is subtracted: its data dir may be
-    * half-written, so no reader may resolve it as latest and no guard
-    * may count it as a commit until the seal publishes it.
+  /** PUBLISHED (sealed) versions with live snapshot dirs — a version
+    * whose commit is still in flight may be half-written, so no reader
+    * resolves it as latest and no guard counts it as a commit until the
+    * seal publishes it.
     */
-  def listVersions(spark: SparkSession, path: String): Seq[Int] = {
-    // Hadoop FS, not java.io.File — the warehouse may be s3a://, hdfs://
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val inflight = listInflight(spark, path).toSet
-      fs.listStatus(p).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toInt)
-        .filterNot(inflight.contains)
-        .sorted
-    }
-  }
+  def listVersions(spark: SparkSession, path: String): Seq[Int] =
+    new VersionLog(spark, path).versions
 
   def loadVersion(spark: SparkSession, path: String,
       version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(listVersions(spark, path).lastOption)
-      .getOrElse(throw new IllegalArgumentException(s"no versions at $path"))
-    readVersionDir(spark, s"$path/v=$v")
+    val log = new VersionLog(spark, path)
+    log.read(version.orElse(log.versions.lastOption)
+      .getOrElse(throw new IllegalArgumentException(s"no versions at $path")))
   }
 
   /** Read a pinned version ALIGNED TO THE HEAD SCHEMA (the lakehouse
@@ -592,17 +422,12 @@ object LakeIO {
     */
   def shallowClone(spark: SparkSession, srcPath: String,
       srcVersion: Int, dstPath: String): Int = {
-    // resolve through loadVersion's file set so cloning a CLONE works
-    // (the manifest chain flattens — each clone lists real data files)
-    val srcDir = s"$srcPath/v=$srcVersion"
-    val p = new org.apache.hadoop.fs.Path(srcDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no version $srcVersion at $srcPath")
-    val files: Seq[String] = {
-      val mf = new org.apache.hadoop.fs.Path(srcDir, "_manifest")
-      if (fs.exists(mf)) readManifest(fs, mf)
-      else dataFiles(spark, srcDir).map(_.getPath.toString)
-    }
+    val src = new VersionLog(spark, srcPath)
+    require(src.fs.exists(src.dir(srcVersion)),
+      s"no version $srcVersion at $srcPath")
+    // the resolved file set, so cloning a CLONE works (the manifest
+    // chain flattens — each clone lists real data files)
+    val files = src.files(srcVersion).map(_.getPath.toString)
     // Fail FAST on an empty source version (ADVICE r16): the manifest
     // carries no schema, so a zero-file clone would publish a version
     // dir every later loadVersion rejects ("empty clone manifest") —
@@ -614,129 +439,61 @@ object LakeIO {
         "clone of an empty version would be unreadable (the manifest " +
         "carries no schema); deep-copy via saveVersion(loadVersion(src)" +
         ", dst) if an empty pinned fork is really wanted")
-    val next = nextVersion(spark, dstPath)
-    // a clone is a commit on the DESTINATION chain: it publishes
-    // through the same reserve → write → seal protocol as saveVersion
-    // (racing writers fail loud pre-write; the number is never reused
-    // after a destination vacuum; the captured-CDF guard sees it and
-    // correctly refuses spanning ranges, since a clone records no
-    // changes). A clean failure below aborts the reservation and
-    // removes the clone dir — its pin registrations then read as
+    // a clone is a commit on the DESTINATION chain (racing writers fail
+    // loud pre-write; the number is never reused after a destination
+    // vacuum; the captured-CDF guard sees it and correctly refuses
+    // spanning ranges, since a clone records no changes). A clean
+    // failure aborts and removes the clone dir — its pins then read as
     // stale (clone dir gone) and vacuum's GC reaps them.
-    reserveCommit(spark, dstPath, next)
-    val dstDir = new org.apache.hadoop.fs.Path(s"$dstPath/v=$next")
-    try {
-    // Resolve the version dir OWNING each data file by walking UP to
-    // the nearest `v=<n>` ancestor (not just the direct parent — a
-    // version written with a nested/partitioned layout puts files
-    // under `v=<n>/k=val/...`). ADVICE r17: the old parent-only filter
-    // silently registered NO pin for such layouts, so vacuumVersions
-    // would delete a still-referenced version without refusing —
-    // exactly the silent corruption the guard exists to stop. A file
-    // with NO v=* ancestor cannot be pin-protected at all: FAIL the
-    // clone (the empty-version fail-fast precedent) rather than
-    // publish an unguarded manifest.
-    def versionAncestor(f: String): org.apache.hadoop.fs.Path = {
-      var d = new org.apache.hadoop.fs.Path(f).getParent
-      while (d != null && !d.getName.startsWith("v=")) d = d.getParent
-      require(d != null,
-        s"clone source file $f is not under any v=<n> version dir — " +
-          "its version cannot be pinned against vacuum, so a shallow " +
-          "clone of it would be silently corruptible; deep-copy via " +
-          "saveVersion(loadVersion(src), dst) instead")
-      d
+    val dst = new VersionLog(spark, dstPath)
+    dst.publish { v =>
+      // Pin the version dir OWNING each data file — the nearest v=<n>
+      // ancestor (ADVICE r17: a parent-only rule registered NO pin for
+      // a partitioned version, so vacuum deleted a still-referenced
+      // version silently). A file with no such ancestor cannot be
+      // pin-protected: FAIL rather than publish an unguarded manifest.
+      val owners = files.map { f =>
+        val o = VersionLog.owner(f)
+        require(o.isDefined,
+          s"clone source file $f is not under any v=<n> version dir — " +
+            "its version cannot be pinned against vacuum, so a shallow " +
+            "clone of it would be silently corruptible; deep-copy via " +
+            "saveVersion(loadVersion(src), dst) instead")
+        o.get
+      }.distinct
+      // Pins land where the DATA FILES live (VERDICT r16 #1) — for a
+      // clone-of-clone the ORIGINAL source. ORDER (ADVICE r17 TOCTOU):
+      // the clone dir FIRST (so a concurrent vacuum's stale-pin GC sees
+      // it alive), the pins SECOND, the manifest LAST — a racing vacuum
+      // sees the pin before any reader can resolve the manifest. (A
+      // crash between pin and manifest leaves a blocking pin on an empty
+      // clone dir — conservative; delete the clone dir to release it.)
+      // The destination may live on a different file system than the
+      // source; the manifest's absolute paths keep pointing at it.
+      dst.fs.mkdirs(dst.dir(v))
+      owners.foreach { case (owner, pv) =>
+        new VersionLog(spark, owner).pin(pv, dst.dir(v))
+      }
+      dst.writeManifest(v, files)
     }
-    val pinnedDirs = files.map(versionAncestor).distinct
-    // the destination may live on a DIFFERENT filesystem than the
-    // source (clone s3a://prod into file:/dev-scratch) — resolve its
-    // own FS; the manifest's absolute paths keep pointing at the source
-    val dfs = dstDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    dfs.mkdirs(dstDir)
-    // Register the pins where the DATA FILES live (VERDICT r16 #1) —
-    // which for a clone-of-clone is the ORIGINAL source (the manifest
-    // chain flattens), so the guard protects the right table: one
-    // `_clones/_pin_*` marker per pinned version dir, recording the
-    // clone version dir that depends on it. `_`-prefixed throughout,
-    // so plain readers and dataFiles listings never see the registry.
-    // ORDER (ADVICE r17 TOCTOU): the clone dir is created FIRST (so a
-    // concurrent vacuum's stale-pin GC sees it alive), the pins are
-    // registered SECOND, and the manifest publishes LAST — a vacuum
-    // racing this clone sees the pin before any reader can resolve
-    // the manifest. (A crash between pin and manifest leaves a
-    // blocking pin on an empty clone dir — conservative; delete the
-    // clone dir to release it. Single writer per table assumed, as
-    // everywhere in this directory-versioned lake.)
-    // Driver-side metadata, file-count-bounded.
-    pinnedDirs.foreach { pinnedDir =>
-      val reg = new org.apache.hadoop.fs.Path(
-        pinnedDir.getParent, "_clones")
-      val rfs = reg.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      rfs.mkdirs(reg)
-      val token = java.util.UUID.nameUUIDFromBytes(
-        dstDir.toString.getBytes("UTF-8")).toString
-      val ro = rfs.create(
-        new org.apache.hadoop.fs.Path(reg, s"_pin_$token"), true)
-      try ro.write(s"${pinnedDir.getName}\n$dstDir"
-        .getBytes("UTF-8"))
-      finally ro.close()
-    }
-    val out = dfs.create(
-      new org.apache.hadoop.fs.Path(dstDir, "_manifest"), false)
-    try out.write(files.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    sealCommit(spark, dstPath, next)
-    next
-    } catch {
-      case e: Throwable =>
-        abortCommit(spark, dstPath, next)
-        throw e
-    }
-  }
-
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      mf: org.apache.hadoop.fs.Path): Seq[String] = {
-    val in = fs.open(mf)
-    try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
-  /** Manifest-aware pinned read: a version dir carrying a `_manifest`
-    * resolves to its listed files (shallow clone); a plain dir reads
-    * its parquet. One driver-side existence check per load.
-    */
-  private def readVersionDir(spark: SparkSession,
-      dir: String): DataFrame = {
-    val mf = new org.apache.hadoop.fs.Path(dir, "_manifest")
-    val fs = mf.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(mf)) {
-      val files = readManifest(fs, mf)
-      require(files.nonEmpty, s"empty clone manifest at $dir")
-      spark.read.parquet(files: _*)
-    } else spark.read.parquet(dir)
   }
 
   /** Write-time CDF capture (Delta's `delta.enableChangeDataFeed`
     * analogue; VERDICT r15 noted snapshot-diff [[changes]] "cannot
     * attribute intermediate commits — write-time CDF capture is the
     * remaining step"): publish `df` as the next version AND record its
-    * row-level changes vs the previous version under
-    * `path/_cdf/v=<n>` AT COMMIT TIME, each row stamped with ITS OWN
-    * commit version. The `_`-prefixed dir follows Delta's
-    * `_change_data` convention — Hadoop input listing skips `_`
-    * children, so a plain reader of the table root never sees CDF
-    * files. Cost at 100 TB: the diff is ONE keyed full-outer join of
-    * the new snapshot against the previous one (co-located and
-    * shuffle-free under key-bucketed layouts) and the CDF artifact is
-    * churn-sized, not table-sized.
+    * row-level changes vs the previous version ([[VersionLog.capture]])
+    * AT COMMIT TIME, each row stamped with ITS OWN commit version. Cost
+    * at 100 TB: the diff is ONE keyed full-outer join of the new
+    * snapshot against the previous one (co-located and shuffle-free
+    * under key-bucketed layouts) and the CDF artifact is churn-sized,
+    * not table-sized.
     *
-    * ATOMIC with its capture (ADVICE r18, medium): schema
-    * compatibility is validated BEFORE any write, the capture lands
-    * BEFORE the commit seals, and the seal publishes snapshot +
-    * capture in one rename — no failure mode leaves a
-    * committed-but-uncaptured version (the hole that made every
-    * spanning [[capturedChanges]] range refuse permanently, with no
-    * backfill op).
+    * ATOMIC with its capture (ADVICE r18, medium): schema compatibility
+    * is validated BEFORE any write and the capture seals with the
+    * snapshot ([[VersionLog.publish]]) — no failure mode leaves a
+    * committed-but-uncaptured version that every spanning
+    * [[capturedChanges]] range would refuse on.
     */
   def saveVersionCdf(df: DataFrame, path: String,
       keys: Seq[String]): Int =
@@ -791,9 +548,9 @@ object LakeIO {
   /** Read the write-time-captured CDF for commits in (fromV, toV] —
     * COMMIT-GRANULAR attribution (each row carries the commit that
     * produced it), the fidelity [[changes]]' snapshot diff cannot
-    * provide over a multi-version range. Reads the `_cdf` layout with
-    * partition discovery, so the version range is a DIRECTORY prune —
-    * an incremental consumer pays only the commits it hasn't seen.
+    * provide over a multi-version range. Reads only the in-range
+    * capture dirs, so the version range is a DIRECTORY prune — an
+    * incremental consumer pays only the commits it hasn't seen.
     *
     * MIXED-WRITE guard (ADVICE r16): a commit written WITHOUT capture
     * (plain [[saveVersion]], or [[restoreVersion]], which uses it)
@@ -822,18 +579,13 @@ object LakeIO {
     // loop this API exists for, and legal in Delta's table_changes —
     // gets an EMPTY feed in the capture schema, not an exception
     require(fromV <= toV, s"fromV ($fromV) must not exceed toV ($toV)")
-    val cdfRoot = new org.apache.hadoop.fs.Path(s"$path/_cdf")
-    val fs = cdfRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(cdfRoot),
+    val log = new VersionLog(spark, path)
+    require(log.captureEnabled,
       s"no write-time CDF captured at $path — versions written with " +
         "saveVersion record no changes; use saveVersionCdf at commit " +
         "time, or the changes() snapshot diff as the backfill")
-    val inRange = listCommits(spark, path)
-      .filter(v => v > fromV && v <= toV)
-    val captured = fs.listStatus(cdfRoot).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toInt).toSet
+    val inRange = log.commits.filter(v => v > fromV && v <= toV)
+    val captured = log.captured
     val missing = inRange.filterNot(captured.contains)
     require(missing.isEmpty,
       s"commits ${missing.map(v => s"v=$v").mkString(", ")} in " +
@@ -848,12 +600,11 @@ object LakeIO {
       // (from the newest retained capture — its schema IS the feed's;
       // falls back to head-snapshot + change columns if retention
       // reaped every capture artifact)
-      val like =
-        if (captured.nonEmpty)
-          spark.read.parquet(s"$path/_cdf/v=${captured.max}")
-        else loadVersion(spark, path)
+      val like = captured.lastOption
+        .map(v => spark.read.parquet(log.cdfDir(v).toString))
+        .getOrElse(loadVersion(spark, path)
           .withColumn("_change_type", lit("none"))
-          .withColumn("_commit_version", lit(0))
+          .withColumn("_commit_version", lit(0)))
       like.limit(0)
     } else
     // read the in-range capture dirs DIRECTLY (the directory prune),
@@ -862,7 +613,7 @@ object LakeIO {
     // would infer the `v=` dir as a partition column — colliding with
     // any table whose OWN schema has a column named `v` (a real user
     // table name; found by the LakeSpec merge-on-CDF test)
-    spark.read.parquet(inRange.map(v => s"$path/_cdf/v=$v"): _*)
+    spark.read.parquet(inRange.map(log.cdfDir(_).toString): _*)
   }
 
   /** Replay a MULTI-COMMIT captured CDF onto a snapshot, one commit at
@@ -1035,57 +786,26 @@ object LakeIO {
     */
   def vacuumVersions(spark: SparkSession, path: String, keep: Int): Seq[Int] = {
     require(keep >= 1, s"keep must be >= 1, got $keep (would delete the live snapshot)")
-    val versions = listVersions(spark, path)
-    val drop = versions.dropRight(keep)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val reg = new org.apache.hadoop.fs.Path(path, "_clones")
-    if (fs.exists(reg)) {
-      // full sweep FIRST (stale pins GC even when a later pin blocks),
-      // one aggregated refusal AFTER — a partial sweep would leave GC
-      // dependent on listing order
-      val blocking = fs.listStatus(reg).toSeq
-        .filter(r => r.isFile && r.getPath.getName.startsWith("_pin_"))
-        .flatMap { r =>
-          val lines = readManifest(fs, r.getPath)
-          val pinnedV = lines.headOption
-            .filter(_.startsWith("v="))
-            .map(_.stripPrefix("v=").toInt)
-          val cloneDir = lines.drop(1).headOption
-          val cloneAlive = cloneDir.exists { d =>
-            val cp = new org.apache.hadoop.fs.Path(d)
-            cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .exists(cp)
-          }
-          if (!cloneAlive) { // stale pin: GC it, it blocks nothing
-            fs.delete(r.getPath, false)
-            None
-          } else pinnedV.filter(drop.contains)
-            .map(v => (v, cloneDir.get))
-        }
-      if (blocking.nonEmpty) {
-        val what = blocking.sortBy(_._1)
-          .map { case (v, c) => s"v=$v (pinned by $c)" }.mkString(", ")
-        throw new IllegalStateException(
-          s"vacuum of $path would delete $what — each shallow clone's " +
-            "manifest references that version's data files and every " +
-            "read through the clone would break. Deep-copy the clone " +
-            "(saveVersion(loadVersion(clone), …)) or delete it, then " +
-            "vacuum.")
-      }
+    val log = new VersionLog(spark, path)
+    val drop = log.versions.dropRight(keep)
+    // the full pin sweep (stale pins GC even when a later pin blocks)
+    // FIRST, one aggregated refusal AFTER
+    val blocking = log.pins().filter(p => drop.contains(p._1))
+    if (blocking.nonEmpty) {
+      val what = blocking.sortBy(_._1)
+        .map { case (v, c) => s"v=$v (pinned by $c)" }.mkString(", ")
+      throw new IllegalStateException(
+        s"vacuum of $path would delete $what — each shallow clone's " +
+          "manifest references that version's data files and every " +
+          "read through the clone would break. Deep-copy the clone " +
+          "(saveVersion(loadVersion(clone), …)) or delete it, then " +
+          "vacuum.")
     }
-    drop.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/v=$v"), true)
-      // CDF retention rides snapshot retention (VERDICT r17 #1's
-      // second half): the write-time capture of a dropped commit is
-      // reaped with it — otherwise `_cdf` churn accretes forever.
-      // Same pin rules by construction (pinned versions never reach
-      // `drop`), and the commit-log entry STAYS (append-only), so
-      // capturedChanges over a range touching this commit now refuses
-      // instead of silently skipping it.
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_cdf/v=$v"), true)
-      ()
-    }
+    // CDF retention rides snapshot retention (VERDICT r17 #1's second
+    // half): a dropped commit's capture goes with it, else `_cdf` churn
+    // accretes forever. Its commit-log entry STAYS (append-only), so a
+    // captured range touching it now refuses instead of skipping it.
+    drop.foreach(log.reclaim)
     drop
   }
 
@@ -1095,12 +815,11 @@ object LakeIO {
     */
   def versionHistory(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = listVersions(spark, path)
+    val log = new VersionLog(spark, path)
+    val versions = log.versions
     val latest = versions.lastOption.getOrElse(-1)
     versions.map { v =>
-      val files = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/v=$v"))
+      val files = log.fs.listStatus(log.dir(v))
         .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
       (v, files.length, files.map(_.getLen).sum, v == latest)
     }.toDF("version", "n_files", "bytes", "is_latest")
@@ -1110,24 +829,19 @@ object LakeIO {
     * `targetFileCount` files — the fixed-count flavor (callers who know
     * their file budget). `compactToSize` below is the bin-packing flavor.
     */
-  def compact(spark: SparkSession, path: String, targetFileCount: Int): Unit = {
-    val df = spark.read.parquet(path)
-    val tmp = path.stripSuffix("/") + "__compact_tmp"
-    df.repartition(targetFileCount).write.mode(SaveMode.Overwrite).parquet(tmp)
-    swapInto(spark, tmp, path)
-  }
+  def compact(spark: SparkSession, path: String, targetFileCount: Int): Unit =
+    rewrite(spark.read.parquet(path).repartition(targetFileCount), path)
 
   /** Recursive data-file listing (skips `_SUCCESS`/`.crc` bookkeeping
-    * AND anything under a `_`/`.`-prefixed directory — the `_commits`
-    * log markers are named `v=<n>` with no underscore of their own, so
+    * AND anything under a `_`/`.`-prefixed directory — the commit-log
+    * markers are named `v=<n>` with no underscore of their own, so
     * the file-name filter alone would count them as data).
     */
-  def dataFiles(spark: SparkSession, path: String)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = VersionLog.fs(spark, p)
     val root = fs.makeQualified(p)
-    def hiddenAncestor(q: org.apache.hadoop.fs.Path): Boolean = {
+    def hiddenAncestor(q: Path): Boolean = {
       var d = q.getParent
       while (d != null && d != root) {
         val n = d.getName
@@ -1139,8 +853,7 @@ object LakeIO {
     if (!fs.exists(p)) Seq.empty
     else {
       val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[
-        org.apache.hadoop.fs.FileStatus]
+      val buf = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
       while (it.hasNext) {
         val f = it.next()
         val n = f.getPath.getName
@@ -1151,13 +864,13 @@ object LakeIO {
     }
   }
 
-  /** Bin-packed file count for a byte-size target: ceil(bytes/target),
-    * never 0. Driver-side metadata arithmetic only.
+  /** Bin-packed file count for a byte-size target: ceil(bytes/target)
+    * over `files`, never 0. Driver-side metadata arithmetic only.
     */
-  def packedFileCount(spark: SparkSession, path: String,
+  private[graft] def packedFileCount(files: Seq[FileStatus],
       targetFileBytes: Long): Int = {
     require(targetFileBytes > 0, s"targetFileBytes must be > 0")
-    val total = dataFiles(spark, path).map(_.getLen).sum
+    val total = files.map(_.getLen).sum
     math.max(1L, (total + targetFileBytes - 1) / targetFileBytes).toInt
   }
 
@@ -1172,39 +885,29 @@ object LakeIO {
     * problem where it actually lives. Returns (filesBefore, filesAfter).
     *
     * Scale: listing is metadata-only; each rewrite is one distributed
-    * read→repartition→write with no driver-side data movement. The
-    * scratch-dir + rename swap keeps the unavailability window to the
-    * delete→rename gap (swapInto notes).
+    * read→repartition→write with no driver-side data movement
+    * ([[rewrite]]'s swap).
     */
   def compactToSize(spark: SparkSession, path: String,
       targetFileBytes: Long): (Int, Int) = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = new Path(path)
+    val fs = VersionLog.fs(spark, root)
     val before = dataFiles(spark, path).length
     val partDirs = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.contains("=") &&
-        !s.getPath.getName.startsWith("_")) // _commits/_cdf/_clones
-    if (partDirs.nonEmpty) {
-      // per-partition rewrite; tmp lives OUTSIDE the dataset root — a
-      // sibling `k=v__tmp` dir inside it would parse as a partition
-      // value and corrupt concurrent partition discovery
-      val tmpRoot = path.stripSuffix("/") + "__compact_tmp"
-      partDirs.foreach { d =>
-        val dir = d.getPath.toString
-        val n = packedFileCount(spark, dir, targetFileBytes)
-        val tmp = s"$tmpRoot/${d.getPath.getName}"
-        spark.read.parquet(dir).repartition(n)
-          .write.mode(SaveMode.Overwrite).parquet(tmp)
-        swapInto(spark, tmp, dir)
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(tmpRoot), true)
-    } else {
-      val n = packedFileCount(spark, path, targetFileBytes)
-      val tmp = path.stripSuffix("/") + "__compact_tmp"
-      spark.read.parquet(path).repartition(n)
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-      swapInto(spark, tmp, path)
+        !s.getPath.getName.startsWith("_")) // the log, captures, pins
+    // per-partition tmp dirs live OUTSIDE the dataset root — a sibling
+    // `k=v__tmp` dir inside it would parse as a partition value and
+    // corrupt concurrent partition discovery
+    val tmpRoot = path.stripSuffix("/") + "__compact_tmp"
+    val rewrites =
+      if (partDirs.isEmpty) Seq(root -> None)
+      else partDirs.map(d => d.getPath -> Some(s"$tmpRoot/${d.getPath.getName}"))
+    rewrites.foreach { case (dir, tmp) =>
+      val n = packedFileCount(dataFiles(spark, dir.toString), targetFileBytes)
+      rewrite(spark.read.parquet(dir.toString).repartition(n), dir.toString, tmp)
     }
+    fs.delete(new Path(tmpRoot), true)
     (before, dataFiles(spark, path).length)
   }
 

@@ -1035,11 +1035,7 @@ object SinkQueries {
     val refused =
       try { LakeIO.capturedChanges(spark, out, 0, 4); false }
       catch { case _: IllegalArgumentException => true }
-    val cdfRoot = new org.apache.hadoop.fs.Path(s"$out/_cdf")
-    val fs = cdfRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cdfLeft =
-      if (!fs.exists(cdfRoot)) 0
-      else fs.listStatus(cdfRoot).count(_.getPath.getName.startsWith("v="))
+    val cdfLeft = new VersionLog(spark, out).captured.size
     val headOnly = LakeIO.listVersions(spark, out) == Seq(4)
     val headRows = LakeIO.loadVersion(spark, out, Some(4)).count()
     LakeIO.capturedChanges(spark, out, 3, 4)

@@ -372,16 +372,21 @@ class BandDedupProcessor(threshold: Double)
       (Long, Array[Long])] {
   protected def entryEncoder: Encoder[(Long, Array[Long])] =
     Encoders.product[(Long, Array[Long])]
+  // the distinct hashes sorted ONCE here, so every hit is a merge walk
   protected def entry(r: (Int, Long, Long, Seq[Long])): (Long, Array[Long]) =
-    (r._3, r._4.toArray)
+    (r._3, r._4.distinct.sorted.toArray)
   protected def id(e: (Long, Array[Long])): Long = e._1
 
   protected def hit(n: (Long, Array[Long]), o: (Long, Array[Long])): Boolean = {
-    val sa = n._2.toSet
-    var inter = 0
-    o._2.foreach(h => if (sa.contains(h)) inter += 1)
+    val (a, b) = (n._2, o._2)
+    var (i, j, inter) = (0, 0, 0)
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { inter += 1; i += 1; j += 1 }
+    }
     Fixed4.round4(inter.toDouble /
-      (n._2.length.toDouble + o._2.length.toDouble - inter.toDouble)) >=
+      (a.length.toDouble + b.length.toDouble - inter.toDouble)) >=
       threshold
   }
 }
@@ -725,17 +730,17 @@ class AsofProcessor
     val wmUs = timerValues.getCurrentWatermarkInMs() * 1000L
     val due = pend.keys().toSeq.filter(_._1 <= wmUs)
       .sortBy(identity) // deterministic emission walk
-    val dims = dim.iterator().map(p => (p._1._1, p._1._2, p._2)).toSeq
+    // the history sorted by (ts, eid) ONCE; one pointer walks it past
+    // each due purchase in ts order, so the signup before the pointer is
+    // the latest at or before the purchase — the batch window tie rule
+    // (same-ts signup matches; higher eid wins same-ts ties)
+    val dims = dim.iterator().toVector.sortBy(_._1)
+    var at = 0
     val out = due.map { case (pts, pid) =>
       pend.removeKey((pts, pid))
-      // latest (ts, eid) at or before the purchase — the batch window
-      // tie rule (same-ts signup matches; higher eid wins same-ts ties)
-      val m = dims.filter(_._1 <= pts)
-        .sortBy(d => (d._1, d._2)).lastOption
-      m match {
-        case Some((_, seid, sval)) => (pid, key, seid, sval, true)
-        case None => (pid, key, -1L, 0.0, false)
-      }
+      while (at < dims.length && dims(at)._1._1 <= pts) at += 1
+      if (at == 0) (pid, key, -1L, 0.0, false)
+      else (pid, key, dims(at - 1)._1._2, dims(at - 1)._2, true)
     }
     out.iterator
   }
@@ -1484,48 +1489,34 @@ object Streams {
       name: String, keys: Seq[String])(
       table: String => String): DataFrame =
     fileReplay(spark, name, ForEachBatch(
-      (dir: String, batch: DataFrame, _: Long) => {
-        val s = batch.sparkSession
-        // commit-ordered fold, then an atomic-as-possible rename swap
-        // (the LakeIO.swapInto window) — the replica is never read and
-        // overwritten in the same lazy plan
-        val replica = s"$dir/replica"
-        val next = graft.sources.LakeIO.replayChanges(
-          s.read.parquet(replica), batch, keys)
-        val tmp = s"$dir/replica_next"
-        next.write.mode("overwrite").parquet(tmp)
-        val rp = new org.apache.hadoop.fs.Path(replica)
-        val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(rp, true)
-        if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), rp))
-          throw new java.io.IOException(s"replica swap failed at $tmp")
-      },
+      (dir: String, batch: DataFrame, _: Long) =>
+        // commit-ordered fold, swapped in by rewrite — the replica is
+        // never read and overwritten in the same lazy plan
+        graft.sources.LakeIO.rewrite(graft.sources.LakeIO.replayChanges(
+          batch.sparkSession.read.parquet(s"$dir/replica"), batch, keys),
+          s"$dir/replica"),
       dir => spark.read.parquet(s"$dir/replica"))) { dir =>
       val tbl = table(dir)
+      val log = new graft.sources.VersionLog(spark, tbl)
       // replica seed + feed batches are ALREADY parquet artifacts of
-      // this table (v=0 snapshot; the write-time `_cdf/v=<n>` captures —
+      // this table (the v0 snapshot; the write-time captures —
       // capturedChanges(i, i+1) is a guarded read of exactly that dir),
       // so they are linked instead of paying a read+rewrite job per
-      // commit. A manifest-backed version (clone) is written instead,
-      // and so is a later commit whose capture is several files
-      // (fileReplay's one-file rule).
-      def parquetFiles(d: String): Seq[java.io.File] =
-        Option(new java.io.File(d).listFiles()).toSeq.flatten
+      // commit. A manifest-backed version (clone) has no parquet of its
+      // own and is written instead, and so is a later commit whose
+      // capture is several files (fileReplay's one-file rule).
+      def parquetFiles(d: org.apache.hadoop.fs.Path): Seq[java.io.File] =
+        Option(new java.io.File(d.toUri.getPath).listFiles()).toSeq.flatten
           .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      val v0files = parquetFiles(s"$tbl/v=0")
-      // emptiness guard (ADVICE r19, low): a missing/reaped v=0 dir must
-      // fail loudly at SEED time through loadVersion's clear error, not
-      // as a schema-inference error inside foreachBatch over an empty
+      val v0files = parquetFiles(log.dir(0))
+      // emptiness guard (ADVICE r19, low): a missing/reaped v0 dir must
+      // fail loudly at SEED time through the read's clear error, not as
+      // a schema-inference error inside foreachBatch over an empty
       // linked replica
-      if (new java.io.File(s"$tbl/v=0/_manifest").exists() ||
-          v0files.isEmpty)
-        graft.sources.LakeIO.loadVersion(spark, tbl, Some(0))
-          .write.parquet(s"$dir/replica")
+      if (v0files.isEmpty) log.read(0).write.parquet(s"$dir/replica")
       else LinkBatch(v0files).stageInto(s"$dir/replica")
-      val nCommits =
-        graft.sources.LakeIO.listVersions(spark, tbl).size - 1
-      (1 to nCommits).map { v =>
-        val fls = parquetFiles(s"$tbl/_cdf/v=$v")
+      (1 until log.versions.size).map { v =>
+        val fls = parquetFiles(log.cdfDir(v))
         if (fls.nonEmpty && (v == 1 || fls.size == 1)) LinkBatch(fls)
         else WriteBatch(
           graft.sources.LakeIO.capturedChanges(spark, tbl, v - 1, v))
@@ -1621,30 +1612,22 @@ object Streams {
         ()
       } else {
         // Already committed (at-least-once replay) — but do not skip
-        // UNCONDITIONALLY (ADVICE r18, low): the fence assumed the
-        // commit's write-time capture landed with it. saveVersionCdf
-        // now seals snapshot + capture atomically, so a sealed commit
-        // without `_cdf/v=<v>` can only mean someone mixed a plain
-        // saveVersion into this table's history — still a hole the
-        // produced table's captured feed would permanently refuse on.
-        // REPAIR it here (the replay is the natural repair point):
-        // re-diff v−1 vs v from the retained snapshots, exactly the
-        // capture saveVersionCdf would have written.
-        val cdfDir = new org.apache.hadoop.fs.Path(s"$tbl/_cdf/v=$v")
-        val fs = cdfDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(cdfDir)) {
-          val retained = graft.sources.LakeIO.listVersions(s, tbl).toSet
+        // UNCONDITIONALLY (ADVICE r18, low): a sealed commit without a
+        // capture can only mean someone mixed a plain saveVersion into
+        // this table's history — a hole the produced table's captured
+        // feed would permanently refuse on. REPAIR it here (the replay
+        // is the natural repair point) with the capture saveVersionCdf
+        // would have written, from the retained snapshots.
+        val log = new graft.sources.VersionLog(s, tbl)
+        if (!log.captured.contains(v)) {
+          val retained = log.versions.toSet
           require(retained.contains(v) && (v == 0 || retained.contains(v - 1)),
             s"commit $v at $tbl has no write-time capture and its " +
               "snapshots were vacuumed — the hole is no longer " +
               "reconstructible; the captured feed over ranges spanning " +
               "it will refuse (honestly)")
-          val capture =
-            if (v == 0) graft.sources.LakeIO.loadVersion(s, tbl, Some(0))
-              .withColumn("_change_type", lit("insert"))
-              .withColumn("_commit_version", lit(0))
-            else graft.sources.LakeIO.changes(s, tbl, v - 1, v, keys)
-          capture.write.mode("errorifexists").parquet(cdfDir.toString)
+          log.writeCapture(v,
+            log.capture(Option.when(v > 0)(log.read(v - 1)), v, keys))
         }
       }
     }

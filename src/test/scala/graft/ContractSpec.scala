@@ -247,10 +247,28 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
-  test("no catch-all Throwable handler in src/main outside LakeIO's " +
-      "abort-and-rethrow sites (failures are caught as NonFatal)") {
-    val offenders = codeLines(": Throwable =>", Nil).map(_._1)
-      .filterNot(_.startsWith("graft/sources/LakeIO.scala:"))
+  test("the versioned-table layout is spelled only inside VersionLog: no " +
+      "other code line names a version dir, the commit log, a capture, a " +
+      "manifest or the clone pins") {
+    val log = "graft/sources/VersionLog.scala"
+    val bodies = Seq(log -> "final class VersionLog(", log -> "object VersionLog {")
+    val found = Seq("/v=", "/_cdf", "\"v=\"", "_manifest", "\"_commits\"",
+      "_inflight_v=", "\"_clones\"").flatMap(needle =>
+        codeLines(needle, bodies).map { case (at, inside) =>
+          (s"$at $needle", inside)
+        })
+    val offenders = found.collect { case (at, false) => at }
+    assert(offenders.isEmpty, "name the versioned-table layout through " +
+      s"VersionLog:\n${offenders.mkString("\n")}")
+    assert(found.exists(_._2), "VersionLog no longer names the layout")
+  }
+
+  test("no catch-all Throwable handler in src/main outside VersionLog.publish's " +
+      "abort-and-rethrow (failures are caught as NonFatal)") {
+    val found = codeLines(": Throwable =>",
+      Seq("graft/sources/VersionLog.scala" -> "def publish("))
+    assert(found.exists(_._2), "VersionLog.publish no longer aborts")
+    val offenders = found.collect { case (at, false) => at }
     assert(offenders.isEmpty,
       s"catch NonFatal, not Throwable: ${offenders.mkString(", ")}")
   }

@@ -988,6 +988,31 @@ class LakeSpec extends AnyFunSuite {
     }
     assert(err2.getMessage.contains("not under any v=<n>"),
       err2.getMessage)
+    // the refused clone aborted clean: no reservation, no clone dir
+    assert(LakeIO.listInflight(spark, s"$root/badclone").isEmpty)
+    assert(!new java.io.File(s"$root/badclone/v=0").exists())
+  }
+
+  test("compact on a table whose head is a shallow clone reads and counts " +
+      "the head through its manifest") {
+    import graft.sources.LakeIO
+    import spark.implicits._
+    val lake = newLake()
+    val src = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("k", "s")
+    lake.saveVersioned(src.repartition(4), "csrc")
+    lake.shallowClone("csrc", 0, "cdst")
+    val listed = scala.io.Source
+      .fromFile(s"${lake.warehouse}/cdst/v=0/_manifest").getLines()
+      .count(_.nonEmpty)
+    assert(listed > 1, s"the clone must list several files: $listed")
+    val (before, after) = lake.compact("cdst", targetFileBytes = 1L << 20)
+    assert(before === listed)
+    assert(after === 1)
+    assert(LakeIO.listVersions(spark, s"${lake.warehouse}/cdst") ===
+      Seq(0, 1))
+    val head = lake.loadVersioned("cdst")
+    assert(head.exceptAll(src).count() === 0 &&
+      src.exceptAll(head).count() === 0)
   }
 
   test("three-way merge: the full conflict matrix (update/update, " +
