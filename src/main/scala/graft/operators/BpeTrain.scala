@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -41,6 +41,10 @@ import graft.sources.Tables
   * are normText words, so they cannot contain U or R. The DuckDB
   * oracle unrolls the k iterations as chained CTEs (the pagerank
   * technique) and re-derives every argmax independently.
+  *
+  * The loop itself is [[mergeLoop]], shared with [[WordpieceTrain]]
+  * (which merges chars of words by a likelihood score); [[units]] is
+  * the one split of a state string into its units.
   */
 object BpeTrain {
 
@@ -94,7 +98,6 @@ object BpeTrain {
     */
   def bpeEncode(spark: SparkSession, sfDir: String, k: Int = 8): DataFrame = {
     val (_, state) = cachedTraining(spark, sfDir, k)
-    val units = filter(split(col("s"), Sep), x => x =!= lit(""))
     state.select(col("doc_id"), units.as("u"))
       .select(col("doc_id"),
         size(filter(col("u"),
@@ -120,7 +123,6 @@ object BpeTrain {
   def bpeFertility(spark: SparkSession, sfDir: String,
       k: Int = 8): DataFrame = {
     val (_, state) = cachedTraining(spark, sfDir, k)
-    val units = filter(split(col("s"), Sep), x => x =!= lit(""))
     val perDoc = state.select(col("doc_id"), units.as("u"))
       .select(col("doc_id"),
         size(col("u")).cast("long").as("nu"),
@@ -155,29 +157,17 @@ object BpeTrain {
     * first unit falls in; a straddling doc is not split).
     *
     * Scale shape: after the memoized training this is ONE row-local
-    * unit-count projection + a doc_id-keyed join + the per-source
-    * cumulative window — the pack_sequences plan with n_tok swapped.
-    * The window partitions by source (pack streams are per-source at
-    * 100 TB; a global pack would single-task the sort — the
-    * pack_sequences scale note applies unchanged).
+    * unit-count projection + a doc_id-keyed join + pack_sequences'
+    * per-source window ([[TextOps.packBySource]]).
     */
   def pipelineTokenize(spark: SparkSession, sfDir: String, k: Int = 8,
       budget: Int = 512): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (_, state) = cachedTraining(spark, sfDir, k)
-    val units = filter(split(col("s"), Sep), x => x =!= lit(""))
-    val perDoc = state.select(col("doc_id"), size(units).as("n_tok"))
-    val w = Window.partitionBy(col("source")).orderBy(col("doc_id").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    perDoc
-      .join(Tables.documents(spark, sfDir).select("doc_id", "source"),
-        Seq("doc_id"))
-      .withColumn("cum_before",
-        coalesce(sum(col("n_tok")).over(w), lit(0L)))
-      .select(col("source"), col("doc_id"), col("n_tok"),
-        floor(col("cum_before") / budget).as("pack_id"),
-        (col("cum_before") % budget).as("pack_offset"))
-      .orderBy(col("source").asc, col("doc_id").asc)
+    TextOps.packBySource(
+      state.select(col("doc_id"), size(units).as("n_tok"))
+        .join(Tables.documents(spark, sfDir).select("doc_id", "source"),
+          Seq("doc_id")),
+      "n_tok", budget)
   }
 
   private def mergeTable(spark: SparkSession,
@@ -194,46 +184,70 @@ object BpeTrain {
   /** Core of [[bpeTrain]] over any (doc_id, text) frame. */
   def bpeTrainDocs(docs: DataFrame, k: Int): DataFrame = {
     val (merges, state) = trainDocs(docs, k)
-    state.unpersist()
+    GraphOps.unpersistCheckpoint(state)
     mergeTable(docs.sparkSession, merges)
   }
 
-  /** The k-iteration training loop: returns (merge table, final
-    * segmentation state — checkpointed, caller releases).
+  /** The k-iteration training loop over the docs' non-empty normText
+    * tokens, pairs scored by raw count: returns (merge table, final
+    * segmentation state (doc_id, s) — checkpointed, caller releases).
     */
   private def trainDocs(docs: DataFrame,
       k: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
-    val ss = Sep + Sep
     val toks = filter(split(TextOps.normText(col("text")), " "),
       t => t =!= lit(""))
-    var st = docs
-      .select(col("doc_id"), toks.as("toks"))
-      .filter(size(col("toks")) >= 1)
-      .select(col("doc_id"),
-        concat(lit(ss), array_join(col("toks"), ss), lit(ss)).as("s"))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ListBuffer[(Int, String, String, Long)]()
-    var i = 1
-    var exhausted = false
-    while (i <= k && !exhausted) {
-      val top = st
-        .select(filter(split(col("s"), Sep), x => x =!= lit("")).as("t"))
-        .filter(size(col("t")) >= 2) // sequence(1, 0) would descend
-        .select(explode(expr("transform(sequence(1, size(t) - 1), " +
-          "j -> named_struct('a', element_at(t, j), " +
-          "'b', element_at(t, j + 1)))")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(count(lit(1)).as("c"))
+    val (top, st) = mergeLoop(
+      docs.select(col("doc_id"), toks.as("u")).filter(size(col("u")) >= 1),
+      Seq("doc_id"), k) { (_, pairs) =>
+      pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true // corpus is all single-token docs
+    }
+    (top.zipWithIndex.map { case (r, i) =>
+      (i + 1, r.getString(0), r.getString(1), r.getLong(2))
+    }, st)
+  }
+
+  /** The units of a state string `s`: split on [[Sep]], empties dropped. */
+  private[graft] def units: Column =
+    filter(split(col("s"), Sep), x => x =!= lit(""))
+
+  /** The boundary-flanked merge loop (object scaladoc). `seed` holds the
+    * `keep` columns and each row's initial units `u`; the state is
+    * (keep…, s). Each of up to k steps hands `argmax` the state's units
+    * (keep…, t) and its adjacent pairs (keep…, a, b); `argmax` scores
+    * them and orders the winner first, with `a` and `b` its first two
+    * columns. The winning row is recorded, its pair is merged with the
+    * flanked `replace`, and the superseded state's checkpoint is
+    * released. Stops early when no row has two units left. Returns (the
+    * winning rows in step order, the final state — checkpointed, caller
+    * releases).
+    */
+  private[graft] def mergeLoop(seed: DataFrame, keep: Seq[String], k: Int)(
+      argmax: (DataFrame, DataFrame) => DataFrame): (Seq[Row], DataFrame) = {
+    val ss = Sep + Sep
+    val keepCols = keep.map(col)
+    var st = seed
+      .select(keepCols :+
+        concat(lit(ss), array_join(col("u"), ss), lit(ss)).as("s"): _*)
+      .localCheckpoint(true)
+    val merges = scala.collection.mutable.ListBuffer[Row]()
+    var exhausted = false
+    while (merges.size < k && !exhausted) {
+      val base = st.select(keepCols :+ units.as("t"): _*)
+      val pairs = base
+        .filter(size(col("t")) >= 2) // sequence(1, 0) would descend
+        .select(keepCols :+ explode(expr(
+          "transform(sequence(1, size(t) - 1), " +
+            "j -> named_struct('a', element_at(t, j), " +
+            "'b', element_at(t, j + 1)))")).as("p"): _*)
+        .select(keepCols ++ Seq(col("p.a").as("a"), col("p.b").as("b")): _*)
+      val top = argmax(base, pairs).limit(1).collect()
+      if (top.isEmpty) exhausted = true // no row has a pair left
       else {
-        val (a, b, c) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((i, a, b, c))
-        // boundary-flanked merge (see object scaladoc); the pattern and
-        // replacement pass as literal COLUMNS — never spliced into an
-        // expr string (token text is corpus data)
+        val (a, b) = (top(0).getString(0), top(0).getString(1))
+        merges += top(0)
+        // the pattern and replacement pass as literal COLUMNS — never
+        // spliced into an expr string (token text is corpus data)
         val next = st
           .withColumn("s", call_function("replace", col("s"),
             lit(Sep + a + ss + b + Sep), lit(Sep + a + MergeJ + b + Sep)))
@@ -242,7 +256,6 @@ object BpeTrain {
         // materialized (eager checkpoint): release them now, not at GC
         GraphOps.unpersistCheckpoint(st)
         st = next
-        i += 1
       }
     }
     (merges.toSeq, st)

@@ -123,14 +123,17 @@ object EventWindows {
           .as("bucket"))
     val wPrev = Window.partitionBy(col("user_id")).orderBy(col("bucket").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wNext = Window.partitionBy(col("user_id")).orderBy(col("bucket").asc)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    // the next observation: the last one up to here in DESCENDING bucket
+    // order (a currentRow → unboundedFollowing frame re-scans its tail
+    // per row, quadratic in the user's buckets)
+    val wNext = Window.partitionBy(col("user_id")).orderBy(col("bucket").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     grid.join(agg, Seq("user_id", "bucket"), "left")
       .withColumn("pv", last(col("v"), ignoreNulls = true).over(wPrev))
       .withColumn("pt", last(when(col("v").isNotNull, col("bucket")),
         ignoreNulls = true).over(wPrev))
-      .withColumn("nv", first(col("v"), ignoreNulls = true).over(wNext))
-      .withColumn("nt", first(when(col("v").isNotNull, col("bucket")),
+      .withColumn("nv", last(col("v"), ignoreNulls = true).over(wNext))
+      .withColumn("nt", last(when(col("v").isNotNull, col("bucket")),
         ignoreNulls = true).over(wNext))
       // no rounding: every term is the same IEEE double on both engines
       // (exact DECIMAL mean, integer-second deltas), so the raw result

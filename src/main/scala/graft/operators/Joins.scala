@@ -593,10 +593,12 @@ object Joins {
     * at microsecond granularity (the orders-side variants are
     * backward-only by fixture construction: orders end 2001, events
     * start 2024). Both carries come from ONE user-keyed union + window
-    * pass — two frames over the same sort, so still a single shuffle;
-    * the pick is a row-local CASE. A same-timestamp error is reachable
-    * via the backward carry (gap 0 — necessarily minimal), so the
-    * forward frame's same-ts blindness can never change the answer.
+    * pass — the forward carry is the backward carry over the reversed
+    * sort (a `currentRow → unboundedFollowing` frame re-scans its tail
+    * for every row: quadratic in the user's rows), so still a single
+    * shuffle; the pick is a row-local CASE. A same-timestamp error is
+    * reachable via the backward carry (gap 0 — necessarily minimal), so
+    * the forward frame's same-ts blindness can never change the answer.
     */
   def joinAsOfNearest(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
@@ -610,11 +612,12 @@ object Joins {
     val tagged = err.withColumn("side", lit(0))
       .unionByName(pur.withColumn("side", lit(1)))
       .withColumn("o_ts", when(col("side") === 0, col("at_ts")))
-    val sort = Seq(col("at_ts").asc, col("side").asc, col("o_key").asc)
-    val wBack = Window.partitionBy("ukey").orderBy(sort: _*)
+    val wBack = Window.partitionBy("ukey")
+      .orderBy(col("at_ts").asc, col("side").asc, col("o_key").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wFwd = Window.partitionBy("ukey").orderBy(sort: _*)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    val wFwd = Window.partitionBy("ukey")
+      .orderBy(col("at_ts").desc, col("side").desc, col("o_key").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val gb = unix_micros(col("at_ts")) - unix_micros(col("back_ts"))
     val gf = unix_micros(col("fwd_ts")) - unix_micros(col("at_ts"))
     tagged
@@ -623,9 +626,9 @@ object Joins {
       .withColumn("back_ts",
         last(col("o_ts"), ignoreNulls = true).over(wBack))
       .withColumn("fwd_key",
-        first(col("o_key"), ignoreNulls = true).over(wFwd))
+        last(col("o_key"), ignoreNulls = true).over(wFwd))
       .withColumn("fwd_ts",
-        first(col("o_ts"), ignoreNulls = true).over(wFwd))
+        last(col("o_ts"), ignoreNulls = true).over(wFwd))
       .filter(col("side") === 1)
       .select(col("event_id"), col("ukey").as("user_id"),
         when(col("back_ts").isNull && col("fwd_ts").isNull,
@@ -670,10 +673,12 @@ object Joins {
   /** `join_asof_forward` — the forward as-of join (next order AT or
     * AFTER each purchase event's date), completing the as-of family:
     * same union + single-window composition as `joinAsOf`, with the
-    * frame reversed (current row → unbounded following, first non-null)
-    * and the side tag flipped so a same-date order is visible to the
-    * event. Still exactly one user-keyed window shuffle — the shape a
-    * native as-of operator would plan.
+    * sort reversed (the last non-null up to the current row of the
+    * descending order is the first at or after it in the ascending one,
+    * without a per-row re-scan of the frame's tail) and the side tag
+    * flipped so a same-date order is visible to the event. Still
+    * exactly one user-keyed window shuffle — the shape a native as-of
+    * operator would plan.
     */
   def joinAsOfForward(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
@@ -691,11 +696,11 @@ object Joins {
     val tagged = ev.withColumn("side", lit(0))
       .unionByName(ord.withColumn("side", lit(1)))
     val w = Window.partitionBy("ukey")
-      .orderBy(col("at_ts").asc, col("side").asc, col("o_key").asc)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+      .orderBy(col("at_ts").desc, col("side").desc, col("o_key").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     tagged
       .withColumn("next_orderkey",
-        first(col("o_key"), ignoreNulls = true).over(w))
+        last(col("o_key"), ignoreNulls = true).over(w))
       .filter(col("side") === 0)
       .select(col("event_id"), col("ukey").as("user_id"),
         col("next_orderkey"))

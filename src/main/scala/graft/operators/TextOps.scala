@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -14,14 +14,27 @@ import graft.sources.Tables
   * the driver, so they scale linearly with corpus size. Hash-based ops use
   * deterministic hashes (sha2/md5/xxhash64 with fixed seed), never
   * `rand()`.
+  *
+  * The curation rules are written once and shared by every operator
+  * that applies them: [[qualityGate]] (the quality predicates),
+  * [[keepFirst]] (keep-first exact dedup), [[curatedSurvivorsOf]] (gate
+  * → dedup → decontaminate), [[newContent]] (the content-hash anti-join
+  * of the incremental dedup family, also used by Streams and
+  * SinkQueries), [[packBySource]] (per-source token packing, also used
+  * by `pipeline_tokenize`) and [[epochCopies]] (fractional-epoch
+  * copies).
   */
 object TextOps {
 
   /** Deterministic text normalization: lowercase + collapse whitespace +
     * trim. The canonical form for exact dedup and fingerprints.
     */
-  def normText(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def normText(c: Column): Column =
     trim(regexp_replace(lower(c), "\\s+", " "))
+
+  /** The exact-dedup content key: sha2-256 of the normalized text. */
+  private[graft] def contentHash(text: Column): Column =
+    sha2(normText(text), 256)
 
   /** The key-pure md5-prefix selection rank (the
     * [[graft.functions.ScalarFns.sampleHash]] idiom in its 8-hex form):
@@ -31,8 +44,7 @@ object TextOps {
     * definition shared by every budget/mix consumer — a drifted copy
     * would break cross-engine bit-identity for just that operator.
     */
-  private[graft] def hashRank(id: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
+  private[graft] def hashRank(id: Column): Column =
     conv(substring(md5(id.cast("string")), 1, 8), 16, 10).cast("long")
 
   /** `dedup_exact` — exact dedup on normalized text hash; the survivor is
@@ -40,15 +52,19 @@ object TextOps {
     * 256-bit hash — at 100 TB this is the cheapest dedup pass and always
     * runs first.
     */
-  def dedupExact(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy(col("text_hash")).orderBy(col("doc_id").asc)
-    Tables.documents(spark, sfDir)
-      .withColumn("text_hash", sha2(normText(col("text")), 256))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+  def dedupExact(spark: SparkSession, sfDir: String): DataFrame =
+    keepFirst(Tables.documents(spark, sfDir), contentHash(col("text")))
       .select(col("doc_id"), col("lang"), col("source"))
       .orderBy(col("doc_id").asc)
-  }
+
+  /** Keep-first exact dedup: of the rows sharing `hash` (kept as `h`),
+    * only the one with the lowest doc_id survives.
+    */
+  private def keepFirst(docs: DataFrame, hash: Column): DataFrame =
+    docs.withColumn("h", hash)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("h")).orderBy(col("doc_id").asc)))
+      .filter(col("rn") === 1)
 
   /** `text_stats` — per-(source,lang) corpus statistics: doc count, token
     * count, char count, average tokens per doc. Token = whitespace-split
@@ -130,26 +146,32 @@ object TextOps {
     * stopword-ish ratio (presence of high-frequency glue words). Returns
     * scored survivors.
     */
-  def qualityFilter(spark: SparkSession, sfDir: String): DataFrame = {
-    val toks = split(normText(col("text")), " ")
-    Tables.documents(spark, sfDir)
-      .withColumn("n_tokens", size(toks))
-      .withColumn("mean_word_len",
-        round(length(regexp_replace(normText(col("text")), " ", ""))
-          .cast("double") / size(toks), 4))
+  def qualityFilter(spark: SparkSession, sfDir: String): DataFrame =
+    qualityGate(Tables.documents(spark, sfDir))
       .withColumn("alpha_ratio",
         round(length(regexp_replace(col("text"), "[^a-zA-Z]", ""))
           .cast("double") / length(col("text")), 4))
       .withColumn("has_glue",
         when(col("text").rlike("\\b(the|and|of|to|in)\\b"), 1).otherwise(0))
+      .select(col("doc_id"), col("lang"), col("n_tokens"),
+        col("mean_word_len"), col("alpha_ratio"), col("has_glue"))
+      .orderBy(col("doc_id").asc)
+
+  /** The quality gate: adds `t` (the normalized text), `n_tokens` and
+    * `mean_word_len`, and keeps the documents inside the language
+    * allowlist and the token, char and mean-word-length bounds.
+    */
+  private def qualityGate(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("t", normText(col("text")))
+      .withColumn("n_tokens", size(split(col("t"), " ")))
+      .withColumn("mean_word_len",
+        round(length(regexp_replace(col("t"), " ", "")).cast("double") /
+          size(split(col("t"), " ")), 4))
       .filter(col("lang").isin("en", "de", "es", "fr") &&
         col("n_tokens").between(3, 10000) &&
         col("n_chars").between(20, 100000) &&
         col("mean_word_len").between(2.0, 12.0))
-      .select(col("doc_id"), col("lang"), col("n_tokens"),
-        col("mean_word_len"), col("alpha_ratio"), col("has_glue"))
-      .orderBy(col("doc_id").asc)
-  }
 
   /** `lang_id` — n-gram-heuristic language identification: score each doc
     * against tiny per-language marker lexicons (function words / character
@@ -237,14 +259,25 @@ object TextOps {
     * deterministic because the order key is global.
     */
   def packSequences(spark: SparkSession, sfDir: String,
-      budget: Int = 512): DataFrame = {
+      budget: Int = 512): DataFrame =
+    packBySource(Tables.documents(spark, sfDir)
+      .withColumn("n_tok", size(split(normText(col("text")), " "))),
+      "n_tok", budget)
+
+  /** Per-source packing: within each source, documents in doc_id order
+    * fill consecutive `budget`-token packs by their token count column
+    * `n`; each gets the pack its first token falls in and its offset
+    * there (a straddling document is not split). Output (source,
+    * doc_id, n, pack_id, pack_offset).
+    */
+  private[graft] def packBySource(docs: DataFrame, n: String,
+      budget: Int): DataFrame = {
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
-    Tables.documents(spark, sfDir)
-      .withColumn("n_tok", size(split(normText(col("text")), " ")))
-      .withColumn("cum_before", coalesce(sum(col("n_tok")).over(w), lit(0L)))
-      .select(
-        col("source"), col("doc_id"), col("n_tok"),
+    docs
+      .withColumn("cum_before",
+        coalesce(sum(col(n).cast("long")).over(w), lit(0L)))
+      .select(col("source"), col("doc_id"), col(n),
         floor(col("cum_before") / budget).as("pack_id"),
         (col("cum_before") % budget).as("pack_offset"))
       .orderBy(col("source").asc, col("doc_id").asc)
@@ -545,14 +578,27 @@ object TextOps {
     */
   def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val existing = docs.filter(col("doc_id") % 10 < 8)
-      .select(sha2(normText(col("text")), 256).as("h")).distinct()
-    docs.filter(col("doc_id") % 10 >= 8)
-      .withColumn("h", sha2(normText(col("text")), 256))
-      .join(existing, Seq("h"), "left_anti")
-      .select(col("doc_id"), col("lang"), col("source"))
+    newContent(docs.filter(col("doc_id") % 10 >= 8),
+      contentHashes(docs.filter(col("doc_id") % 10 < 8)))
       .orderBy(col("doc_id").asc)
   }
+
+  /** The distinct content hashes (`h`) of a corpus — the existing side
+    * of [[newContent]].
+    */
+  private[graft] def contentHashes(corpus: DataFrame): DataFrame =
+    corpus.select(contentHash(col("text")).as("h")).distinct()
+
+  /** The incremental dedup rule: the `batch` documents whose content
+    * hash is not in `existingHashes` (an `h` frame), as (doc_id, lang,
+    * source). Batch-internal duplicates are kept.
+    */
+  private[graft] def newContent(batch: DataFrame,
+      existingHashes: DataFrame): DataFrame =
+    batch
+      .withColumn("h", contentHash(col("text")))
+      .join(existingHashes, Seq("h"), "left_anti")
+      .select(col("doc_id"), col("lang"), col("source"))
 
   /** `ngram_lm` — bigram language-model counts: c(w₁w₂), c(w₁·) and the
     * conditional probability p(w₂|w₁), top 50 bigrams by count — the
@@ -842,59 +888,36 @@ object TextOps {
     */
   def pipelineCurate(spark: SparkSession, sfDir: String,
       budget: Int = 512, benchMod: Int = 97): DataFrame = {
-    val wPack = Window.partitionBy(col("source")).orderBy(col("doc_id").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    curatedSurvivors(spark, sfDir, benchMod)
-      .withColumn("cum_before",
-        coalesce(sum(col("n_tokens").cast("long")).over(wPack), lit(0L)))
-      .select(col("source"), col("doc_id"), col("n_tokens"),
-        floor(col("cum_before") / budget).as("pack_id"),
-        (col("cum_before") % budget).as("pack_offset"))
-      .orderBy(col("source").asc, col("doc_id").asc)
-  }
-
-  /** The quality-gate → exact-dedup → decontaminate survivor stream
-    * (doc_id, source, lang, n_tokens) — the ONE definition of the
-    * curation chain, shared by [[pipelineCurate]] (which packs it by
-    * source) and [[pipelineCurateV3]] (which mixes it by language);
-    * a predicate change in two drifted copies would silently diverge
-    * the capstones from each other and their shared oracle fragments.
-    */
-  private def curatedSurvivors(spark: SparkSession, sfDir: String,
-      benchMod: Int): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    curatedSurvivorsOf(docs, docs, benchMod)
+    packBySource(curatedSurvivors(docs, docs, benchMod), "n_tokens", budget)
   }
 
-  /** [[curatedSurvivors]] with the candidate stream decoupled from the
-    * full corpus: `candidates` is the frame the gate/dedup run over
-    * (the whole corpus for the from-scratch capstones; today's
-    * near-dup-surviving delta for [[pipelineCurateV4]]), while
-    * decontamination always derives its benchmark split from `docs` —
+  /** The curation chain: `gate` (which adds the normalized text `t` and
+    * `n_tokens`) → keep-first exact dedup on the hash of `t` → drop the
+    * benchmark split (doc_id ≡ 0 mod `benchMod`) and every doc_id in
+    * `contaminated`. The ONE definition every capstone runs; a drifted
+    * copy would silently diverge the capstones from each other and
+    * their shared oracle fragments.
+    */
+  private def curatedSurvivorsOf(candidates: DataFrame,
+      gate: DataFrame => DataFrame, contaminated: DataFrame,
+      benchMod: Int): DataFrame =
+    keepFirst(gate(candidates), sha2(col("t"), 256))
+      .filter(col("doc_id") % benchMod =!= 0)
+      .join(contaminated.select(col("doc_id")), Seq("doc_id"), "left_anti")
+
+  /** The standing chain as (doc_id, source, lang, n_tokens): the
+    * [[qualityGate]] over `candidates` (the whole corpus for the
+    * from-scratch capstones; a day's near-dup-surviving delta for
+    * [[pipelineCurateV4]] and [[curateDayFromCdf]]), decontaminated
+    * against the benchmark split of the full corpus `docs` —
     * contamination doesn't care which batch a document arrived in.
     */
-  private def curatedSurvivorsOf(docs: DataFrame, candidates: DataFrame,
-      benchMod: Int): DataFrame = {
-    val quality = candidates
-      .withColumn("t", normText(col("text")))
-      .withColumn("n_tokens", size(split(col("t"), " ")))
-      .withColumn("mean_word_len",
-        round(length(regexp_replace(col("t"), " ", "")).cast("double") /
-          size(split(col("t"), " ")), 4))
-      .filter(col("lang").isin("en", "de", "es", "fr") &&
-        col("n_tokens").between(3, 10000) &&
-        col("n_chars").between(20, 100000) &&
-        col("mean_word_len").between(2.0, 12.0))
-    val wDedup = Window.partitionBy(col("h")).orderBy(col("doc_id").asc)
-    val deduped = quality
-      .withColumn("h", sha2(col("t"), 256))
-      .withColumn("rn", row_number().over(wDedup))
-      .filter(col("rn") === 1 && col("doc_id") % benchMod =!= 0)
-    val contaminated = decontaminateDocs(docs, benchMod = benchMod)
-      .select(col("doc_id"))
-    deduped.join(contaminated, Seq("doc_id"), "left_anti")
+  private def curatedSurvivors(docs: DataFrame, candidates: DataFrame,
+      benchMod: Int): DataFrame =
+    curatedSurvivorsOf(candidates, qualityGate,
+      decontaminateDocs(docs, benchMod = benchMod), benchMod)
       .select(col("doc_id"), col("source"), col("lang"), col("n_tokens"))
-  }
 
   /** `pipeline_curate_v2` — the round-8 capstone: the same
     * gate→dedup→decontaminate→pack lazy DAG as [[pipelineCurate]],
@@ -913,27 +936,14 @@ object TextOps {
     val tooDup = graft.operators.MinHashDedup.dedupSpanMaskDocs(docs)
       .filter(col("n_masked") * 2 > col("n_tokens"))
       .select(col("doc_id"))
-    val base = docs
+    def spanGate(d: DataFrame): DataFrame = d
       .withColumn("t", normText(col("text")))
       .withColumn("n_tokens", size(split(col("t"), " ")))
       .filter(col("n_tokens") >= 3)
       .join(tooDup, Seq("doc_id"), "left_anti")
-    val wDedup = Window.partitionBy(col("h")).orderBy(col("doc_id").asc)
-    val deduped = base
-      .withColumn("h", sha2(col("t"), 256))
-      .withColumn("rn", row_number().over(wDedup))
-      .filter(col("rn") === 1 && col("doc_id") % benchMod =!= 0)
-    val contaminated = decontaminateBloomDocs(docs, benchMod = benchMod)
-      .select(col("doc_id"))
-    val wPack = Window.partitionBy(col("source")).orderBy(col("doc_id").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    deduped.join(contaminated, Seq("doc_id"), "left_anti")
-      .withColumn("cum_before",
-        coalesce(sum(col("n_tokens").cast("long")).over(wPack), lit(0L)))
-      .select(col("source"), col("doc_id"), col("n_tokens"),
-        floor(col("cum_before") / budget).as("pack_id"),
-        (col("cum_before") % budget).as("pack_offset"))
-      .orderBy(col("source").asc, col("doc_id").asc)
+    packBySource(curatedSurvivorsOf(docs, spanGate,
+      decontaminateBloomDocs(docs, benchMod = benchMod), benchMod),
+      "n_tokens", budget)
   }
 
   /** `pipeline_curate_v3` — the round-11 capstone: the curation DAG
@@ -952,10 +962,12 @@ object TextOps {
     * feeding a single-task corpus-sized sort.
     */
   def pipelineCurateV3(spark: SparkSession, sfDir: String,
-      budget: Long = 3000L, benchMod: Int = 97): DataFrame =
-    budgetPrefixPruned(curatedSurvivors(spark, sfDir, benchMod)
+      budget: Long = 3000L, benchMod: Int = 97): DataFrame = {
+    val docs = Tables.documents(spark, sfDir)
+    budgetPrefixPruned(curatedSurvivors(docs, docs, benchMod)
       .select(col("doc_id"), col("lang"), col("n_tokens")),
       lit(budget), buckets = 256)
+  }
 
   /** `pipeline_curate_v4` — the round-13 capstone: the DAILY-UPDATE
     * cut. The earlier capstones curate a full corpus from scratch;
@@ -979,8 +991,7 @@ object TextOps {
       .dedupMinhashIncremental(spark, sfDir)
       .select(col("doc_id"))
     budgetPrefixPruned(
-      curatedSurvivorsOf(docs, docs.join(survivors, Seq("doc_id")),
-        benchMod)
+      curatedSurvivors(docs, docs.join(survivors, Seq("doc_id")), benchMod)
         .select(col("doc_id"), col("lang"), col("n_tokens")),
       lit(budget), buckets = 256)
   }
@@ -1011,26 +1022,10 @@ object TextOps {
     val docs = Tables.documents(spark, sfDir)
     val contaminated = graft.operators.MinHashDedup
       .decontaminateMinhash(spark, sfDir, benchMod = benchMod)
-      .select(col("doc_id"))
-    val quality = docs
-      .withColumn("t", normText(col("text")))
-      .withColumn("n_tokens", size(split(col("t"), " ")))
-      .withColumn("mean_word_len",
-        round(length(regexp_replace(col("t"), " ", "")).cast("double") /
-          size(split(col("t"), " ")), 4))
-      .filter(col("lang").isin("en", "de", "es", "fr") &&
-        col("n_tokens").between(3, 10000) &&
-        col("n_chars").between(20, 100000) &&
-        col("mean_word_len").between(2.0, 12.0))
-    val wDedup = Window.partitionBy(col("h")).orderBy(col("doc_id").asc)
-    val clean = quality
-      .withColumn("h", sha2(col("t"), 256))
-      .withColumn("rn", row_number().over(wDedup))
-      .filter(col("rn") === 1 && col("doc_id") % benchMod =!= 0)
-      .join(contaminated, Seq("doc_id"), "left_anti")
     // content-keyed split BEFORE upsampling (a doc's copies must all
     // land in one split; the key survives the dedup representative)
-    val withSplit = clean
+    val withSplit = curatedSurvivorsOf(docs, qualityGate, contaminated,
+        benchMod)
       .withColumn("bucket",
         (conv(substring(md5(col("t")), 1, 8), 16, 10)
           .cast("long") % 100).cast("int"))
@@ -1038,25 +1033,11 @@ object TextOps {
         when(col("bucket") === 0, lit("test"))
           .when(col("bucket") === 1, lit("val"))
           .otherwise(lit("train")))
-    val ePct = DefaultEpochs.foldLeft(when(lit(false), lit(0))) {
-      case (acc, (src, p)) => acc.when(col("source") === src, lit(p))
-    }.otherwise(lit(0))
-    withSplit
-      .withColumn("e_pct", ePct)
-      // a source absent from the epoch table is dropped ENTIRELY
-      // (mixEpochs' drop-domain rule — val/test rows of a dropped
-      // domain must not ship either)
-      .filter(col("e_pct") > 0)
-      .withColumn("coin",
-        (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % 100).cast("int"))
-      .withColumn("n_copies",
-        when(col("split") =!= "train", lit(1)).otherwise(
-          floor(col("e_pct") / 100).cast("int") +
-            when(col("coin") < col("e_pct") % 100, 1).otherwise(0)))
-      .filter(col("n_copies") > 0)
+    // val/test always ship exactly one copy; a dropped domain's val/test
+    // rows drop too
+    epochCopies(withSplit, DefaultEpochs, col("split") =!= "train")
       .select(col("doc_id"), col("lang"), col("source"), col("split"),
-        explode(sequence(lit(0), col("n_copies") - 1)).as("copy_id"))
+        col("copy_id"))
       .orderBy(col("doc_id").asc, col("copy_id").asc)
   }
 
@@ -1220,7 +1201,7 @@ object TextOps {
         delta.select(col("doc_id"), col("lang"), col("source"),
           col("text")))
       .select(col("doc_id"))
-    curatedSurvivorsOf(Tables.documents(spark, sfDir),
+    curatedSurvivors(Tables.documents(spark, sfDir),
       delta.join(survivors, Seq("doc_id")), benchMod)
   }
 
@@ -1541,22 +1522,31 @@ object TextOps {
 
   /** Core of [[mixEpochs]] over any (doc_id, lang, source) frame. */
   def mixEpochsDocs(docs: DataFrame,
-      epochs: Seq[(String, Int)]): DataFrame = {
+      epochs: Seq[(String, Int)]): DataFrame =
+    epochCopies(docs, epochs, lit(false))
+      .select(col("doc_id"), col("lang"), col("source"), col("copy_id"))
+      .orderBy(col("doc_id").asc, col("copy_id").asc)
+
+  /** The epoch-copy rule: a document of a source with p percent epochs
+    * gets floor(p / 100) copies, plus one more iff its md5 coin
+    * ([[hashRank]] mod 100) is under p mod 100, numbered by `copy_id`; a
+    * row where `once` holds gets exactly one. A source absent from
+    * `epochs` drops entirely.
+    */
+  private def epochCopies(docs: DataFrame, epochs: Seq[(String, Int)],
+      once: Column): DataFrame = {
     val ePct = epochs.foldLeft(when(lit(false), lit(0))) {
       case (acc, (src, p)) => acc.when(col("source") === src, lit(p))
     }.otherwise(lit(0))
     docs
       .withColumn("e_pct", ePct)
-      .withColumn("coin",
-        (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % 100).cast("int"))
-      .withColumn("n_copies",
+      .filter(col("e_pct") > 0)
+      .withColumn("coin", (hashRank(col("doc_id")) % 100).cast("int"))
+      .withColumn("n_copies", when(once, lit(1)).otherwise(
         floor(col("e_pct") / 100).cast("int") +
-          when(col("coin") < col("e_pct") % 100, 1).otherwise(0))
+          when(col("coin") < col("e_pct") % 100, 1).otherwise(0)))
       .filter(col("n_copies") > 0)
-      .select(col("doc_id"), col("lang"), col("source"),
-        explode(sequence(lit(0), col("n_copies") - 1)).as("copy_id"))
-      .orderBy(col("doc_id").asc, col("copy_id").asc)
+      .withColumn("copy_id", explode(sequence(lit(0), col("n_copies") - 1)))
   }
 
   /** `mix_temperature` — exponent-smoothed multilingual sampling: the

@@ -46,6 +46,11 @@ import graft.sources.Tables
   * is row-local per distinct word. Qualification: words longer than 24
   * chars are out of training scope (bounds the oracle recursion depth;
   * mirrored in SQL — never binding on the fixture, max word length 8).
+  *
+  * The word-table tokenizers ([[WordpieceTrain]] too) share three
+  * pieces written here once: [[qualifyingWords]] (the normText word
+  * pass and its length qualification), [[encodeDocs]] (the per-doc
+  * encode reassembly) and [[fertility]] (the 4dp pieces-per-word tail).
   */
 object UnigramTrain {
 
@@ -68,12 +73,23 @@ object UnigramTrain {
     */
   private[graft] def langWordCounts(spark: SparkSession,
       sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .select(col("lang"),
-        explode(split(TextOps.normText(col("text")), " ")).as("word"))
-      .filter(col("word") =!= "" && length(col("word")) <= MaxWordLen)
+    qualifyingWords(Tables.documents(spark, sfDir), Seq(col("lang")))
       .groupBy(col("lang"), col("word"))
       .agg(count(lit(1)).as("wfl"))
+
+  /** The qualifying words of `docs`: one (keep…, word) row per non-empty
+    * normText word of at most [[MaxWordLen]] chars, with its position
+    * `pos` in the doc before `word` when `withPos`.
+    */
+  private[graft] def qualifyingWords(docs: DataFrame, keep: Seq[Column],
+      withPos: Boolean = false): DataFrame = {
+    val words = split(TextOps.normText(col("text")), " ")
+    val word =
+      if (withPos) posexplode(words).as(Seq("pos", "word"))
+      else explode(words).as("word")
+    docs.select(keep :+ word: _*)
+      .filter(col("word") =!= "" && length(col("word")) <= MaxWordLen)
+  }
 
   /** The trainer over an explicit (lang, word, wfl) aggregate — the
     * planted-corpus harness for UnigramSpec. Returns (score table rows
@@ -194,25 +210,31 @@ object UnigramTrain {
     * the encoded surface (pieces joined by `_` within a word, words by
     * space — reading order restored via a position sort, never
     * collection order). Third view of the ONE memoized training.
+    */
+  def unigramEncode(spark: SparkSession, sfDir: String): DataFrame =
+    encodeDocs(spark, sfDir, cachedTraining(spark, sfDir)._2,
+      array_join(col("pieces"), "_"))
+
+  /** The per-doc encode of a (word, pieces) segmentation frame `seg`,
+    * each word's surface written by `enc` (an expression over
+    * `pieces`): per doc, the qualifying word count `n_words`, the piece
+    * count `n_pieces` and the word surfaces joined by space in reading
+    * order as `encoded`.
     *
     * Scale shape: the corpus explodes to (doc_id, pos, word) rows once,
     * joins the DISTINCT-WORD segmentation frame KEYED on word
     * (vocabulary-sized right side — a keyed join, not a broadcast
     * literal, so an arbitrarily large vocabulary still co-locates), and
-    * one doc_id-keyed aggregate reassembles order with
-    * array_sort(collect_list(struct(pos, enc))).
+    * one doc_id-keyed aggregate restores reading order by sorting the
+    * collected (pos, enc) structs.
     */
-  def unigramEncode(spark: SparkSession, sfDir: String): DataFrame = {
-    val (_, seg) = cachedTraining(spark, sfDir)
+  private[graft] def encodeDocs(spark: SparkSession, sfDir: String,
+      seg: DataFrame, enc: Column): DataFrame = {
     val segStr = seg.select(col("word"),
-      size(col("pieces")).cast("long").as("np"),
-      array_join(col("pieces"), "_").as("enc"))
-    val docWords = Tables.documents(spark, sfDir)
-      .select(col("doc_id"),
-        posexplode(split(TextOps.normText(col("text")), " "))
-          .as(Seq("pos", "word")))
-      .filter(col("word") =!= "" && length(col("word")) <= MaxWordLen)
-    docWords.join(segStr, "word")
+      size(col("pieces")).cast("long").as("np"), enc.as("enc"))
+    qualifyingWords(Tables.documents(spark, sfDir), Seq(col("doc_id")),
+        withPos = true)
+      .join(segStr, "word")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
         sum(col("np")).as("n_pieces"),
@@ -226,14 +248,22 @@ object UnigramTrain {
     * segmentation, per language (the `bpe_fertility` counterpart for
     * the other tokenizer family): how many units the tokenizer spends
     * per word of each language — THE publishable tokenizer-quality
-    * number. Fertility at 4 dp via the corpus_report exact-integer
-    * rounding trick (no float division on the hash path).
+    * number.
     */
   def unigramFertility(spark: SparkSession, sfDir: String): DataFrame = {
     val (_, seg) = cachedTraining(spark, sfDir)
-    val np = seg.select(col("word"), size(col("pieces")).as("np"))
-    langWordCounts(spark, sfDir)
-      .join(broadcast(np), "word")
+    fertility(langWordCounts(spark, sfDir),
+      broadcast(seg.select(col("word"), size(col("pieces")).as("np"))))
+  }
+
+  /** Per-language fertility of (lang, word, wfl) word counts under a
+    * (word, np) piece-count frame: words, pieces and pieces-per-word at
+    * 4 dp via the corpus_report exact-integer rounding trick (no float
+    * division on the hash path).
+    */
+  private[graft] def fertility(langWords: DataFrame,
+      np: DataFrame): DataFrame =
+    langWords.join(np, "word")
       .groupBy(col("lang"))
       .agg(sum(col("wfl")).as("n_words"),
         sum(col("np").cast("long") * col("wfl")).as("n_pieces"))
@@ -241,5 +271,4 @@ object UnigramTrain {
         (expr("(n_pieces * 20000 + n_words) div (2 * n_words)")
           .cast("double") / 10000).as("fertility"))
       .orderBy(col("lang").asc)
-  }
 }

@@ -20,12 +20,14 @@ import graft.sources.Tables
   * the one corpus-proportional stage is the (word, wf) aggregate;
   * every merge iteration runs over the Heaps-sublinear distinct-word
   * frame (Round16Probe: CONSTANT on the saturated fixture while
-  * tokens grow 10×). Each of the k iterations is TWO keyed aggregates
-  * (unit counts + adjacent-pair counts, both wf-weighted) and a 1-row
-  * bounded collect for the argmax; the merge applies via the
-  * boundary-flanked `replace` ([[BpeTrain]]'s engine-exact
-  * re-segmentation machinery, reused verbatim at char granularity —
-  * normText chars can never contain the control-char markers).
+  * tokens grow 10×). The iterations run in [[BpeTrain.mergeLoop]] (its
+  * engine-exact boundary-flanked re-segmentation, here at char
+  * granularity — normText chars can never contain the control-char
+  * markers); this trainer supplies only the score: TWO keyed
+  * aggregates (unit counts + adjacent-pair counts, both wf-weighted)
+  * ranked for the loop's 1-row argmax collect. The word pass, the
+  * per-doc encode and the fertility tail are [[UnigramTrain]]'s
+  * shared ones.
   *
   * Determinism (SURVEY §5.3): the score is exact fixed-point —
   * score_fp = (c_ab · 10¹²) div (c_a · c_b) — ties broken (c DESC,
@@ -47,18 +49,22 @@ object WordpieceTrain {
   private[graft] val MergeJ = BpeTrain.MergeJ
   private[graft] val ScoreScale = 1000000000000L // 1e12 fixed point
   private[graft] val DefaultK = 6
-  private[graft] val MaxWordLen = 24 // the unigram word qualification
 
   /** Memo of a finished training — (merge table rows, final
-    * (word, wf, s) state frame — checkpointed) keyed by k:
-    * train/encode/fertility are three views of ONE training.
+    * (word, wf, s) state frame — checkpointed, the learned vocabulary)
+    * keyed by k: train/encode/fertility are three views of ONE
+    * training, and the encoders read the vocabulary without a job.
     */
-  private val trainMemo = graft.Memo[
-    (Seq[(Int, String, String, Long, Long, Long, Long)], DataFrame)]()
+  private val trainMemo = graft.Memo[(Seq[(Int, String, String, Long,
+    Long, Long, Long)], DataFrame, Seq[String])]()
 
   private def cachedTraining(spark: SparkSession, sfDir: String, k: Int)
-      : (Seq[(Int, String, String, Long, Long, Long, Long)], DataFrame) =
-    trainMemo(spark, sfDir, k)(trainWords(wordCounts(spark, sfDir), k))
+      : (Seq[(Int, String, String, Long, Long, Long, Long)], DataFrame,
+        Seq[String]) =
+    trainMemo(spark, sfDir, k) {
+      val (merges, st) = trainWords(wordCounts(spark, sfDir), k)
+      (merges, st, vocabOf(merges, st))
+    }
 
   /** Bench-warmup hook (the warmBpe/warmUnigram discipline): the one
     * memoized training feeds three timed views; its cost reports as
@@ -73,11 +79,12 @@ object WordpieceTrain {
   /** ONE corpus pass: the qualifying distinct-word frequency table. */
   private[graft] def wordCounts(spark: SparkSession,
       sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .select(explode(split(TextOps.normText(col("text")), " "))
-        .as("word"))
-      .filter(col("word") =!= "" && length(col("word")) <= MaxWordLen)
+    UnigramTrain.qualifyingWords(Tables.documents(spark, sfDir), Nil)
       .groupBy(col("word")).agg(count(lit(1)).as("wf"))
+
+  /** The chars of word `w`, in order. */
+  private def charsOf(w: Column): Column =
+    transform(sequence(lit(1), length(w)), j => w.substr(j, lit(1)))
 
   /** The k-iteration likelihood-merge loop over an explicit (word, wf)
     * frame — the planted-corpus harness for WordpieceSpec. Returns
@@ -86,34 +93,15 @@ object WordpieceTrain {
     */
   private[graft] def trainWords(words: DataFrame, k: Int)
       : (Seq[(Int, String, String, Long, Long, Long, Long)], DataFrame) = {
-    val ss = Sep + Sep
-    var st = words
-      .select(col("word"), col("wf"),
-        concat(lit(ss), array_join(transform(
-          sequence(lit(1), length(col("word"))),
-          j => col("word").substr(j, lit(1))), ss), lit(ss)).as("s"))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable
-      .ListBuffer[(Int, String, String, Long, Long, Long, Long)]()
-    val unitsOf: Column =
-      filter(split(col("s"), Sep), x => x =!= lit(""))
-    var i = 1
-    var exhausted = false
-    while (i <= k && !exhausted) {
-      val base = st.select(col("wf"), unitsOf.as("t"))
+    val (top, st) = BpeTrain.mergeLoop(
+      words.select(col("word"), col("wf"), charsOf(col("word")).as("u")),
+      Seq("word", "wf"), k) { (base, pairs) =>
       // wf-weighted unit counts — the likelihood denominator
       val uc = base
         .select(col("wf"), explode(col("t")).as("u"))
         .groupBy(col("u")).agg(sum(col("wf")).as("c"))
       // wf-weighted adjacent-pair counts — the numerator
-      val top = base
-        .filter(size(col("t")) >= 2)
-        .select(col("wf"), explode(expr(
-          "transform(sequence(1, size(t) - 1), " +
-            "j -> named_struct('a', element_at(t, j), " +
-            "'b', element_at(t, j + 1)))")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("wf")).as("c"))
+      pairs.groupBy(col("a"), col("b")).agg(sum(col("wf")).as("c"))
         .join(uc.select(col("u").as("a"), col("c").as("ua")), Seq("a"))
         .join(uc.select(col("u").as("b"), col("c").as("ub")), Seq("b"))
         .select(col("a"), col("b"), col("c"), col("ua"), col("ub"),
@@ -124,46 +112,32 @@ object WordpieceTrain {
             "(CAST(ua AS DECIMAL(38,0)) * ub)").as("score_fp"))
         .orderBy(col("score_fp").desc, col("c").desc,
           col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true // all words fully merged
-      else {
-        val r = top(0)
-        val (a, b) = (r.getString(0), r.getString(1))
-        merges += ((i, a, b, r.getLong(2), r.getLong(3), r.getLong(4),
-          r.getLong(5)))
-        val prev = st
-        st = st
-          .withColumn("s", call_function("replace", col("s"),
-            lit(Sep + a + ss + b + Sep), lit(Sep + a + MergeJ + b + Sep)))
-          .localCheckpoint(true)
-        GraphOps.unpersistCheckpoint(prev)
-        i += 1
-      }
     }
-    (merges.toSeq, st)
+    (top.zipWithIndex.map { case (r, i) =>
+      (i + 1, r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5))
+    }, st)
   }
 
   /** The learned vocabulary: every corpus character plus the k merged
     * spans — bounded (alphabet + k), the bounded-collect class. The
     * greedy encoder and its oracle both read exactly this set.
     */
-  private def vocabOf(spark: SparkSession, sfDir: String, k: Int)
-      : Seq[String] = {
-    val (merges, st) = cachedTraining(spark, sfDir, k)
+  private def vocabOf(
+      merges: Seq[(Int, String, String, Long, Long, Long, Long)],
+      st: DataFrame): Seq[String] = {
     // single chars come from the WORDS, not the final state: a char
     // absorbed into merges in every occurrence would vanish from the
     // state's units, and the greedy fold must stay TOTAL (some vocab
     // piece matches at every position)
-    val chars = st
-      .select(explode(transform(sequence(lit(1), length(col("word"))),
-        j => col("word").substr(j, lit(1)))).as("u"))
+    val chars = st.select(explode(charsOf(col("word"))).as("u"))
       .distinct().collect().map(_.getString(0)).toSeq
     (chars ++ merges.map(m => (m._2 + m._3).replace(MergeJ, ""))).distinct
   }
 
   def wordpieceTrain(spark: SparkSession, sfDir: String,
       k: Int = DefaultK): DataFrame = {
-    val (merges, _) = cachedTraining(spark, sfDir, k)
+    val (merges, _, _) = cachedTraining(spark, sfDir, k)
     import spark.implicits._
     merges.map { case (step, a, b, c, ua, ub, s) =>
       (step, a.replace(MergeJ, ""), b.replace(MergeJ, ""), c, ua, ub, s)
@@ -208,60 +182,28 @@ object WordpieceTrain {
     */
   private def segFrame(spark: SparkSession, sfDir: String,
       k: Int): DataFrame = {
-    val vocab = vocabOf(spark, sfDir, k)
-    val (_, st) = cachedTraining(spark, sfDir, k)
+    val (_, st, vocab) = cachedTraining(spark, sfDir, k)
     st.select(col("word"), col("wf"),
       greedyPieces(col("word"), vocab).as("pieces"))
   }
 
   /** `wordpiece_encode` — the inference half: per-doc word count,
     * piece count, and the encoded surface with `##` continuation
-    * marks, reading order preserved. The corpus joins the
-    * DISTINCT-WORD segmentation frame KEYED on word.
+    * marks, reading order preserved ([[UnigramTrain.encodeDocs]]).
     */
   def wordpieceEncode(spark: SparkSession, sfDir: String,
-      k: Int = DefaultK): DataFrame = {
-    val seg = segFrame(spark, sfDir, k)
-      .select(col("word"), size(col("pieces")).cast("long").as("np"),
-        array_join(transform(col("pieces"),
-          (p, j) => when(j === 0, p).otherwise(concat(lit("##"), p))),
-          "_").as("enc"))
-    val dw = Tables.documents(spark, sfDir)
-      .select(col("doc_id"),
-        posexplode(split(TextOps.normText(col("text")), " "))
-          .as(Seq("j", "word")))
-      .filter(col("word") =!= "" && length(col("word")) <= MaxWordLen)
-    dw.join(seg, Seq("word"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_words"), sum(col("np")).as("n_pieces"),
-        array_join(transform(array_sort(collect_list(
-          struct(col("j"), col("enc")))), x => x.getField("enc")), " ")
-          .as("encoded"))
-      .orderBy(col("doc_id").asc)
-  }
+      k: Int = DefaultK): DataFrame =
+    UnigramTrain.encodeDocs(spark, sfDir, segFrame(spark, sfDir, k),
+      array_join(transform(col("pieces"),
+        (p, j) => when(j === 0, p).otherwise(concat(lit("##"), p))), "_"))
 
   /** `wordpiece_fertility` — per-language pieces-per-word (the
-    * dashboard number; the bpe_fertility/unigram_fertility shape):
-    * wf-weighted piece totals from the same memoized training, 4dp
-    * half-up fixed-point ratio.
+    * bpe_fertility/unigram_fertility shape): wf-weighted piece totals
+    * from the same memoized training ([[UnigramTrain.fertility]]).
     */
   def wordpieceFertility(spark: SparkSession, sfDir: String,
-      k: Int = DefaultK): DataFrame = {
-    val np = segFrame(spark, sfDir, k)
-      .select(col("word"), size(col("pieces")).cast("long").as("np"))
-    val lw = Tables.documents(spark, sfDir)
-      .select(col("lang"),
-        explode(split(TextOps.normText(col("text")), " ")).as("word"))
-      .filter(col("word") =!= "" && length(col("word")) <= MaxWordLen)
-      .groupBy(col("lang"), col("word"))
-      .agg(count(lit(1)).as("wfl"))
-    lw.join(np, Seq("word"))
-      .groupBy(col("lang"))
-      .agg(sum(col("wfl")).as("n_words"),
-        sum(col("np") * col("wfl")).as("n_pieces"))
-      .select(col("lang"), col("n_words"), col("n_pieces"),
-        (expr("(n_pieces * 20000 + n_words) div (2 * n_words)")
-          .cast("double") / 10000).as("fertility"))
-      .orderBy(col("lang").asc)
-  }
+      k: Int = DefaultK): DataFrame =
+    UnigramTrain.fertility(UnigramTrain.langWordCounts(spark, sfDir),
+      segFrame(spark, sfDir, k)
+        .select(col("word"), size(col("pieces")).as("np")))
 }

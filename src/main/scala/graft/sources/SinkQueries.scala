@@ -658,14 +658,8 @@ object SinkQueries {
     val delta = LakeIO.changes(spark, out, 0, 1, Seq("doc_id"))
       .filter(col("_change_type") === "insert")
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
-    val existing = LakeIO.loadVersion(spark, out, Some(0))
-      .select(sha2(graft.operators.TextOps.normText(col("text")), 256)
-        .as("h")).distinct()
-    delta
-      .withColumn("h",
-        sha2(graft.operators.TextOps.normText(col("text")), 256))
-      .join(existing, Seq("h"), "left_anti")
-      .select(col("doc_id"), col("lang"), col("source"))
+    graft.operators.TextOps.newContent(delta, graft.operators.TextOps
+      .contentHashes(LakeIO.loadVersion(spark, out, Some(0))))
       .orderBy(col("doc_id").asc)
   }
 

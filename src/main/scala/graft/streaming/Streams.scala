@@ -916,13 +916,8 @@ object Streams {
     * the batch operator is StreamingSpec-asserted.
     */
   def incrementalDedupStream(newDocs: DataFrame,
-      existingHashes: DataFrame): DataFrame = {
-    import graft.operators.TextOps.normText
-    newDocs
-      .withColumn("h", sha2(normText(col("text")), 256))
-      .join(existingHashes, Seq("h"), "left_anti")
-      .select(col("doc_id"), col("lang"), col("source"))
-  }
+      existingHashes: DataFrame): DataFrame =
+    graft.operators.TextOps.newContent(newDocs, existingHashes)
 
   /** Documents as a micro-batch file stream (streaming reads need an
     * explicit schema; the glob pins the one fixture file).

@@ -94,6 +94,17 @@ class BpeTrainSpec extends AnyFunSuite {
       s"greedy residue pairs diverge: $got")
   }
 
+  test("bpeTrainDocs gives its final state's checkpoint blocks back: " +
+      "storage settles to where it started") {
+    val sc = spark.sparkContext
+    val before = SpecUtil.settledStorage(sc)
+    BpeTrain.bpeTrainDocs(
+      graft.sources.Tables.documents(spark, TestSpark.sf), 2).collect()
+    val after = SpecUtil.storageDownTo(sc, before)
+    assert(after <= before,
+      s"bpeTrainDocs left $after B stored (started at $before B)")
+  }
+
   test("single-token and empty docs exhaust cleanly") {
     assert(run(Seq(Seq("only"), Seq("one"), Seq()), 3).isEmpty)
     val got = run(Seq(Seq("x", "y"), Seq("solo")), 5)

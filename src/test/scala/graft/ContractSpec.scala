@@ -263,6 +263,52 @@ class ContractSpec extends AnyFunSuite {
     assert(found.exists(_._2), "VersionLog no longer names the layout")
   }
 
+  test("the text-corpus kit is written once: the quality gate, keep-first " +
+      "dedup, content-hash anti-join, per-source pack, epoch copies, merge " +
+      "loop, unit split, word pass, encode reassembly and fertility tail " +
+      "appear only inside their helpers") {
+    val text = "graft/operators/TextOps.scala"
+    val bpe = "graft/operators/BpeTrain.scala"
+    val uni = "graft/operators/UnigramTrain.scala"
+    // a needle with no helper must not appear at all
+    val rules = Seq(
+      "between(2.0, 12.0)" -> Seq(text -> "def qualityGate("),
+      "partitionBy(col(\"h\"))" -> Seq(text -> "def keepFirst("),
+      "partitionBy(col(\"text_hash\"))" -> Nil,
+      "Seq(\"h\"), \"left_anti\")" -> Seq(text -> "def newContent("),
+      "pack_offset" -> Seq(text -> "def packBySource("),
+      "e_pct" -> Seq(text -> "def epochCopies("),
+      "size(t) - 1" -> Seq(bpe -> "def mergeLoop("),
+      "MergeJ + b + Sep" -> Seq(bpe -> "def mergeLoop("),
+      "split(col(\"s\"), Sep)" -> Seq(bpe -> "def units"),
+      "val MaxWordLen" -> Seq(uni -> "object UnigramTrain"),
+      "length(col(\"word\")) <= MaxWordLen" ->
+        Seq(uni -> "def qualifyingWords("),
+      "col(\"enc\")))" -> Seq(uni -> "def encodeDocs("),
+      "20000 + n_words" -> Seq(uni -> "def fertility("))
+    // SparkEntry's oracle SQL spells the same rules in DuckDB's dialect
+    val found = rules.map { case (needle, bodies) =>
+      (needle, bodies, codeLines(needle, bodies)
+        .filterNot(_._1.startsWith("graft/SparkEntry.scala:")))
+    }
+    val offenders = found.flatMap { case (needle, _, at) =>
+      at.collect { case (line, false) => s"$line $needle" }
+    }
+    assert(offenders.isEmpty, "call the text-corpus helper instead of " +
+      s"re-copying it:\n${offenders.mkString("\n")}")
+    found.foreach { case (needle, bodies, at) =>
+      assert(bodies.isEmpty || at.exists(_._2),
+        s"no helper holds $needle any more")
+    }
+  }
+
+  test("no window frame in src/main runs currentRow → unboundedFollowing " +
+      "(Spark re-scans it for every row: quadratic in the partition)") {
+    val found = codeLines("currentRow, Window.unboundedFollowing", Nil)
+    assert(found.isEmpty, "reverse the order and use an unboundedPreceding " +
+      s"→ currentRow frame: ${found.map(_._1).mkString(", ")}")
+  }
+
   test("no catch-all Throwable handler in src/main outside VersionLog.publish's " +
       "abort-and-rethrow (failures are caught as NonFatal)") {
     val found = codeLines(": Throwable =>",

@@ -528,42 +528,28 @@ class LakeSpec extends AnyFunSuite {
     assert(Lake.clearCaches() >= 2) // 1 label + 1 pair entry
 
     // every release kind gives its storage back: a persisted frame
-    // (labels + pairs), checkpointed frames (the bpe and unigram
-    // trainings, the phash frame) and the co-edge memo (graph_triangles)
+    // (labels + pairs), checkpointed frames (the bpe, unigram and
+    // wordpiece trainings, the phash frame) and the co-edge memo
+    // (graph_triangles)
     val sc = spark.sparkContext
-    def storageBytes(): Long =
-      sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
     def held: String = sc.getRDDStorageInfo
       .filter(i => i.memSize + i.diskSize > 0)
       .map(i => s"rdd ${i.id} ${i.name} ${i.memSize + i.diskSize} B " +
         i.callSite).mkString("; ")
-    // unpersisting is asynchronous: poll until storage stops moving
-    def settled(): Long = {
-      var last = -1L
-      var now = storageBytes()
-      var tries = 0
-      while (now != last && tries < 50) {
-        Thread.sleep(200); last = now; now = storageBytes(); tries += 1
-      }
-      now
-    }
-    val before = settled()
+    val before = SpecUtil.settledStorage(sc)
     val sf = TestSpark.sf
     MinHashDedup.dedupCluster(spark, sf, threshold = 0.2).count()
     graft.operators.BpeTrain.bpeTrain(spark, sf).collect()
     graft.operators.UnigramTrain.unigramTrain(spark, sf).collect()
+    graft.operators.WordpieceTrain.wordpieceTrain(spark, sf).collect()
     graft.operators.Multimodal.phashPairs(spark, sf).collect()
     graft.operators.GraphOps.graphTriangles(spark, sf).collect()
-    assert(storageBytes() > before, "the builds stored nothing")
-    val built = 6 // label + pair + bpe + unigram + phash + co-edge
+    assert(SpecUtil.storageBytes(sc) > before, "the builds stored nothing")
+    // label + pair + bpe + unigram + wordpiece + phash + co-edge
+    val built = 7
     val released = Lake.clearCaches()
     assert(released >= built, s"released $released of $built entries")
-    // poll until the releases land (or give up after 10 s)
-    var after = storageBytes()
-    var waits = 0
-    while (after > before && waits < 50) {
-      Thread.sleep(200); after = storageBytes(); waits += 1
-    }
+    val after = SpecUtil.storageDownTo(sc, before)
     assert(after <= before, s"storage still held after clear: $held")
   }
 

@@ -12,6 +12,35 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   */
 object SpecUtil {
 
+  /** Bytes the context's cached RDDs hold (memory + disk). */
+  def storageBytes(sc: org.apache.spark.SparkContext): Long =
+    sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
+
+  /** The storage level once it stops moving (unpersisting is
+    * asynchronous): polled every 200 ms, at most 50 times.
+    */
+  def settledStorage(sc: org.apache.spark.SparkContext): Long = {
+    var last = -1L
+    var now = storageBytes(sc)
+    var tries = 0
+    while (now != last && tries < 50) {
+      Thread.sleep(200); last = now; now = storageBytes(sc); tries += 1
+    }
+    now
+  }
+
+  /** Polls until storage is back at or below `level` (or 10 s have
+    * passed); returns the last reading.
+    */
+  def storageDownTo(sc: org.apache.spark.SparkContext, level: Long): Long = {
+    var now = storageBytes(sc)
+    var waits = 0
+    while (now > level && waits < 50) {
+      Thread.sleep(200); now = storageBytes(sc); waits += 1
+    }
+    now
+  }
+
   /** The sample_hash md5-prefix rank (8-hex form), reimplemented
     * independently of the library (java MessageDigest, not Spark
     * functions) for reference models.

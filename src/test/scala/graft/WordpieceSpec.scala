@@ -67,6 +67,28 @@ class WordpieceSpec extends AnyFunSuite {
     }
   }
 
+  test("with the training memo warm, constructing wordpiece_encode and " +
+      "wordpiece_fertility starts no Spark job (the vocabulary is memoized)") {
+    val sf = TestSpark.sf
+    WordpieceTrain.wordpieceTrain(spark, sf).collect() // warm the memo
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graft.Instrument.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      WordpieceTrain.wordpieceEncode(spark, sf)
+      WordpieceTrain.wordpieceFertility(spark, sf)
+      org.apache.spark.graft.Instrument.drain(sc)
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get === 0, s"construction started ${jobs.get} job(s)")
+  }
+
   test("fixture training: merges are non-trivial, encode covers every " +
       "qualifying doc, fertility >= 1 per language") {
     val sf = TestSpark.sf
