@@ -98,20 +98,11 @@ object MinHashDedup {
     * band hash collide. bands × rowsPerBand = nPerm.
     */
   def candidatePairs(docs: DataFrame, nPerm: Int, bands: Int): DataFrame = {
-    val (withSh, bandedRaw) = sigStore(docs, nPerm, bands)
+    val (withSh, banded) = sigStore(docs, nPerm, bands)
     // band-join and pair-dedup on bare (doc_id) keys: the shingle arrays
     // never ride through the join shuffle or the distinct — they are
     // attached to the (much smaller) deduped pair set afterwards
-    val banded = bandedRaw
-      // one Exchange both self-join sides reuse: the final signature
-      // aggregation + band projection run once, and the (band,bhash)
-      // join shuffles nothing further
-      .repartition(col("band"), col("bhash"))
-    val pairs = banded.select(col("band"), col("bhash"),
-        col("doc_id").as("a_id"))
-      .join(banded.select(col("band"), col("bhash"),
-        col("doc_id").as("b_id")), Seq("band", "bhash"))
-      .filter(col("a_id") < col("b_id"))
+    val pairs = Blocking.selfPairs(banded, Seq("band", "bhash"), "doc_id")
       .select(col("a_id"), col("b_id"))
       .distinct()
     val sh = withSh.select(col("doc_id"), col("sh"))
@@ -295,21 +286,9 @@ object MinHashDedup {
       storeBands: DataFrame, delta: DataFrame,
       nPerm: Int = 32, bands: Int = 16,
       threshold: Double = 0.5): DataFrame = {
-    val (deltaSh, deltaBandsRaw) = sigStore(delta, nPerm, bands)
-    // ONE Exchange for the delta's band keys, reused by the store join
-    // AND both sides of the intra-delta self-join
-    val deltaBands = deltaBandsRaw.repartition(col("band"), col("bhash"))
-    def nSide = deltaBands.select(col("band"), col("bhash"),
-      col("doc_id").as("n_id"))
-    val candStore = nSide
-      .join(storeBands.select(col("band"), col("bhash"),
-        col("doc_id").as("o_id")), Seq("band", "bhash"))
-    val candIntra = nSide
-      .join(deltaBands.select(col("band"), col("bhash"),
-        col("doc_id").as("o_id")), Seq("band", "bhash"))
-      .filter(col("o_id") < col("n_id")) // only EARLIER delta docs drop
-    val cands = candStore.select(col("n_id"), col("o_id"))
-      .union(candIntra.select(col("n_id"), col("o_id")))
+    val (deltaSh, deltaBands) = sigStore(delta, nPerm, bands)
+    val cands = Blocking.seenPairs(storeBands, deltaBands,
+        Seq("band", "bhash"), "doc_id")
       .distinct()
     // exact-verify on the candidate set only; the o-side shingles come
     // from store ∪ delta (an earlier delta doc is a seen doc too)
@@ -469,22 +448,13 @@ object MinHashDedup {
       .filter(col("df") >
         least(col("src_n") * maxDfFrac, lit(maxDfAbs.toDouble)))
       .select(col("source"), col("h"))
-    // Materialize ONE Exchange on the join key right after the cap:
-    // `kept` is otherwise a narrow subtree (scan → explode → anti-join)
-    // that each of its three consumers (sizes, both self-join sides)
-    // would recompute from the parquet scan — 15 FileScans in the
-    // executed plan before this line. With the explicit shuffle, the
-    // consumers' subtrees are canonically identical up to the Exchange,
-    // ReuseExchange dedups them, and the (source,h) self-join below
-    // needs no further shuffle at all: one explode pass total.
+    // the sizes read the (source, h) Exchange the self-join reuses, so
+    // scan → explode → anti-join runs once for all three consumers
     val kept = tok.join(broadcast(hot), Seq("source", "h"), "left_anti")
       .repartition(col("source"), col("h"))
     val sizes = kept.groupBy(col("source"), col("doc_id"))
       .agg(count(lit(1)).as("n_sh"))
-    val inter = kept.select(col("source"), col("h"), col("doc_id").as("a_id"))
-      .join(kept.select(col("source"), col("h"), col("doc_id").as("b_id")),
-        Seq("source", "h"))
-      .filter(col("a_id") < col("b_id"))
+    val inter = Blocking.selfPairs(kept, Seq("source", "h"), "doc_id")
       .groupBy(col("source"), col("a_id"), col("b_id"))
       .agg(count(lit(1)).as("n_inter"))
     inter

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.Tables
@@ -133,7 +133,7 @@ object Multimodal {
   /** 2^i bit weights for the 62 packed gradient bits (1-indexed via
     * element_at: weights(i+1) = 1L << i).
     */
-  private def bitWeights: org.apache.spark.sql.Column =
+  private def bitWeights: Column =
     array((0 until PhashSegs - 1).map(i => lit(1L << i)): _*)
 
   /** The 63 per-segment codepoint sums as ONE array column (r19 opt:
@@ -143,16 +143,14 @@ object Multimodal {
     * row work at every scale; as a higher-order `transform` the tree
     * is ~30 nodes and the per-row arithmetic is unchanged).
     */
-  private def segSums(s: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
+  private def segSums(s: Column): Column =
     transform(sequence(lit(0), lit(PhashSegs - 1)),
       b => (1 to PhashSegChars)
         .map(k => ascii(s.substr(b * PhashSegChars + lit(k), lit(1)))
           .cast("long"))
         .reduce(_ + _))
 
-  private[graft] def phashExpr(s: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
+  private[graft] def phashExpr(s: Column): Column =
     // one fold over the segment array: bit i = seg_i > seg_{i+1},
     // weight 2^i — the accumulator carries (prev segment, index, acc)
     // so the array is evaluated exactly once per row
@@ -227,21 +225,12 @@ object Multimodal {
       maxHamming)
 
   private def phashPairsOf(px: DataFrame, maxHamming: Int): DataFrame = {
-    // 4 × 16-bit bands over the 62-bit phash (band 3 carries 14 bits);
-    // pigeonhole: hamming <= 3 ⇒ at least one band equal
+    // 4 × 16-bit bands over the 62-bit phash (band 3 carries 14 bits)
     val banded = px.select(col("asset_id"), col("phash"),
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("phash"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))
-          .as(Seq("band", "bval")))
-      .repartition(col("band"), col("bval"))
-    banded.select(col("band"), col("bval"),
-        col("asset_id").as("a_id"), col("phash").as("a_ph"))
-      .join(banded.select(col("band"), col("bval"),
-        col("asset_id").as("b_id"), col("phash").as("b_ph")),
-        Seq("band", "bval"))
-      .filter(col("a_id") < col("b_id"))
+      Blocking.bands16(col("phash")))
+    Blocking.selfPairs(banded, BandKeys, "asset_id", Seq("phash"))
       .select(col("a_id"), col("b_id"),
-        bit_count(col("a_ph").bitwiseXOR(col("b_ph"))).as("hamming"))
+        hamming(col("a_phash"), col("b_phash")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
       .orderBy(col("a_id").asc, col("b_id").asc)
@@ -293,28 +282,12 @@ object Multimodal {
     phashIncrementalHashed(phashOf(store), phashOf(delta), maxHamming)
 
   private def phashIncrementalHashed(storePx: DataFrame,
-      deltaPx0: DataFrame, maxHamming: Int): DataFrame = {
+      deltaPx: DataFrame, maxHamming: Int): DataFrame = {
     def bands(px: DataFrame) = px.filter(col("phash").isNotNull)
-      .select(col("asset_id"), col("phash"),
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("phash"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))
-          .as(Seq("band", "bval")))
-    val deltaPx = deltaPx0
-    val deltaBands = bands(deltaPx).repartition(col("band"), col("bval"))
-    def nSide = deltaBands.select(col("band"), col("bval"),
-      col("asset_id").as("n_id"), col("phash").as("n_ph"))
-    val candStore = nSide.join(bands(storePx)
-        .select(col("band"), col("bval"),
-          col("phash").as("o_ph")), Seq("band", "bval"))
-    val candIntra = nSide.join(deltaBands
-        .select(col("band"), col("bval"), col("asset_id").as("o_id"),
-          col("phash").as("o_ph")), Seq("band", "bval"))
-      .filter(col("o_id") < col("n_id")) // only EARLIER delta assets drop
-      .select(col("band"), col("bval"), col("n_id"), col("n_ph"),
-        col("o_ph"))
-    val matched = candStore.unionByName(candIntra)
-      .filter(bit_count(col("n_ph").bitwiseXOR(col("o_ph")))
-        <= maxHamming)
+      .select(col("asset_id"), col("phash"), Blocking.bands16(col("phash")))
+    val matched = Blocking.seenPairs(bands(storePx), bands(deltaPx),
+        BandKeys, "asset_id", Seq("phash"))
+      .filter(hamming(col("n_phash"), col("o_phash")) <= maxHamming)
       .select(col("n_id")).distinct()
     deltaPx.join(matched, deltaPx("asset_id") === col("n_id"),
         "left_anti")
@@ -363,6 +336,25 @@ object Multimodal {
     // sides — must not re-pay the fingerprint pass per reference)
     signatureContainmentPairs(videoFrames(assets), maxHamming)
 
+  private val BandKeys = Seq("band", "bval")
+
+  /** Hamming distance of two 64-bit fingerprints. */
+  private def hamming(a: Column, b: Column): Column = {
+    bit_count(a.bitwiseXOR(b))
+  }
+
+  /** (asset_id, fph, band, bval) of a signature frame. */
+  private def frameBands(frames: DataFrame): DataFrame = {
+    frames.select(col("asset_id"), col("fph"), Blocking.bands16(col("fph")))
+  }
+
+  /** Every band-colliding frame pair of a signature frame, with both
+    * fingerprints (a_fph, b_fph); one row per shared band.
+    */
+  private def framePairs(frames: DataFrame): DataFrame = {
+    Blocking.selfPairs(frameBands(frames), BandKeys, "asset_id", Seq("fph"))
+  }
+
   /** Shared tail of the signature-set dedup tiers (video + audio):
     * per-asset fingerprint-set sizes, the lossless 4×16-bit band join
     * (pigeonhole at Hamming ≤ `maxHamming` ≤ 3), the xor+popcount
@@ -373,18 +365,8 @@ object Multimodal {
   private def signatureContainmentPairs(frames: DataFrame,
       maxHamming: Int): DataFrame = {
     val sizes = frames.groupBy(col("asset_id")).agg(count(lit(1)).as("n"))
-    val banded = frames.select(col("asset_id"), col("fph"),
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("fph"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))
-          .as(Seq("band", "bval")))
-      .repartition(col("band"), col("bval"))
-    val matches = banded.select(col("band"), col("bval"),
-        col("asset_id").as("a_id"), col("fph").as("a_fph"))
-      .join(banded.select(col("band"), col("bval"),
-        col("asset_id").as("b_id"), col("fph").as("b_fph")),
-        Seq("band", "bval"))
-      .filter(col("a_id") < col("b_id") &&
-        bit_count(col("a_fph").bitwiseXOR(col("b_fph"))) <= maxHamming)
+    val matches = framePairs(frames)
+      .filter(hamming(col("a_fph"), col("b_fph")) <= maxHamming)
       .select(col("a_id"), col("b_id"), col("a_fph"), col("b_fph"))
       .distinct()
     matches.groupBy(col("a_id"), col("b_id"))
@@ -416,8 +398,8 @@ object Multimodal {
     * integer arithmetic on codepoints, DuckDB-replicable. Flat codegen
     * tree (126 explicit segment sums, no higher-order functions).
     */
-  private[graft] def hkFingerprintExpr(cur: org.apache.spark.sql.Column,
-      prev: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  private[graft] def hkFingerprintExpr(cur: Column,
+      prev: Column): Column = {
     // same arithmetic as the flat form (bit i = (sc_i − sc_{i+1}) >
     // (sp_i − sp_{i+1}), weight 2^i), built like [[phashExpr]] as one
     // small higher-order tree: zip the two 63-long band-energy arrays
@@ -530,20 +512,9 @@ object Multimodal {
     */
   def multimodalAudioDedupCand(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val frames = corpusAudioFrames(spark, sfDir)
-    val banded = frames.select(col("asset_id"), col("fph"),
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("fph"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))
-          .as(Seq("band", "bval")))
-      .repartition(col("band"), col("bval"))
-    banded.select(col("band"), col("bval"),
-        col("asset_id").as("a_id"), col("fph").as("a_fph"))
-      .join(banded.select(col("band"), col("bval"),
-        col("asset_id").as("b_id"), col("fph").as("b_fph")),
-        Seq("band", "bval"))
-      .filter(col("a_id") < col("b_id"))
+    framePairs(corpusAudioFrames(spark, sfDir))
       .select(col("a_id"), col("b_id"),
-        bit_count(col("a_fph").bitwiseXOR(col("b_fph"))).as("hamming"))
+        hamming(col("a_fph"), col("b_fph")).as("hamming"))
       .distinct()
       .orderBy(col("a_id").asc, col("b_id").asc, col("hamming").asc)
   }
@@ -637,24 +608,11 @@ object Multimodal {
     */
   private def signatureIncremental(storeF: DataFrame, deltaF: DataFrame,
       deltaAssets: DataFrame, maxHamming: Int): DataFrame = {
-    def bands(f: DataFrame) = f.select(col("asset_id"), col("fph"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("fph"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))
-        .as(Seq("band", "bval")))
     def sizes(f: DataFrame) =
       f.groupBy(col("asset_id")).agg(count(lit(1)).as("n"))
-    val deltaBands = bands(deltaF).repartition(col("band"), col("bval"))
-    val nSide = deltaBands.select(col("band"), col("bval"),
-      col("asset_id").as("n_id"), col("fph").as("n_fph"))
-    val oSide = bands(storeF)
-      .select(col("band"), col("bval"), col("asset_id").as("o_id"),
-        col("fph").as("o_fph"), lit(false).as("o_delta"))
-      .unionByName(deltaBands
-        .select(col("band"), col("bval"), col("asset_id").as("o_id"),
-          col("fph").as("o_fph"), lit(true).as("o_delta")))
-    val matches = nSide.join(oSide, Seq("band", "bval"))
-      .filter((!col("o_delta") || col("o_id") < col("n_id")) &&
-        bit_count(col("n_fph").bitwiseXOR(col("o_fph"))) <= maxHamming)
+    val matches = Blocking.seenPairs(frameBands(storeF), frameBands(deltaF),
+        BandKeys, "asset_id", Seq("fph"))
+      .filter(hamming(col("n_fph"), col("o_fph")) <= maxHamming)
       .select(col("n_id"), col("o_id"), col("n_fph"), col("o_fph"))
       .distinct()
     val dropped = matches.groupBy(col("n_id"), col("o_id"))

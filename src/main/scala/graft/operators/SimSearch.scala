@@ -66,6 +66,14 @@ object SimSearch {
     round(dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4)
   }
 
+  /** [[cosSim]] of a near-duplicate pair whose sides are
+    * `<a>_emb`/`<a>_nrm` and `<b>_emb`/`<b>_nrm`.
+    */
+  private def pairCos(a: String, b: String): Column = {
+    round(dot(col(s"${a}_emb"), col(s"${b}_emb")) /
+      (col(s"${a}_nrm") * col(s"${b}_nrm")), 4)
+  }
+
   /** (query, corpus) candidate pairs → self-matches dropped, `cos_sim`
     * scored.
     */
@@ -2413,8 +2421,7 @@ object SimSearch {
       .select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
         l2norm(col("embedding")).as("b_nrm"))
     a.join(b, col("a_id") < col("b_id"))
-      .withColumn("cos_sim", round(
-        dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")), 4))
+      .withColumn("cos_sim", pairCos("a", "b"))
       .filter(col("cos_sim") >= threshold)
       .select(col("a_id"), col("b_id"), col("cos_sim"))
       .orderBy(col("a_id").asc, col("b_id").asc)
@@ -2655,50 +2662,26 @@ object SimSearch {
         struct(lit(b).as("bno"),
           shiftright(c, b * bitsPerBand).bitwiseAND(lit(mask)).as("bkey"))
       }: _*))
-    val verified =
-      if (carryVectors) {
-        val banded = emb
-          .select(col("vec_id"), col("embedding"),
-            l2norm(col("embedding")).as("nrm"),
-            lshBucket(col("embedding"), nBits).as("bucket"))
-          .withColumn("band", bandStructs(col("bucket")))
-          .select(col("band.bno").as("bno"), col("band.bkey").as("bkey"),
-            col("vec_id"), col("embedding"), col("nrm"))
-          // one Exchange both self-join sides reuse (single scan+LSH
-          // pass), and the (bno,bkey) join needs no further shuffle
-          .repartition(col("bno"), col("bkey"))
-        val a = banded.select(col("bno"), col("bkey"), col("vec_id").as("a_id"),
-          col("embedding").as("a_emb"), col("nrm").as("a_nrm"))
-        val b = banded.select(col("bno"), col("bkey"), col("vec_id").as("b_id"),
-          col("embedding").as("b_emb"), col("nrm").as("b_nrm"))
-        a.join(b, Seq("bno", "bkey"))
-          .filter(col("a_id") < col("b_id"))
-          .dropDuplicates("a_id", "b_id")
-      } else {
-        val banded = emb
-          .select(col("vec_id"),
-            lshBucket(col("embedding"), nBits).as("bucket"))
-          .withColumn("band", bandStructs(col("bucket")))
-          .select(col("band.bno").as("bno"), col("band.bkey").as("bkey"),
-            col("vec_id"))
-          .repartition(col("bno"), col("bkey")) // same reuse as above
-        val pairs = banded.select(col("bno"), col("bkey"),
-            col("vec_id").as("a_id"))
-          .join(banded.select(col("bno"), col("bkey"),
-            col("vec_id").as("b_id")), Seq("bno", "bkey"))
-          .filter(col("a_id") < col("b_id"))
-          .dropDuplicates("a_id", "b_id")
-        val v = emb.select(col("vec_id"), col("embedding"),
-          l2norm(col("embedding")).as("nrm"))
-        pairs
-          .join(v.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
-            col("nrm").as("a_nrm")), "a_id")
-          .join(v.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
-            col("nrm").as("b_nrm")), "b_id")
-      }
+    val vecs = emb.select(col("vec_id"), col("embedding").as("emb"),
+      l2norm(col("embedding")).as("nrm"))
+    // carried: the vectors ride through the band join and the pair
+    // dedup; not carried: bare id pairs dedup first and the vectors
+    // re-attach to the (smaller) deduped pair set
+    val carry = if (carryVectors) Seq("emb", "nrm") else Nil
+    val banded = vecs
+      .select((col("vec_id") +: carry.map(col)) :+
+        lshBucket(col("emb"), nBits).as("bucket"): _*)
+      .withColumn("band", bandStructs(col("bucket")))
+      .select(Seq(col("band.bno").as("bno"), col("band.bkey").as("bkey"),
+        col("vec_id")) ++ carry.map(col): _*)
+    val pairs = Blocking.selfPairs(banded, Seq("bno", "bkey"), "vec_id", carry)
+      .dropDuplicates("a_id", "b_id")
+    def side(p: String) = vecs.select(col("vec_id").as(s"${p}_id"),
+      col("emb").as(s"${p}_emb"), col("nrm").as(s"${p}_nrm"))
+    val verified = if (carryVectors) pairs else pairs
+      .join(side("a"), "a_id").join(side("b"), "b_id")
     verified
-      .withColumn("cos_sim", round(
-        dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")), 4))
+      .withColumn("cos_sim", pairCos("a", "b"))
       .filter(col("cos_sim") >= threshold)
       .select(col("a_id"), col("b_id"), col("cos_sim"))
       .orderBy(col("a_id").asc, col("b_id").asc)
@@ -2803,25 +2786,10 @@ object SimSearch {
   def semDedupIncrementalWithCodebook(store: DataFrame, delta: DataFrame,
       cb: Array[(Long, Array[Float], Double)],
       threshold: Double): DataFrame = {
-    val storeCells = ivfAssignCorpus(store, cb)
     val deltaCells = ivfAssignCorpus(delta, cb)
-      .repartition(col("cent_id"))
-    def side(cells: DataFrame, p: String, isStore: Boolean) =
-      cells.select(col("cent_id"),
-        col("c_id").as(s"${p}_id"), col("c_emb").as(s"${p}_emb"),
-        col("c_nrm").as(s"${p}_nrm"),
-        lit(isStore).as(s"${p}_store"))
-    val seen = side(storeCells, "o", isStore = true)
-      .union(side(deltaCells, "o", isStore = false))
-    val dropped = side(deltaCells, "n", isStore = false)
-      .join(seen, Seq("cent_id"))
-      // o is seen for n iff o is in the store (any id) or an EARLIER
-      // delta vector
-      .filter(col("o_store") || col("o_id") < col("n_id"))
-      .withColumn("cos_sim", round(
-        dot(col("n_emb"), col("o_emb")) / (col("n_nrm") * col("o_nrm")),
-        4))
-      .filter(col("cos_sim") >= threshold)
+    val dropped = Blocking.seenPairs(ivfAssignCorpus(store, cb), deltaCells,
+        Seq("cent_id"), "c_id", Seq("c_emb", "c_nrm"))
+      .filter(pairCos("n_c", "o_c") >= threshold)
       .select(col("n_id")).distinct()
     deltaCells.join(dropped, deltaCells("c_id") === dropped("n_id"),
         "left_anti")
@@ -2837,25 +2805,10 @@ object SimSearch {
   def semDedupWithCodebook(emb: DataFrame,
       codebook: Array[(Long, Array[Float], Double)],
       threshold: Double): DataFrame = {
-    // ONE cent_id Exchange reused by both pair-join sides (the
-    // dedupEmbeddingLsh banded-Exchange pattern) — without it the plan
-    // scanned AND argmax-assigned the corpus 3×. The anti-join left
-    // keeps its own narrow (c_id, cent_id) scan: column pruning
-    // specializes its subtree below the exchange, and a narrow
-    // re-scan beats forcing unpruned columns through the shuffle — a
-    // production SemDeDup materializes the assignment as an index
-    // artifact and pays it once regardless
     val cells = ivfAssignCorpus(emb, codebook)
-      .repartition(col("cent_id"))
-    val a = cells.select(col("cent_id"), col("c_id").as("a_id"),
-      col("c_emb").as("a_emb"), col("c_nrm").as("a_nrm"))
-    val b = cells.select(col("cent_id"), col("c_id").as("b_id"),
-      col("c_emb").as("b_emb"), col("c_nrm").as("b_nrm"))
-    val dropped = a.join(b, Seq("cent_id"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("cos_sim", round(
-        dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")), 4))
-      .filter(col("cos_sim") >= threshold)
+    val dropped = Blocking.selfPairs(cells, Seq("cent_id"), "c_id",
+        Seq("c_emb", "c_nrm"))
+      .filter(pairCos("a_c", "b_c") >= threshold)
       .select(col("b_id")).distinct()
     cells.join(dropped, cells("c_id") === dropped("b_id"), "left_anti")
       .select(col("c_id").as("vec_id"), col("cent_id"))

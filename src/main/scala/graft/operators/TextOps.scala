@@ -72,7 +72,7 @@ object TextOps {
     */
   def textStats(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
-      .withColumn("n_tokens", size(split(normText(col("text")), " ")))
+      .withColumn("n_tokens", wsTokens)
       .groupBy(col("source"), col("lang"))
       .agg(
         count(lit(1)).as("n_docs"),
@@ -92,7 +92,7 @@ object TextOps {
     Tables.documents(spark, sfDir)
       .select(
         col("doc_id"),
-        size(split(normText(col("text")), " ")).as("ws_tokens"),
+        wsTokens.as("ws_tokens"),
         (size(filter(split(col("text"), "[^a-zA-Z0-9]+"),
           t => length(t) > 0)) +
           length(regexp_replace(col("text"), "[a-zA-Z0-9 ]", "")))
@@ -156,6 +156,11 @@ object TextOps {
       .select(col("doc_id"), col("lang"), col("n_tokens"),
         col("mean_word_len"), col("alpha_ratio"), col("has_glue"))
       .orderBy(col("doc_id").asc)
+
+  /** The whitespace token count of the normalized `text` (an int). */
+  private def wsTokens: Column = {
+    size(split(normText(col("text")), " "))
+  }
 
   /** The quality gate: adds `t` (the normalized text), `n_tokens` and
     * `mean_word_len`, and keeps the documents inside the language
@@ -261,7 +266,7 @@ object TextOps {
   def packSequences(spark: SparkSession, sfDir: String,
       budget: Int = 512): DataFrame =
     packBySource(Tables.documents(spark, sfDir)
-      .withColumn("n_tok", size(split(normText(col("text")), " "))),
+      .withColumn("n_tok", wsTokens),
       "n_tok", budget)
 
   /** Per-source packing: within each source, documents in doc_id order
@@ -1346,7 +1351,7 @@ object TextOps {
   def mixBudgetApproxDocs(docs: DataFrame,
       budget: Long, buckets: Int): DataFrame =
     budgetPrefixPruned(docs.select(col("doc_id"), col("lang"),
-      size(split(normText(col("text")), " ")).cast("long").as("n_tokens")),
+      wsTokens.cast("long").as("n_tokens")),
       lit(budget), buckets)
 
   /** The bucket-pruned form of [[budgetPrefixCol]] — same selection
@@ -1396,7 +1401,7 @@ object TextOps {
   /** Core of [[mixBudget]] over any (doc_id, lang, text) frame. */
   def mixBudgetDocs(docs: DataFrame, budget: Long): DataFrame =
     budgetPrefix(docs.select(col("doc_id"), col("lang"),
-      size(split(normText(col("text")), " ")).cast("long").as("n_tokens")),
+      wsTokens.cast("long").as("n_tokens")),
       budget)
 
   /** The hash-ordered per-language budget prefix — the ONE definition
@@ -1479,8 +1484,7 @@ object TextOps {
       weights: Seq[(String, Int)], buckets: Int = 256): DataFrame =
     budgetPrefixPruned(
       docs.select(col("doc_id"), col("lang"),
-        size(split(normText(col("text")), " ")).cast("long")
-          .as("n_tokens")),
+        wsTokens.cast("long").as("n_tokens")),
       weightBudget(totalBudget, weights), buckets)
 
   /** `mix_epochs` — fractional-epoch UP-sampling, the one mixing
@@ -1580,7 +1584,7 @@ object TextOps {
   def mixTemperatureDocs(docs: DataFrame, totalBudget: Long,
       buckets: Int = 256): DataFrame = {
     val t = docs.select(col("doc_id"), col("lang"),
-      size(split(normText(col("text")), " ")).cast("long").as("n_tokens"))
+      wsTokens.cast("long").as("n_tokens"))
     val langTotals = t.groupBy(col("lang"))
       .agg(sum(col("n_tokens")).as("tot"))
       .collect().map(r => (r.getString(0), r.getLong(1)))
@@ -1628,8 +1632,7 @@ object TextOps {
       java.util.UUID.randomUUID().toString.replace("-", "")
     Tables.documents(spark, sfDir)
       .select(col("lang"), col("source"), col("n_chars"),
-        size(split(normText(col("text")), " ")).cast("long")
-          .as("n_tokens"))
+        wsTokens.cast("long").as("n_tokens"))
       .createOrReplaceTempView(v)
     val df = spark.sql(
       raw"""SELECT CASE WHEN grouping(lang) = 0 AND grouping(source) = 0

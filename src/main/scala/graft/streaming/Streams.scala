@@ -1300,7 +1300,7 @@ object Streams {
   private[graft] def streamDedupPhashCore(spark: SparkSession,
       name: String, store: DataFrame, delta: DataFrame,
       maxHamming: Int): DataFrame = {
-    import graft.operators.Multimodal
+    import graft.operators.{Blocking, Multimodal}
     val matches = fileReplay(spark, name,
       ToMemory { stream =>
         val s2 = stream.sparkSession
@@ -1312,10 +1312,7 @@ object Streams {
               Multimodal.phashExpr(col("s"))).as("phash"))
           .filter(col("phash").isNotNull)
           .select(col("asset_id"), col("phash"),
-            posexplode(array((0 until 4).map(b =>
-              shiftright(col("phash"), b * 16)
-                .bitwiseAND(lit(0xFFFFL))): _*))
-              .as(Seq("band", "bval")))
+            Blocking.bands16(col("phash")))
           .select(col("band").as[Int], col("bval").as[Long],
             col("asset_id").as[Long], col("phash").as[Long])
           .groupByKey(r => (r._1, r._2)))

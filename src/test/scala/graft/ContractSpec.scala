@@ -285,7 +285,9 @@ class ContractSpec extends AnyFunSuite {
       "length(col(\"word\")) <= MaxWordLen" ->
         Seq(uni -> "def qualifyingWords("),
       "col(\"enc\")))" -> Seq(uni -> "def encodeDocs("),
-      "20000 + n_words" -> Seq(uni -> "def fertility("))
+      "20000 + n_words" -> Seq(uni -> "def fertility("),
+      "size(split(normText(col(\"text\")), \" \"))" ->
+        Seq(text -> "def wsTokens"))
     // SparkEntry's oracle SQL spells the same rules in DuckDB's dialect
     val found = rules.map { case (needle, bodies) =>
       (needle, bodies, codeLines(needle, bodies)
@@ -299,6 +301,34 @@ class ContractSpec extends AnyFunSuite {
     found.foreach { case (needle, bodies, at) =>
       assert(bodies.isEmpty || at.exists(_._2),
         s"no helper holds $needle any more")
+    }
+  }
+
+  test("the blocking-join kit is written once: the a_id < b_id self-join " +
+      "rule, the o_id < n_id seen-store rule and the 4 × 16-bit band " +
+      "explode appear only inside Blocking") {
+    val kit = "graft/operators/Blocking.scala" -> "object Blocking {"
+    // the all-pairs reference has no block key: its a < b is the join
+    // condition itself
+    val exact = "graft/operators/SimSearch.scala" ->
+      "def dedupEmbeddingExactDocs("
+    val rules = Seq(
+      "col(\"a_id\") < col(\"b_id\")" -> Seq(kit, exact),
+      "col(\"o_id\") < col(\"n_id\")" -> Seq(kit),
+      "0xFFFFL" -> Seq(kit))
+    val found = rules.map { case (needle, bodies) =>
+      needle -> codeLines(needle, bodies)
+    }
+    val offenders = found.flatMap { case (needle, at) =>
+      at.collect { case (line, false) => s"$line $needle" }
+    }
+    assert(offenders.isEmpty, "block through Blocking.selfPairs, " +
+      s"seenPairs or bands16 instead of re-copying it:\n" +
+      offenders.mkString("\n"))
+    found.foreach { case (needle, at) =>
+      assert(at.exists { case (line, inside) =>
+        inside && line.startsWith("graft/operators/Blocking.scala:")
+      }, s"Blocking no longer holds $needle")
     }
   }
 

@@ -204,6 +204,16 @@ class PhashSpec extends AnyFunSuite {
       assert(got.contains(11L) && !got.contains(10L) &&
         !got.contains(12L) && got.contains(13L),
         s"$mime incremental: got survivors $got")
+      // seen-store associativity is exact (lossless banding): batch 2
+      // against store ∪ batch-1 signatures (all of d1 was seen, kept or
+      // not) gives the one-batch answer — 12 still drops against 11
+      val d1 = delta.filter(col("asset_id") <= 11L)
+      val d2 = delta.filter(col("asset_id") > 11L)
+      val batch1 = inc(store, d1, 3).collect().map(_.getLong(0)).toSet
+      val batch2 = inc(store.unionByName(d1), d2, 3)
+        .collect().map(_.getLong(0)).toSet
+      assert((batch1 ++ batch2) === got,
+        s"$mime batches: ${batch1 ++ batch2} vs one batch $got")
     }
   }
 

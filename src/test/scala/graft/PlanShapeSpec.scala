@@ -628,17 +628,39 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("dedup_minhash_incremental: delta band Exchange shared, no products") {
-    import graft.operators.MinHashDedup
-    val df = MinHashDedup.dedupMinhashIncremental(spark, sf)
-    df.collect() // AQE resolves ReusedExchange only in the final plan
-    val p = plan(df)
-    // the delta's (band,bhash) repartition feeds the store join AND
-    // both intra-delta self-join sides — at least one reuse must hold
-    // (AQE may broadcast-convert some sides at fixture scale)
-    assert("ReusedExchange".r.findAllIn(p).length >= 1,
-      s"delta band keys must shuffle once, not per consumer:\n$p")
-    assert(!p.contains("CartesianProduct"),
-      s"candidate generation must stay keyed:\n$p")
+    import graft.operators.{MinHashDedup, Multimodal, SimSearch}
+    // every seen-store tier: the delta's block-key repartition feeds the
+    // store join AND both intra-delta join sides — at least one reuse
+    // must hold (AQE may broadcast-convert some sides at fixture scale).
+    // The video and audio tiers drop nothing at this scale, and AQE's
+    // empty-relation rule would then cut the whole candidate subtree out
+    // of the final plan, so that rule is off while the plans are taken.
+    val emptyRule = "spark.sql.adaptive.optimizer.excludedRules"
+    val saved = spark.conf.getOption(emptyRule)
+    spark.conf.set(emptyRule,
+      "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
+    val failures = try Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "dedup_minhash_incremental" ->
+        (() => MinHashDedup.dedupMinhashIncremental(spark, sf)),
+      "multimodal_phash_incremental" ->
+        (() => Multimodal.phashIncremental(spark, sf)),
+      "multimodal_video_dedup_incremental" ->
+        (() => Multimodal.videoDedupIncremental(spark, sf)),
+      "multimodal_audio_dedup_incremental" ->
+        (() => Multimodal.audioDedupIncremental(spark, sf)),
+      "dedup_semantic_incremental" ->
+        (() => SimSearch.semDedupIncremental(spark, sf))
+    ).flatMap { case (name, build) =>
+      val df = build()
+      df.collect() // AQE resolves ReusedExchange only in the final plan
+      val p = plan(df)
+      Seq(
+        Option.when("ReusedExchange".r.findAllIn(p).isEmpty)(
+          s"$name: delta block keys must shuffle once, not per consumer:\n$p"),
+        Option.when(p.contains("CartesianProduct"))(
+          s"$name: candidate generation must stay keyed:\n$p")).flatten
+    } finally saved.fold(spark.conf.unset(emptyRule))(spark.conf.set(emptyRule, _))
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("simsearch_hybrid: fusion joins keyed, token exchange shared (3 reused)") {
