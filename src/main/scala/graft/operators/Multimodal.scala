@@ -608,22 +608,25 @@ object Multimodal {
     */
   private def signatureIncremental(storeF: DataFrame, deltaF: DataFrame,
       deltaAssets: DataFrame, maxHamming: Int): DataFrame = {
-    def sizes(f: DataFrame) =
-      f.groupBy(col("asset_id")).agg(count(lit(1)).as("n"))
     val matches = Blocking.seenPairs(frameBands(storeF), frameBands(deltaF),
         BandKeys, "asset_id", Seq("fph"))
       .filter(hamming(col("n_fph"), col("o_fph")) <= maxHamming)
       .select(col("n_id"), col("o_id"), col("n_fph"), col("o_fph"))
       .distinct()
-    val dropped = matches.groupBy(col("n_id"), col("o_id"))
+    val nSized = matches.groupBy(col("n_id"), col("o_id"))
       .agg(countDistinct(col("n_fph")).as("m_n"),
         countDistinct(col("o_fph")).as("m_o"))
-      .join(sizes(deltaF)
-        .select(col("asset_id").as("n_id"), col("n").as("sz_n")), "n_id")
-      .join(sizes(storeF.unionByName(deltaF))
-        .select(col("asset_id").as("o_id"), col("n").as("sz_o")), "o_id")
-      .filter(col("m_n") * 2 >= col("sz_n") &&
-        col("m_o") * 2 >= col("sz_o"))
+      .join(deltaF.groupBy(col("asset_id").as("n_id"))
+        .agg(count(lit(1)).as("sz_n")), "n_id")
+      .filter(col("m_n") * 2 >= col("sz_n"))
+    // the o-side size counts only the candidates' own fingerprints: the
+    // signature frame joins the (small) candidate pairs before the count,
+    // so no aggregate runs over the whole store
+    val dropped = storeF.unionByName(deltaF)
+      .join(nSized, col("asset_id") === col("o_id"))
+      .groupBy(col("n_id"), col("o_id"), col("m_o"))
+      .agg(count(lit(1)).as("sz_o"))
+      .filter(col("m_o") * 2 >= col("sz_o"))
       .select(col("n_id")).distinct()
     deltaAssets.join(dropped,
         deltaAssets("asset_id") === col("n_id"), "left_anti")

@@ -2742,8 +2742,11 @@ object SimSearch {
     * completing the incremental family (exact `dedup_incremental` →
     * near-dup `dedup_minhash_incremental` → semantic): the codebook is
     * YESTERDAY's (learned on the existing corpus and persisted — here
-    * the store-side stride sample, the deterministic declared choice),
-    * the store's cell assignments are the persisted index, and only
+    * the store-side stride sample, the deterministic declared choice).
+    * The declared row assigns the STORE's vectors to cells in the query
+    * too (one broadcast-codebook argmax per store row, narrow, no
+    * shuffle); at 100 TB those assignments are a persisted
+    * (cent_id)-bucketed index that is read, not recomputed, and only
     * the DELTA pays assignment compute. Seen-store semantics
     * throughout (the family contract): a delta vector drops iff its
     * 4dp cosine clears `threshold` against ANY same-cell store vector
@@ -2757,8 +2760,8 @@ object SimSearch {
     * Scale shape: delta-sized assignment (broadcast codebook argmax,
     * narrow compute), ONE cent_id exchange on the delta reused by the
     * store join and the intra-delta self-join, pairs form cell-locally
-    * — never all-pairs; at 100 TB the store side reads the persisted
-    * (cent_id)-bucketed assignment and prunes to cells the delta
+    * — never all-pairs; the 100 TB store side reads the persisted
+    * assignment instead of the argmax and prunes to cells the delta
     * touches.
     */
   def semDedupIncremental(spark: SparkSession, sfDir: String,

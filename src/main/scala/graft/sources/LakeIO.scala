@@ -246,7 +246,7 @@ object LakeIO {
     prev.foreach(requireAligned(_, "previous head", df, "incoming commit",
       "saveVersionCdf"))
     log.publish { v =>
-      df.write.mode(SaveMode.ErrorIfExists).parquet(log.dir(v).toString)
+      log.writeSnapshot(v, df)
       val capture: Option[DataFrame] = captureKeys match {
         // known-diff fast path (saveVersionCdfKnownDiff): the caller's
         // exact change set IS the capture — no snapshot re-diff join
@@ -318,10 +318,13 @@ object LakeIO {
     *
     * Plan: ONE keyed full-outer join of the two pinned snapshot reads
     * — presence comes from non-nullable marker columns (key columns
-    * may legitimately be all that survives an anti-diff), update
-    * detection is a null-safe struct compare over the non-key columns,
-    * and the up-to-two change rows per key emit from a single
-    * `explode(array_compact(...))` pass with no re-join. At 100 TB the
+    * may legitimately be all that survives an anti-diff) — then a
+    * FILTER that drops every matched key whose non-key columns are all
+    * null-safe equal, and only then the up-to-two change rows per
+    * surviving key from a single `explode(array_compact(...))` pass
+    * with no re-join. The filter runs before the explode, so an
+    * unchanged row (most of the table in a churn-sized commit) builds
+    * no change-row structs at all. At 100 TB the
     * join shuffles each snapshot once on the table key — with
     * key-bucketed snapshot layouts it is co-located and shuffle-free;
     * nothing ever pairs beyond the key match.
@@ -334,14 +337,9 @@ object LakeIO {
       loadVersion(spark, path, Some(toV)), keys, toV)
   }
 
-  /** The [[changes]] diff over EXPLICIT snapshot frames (the streaming
-    * CDF producer feeds planted snapshots that never touch a versioned
-    * path) — same plan, same output schema, `stampVersion` lands in
-    * `_commit_version`.
-    */
   /** Name+TYPE schema signature (ADVICE r18: the old name-set guards
     * passed a history whose evolution changed a column's TYPE — the
-    * null-safe struct compare downstream then failed with an opaque
+    * null-safe value compare downstream then failed with an opaque
     * analysis error, or silently coerced). Nullability is excluded:
     * it varies benignly across writes of identical data.
     */
@@ -366,13 +364,27 @@ object LakeIO {
         "reads a pinned version under the head schema, with typed " +
         "null fill and head-type casts), then retry")
 
+  /** The [[changes]] diff over EXPLICIT snapshot frames (the streaming
+    * CDF producer feeds planted snapshots that never touch a versioned
+    * path) — same plan, same output schema, `stampVersion` lands in
+    * `_commit_version`.
+    *
+    * Filter before explode: after the keyed full-outer join a `Filter`
+    * keeps a key only when one side lacks it or some non-key column
+    * differs (the AND of per-column `<=>`, which equates null with null,
+    * NaN with NaN and -0.0 with 0.0, as a whole-row struct compare
+    * does). The `Generate` above it then builds change rows for changed
+    * keys only: a captured commit's diff no longer pays four structs
+    * and an array for each of the table's unchanged rows. The join, its
+    * shuffles and the output rows are those of the unfiltered plan.
+    */
   private[graft] def snapshotDiff(a: DataFrame, b: DataFrame,
       keys: Seq[String], stampVersion: Int): DataFrame = {
     // SCHEMA-DRIFT guard: valCols come from `a`, so a column added in
     // `b` would be SILENTLY dropped — the diff would miss changes in
     // it and every update postimage would lose it, handing
     // applyChanges/replayChanges a wrong head with no error; a TYPE
-    // change would break the null-safe struct compare. Refuse loudly;
+    // change would break the null-safe value compare. Refuse loudly;
     // [[loadVersionEvolved]] is the supported way to read across an
     // evolved history (align first, then diff).
     requireAligned(a, "a", b, "b", "snapshotDiff")
@@ -383,12 +395,17 @@ object LakeIO {
     val bSide = b.select(keys.map(col) ++
       valCols.map(c => col(c).as(s"__b_$c")) :+
       lit(true).as("__b_present"): _*)
-    val j = aSide.join(bSide, keys, "full_outer")
     val aP = col("__a_present") <=> lit(true)
     val bP = col("__b_present") <=> lit(true)
+    val same = valCols.map(c => col(s"__a_$c") <=> col(s"__b_$c"))
+      .foldLeft(lit(true))(_ && _)
+    // unchanged keys leave before any change row is built; every
+    // matched key that survives is an update
+    val j = aSide.join(bSide, keys, "full_outer")
+      .filter(!(aP && bP && same))
+    val updated = aP && bP
     def vals(side: String) =
       struct(valCols.map(c => col(s"__${side}_$c").as(c)): _*)
-    val updated = aP && bP && !(vals("a") <=> vals("b"))
     def ev(tag: String, side: String) =
       struct(lit(tag).as("t"), vals(side).as("v"))
     j.select(keys.map(col) :+
@@ -601,19 +618,12 @@ object LakeIO {
       // falls back to head-snapshot + change columns if retention
       // reaped every capture artifact)
       val like = captured.lastOption
-        .map(v => spark.read.parquet(log.cdfDir(v).toString))
+        .map(v => log.readCaptures(Seq(v)))
         .getOrElse(loadVersion(spark, path)
           .withColumn("_change_type", lit("none"))
           .withColumn("_commit_version", lit(0)))
       like.limit(0)
-    } else
-    // read the in-range capture dirs DIRECTLY (the directory prune),
-    // never the `_cdf` root with partition discovery: the rows already
-    // carry `_commit_version` as a data column, and root discovery
-    // would infer the `v=` dir as a partition column — colliding with
-    // any table whose OWN schema has a column named `v` (a real user
-    // table name; found by the LakeSpec merge-on-CDF test)
-    spark.read.parquet(inRange.map(log.cdfDir(_).toString): _*)
+    } else log.readCaptures(inRange) // only the in-range dirs: the prune
   }
 
   /** Replay a MULTI-COMMIT captured CDF onto a snapshot, one commit at
@@ -819,8 +829,7 @@ object LakeIO {
     val versions = log.versions
     val latest = versions.lastOption.getOrElse(-1)
     versions.map { v =>
-      val files = log.fs.listStatus(log.dir(v))
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
+      val files = log.topFiles(v)
       (v, files.length, files.map(_.getLen).sum, v == latest)
     }.toDF("version", "n_files", "bytes", "is_latest")
   }

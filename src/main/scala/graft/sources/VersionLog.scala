@@ -1,8 +1,13 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFooterReader, ParquetReadSupport}
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The one owner of the versioned-table layout at `path` — every path,
   * listing, publish and capture of a versioned table goes through here
@@ -49,6 +54,18 @@ import org.apache.spark.sql.functions.lit
   * dir + `_cdf/v=<n>` + marker. If no `v=<n>` dir exists just delete the
   * marker. Either way nothing downstream referenced n. All driver-side,
   * one tiny file per commit.
+  *
+  * SCHEMA RULE. Every read of a version or a capture ([[read]],
+  * [[readCaptures]]) hands Spark its schema: the one Spark's parquet
+  * writer stores in a data file's footer, read here on the driver from
+  * ONE footer (a clone's first manifest entry; the first capture dir of
+  * a range). Without it `spark.read.parquet` infers the schema, and
+  * inference — though it reads that same single footer when
+  * `mergeSchema` is off — runs a Spark job per read: three per captured
+  * commit, one per time-travel or feed read. Delta's rule is the same: a
+  * reader never runs a job to learn a version's schema. A footer
+  * without a Spark schema (a file another writer made) reads as before,
+  * through inference.
   */
 private[graft] final class VersionLog(spark: SparkSession, path: String) {
   private val root = new Path(path)
@@ -59,7 +76,7 @@ private[graft] final class VersionLog(spark: SparkSession, path: String) {
   private val Inflight = "_inflight_v="
 
   def dir(v: Int): Path = new Path(root, s"v=$v")
-  def cdfDir(v: Int): Path = new Path(cdfRoot, s"v=$v")
+  private def cdfDir(v: Int): Path = new Path(cdfRoot, s"v=$v")
   private def reservation(v: Int) = new Path(commitLog, s"$Inflight$v")
   private def manifest(v: Int) = new Path(dir(v), "_manifest")
 
@@ -129,9 +146,38 @@ private[graft] final class VersionLog(spark: SparkSession, path: String) {
   def read(v: Int): DataFrame = manifestFiles(v) match {
     case Some(listed) =>
       require(listed.nonEmpty, s"empty clone manifest at ${dir(v)}")
-      spark.read.parquet(listed: _*)
-    case None => spark.read.parquet(dir(v).toString)
+      parquet(listed, Some(new Path(listed.head)))
+    case None => parquet(Seq(dir(v).toString), firstFile(dir(v)))
   }
+
+  /** The captures of versions `vs` (non-empty) as one frame. Each
+    * capture dir is read directly, never the `_cdf` root: the rows carry
+    * `_commit_version` already, and partition discovery over the root
+    * would add the `v=` dir as a column, colliding with a table column
+    * named `v`.
+    */
+  def readCaptures(vs: Seq[Int]): DataFrame =
+    parquet(vs.map(cdfDir(_).toString), firstFile(cdfDir(vs.head)))
+
+  /** The data files directly under version `v`'s snapshot dir, or
+    * under its capture dir when `capture`: none for a clone (its dir
+    * holds only the manifest) or a missing dir, and a partitioned
+    * version's files sit one level further down.
+    */
+  def topFiles(v: Int, capture: Boolean = false): Seq[FileStatus] =
+    entries(if (capture) cdfDir(v) else dir(v))
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
+
+  private def firstFile(d: Path): Option[Path] =
+    LakeIO.dataFiles(spark, d.toString).headOption.map(_.getPath)
+
+  /** `paths` read under the Spark schema in `schemaFile`'s footer (the
+    * schema rule above), by inference when it has none.
+    */
+  private def parquet(paths: Seq[String], schemaFile: Option[Path]): DataFrame =
+    schemaFile.flatMap(VersionLog.footerSchema(spark, _))
+      .fold(spark.read)(spark.read.schema)
+      .parquet(paths: _*)
 
   /** Step 1: exclusive-create the reservation of `v`. */
   def reserve(v: Int): Unit = {
@@ -209,6 +255,9 @@ private[graft] final class VersionLog(spark: SparkSession, path: String) {
       case Some(p) => LakeIO.snapshotDiff(p, read(v), keys, v)
     }
 
+  def writeSnapshot(v: Int, df: DataFrame): Unit =
+    df.write.mode(SaveMode.ErrorIfExists).parquet(dir(v).toString)
+
   def writeCapture(v: Int, changes: DataFrame): Unit =
     changes.write.mode(SaveMode.ErrorIfExists).parquet(cdfDir(v).toString)
 
@@ -263,6 +312,20 @@ private[graft] object VersionLog {
     while (d != null && !d.getName.startsWith("v=")) d = d.getParent
     Option(d).flatMap(d =>
       d.getName.stripPrefix("v=").toIntOption.map(d.getParent.toString -> _))
+  }
+
+  /** The Spark schema stored in the footer of the parquet file `f`, or
+    * None when the file's writer stored none. One footer read on the
+    * driver, row groups skipped.
+    */
+  private def footerSchema(spark: SparkSession, f: Path): Option[StructType] = {
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(f, spark.sparkContext.hadoopConfiguration),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    Option(footer.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
   }
 
   private def readLines(fs: FileSystem, p: Path): Seq[String] = {

@@ -1497,10 +1497,11 @@ object Streams {
       // commit. A manifest-backed version (clone) has no parquet of its
       // own and is written instead, and so is a later commit whose
       // capture is several files (fileReplay's one-file rule).
-      def parquetFiles(d: org.apache.hadoop.fs.Path): Seq[java.io.File] =
-        Option(new java.io.File(d.toUri.getPath).listFiles()).toSeq.flatten
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      val v0files = parquetFiles(log.dir(0))
+      def parquetFiles(v: Int, capture: Boolean): Seq[java.io.File] =
+        log.topFiles(v, capture).map(_.getPath)
+          .filter(_.getName.endsWith(".parquet"))
+          .map(p => new java.io.File(p.toUri.getPath))
+      val v0files = parquetFiles(0, capture = false)
       // emptiness guard (ADVICE r19, low): a missing/reaped v0 dir must
       // fail loudly at SEED time through the read's clear error, not as
       // a schema-inference error inside foreachBatch over an empty
@@ -1508,7 +1509,7 @@ object Streams {
       if (v0files.isEmpty) log.read(0).write.parquet(s"$dir/replica")
       else LinkBatch(v0files).stageInto(s"$dir/replica")
       (1 until log.versions.size).map { v =>
-        val fls = parquetFiles(log.cdfDir(v))
+        val fls = parquetFiles(v, capture = true)
         if (fls.nonEmpty && (v == 1 || fls.size == 1)) LinkBatch(fls)
         else WriteBatch(
           graft.sources.LakeIO.capturedChanges(spark, tbl, v - 1, v))

@@ -248,4 +248,65 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(replayed.exceptAll(head).count() === 0
       && head.exceptAll(replayed).count() === 0)
   }
+
+  test("versioned reads take the schema from one footer: every version " +
+      "and capture read equals Spark's inferred read field for field and " +
+      "starts no job") {
+    import graft.sources.{Tables, VersionLog}
+    import org.apache.spark.sql.DataFrame
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    // builds `read`, counting the jobs it starts, and compares its schema
+    // with the inferred read of the same paths
+    def check(what: String, paths: Seq[String])(read: => DataFrame): Unit = {
+      org.apache.spark.graft.Instrument.drain(sc)
+      jobs.set(0)
+      val got = read.schema
+      org.apache.spark.graft.Instrument.drain(sc)
+      assert(jobs.get === 0, s"$what: building the read started jobs")
+      val want = spark.read.parquet(paths: _*).schema
+      assert(got.fields.toSeq === want.fields.toSeq,
+        s"$what:\n${got.treeString}\nvs inferred\n${want.treeString}")
+    }
+    sc.addSparkListener(counter)
+    try {
+      val root = Scratch.dir("schema_rule")
+      val sf01 = new java.io.File(TestSpark.sf).getParent + "/sf0.1"
+      Seq("customer", "documents", "embeddings", "events", "lineitem",
+          "nation", "orders", "part", "region", "supplier").foreach { t =>
+        val log = new VersionLog(spark, s"$root/$t")
+        LakeIO.saveVersion(Tables.table(spark, sf01, t), s"$root/$t")
+        check(t, Seq(log.dir(0).toString))(log.read(0))
+      }
+      val empty = new VersionLog(spark, s"$root/empty")
+      LakeIO.saveVersion(Tables.table(spark, sf01, "orders").limit(0),
+        s"$root/empty")
+      check("zero-row version", Seq(empty.dir(0).toString))(empty.read(0))
+      // a hand-partitioned version (files under v=0/p=.../) and a
+      // shallow clone of it, which reads through its manifest
+      Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "p", "x")
+        .write.partitionBy("p").parquet(s"$root/src/v=0")
+      val src = new VersionLog(spark, s"$root/src")
+      check("partitioned version", Seq(src.dir(0).toString))(src.read(0))
+      LakeIO.shallowClone(spark, s"$root/src", 0, s"$root/clone")
+      val clone = new VersionLog(spark, s"$root/clone")
+      check("clone manifest", clone.files(0).map(_.getPath.toString))(
+        clone.read(0))
+      // a multi-commit capture range
+      val cdf = s"$root/cdf"
+      Seq(snap((1L, 1.0), (2L, 2.0)), snap((1L, 1.5), (3L, 3.0)),
+          snap((1L, 1.5), (3L, 4.0), (5L, 5.0))).foreach { v =>
+        LakeIO.saveVersionCdf(v, cdf, Seq("k"))
+      }
+      val captures = Seq(1, 2).map(v => s"$cdf/_cdf/v=$v")
+      check("capture range", captures)(
+        LakeIO.capturedChanges(spark, cdf, 0, 2))
+    } finally sc.removeSparkListener(counter)
+  }
 }

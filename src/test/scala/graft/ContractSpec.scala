@@ -263,6 +263,19 @@ class ContractSpec extends AnyFunSuite {
     assert(found.exists(_._2), "VersionLog no longer names the layout")
   }
 
+  test("version and capture dirs are read only through VersionLog: no " +
+      "other code line names a capture dir or a table log's version dir") {
+    val log = "graft/sources/VersionLog.scala" -> "final class VersionLog("
+    // a read outside the log would build its own DataFrame and skip the
+    // log's schema rule (one footer, no inference job)
+    val offenders = Seq("cdfDir(", "log.dir(").flatMap(needle =>
+      codeLines(needle, Seq(log)).collect { case (at, false) =>
+        s"$at $needle"
+      })
+    assert(offenders.isEmpty, "read versions and captures through " +
+      s"VersionLog.read / readCaptures:\n${offenders.mkString("\n")}")
+  }
+
   test("the text-corpus kit is written once: the quality gate, keep-first " +
       "dedup, content-hash anti-join, per-source pack, epoch copies, merge " +
       "loop, unit split, word pass, encode reassembly and fertility tail " +

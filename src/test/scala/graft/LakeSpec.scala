@@ -440,6 +440,64 @@ class LakeSpec extends AnyFunSuite {
     // key 1: null == null → unchanged, no rows; key 2: b → null update
     assert(cdf.filter(col("k") === 1L).count() === 0)
     assert(cdf.filter(col("k") === 2L).count() === 2)
+
+    // the per-column filter equals the whole-row struct compare it
+    // replaced on null, NaN, -0.0 vs 0.0 and nested struct/array values
+    import org.apache.spark.sql.DataFrame
+    // n is a nested struct<_1: double, _2: array<double>>
+    def inner(a: Option[Double], xs: Seq[Double]) = (a, xs)
+    def rows(vals: (Long, Option[Double], Option[String],
+        Option[(Option[Double], Seq[Double])])*) =
+      vals.toDF("k", "d", "s", "n")
+    val nan = Double.NaN
+    val a = rows(
+      (1L, Some(nan), None, None),
+      (2L, Some(-0.0), Some("x"), Some(inner(Some(-0.0), Seq(0.0)))),
+      (3L, None, None, Some(inner(None, Seq(nan)))),
+      (4L, Some(1.0), None, Some(inner(Some(1.0), Seq(1.0, 2.0)))),
+      (5L, None, Some("y"), Some(inner(Some(nan), Nil))),
+      (6L, Some(2.0), Some("gone"), None),
+      (8L, Some(nan), Some("z"), Some(inner(None, Seq(1.0)))))
+    val b = rows(
+      (1L, Some(nan), None, None),
+      (2L, Some(0.0), Some("x"), Some(inner(Some(0.0), Seq(-0.0)))),
+      (3L, None, None, Some(inner(None, Seq(nan)))),
+      (4L, Some(1.0), None, Some(inner(Some(1.0), Seq(2.0, 1.0)))),
+      (5L, Some(nan), Some("y"), Some(inner(Some(nan), Nil))),
+      (7L, None, Some("new"), Some(inner(None, Nil))),
+      (8L, Some(nan), Some("z"), None))
+    val evo = Scratch.dir("cdf_values")
+    graft.sources.LakeIO.saveVersion(a, evo)
+    graft.sources.LakeIO.saveVersion(b, evo)
+    // reference: a whole-row null-safe struct compare decides updates
+    def reference(x: DataFrame, y: DataFrame): DataFrame = {
+      val valCols = Seq("d", "s", "n")
+      def side(df: DataFrame, t: String) = df.select(col("k") +:
+        valCols.map(c => col(c).as(s"__${t}_$c")) :+
+        lit(true).as(s"__${t}_present"): _*)
+      val aP = col("__a_present") <=> lit(true)
+      val bP = col("__b_present") <=> lit(true)
+      def vals(t: String) =
+        struct(valCols.map(c => col(s"__${t}_$c").as(c)): _*)
+      val updated = aP && bP && !(vals("a") <=> vals("b"))
+      def ev(tag: String, t: String) = struct(lit(tag).as("t"), vals(t).as("v"))
+      side(x, "a").join(side(y, "b"), Seq("k"), "full_outer")
+        .select(col("k"), explode(array_compact(array(
+          when(!aP, ev("insert", "b")), when(!bP, ev("delete", "a")),
+          when(updated, ev("update_preimage", "a")),
+          when(updated, ev("update_postimage", "b"))))).as("ch"))
+        .select(col("k") +: valCols.map(c => col(s"ch.v.$c").as(c)) :+
+          col("ch.t").as("_change_type") :+ lit(1).as("_commit_version"): _*)
+    }
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val got = graft.sources.LakeIO.changes(spark, evo, 0, 1, Seq("k"))
+    val want = reference(
+      graft.sources.LakeIO.loadVersion(spark, evo, Some(0)),
+      graft.sources.LakeIO.loadVersion(spark, evo, Some(1)))
+    assert(sorted(got) === sorted(want))
+    // keys 4, 5, 8 update; 6 deletes; 7 inserts; 1, 2, 3 are unchanged
+    assert(got.select("k").distinct().collect().map(_.getLong(0)).sorted
+      .toSeq === Seq(4L, 5L, 6L, 7L, 8L))
   }
 
   test("append with mergeSchema evolves the dataset schema (drifted batch)") {

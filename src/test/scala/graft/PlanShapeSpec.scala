@@ -690,4 +690,34 @@ class PlanShapeSpec extends AnyFunSuite {
     val p = plan(df)
     assert(p.contains("*("), s"expected codegen stage markers:\n$p")
   }
+
+  test("captured-commit diff: a per-column null-safe Filter over the " +
+      "full-outer join sits below the Generate that builds change rows") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualNullSafe}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join}
+    import spark.implicits._
+    val root = Scratch.dir("diff_plan")
+    graft.sources.LakeIO.saveVersionCdf(
+      Seq((1L, 1.0, "a"), (2L, 2.0, "b")).toDF("k", "x", "s"), root, Seq("k"))
+    graft.sources.LakeIO.saveVersion(
+      Seq((1L, 1.5, "a"), (3L, 3.0, "c")).toDF("k", "x", "s"), root)
+    // the diff the captured commit of v=1 would write
+    val log = new graft.sources.VersionLog(spark, root)
+    val diff = log.capture(Some(log.read(0)), 1, Seq("k"))
+    val p = diff.queryExecution.optimizedPlan
+    val gen = p.collectFirst { case g: Generate => g }
+    assert(gen.isDefined, s"no Generate in the diff plan:\n$p")
+    // the value compare is per column (__a_x <=> __b_x), not a struct
+    val valueFilter = gen.get.child.collectFirst {
+      case f: Filter if f.child.exists(_.isInstanceOf[Join]) &&
+          f.condition.exists {
+            case EqualNullSafe(l: AttributeReference, _) =>
+              l.name.startsWith("__a_")
+            case _ => false
+          } => f
+    }
+    assert(valueFilter.isDefined,
+      s"unchanged rows must leave before the Generate:\n$p")
+    assert(diff.count() === 4) // insert 3, delete 2, update 1 as two rows
+  }
 }
