@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
-import Relational.dec
+import Relational.{dec, dec28, dec38}
 
 /** Aggregation operators (SURVEY.md §2.D). Presto's aggregate surface as
   * exposed by novlake's SQL passthrough [upstream, unverified — SURVEY.md
@@ -236,8 +236,7 @@ object Aggregates {
       .select(col("sbkt"), explode(expr(prefixFold("bkt", "bw"))).as("o"))
       .join(broadcast(soffs), "sbkt")
       .select(col("o.k").as("bkt"),
-        (col("soff") + col("o.off"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 4)).as("off"))
+        dec38(col("soff") + col("o.off")).as("off"))
     val wIn = org.apache.spark.sql.expressions.Window
       .partitionBy(col("bkt")).orderBy(col("o_orderkey").asc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -271,8 +270,6 @@ object Aggregates {
     * noise, absorbed by a rounding 10⁸ ulps wide.
     */
   def aggCorr(spark: SparkSession, sfDir: String): DataFrame = {
-    def dec28(c: org.apache.spark.sql.Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(28, 4))
     val li = Tables.lineitem(spark, sfDir)
     li.groupBy(col("l_returnflag"))
       .agg(

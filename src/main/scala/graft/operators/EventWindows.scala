@@ -4,13 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
-import Relational.dec
+import Relational.{dec, dec28, dec38}
 
 /** Time-window operators over the `events` table — the BATCH forms of the
   * streaming operators (SURVEY.md §2.I design rule: every streaming op
   * has a batch-mode equivalent declared to the DuckDB oracle; the
   * incremental forms live in graft.streaming.Streams and share these
-  * window semantics).
+  * window semantics). The series rows build their series, hourly grid
+  * and recurrences from [[TimeSeries]].
   *
   * ts note: since the 2026-08-13 fixture regeneration, events.ts is
   * parquet timestamp[us] (FIXTURES.md) — Spark and DuckDB read the same
@@ -75,28 +76,23 @@ object EventWindows {
     * user's events to an hourly grid spanning exactly their active
     * range, emit empty buckets with count 0, and forward-fill the last
     * observed hourly value (the standard resample→ffill shape, as one
-    * lazy DAG: agg → per-user span → sequence-explode grid → left join
-    * → last-ignoring-nulls window).
+    * lazy DAG: hourly series → [[TimeSeries.hourlyGrid]]).
     *
     * Scale: grid size is bounded by span/bucket per user; everything
     * shuffles on user_id; no driver-side time iteration.
     */
-  def tsGapfill(spark: SparkSession, sfDir: String): DataFrame = {
-    val agg = Tables.events(spark, sfDir)
-      .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg(count(lit(1)).as("n"),
-        sum(dec(col("value"))).cast("double").as("v"))
-    val grid = agg.groupBy(col("user_id"))
-      .agg(min(col("bucket")).as("lo"), max(col("bucket")).as("hi"))
-      .select(col("user_id"),
-        explode(sequence(col("lo"), col("hi"), expr("INTERVAL 1 HOUR")))
-          .as("bucket"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("bucket").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    grid.join(agg, Seq("user_id", "bucket"), "left")
+  def tsGapfill(spark: SparkSession, sfDir: String): DataFrame =
+    tsGapfillEvents(Tables.events(spark, sfDir))
+
+  /** Core of `ts_gapfill` over any (user_id, ts, value) frame. */
+  def tsGapfillEvents(events: DataFrame): DataFrame = {
+    val obs = TimeSeries.hourly(events, "user_id")
+      .select(col("user_id"), col("bucket"), col("n_events"),
+        col("rev").cast("double").as("v"))
+    TimeSeries.hourlyGrid(obs, "user_id", "v")
       .select(col("user_id"), col("bucket"),
-        coalesce(col("n"), lit(0L)).as("n_events"),
-        last(col("v"), ignoreNulls = true).over(w).as("filled_value"))
+        coalesce(col("n_events"), lit(0L)).as("n_events"),
+        col("pv").as("filled_value"))
       .orderBy(col("user_id").asc, col("bucket").asc)
   }
 
@@ -107,34 +103,18 @@ object EventWindows {
     * value is an exact DECIMAL mean cast to double, so both engines
     * interpolate from identical inputs.
     *
-    * Scale: same shape as gapfill — one keyed agg, a per-user grid
-    * explode, and two frame-bounded window passes; state per user is
-    * O(1) per window.
+    * Scale: same shape as gapfill — one keyed agg, the carries over the
+    * observed buckets, and a per-user grid explode.
     */
-  def tsInterpolate(spark: SparkSession, sfDir: String): DataFrame = {
-    val agg = Tables.events(spark, sfDir)
-      .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg((sum(dec(col("value"))).cast("double") / count(lit(1)))
-        .as("v"))
-    val grid = agg.groupBy(col("user_id"))
-      .agg(min(col("bucket")).as("lo"), max(col("bucket")).as("hi"))
-      .select(col("user_id"),
-        explode(sequence(col("lo"), col("hi"), expr("INTERVAL 1 HOUR")))
-          .as("bucket"))
-    val wPrev = Window.partitionBy(col("user_id")).orderBy(col("bucket").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // the next observation: the last one up to here in DESCENDING bucket
-    // order (a currentRow → unboundedFollowing frame re-scans its tail
-    // per row, quadratic in the user's buckets)
-    val wNext = Window.partitionBy(col("user_id")).orderBy(col("bucket").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    grid.join(agg, Seq("user_id", "bucket"), "left")
-      .withColumn("pv", last(col("v"), ignoreNulls = true).over(wPrev))
-      .withColumn("pt", last(when(col("v").isNotNull, col("bucket")),
-        ignoreNulls = true).over(wPrev))
-      .withColumn("nv", last(col("v"), ignoreNulls = true).over(wNext))
-      .withColumn("nt", last(when(col("v").isNotNull, col("bucket")),
-        ignoreNulls = true).over(wNext))
+  def tsInterpolate(spark: SparkSession, sfDir: String): DataFrame =
+    tsInterpolateEvents(Tables.events(spark, sfDir))
+
+  /** Core of `ts_interpolate` over any (user_id, ts, value) frame. */
+  def tsInterpolateEvents(events: DataFrame): DataFrame = {
+    val obs = TimeSeries.hourly(events, "user_id")
+      .select(col("user_id"), col("bucket"),
+        (col("rev").cast("double") / col("n_events")).as("v"))
+    TimeSeries.hourlyGrid(obs, "user_id", "v")
       // no rounding: every term is the same IEEE double on both engines
       // (exact DECIMAL mean, integer-second deltas), so the raw result
       // is bit-identical — round(,4) actually BREAKS the match at
@@ -535,31 +515,6 @@ object EventWindows {
       .orderBy(col("user_id").asc)
   }
 
-  /** `ts_anomaly` — series anomaly flagging, the monitoring workhorse:
-    * each order priority's DAILY revenue series is scored against its
-    * own population mean/stddev, and days with |z| > 2 are flagged.
-    * Per-series stats keep everything KEYED (a global series would
-    * need the scalar-attach product shape); the stats join back on the
-    * series key, so the plan is two keyed aggregates + one keyed join
-    * — day-count-sized after the first aggregate, at any corpus size.
-    *
-    * Determinism (the agg_corr discipline): day revenue is an exact
-    * DECIMAL sum; the moment sums snap each double to DECIMAL before
-    * summing (order-independent under partial aggregation); μ/σ/z run
-    * the SAME IEEE expression tree in both engines; z rounds to 6dp
-    * and the flag compares the ROUNDED z, so a boundary day cannot
-    * flip between engines. Zero-variance series short-circuit to
-    * z = 0 in both engines (identical double comparison).
-    *
-    * Headroom (ADVICE r11): the per-ROW snap of `o_totalprice` to
-    * DECIMAL(18,4) is corpus-size-independent (an order's price is
-    * bounded by order content, ~1e6 ≪ 1e14); the quantities that GROW
-    * with the corpus are the per-day sums and moments, snapped wide —
-    * `sx` terms to DECIMAL(28,4) (exact to day revenue 1e24) and `sxx`
-    * terms to DECIMAL(38,4) (exact to day revenue 1e17) — so the
-    * engines stay bit-aligned to ~10⁶× the 100 TB scale's ~1.6e10
-    * per-day-per-priority revenue before either cast can saturate.
-    */
   /** `stream_anomaly` — the PREQUENTIAL (online) z-score, the form a
     * streaming monitor actually computes: each event type's HOURLY
     * value sum is scored against the moments of all STRICTLY EARLIER
@@ -580,13 +535,7 @@ object EventWindows {
     * zero variance ⇒ z = 0 in both engines.
     */
   def streamAnomalyBatch(spark: SparkSession, sfDir: String): DataFrame = {
-    def dec28(c: org.apache.spark.sql.Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(28, 4))
-    def dec38(c: org.apache.spark.sql.Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(38, 4))
-    val hourly = Tables.events(spark, sfDir)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg(sum(dec(col("value"))).as("rev"))
+    val hourly = TimeSeries.hourly(Tables.events(spark, sfDir), "event_type")
       .withColumn("x", col("rev").cast("double"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("bucket").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -627,12 +576,7 @@ object EventWindows {
 
   /** Core of `ts_seasonal` over any (event_type, ts, value) frame. */
   def tsSeasonalEvents(events: DataFrame): DataFrame = {
-    def dec28(c: org.apache.spark.sql.Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(28, 4))
-    val daily = events
-      .groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast("date").as("day"))
-      .agg(sum(dec(col("value"))).as("rev"))
+    val daily = TimeSeries.daily(events)
       .withColumn("x", col("rev").cast("double"))
       .withColumn("dow",
         pmod(datediff(col("day"), lit("1970-01-05").cast("date")), lit(7)))
@@ -677,12 +621,9 @@ object EventWindows {
 
   /** Core of `ts_acf` over any (event_type, ts, value) frame. */
   def tsAcfEvents(events: DataFrame, maxLag: Int = 7): DataFrame = {
-    val daily = events
-      .groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast("date").as("day"))
-      .agg(sum(dec(col("value"))).as("rev"))
+    val daily = TimeSeries.daily(events)
       .select(col("event_type"), col("day"),
-        (col("rev") * 10000).cast("long").as("xu"))
+        TimeSeries.fp(col("rev")).as("xu"))
     val stats = daily.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("xu")).as("s"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("day").asc)
@@ -736,10 +677,9 @@ object EventWindows {
 
   /** Core of `ts_stl` over any (event_type, ts, value) frame. */
   def tsStlEvents(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast("date").as("day"))
-      .agg((sum(dec(col("value"))) * 10000).cast("long").as("xu"))
+    val daily = TimeSeries.daily(events)
+      .select(col("event_type"), col("day"),
+        TimeSeries.fp(col("rev")).as("xu"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("day").asc)
       .rowsBetween(-3, 3)
     val tr = daily
@@ -754,7 +694,7 @@ object EventWindows {
     tr.join(se, Seq("event_type", "dow"))
       .select(col("event_type"),
         date_format(col("day"), "yyyy-MM-dd").as("day"),
-        round(col("xu").cast("double") / 10000.0, 4).as("day_value"),
+        TimeSeries.display(col("xu")).as("day_value"),
         round(col("tn").cast("double") / col("tc").cast("double")
           / 10000.0, 6).as("trend"),
         round(col("sn").cast("double")
@@ -774,60 +714,31 @@ object EventWindows {
     * l_t = (x_t + l + b) / 2, b_t = ((l_t − l) + b) / 2 (α = β = ½),
     * and day t's forecast is the PRIOR state's l + b — history only,
     * the prequential discipline `stream_anomaly` set. The recursion is
-    * inherently sequential per series, so it runs as a row-local fold:
-    * one keyed collect+sort (the event_path shape, bounded by a
-    * series' own day count — never corpus-sized) and a codegen'd
-    * `aggregate` HOF whose accumulator carries (l, b, emitted steps).
-    *
-    * Determinism: pure BIGINT fixed-point at scale 1e4 (the exact
-    * DECIMAL(18,4) day sum ×10⁴) with `div 2` truncating toward zero —
-    * Spark's `div` and DuckDB's `//` agree on negatives (verified; a
-    * falling series makes b negative) — so every forecast is
-    * bit-exact in both engines; the oracle replays the same integer
-    * recursion as a recursive CTE. Day gaps are treated as adjacent
-    * observations (the observed-sequence convention; `ts_gapfill` is
-    * the regularization step a calendar-spaced forecast would compose).
+    * inherently sequential per series, so it folds per series
+    * ([[TimeSeries.holt]] over [[TimeSeries.foldDays]]: one keyed
+    * shuffle, bounded by a series' own day count — never corpus-sized),
+    * in the kit's fixed point; the oracle replays the same integer
+    * recursion as a recursive CTE.
     */
   def tsForecast(spark: SparkSession, sfDir: String): DataFrame =
     tsForecastEvents(Tables.events(spark, sfDir))
 
   /** Core of `ts_forecast` over any (event_type, ts, value) frame. */
-  def tsForecastEvents(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast("date").as("day"))
-      .agg((sum(dec(col("value"))) * 10000).cast("long").as("x"))
-    daily.groupBy(col("event_type"))
-      .agg(array_sort(collect_list(struct(col("day"), col("x"))))
-        .as("arr"))
-      .withColumn("steps", expr("""
-        aggregate(arr,
-          named_struct('l', cast(0 as bigint), 'b', cast(0 as bigint),
-            'out',
-            cast(array() as array<struct<day:date,x:bigint,f:bigint>>),
-            'init', false),
-          (acc, e) -> CASE WHEN NOT acc.init THEN named_struct(
-              'l', e.x, 'b', cast(0 as bigint),
-              'out',
-              array(named_struct('day', e.day, 'x', e.x, 'f', e.x)),
-              'init', true)
-            ELSE named_struct(
-              'l', (e.x + acc.l + acc.b) div 2,
-              'b', (((e.x + acc.l + acc.b) div 2) - acc.l + acc.b)
-                div 2,
-              'out', array_append(acc.out, named_struct('day', e.day,
-                'x', e.x, 'f', acc.l + acc.b)),
-              'init', true) END,
-          acc -> acc.out)"""))
-      .select(col("event_type"), explode(col("steps")).as("s"))
-      .select(col("event_type"),
-        date_format(col("s.day"), "yyyy-MM-dd").as("day"),
-        round(col("s.x").cast("double") / 10000.0, 4).as("actual"),
-        round(col("s.f").cast("double") / 10000.0, 4).as("forecast"),
-        round((col("s.x") - col("s.f")).cast("double") / 10000.0, 4)
-          .as("err"))
+  def tsForecastEvents(events: DataFrame): DataFrame =
+    forecastRows(TimeSeries.foldDays(events) { (k, days) =>
+      days.iterator.zip(TimeSeries.holt(days.map(_._2))).map {
+        case ((d, x), f) => (k, d, x, f) }
+    })
+
+  /** A forecast fold's (event_type, day, x, f) rows in the forecast
+    * rows' display schema.
+    */
+  private def forecastRows(steps: DataFrame): DataFrame =
+    steps.toDF("event_type", "day", "x", "f")
+      .select(col("event_type") +:
+        date_format(col("day"), "yyyy-MM-dd").as("day") +:
+        TimeSeries.forecastCols(col("x"), col("f")): _*)
       .orderBy(col("event_type").asc, col("day").asc)
-  }
 
   /** `event_attribution` — LAST-TOUCH marketing attribution: each
     * purchase attributes to the user's most recent prior `click`
@@ -885,25 +796,22 @@ object EventWindows {
     * smoothing per event series (VERDICT r14 #3: `ts_forecast` is Holt
     * linear; a monitor watching the fixture's weekly-periodic series —
     * the day-of-week structure `ts_seasonal` extracts — wants the
-    * seasonal term too). α = β = γ = ½ in the same truncating BIGINT
-    * fixed-point (scale 1e4) as `ts_forecast`:
+    * seasonal term too). α = β = γ = ½ in the kit's fixed point:
     *   f_t = l + b + s[i]           (forecast BEFORE seeing x_t)
-    *   l'  = (x_t − s[i] + l + b) div 2
-    *   b'  = ((l' − l) + b) div 2
-    *   s[i]' = ((x_t − l') + s[i]) div 2
-    * with i = (rn−1) mod 7 — the OBSERVED-sequence seasonal index (the
-    * ts_forecast gap convention; for the daily-complete fixture this
-    * is day-of-week up to rotation). The first 7 observed days SEED
-    * the state — l₀ = (Σ seed) div 7, b₀ = 0, s = seed − l₀ — and
-    * emission starts at day 8 (a series with ≤ 7 days emits nothing:
-    * the honest online semantics, the ChangepointProcessor learning-
-    * window precedent). Oracle = the identical integer recursion as a
-    * recursive CTE carrying the 7-slot list through the recursion.
+    *   l'  = (x_t − s[i] + l + b) / 2
+    *   b'  = ((l' − l) + b) / 2
+    *   s[i]' = ((x_t − l') + s[i]) / 2
+    * with i = (rn−1) mod 7 — the OBSERVED-sequence seasonal index (for
+    * the daily-complete fixture this is day-of-week up to rotation). The
+    * first 7 observed days SEED the state — l₀ = Σ seed / 7, b₀ = 0,
+    * s = seed − l₀ — and emission starts at day 8 (a series with ≤ 7
+    * days emits nothing: the honest online semantics, the
+    * ChangepointProcessor learning-window precedent). Oracle = the
+    * identical integer recursion as a recursive CTE carrying the 7-slot
+    * list through the recursion.
     *
-    * Shape: ONE keyed shuffle (the ts_forecast discipline) — per-series
-    * day rows collect+sort row-locally (bounded by the series' own day
-    * count) and the recursion folds in a single `aggregate` HOF whose
-    * accumulator carries (n, seed, l, b, s[7], out).
+    * Shape: ONE keyed shuffle ([[TimeSeries.holtWinters]] over
+    * [[TimeSeries.foldDays]], the ts_forecast discipline).
     */
   def tsForecastSeasonal(spark: SparkSession, sfDir: String): DataFrame =
     tsForecastSeasonalEvents(Tables.events(spark, sfDir))
@@ -911,62 +819,12 @@ object EventWindows {
   /** Core of `ts_forecast_seasonal` over any (event_type, ts, value)
     * frame — the planted-seasonality harness for PatternSeasonalSpec.
     */
-  def tsForecastSeasonalEvents(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast("date").as("day"))
-      .agg((sum(dec(col("value"))) * 10000).cast("long").as("x"))
-    daily.groupBy(col("event_type"))
-      .agg(array_sort(collect_list(struct(col("day"), col("x"))))
-        .as("arr"))
-      .withColumn("steps", expr("""
-        aggregate(arr,
-          named_struct('n', 0,
-            'seed', cast(array() as array<bigint>),
-            'l', cast(0 as bigint), 'b', cast(0 as bigint),
-            's', cast(array() as array<bigint>),
-            'out',
-            cast(array() as array<struct<day:date,x:bigint,f:bigint>>)),
-          (acc, e) -> CASE
-            WHEN acc.n < 6 THEN named_struct('n', acc.n + 1,
-              'seed', array_append(acc.seed, e.x), 'l', acc.l,
-              'b', acc.b, 's', acc.s, 'out', acc.out)
-            WHEN acc.n = 6 THEN named_struct('n', 7,
-              'seed', array_append(acc.seed, e.x),
-              'l', aggregate(array_append(acc.seed, e.x),
-                cast(0 as bigint), (a, v) -> a + v) div 7,
-              'b', cast(0 as bigint),
-              's', transform(array_append(acc.seed, e.x),
-                v -> v - (aggregate(array_append(acc.seed, e.x),
-                  cast(0 as bigint), (a, v2) -> a + v2) div 7)),
-              'out', acc.out)
-            ELSE named_struct('n', acc.n + 1,
-              'seed', acc.seed,
-              'l', (e.x - element_at(acc.s, acc.n % 7 + 1)
-                    + acc.l + acc.b) div 2,
-              'b', (((e.x - element_at(acc.s, acc.n % 7 + 1)
-                    + acc.l + acc.b) div 2) - acc.l + acc.b) div 2,
-              's', transform(acc.s, (v, i) ->
-                CASE WHEN i = acc.n % 7 THEN
-                  ((e.x - ((e.x - element_at(acc.s, acc.n % 7 + 1)
-                      + acc.l + acc.b) div 2))
-                    + element_at(acc.s, acc.n % 7 + 1)) div 2
-                ELSE v END),
-              'out', array_append(acc.out, named_struct(
-                'day', e.day, 'x', e.x,
-                'f', acc.l + acc.b
-                     + element_at(acc.s, acc.n % 7 + 1))))
-          END,
-          acc -> acc.out)"""))
-      .select(col("event_type"), explode(col("steps")).as("s"))
-      .select(col("event_type"),
-        date_format(col("s.day"), "yyyy-MM-dd").as("day"),
-        round(col("s.x").cast("double") / 10000.0, 4).as("actual"),
-        round(col("s.f").cast("double") / 10000.0, 4).as("forecast"),
-        round((col("s.x") - col("s.f")).cast("double") / 10000.0, 4)
-          .as("err"))
-      .orderBy(col("event_type").asc, col("day").asc)
-  }
+  def tsForecastSeasonalEvents(events: DataFrame): DataFrame =
+    forecastRows(TimeSeries.foldDays(events) { (k, days) =>
+      days.iterator.drop(TimeSeries.Period)
+        .zip(TimeSeries.holtWinters(days.map(_._2)))
+        .map { case ((d, x), f) => (k, d, x, f) }
+    })
 
   /** `ts_changepoint` — Page's CUSUM change-point detection per event
     * series (the sequential level-shift test a production monitor runs
@@ -982,14 +840,10 @@ object EventWindows {
     * into both segments and fire on the steady prefix too (the first
     * cut did exactly that — caught by the planted-shift spec).
     *
-    * Shape: ONE keyed shuffle (the ts_forecast discipline) — the
-    * series collects and sorts row-locally, and μ, MAD, and the CUSUM
-    * recursion are three `aggregate` HOF passes over the in-task
-    * array, bounded by the series' own day count. Determinism: pure
-    * BIGINT fixed-point at scale 1e4 end to end — μ and MAD use the
-    * truncating integer division both engines share, the recursion is
-    * integer add/max — so the statistic (and the flag comparison) is
-    * bit-exact; the oracle replays it as a recursive CTE.
+    * Shape: ONE keyed shuffle ([[TimeSeries.cusum]] over
+    * [[TimeSeries.foldDays]], the ts_forecast discipline), in the kit's
+    * fixed point end to end, so the statistic and the flag comparison
+    * are bit-exact; the oracle replays it as a recursive CTE.
     */
   def tsChangepoint(spark: SparkSession, sfDir: String): DataFrame =
     tsChangepointEvents(Tables.events(spark, sfDir))
@@ -1000,46 +854,18 @@ object EventWindows {
     * batch twin); the declared query keeps the adaptive max(7, n/4).
     */
   def tsChangepointEvents(events: DataFrame,
-      refDays: Option[Int] = None): DataFrame = {
-    val daily = events
-      .groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast("date").as("day"))
-      .agg((sum(dec(col("value"))) * 10000).cast("long").as("x"))
-    daily.groupBy(col("event_type"))
-      .agg(array_sort(collect_list(struct(col("day"), col("x"))))
-        .as("arr"))
-      .withColumn("n", size(col("arr")).cast("long"))
-      .withColumn("w", refDays.map(d => lit(d.toLong))
-        .getOrElse(greatest(lit(7L), expr("n div 4"))))
-      .withColumn("ref", expr("slice(arr, 1, int(w))"))
-      .withColumn("mu", expr(
-        "aggregate(ref, 0L, (a, e) -> a + e.x) div size(ref)"))
-      .withColumn("mad", expr(
-        "aggregate(ref, 0L, (a, e) -> a + abs(e.x - mu)) div size(ref)"))
-      .withColumn("k", expr("mad div 2"))
-      .withColumn("steps", expr("""
-        aggregate(arr,
-          named_struct('sp', 0L, 'sn', 0L,
-            'out', cast(array() as
-              array<struct<day:date,x:bigint,sp:bigint,sn:bigint>>)),
-          (acc, e) -> named_struct(
-            'sp', greatest(0L, acc.sp + (e.x - mu) - k),
-            'sn', greatest(0L, acc.sn - (e.x - mu) - k),
-            'out', array_append(acc.out, named_struct('day', e.day,
-              'x', e.x,
-              'sp', greatest(0L, acc.sp + (e.x - mu) - k),
-              'sn', greatest(0L, acc.sn - (e.x - mu) - k)))),
-          acc -> acc.out)"""))
-      .select(col("event_type"), col("mad"), explode(col("steps")).as("s"))
-      .select(col("event_type"),
-        date_format(col("s.day"), "yyyy-MM-dd").as("day"),
-        round(col("s.x").cast("double") / 10000.0, 4).as("day_value"),
-        round(col("s.sp").cast("double") / 10000.0, 4).as("cusum_pos"),
-        round(col("s.sn").cast("double") / 10000.0, 4).as("cusum_neg"),
-        when(col("s.sp") > col("mad") * 5 ||
-          col("s.sn") > col("mad") * 5, 1).otherwise(0).as("changepoint"))
+      refDays: Option[Int] = None): DataFrame =
+    TimeSeries.foldDays(events) { (k, days) =>
+      val xs = days.map(_._2)
+      val w = refDays.getOrElse(math.max(7, xs.size / 4))
+      days.iterator.zip(TimeSeries.cusum(xs, w)).map {
+        case ((d, x), (sp, sn, cp)) => (k, d, x, sp, sn, cp) }
+    }.toDF("event_type", "day", "x", "sp", "sn", "changepoint")
+      .select((col("event_type") +:
+        date_format(col("day"), "yyyy-MM-dd").as("day") +:
+        TimeSeries.cusumCols(col("x"), col("sp"), col("sn"))) :+
+        col("changepoint"): _*)
       .orderBy(col("event_type").asc, col("day").asc)
-  }
 
   /** `ts_drift` — day-over-day distribution drift per event series: for
     * each (event_type, day), the two-sample KS statistic between that
@@ -1103,11 +929,32 @@ object EventWindows {
       .orderBy(col("event_type").asc, col("day").asc)
   }
 
+  /** `ts_anomaly` — series anomaly flagging, the monitoring workhorse:
+    * each order priority's DAILY revenue series is scored against its
+    * own population mean/stddev, and days with |z| > 2 are flagged.
+    * Per-series stats keep everything KEYED (a global series would
+    * need the scalar-attach product shape); the stats join back on the
+    * series key, so the plan is two keyed aggregates + one keyed join
+    * — day-count-sized after the first aggregate, at any corpus size.
+    *
+    * Determinism (the agg_corr discipline): day revenue is an exact
+    * DECIMAL sum; the moment sums snap each double to DECIMAL before
+    * summing (order-independent under partial aggregation); μ/σ/z run
+    * the SAME IEEE expression tree in both engines; z rounds to 6dp
+    * and the flag compares the ROUNDED z, so a boundary day cannot
+    * flip between engines. Zero-variance series short-circuit to
+    * z = 0 in both engines (identical double comparison).
+    *
+    * Headroom (ADVICE r11): the per-ROW snap of `o_totalprice` to
+    * DECIMAL(18,4) is corpus-size-independent (an order's price is
+    * bounded by order content, ~1e6 ≪ 1e14); the quantities that GROW
+    * with the corpus are the per-day sums and moments, snapped wide —
+    * `sx` terms to DECIMAL(28,4) (exact to day revenue 1e24) and `sxx`
+    * terms to DECIMAL(38,4) (exact to day revenue 1e17) — so the
+    * engines stay bit-aligned to ~10⁶× the 100 TB scale's ~1.6e10
+    * per-day-per-priority revenue before either cast can saturate.
+    */
   def tsAnomaly(spark: SparkSession, sfDir: String): DataFrame = {
-    def dec28(c: org.apache.spark.sql.Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(28, 4))
-    def dec38(c: org.apache.spark.sql.Column) =
-      c.cast(org.apache.spark.sql.types.DecimalType(38, 4))
     val daily = Tables.orders(spark, sfDir)
       .groupBy(col("o_orderpriority"), to_date(col("o_orderdate")).as("day"))
       .agg(sum(dec(col("o_totalprice"))).as("rev"))

@@ -24,6 +24,13 @@ object Relational {
     */
   def dec(c: Column): Column = c.cast(DecimalType(18, 4))
 
+  /** The wide snaps for sums that grow with the corpus: DECIMAL(28,4) for
+    * sums of values, DECIMAL(38,4) for sums of squares and products.
+    */
+  def dec28(c: Column): Column = c.cast(DecimalType(28, 4))
+
+  def dec38(c: Column): Column = c.cast(DecimalType(38, 4))
+
   /** `scan_parquet` — full-table scan, projected and totally ordered. */
   def scanParquet(spark: SparkSession, sfDir: String): DataFrame =
     Tables.nation(spark, sfDir)

@@ -318,7 +318,7 @@ private[graft] object VersionLog {
     * None when the file's writer stored none. One footer read on the
     * driver, row groups skipped.
     */
-  private def footerSchema(spark: SparkSession, f: Path): Option[StructType] = {
+  def footerSchema(spark: SparkSession, f: Path): Option[StructType] = {
     val footer = ParquetFooterReader.readFooter(
       HadoopInputFile.fromPath(f, spark.sparkContext.hadoopConfiguration),
       ParquetMetadataConverter.SKIP_ROW_GROUPS)

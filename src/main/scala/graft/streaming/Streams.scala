@@ -11,6 +11,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState,
   TimerValues, Trigger, TTLConfig, ValueState}
 import org.apache.spark.sql.types.StructType
 import graft.Fixed4
+import graft.operators.TimeSeries
 
 /** Structured Streaming operators (SURVEY.md §2.I — mandated extension;
   * the reference has no streaming surface [SURVEY.md §1.1]).
@@ -34,6 +35,8 @@ import graft.Fixed4
   *    (the band, phash and semantic tiers);
   *  - [[RunningTotalProcessor]]: the running purchase total, with or
   *    without a state TTL.
+  * Page-CUSUM and Holt-Winters learn and step through
+  * [[graft.operators.TimeSeries]], the recurrences their batch twins fold.
   * In `Streams`, `keyedMonitor` wires every processor over
   * (key, ts_us, value), `clickPurchase` every interval join, `sentinel`
   * the row that flushes a replay's watermark and `fileReplay` every
@@ -556,12 +559,11 @@ class DriftProcessor(dayUs: Long)
 
 /** Streaming Page-CUSUM — the ONLINE form of `ts_changepoint` over daily
   * [[ClosedBucketMonitor]] sums. The FIRST `refDays` closed days buffer
-  * as the reference window; when it fills, μ, MAD, the slack k = MAD/2
-  * and threshold 5·MAD derive in the same truncating integer arithmetic
-  * as the batch form, the buffered days replay through the two-sided
-  * integer CUSUM in order, and every later closed day scores
-  * incrementally — extra state per key is the reference buffer plus five
-  * longs. Replay-equal to
+  * as the reference window; when it fills, μ and MAD are learnt
+  * ([[graft.operators.TimeSeries.cusumLearn]]), the buffered days replay
+  * through [[graft.operators.TimeSeries.cusumStep]] in order, and every
+  * later closed day steps incrementally — extra state per key is the
+  * reference buffer plus five longs. Replay-equal to
   * [[graft.operators.EventWindows.tsChangepointEvents]] with
   * `refDays = Some(d)` (StreamingSpec) for series with ≥ refDays
   * days; a series still inside its learning window emits nothing yet
@@ -590,11 +592,9 @@ class ChangepointProcessor(dayUs: Long, refDays: Int)
     val out =
       scala.collection.mutable.ArrayBuffer[(String, Long, Long, Long, Long, Int)]()
     def score(b: Long, x: Long): Unit = {
-      val k = mad / 2 // Long '/': toward zero, = the batch div
-      sp = math.max(0L, sp + (x - mu) - k)
-      sn = math.max(0L, sn - (x - mu) - k)
-      out += ((key, b, x, sp, sn,
-        if (sp > mad * 5 || sn > mad * 5) 1 else 0))
+      val (p, q, flag) = TimeSeries.cusumStep(mu, mad, sp, sn, x)
+      sp = p; sn = q
+      out += ((key, b, x, sp, sn, flag))
     }
     closed.foreach { case (b, x) =>
       if (n < refDays) {
@@ -602,8 +602,8 @@ class ChangepointProcessor(dayUs: Long, refDays: Int)
         n += 1
         if (n == refDays) { // window filled: learn, then replay it
           val refs = ref.iterator().toSeq.sortBy(_._1)
-          mu = refs.map(_._2).sum / refDays
-          mad = refs.map(r => math.abs(r._2 - mu)).sum / refDays
+          val (m, d) = TimeSeries.cusumLearn(refs.map(_._2))
+          mu = m; mad = d
           refs.foreach { case (rb, rx) => score(rb, rx) }
           refs.foreach { case (rb, _) => ref.removeKey(rb) }
         }
@@ -617,13 +617,12 @@ class ChangepointProcessor(dayUs: Long, refDays: Int)
 /** Streaming Holt-Winters additive — the ONLINE form of
   * `ts_forecast_seasonal` over daily [[ClosedBucketMonitor]] sums. The
   * first 7 closed days buffer as the SEED window (emitting nothing —
-  * the batch twin's contract); when it fills, l₀ = Σ div 7, b₀ = 0,
-  * s = seed − l₀ derive in the same truncating integer arithmetic,
-  * and every later closed day emits its PRIOR-state forecast
-  * l + b + s[idx] before updating (l, b, s[idx]) with the α=β=γ=½
-  * div-2 recursion. Extra state per key: the seed buffer, the 7-slot
-  * seasonal map and three longs. Replay-equal to
-  * [[graft.operators.EventWindows.tsForecastSeasonalEvents]]
+  * the batch twin's contract); when it fills, the seed is learnt
+  * ([[graft.operators.TimeSeries.holtWintersLearn]]), and every later
+  * closed day emits its PRIOR-state forecast and updates (l, b, s[idx])
+  * through [[graft.operators.TimeSeries.holtWintersStep]]. Extra state
+  * per key: the seed buffer, the 7-slot seasonal map and three longs.
+  * Replay-equal to [[graft.operators.EventWindows.tsForecastSeasonalEvents]]
   * (StreamingSpec); the declared `stream_forecast_ok` row is gated on
   * `ts_forecast_seasonal`'s recursive-CTE oracle VERBATIM.
   */
@@ -650,27 +649,25 @@ class HoltWintersProcessor(dayUs: Long)
     val out =
       scala.collection.mutable.ArrayBuffer[(String, Long, Long, Long)]()
     closed.foreach { case (day, x) =>
-      if (n < 7) {
+      if (n < TimeSeries.Period) {
         seed.updateValue(day, x)
         n += 1
-        if (n == 7) { // seed filled: learn level + seasonal vector
+        if (n == TimeSeries.Period) { // seed filled: learn it
           val sd = seed.iterator().toSeq.sortBy(_._1)
-          l = sd.map(_._2).sum / 7 // Long '/': toward zero, = div
-          b = 0L
-          sd.zipWithIndex.foreach { case ((_, x0), i) =>
-            seas.updateValue(i.toLong, x0 - l)
+          val (l0, s0) = TimeSeries.holtWintersLearn(sd.map(_._2))
+          l = l0; b = 0L
+          s0.zipWithIndex.foreach { case (si, i) =>
+            seas.updateValue(i.toLong, si)
           }
           sd.foreach { case (d0, _) => seed.removeKey(d0) }
         }
       } else {
-        val idx = n % 7
-        val si = seas.getValue(idx)
-        val f = l + b + si
+        val idx = n % TimeSeries.Period
+        val (f, l2, b2, s2) =
+          TimeSeries.holtWintersStep(l, b, seas.getValue(idx), x)
         out += ((key, day, x, f))
-        val l2 = (x - si + l + b) / 2
-        b = ((l2 - l) + b) / 2
-        seas.updateValue(idx, ((x - l2) + si) / 2)
-        l = l2
+        l = l2; b = b2
+        seas.updateValue(idx, s2)
         n += 1
       }
     }
@@ -1061,12 +1058,10 @@ object Streams {
   def changepointScores(events: DataFrame, refDays: Int = 7): DataFrame =
     keyedMonitor(events, new ChangepointProcessor(86400L * 1000000L, refDays))
       .toDF("event_type", "day_us", "x_fp", "sp", "sn", "changepoint")
-      .select(col("event_type"),
-        timestamp_micros(col("day_us")).as("day"),
-        round(col("x_fp").cast("double") / 10000.0, 4).as("day_value"),
-        round(col("sp").cast("double") / 10000.0, 4).as("cusum_pos"),
-        round(col("sn").cast("double") / 10000.0, 4).as("cusum_neg"),
-        col("changepoint"))
+      .select((col("event_type") +:
+        timestamp_micros(col("day_us")).as("day") +:
+        TimeSeries.cusumCols(col("x_fp"), col("sp"), col("sn"))) :+
+        col("changepoint"): _*)
 
   /** Streaming form of `ts_forecast_seasonal` (see
     * [[HoltWintersProcessor]]): watermarked events → per-type daily
@@ -1076,12 +1071,9 @@ object Streams {
   def forecastScores(events: DataFrame): DataFrame =
     keyedMonitor(events, new HoltWintersProcessor(86400L * 1000000L))
       .toDF("event_type", "day_us", "x_fp", "f_fp")
-      .select(col("event_type"),
-        timestamp_micros(col("day_us")).as("day"),
-        round(col("x_fp").cast("double") / 10000.0, 4).as("actual"),
-        round(col("f_fp").cast("double") / 10000.0, 4).as("forecast"),
-        round((col("x_fp") - col("f_fp")).cast("double") / 10000.0, 4)
-          .as("err"))
+      .select(col("event_type") +:
+        timestamp_micros(col("day_us")).as("day") +:
+        TimeSeries.forecastCols(col("x_fp"), col("f_fp")): _*)
 
   /** Streaming form of the temporal join (see [[AsofProcessor]]):
     * watermarked signup/purchase events → per-user as-of enrichment,
@@ -1719,7 +1711,9 @@ object Streams {
   }
 
   /** Existing parquet files, hardlinked (copied where a link fails, e.g.
-    * across filesystems) — the replay then pays no read+rewrite job.
+    * across filesystems) — the replay then pays no read+rewrite job. The
+    * schema is the Spark schema in the first file's footer (no
+    * inference job), inferred only when its writer stored none.
     */
   private final case class LinkBatch(files: Seq[java.io.File])
       extends ReplayBatch {
@@ -1733,7 +1727,9 @@ object Streams {
       }
     }
     def schema(spark: SparkSession): StructType =
-      spark.read.parquet(files.head.toString).schema
+      graft.sources.VersionLog.footerSchema(spark,
+          new org.apache.hadoop.fs.Path(files.head.toString))
+        .getOrElse(spark.read.parquet(files.head.toString).schema)
   }
 
   /** Where a [[fileReplay]] query writes, and what the caller gets back. */

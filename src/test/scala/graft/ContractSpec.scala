@@ -345,6 +345,45 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
+  test("the time-series kit is written once: the daily and hourly series " +
+      "buckets, the hourly grid explode, the fixed-point display and the " +
+      "wide decimal snaps appear only inside their helpers, and no " +
+      "recurrence is folded as SQL text") {
+    val ts = "graft/operators/TimeSeries.scala"
+    val rel = "graft/operators/Relational.scala"
+    // other operators explode integer sequences (grid cells, copies,
+    // frames) that are no time series: that needle is checked only in
+    // the time-series family's files
+    val family = Set(ts, "graft/operators/EventWindows.scala",
+      "graft/streaming/Streams.scala")
+    val rules = Seq(
+      ("date_trunc(\"day\", col(\"ts\")).cast(\"date\")",
+        Seq(ts -> "def daily("), None),
+      ("date_trunc(\"hour\", col(\"ts\"))", Seq(ts -> "def hourly("), None),
+      ("explode(sequence(", Seq(ts -> "def hourlyGrid("), Some(family)),
+      ("aggregate(arr", Nil, None),
+      ("DecimalType(28, 4)", Seq(rel -> "def dec28("), None),
+      ("DecimalType(38, 4)", Seq(rel -> "def dec38("), None),
+      ("/ 10000.0, 4)", Seq(ts -> "def display("), None))
+    // SparkEntry's oracle SQL spells the same rules in DuckDB's dialect
+    val found = rules.map { case (needle, bodies, scope) =>
+      (needle, bodies, codeLines(needle, bodies).filter { case (at, _) =>
+        val file = at.takeWhile(_ != ':')
+        file != "graft/SparkEntry.scala" && scope.forall(_.contains(file))
+      })
+    }
+    val offenders = found.flatMap { case (needle, _, at) =>
+      at.collect { case (line, false) => s"$line $needle" }
+    }
+    assert(offenders.isEmpty, "build the series through TimeSeries " +
+      "(and snap through Relational.dec28/dec38) instead of re-copying " +
+      s"it:\n${offenders.mkString("\n")}")
+    found.foreach { case (needle, bodies, at) =>
+      assert(bodies.isEmpty || at.exists(_._2),
+        s"no helper holds $needle any more")
+    }
+  }
+
   test("no window frame in src/main runs currentRow → unboundedFollowing " +
       "(Spark re-scans it for every row: quadratic in the partition)") {
     val found = codeLines("currentRow, Window.unboundedFollowing", Nil)

@@ -268,11 +268,14 @@ class LakeSpec extends AnyFunSuite {
       s"clone-of-clone must list source data files: $mf2")
     assert(graft.sources.LakeIO.loadVersion(spark, s"$root/c2", Some(0))
       .count() === 3)
-    // history sees the clone version as zero data bytes (the point)
+    // history counts the clone version through its manifest: the source
+    // version's files and bytes (none of them copied — the listing above)
     val h = graft.sources.LakeIO.versionHistory(spark, s"$root/c1")
       .collect().head
-    assert(h.getInt(1) === 0 && h.getLong(2) === 0L,
-      s"clone history must show zero data files/bytes: $h")
+    val srcFiles = graft.sources.LakeIO.dataFiles(spark, s"$root/src/v=0")
+    assert(h.getInt(1) === srcFiles.size &&
+      h.getLong(2) === srcFiles.map(_.getLen).sum,
+      s"clone history must count the manifest's files and bytes: $h")
   }
 
   test("write-time CDF: per-commit attribution, directory-pruned range " +
@@ -1035,6 +1038,25 @@ class LakeSpec extends AnyFunSuite {
     // the refused clone aborted clean: no reservation, no clone dir
     assert(LakeIO.listInflight(spark, s"$root/badclone").isEmpty)
     assert(!new java.io.File(s"$root/badclone/v=0").exists())
+  }
+
+  test("history counts a partitioned version's nested files and a shallow " +
+      "clone's manifest entries") {
+    import graft.sources.LakeIO
+    import spark.implicits._
+    val root = Scratch.dir("lake_history")
+    // a version whose data files sit under v=0/p=.../
+    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "p")
+      .write.partitionBy("p").parquet(s"$root/src/v=0")
+    LakeIO.shallowClone(spark, s"$root/src", 0, s"$root/clone")
+    val files = LakeIO.dataFiles(spark, s"$root/src/v=0")
+    assert(files.size === 3, s"one file per partition: $files")
+    val want = (0, 3, files.map(_.getLen).sum)
+    Seq("src", "clone").foreach { t =>
+      val h = LakeIO.versionHistory(spark, s"$root/$t").collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+      assert(h.toSeq === Seq(want), s"$t history")
+    }
   }
 
   test("compact on a table whose head is a shallow clone reads and counts " +

@@ -408,6 +408,85 @@ class PatternSeasonalSpec extends AnyFunSuite {
       .exists(r => r.getDouble(4) > 0), "negative CUSUM never rose")
   }
 
+  test("ts_gapfill and ts_interpolate equal the grid-window formulas on " +
+      "planted rows (null-valued buckets, one-bucket users, leading and " +
+      "trailing gaps)") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    def at(h: Int, m: Int = 0) = java.sql.Timestamp.valueOf(
+      java.time.LocalDateTime.of(2024, 3, 1, 0, 0).plusHours(h.toLong)
+        .plusMinutes(m.toLong))
+    val rnd = new scala.util.Random(83)
+    val ev = (Seq[(Long, java.sql.Timestamp, Option[Double])](
+      // user 1: a null-valued bucket between observed ones, and a
+      // three-event bucket with one null value
+      (1L, at(0), Some(1.0)), (1L, at(3), None), (1L, at(5, 10), Some(2.5)),
+      (1L, at(5, 40), None), (1L, at(5, 50), Some(3.5)), (1L, at(9), Some(4.0)),
+      // users 2 and 3: one bucket each, the second with no value
+      (2L, at(4, 30), Some(7.0)),
+      (3L, at(2), None),
+      // user 4: null-valued buckets before the first value and after the
+      // last one
+      (4L, at(0), None), (4L, at(2), None), (4L, at(4), Some(5.0)),
+      (4L, at(7), Some(-6.0)), (4L, at(8), None), (4L, at(11, 59), None)
+    ) ++ (0 until 40).map { i => // user 5: two days of irregular hours
+      (5L, at(i * 2 + i % 3, i),
+        if (i % 7 == 3) None else Some(rnd.nextGaussian() * 10.0))
+    }).toDF("user_id", "ts", "value")
+    // the reference: the hourly grid as a sequence over each user's span,
+    // left-joined to the observations, with the carries as windows over
+    // the grid
+    val hourly = ev
+      .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("bucket"))
+      .agg(count(lit(1)).as("n"), sum(col("value").cast(
+        org.apache.spark.sql.types.DecimalType(18, 4))).cast("double").as("s"))
+    val grid = hourly.groupBy(col("user_id"))
+      .agg(min(col("bucket")).as("lo"), max(col("bucket")).as("hi"))
+      .select(col("user_id"), explode(sequence(col("lo"), col("hi"),
+        expr("INTERVAL 1 HOUR"))).as("bucket"))
+    val wPrev = Window.partitionBy(col("user_id")).orderBy(col("bucket").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wNext = Window.partitionBy(col("user_id")).orderBy(col("bucket").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val joined = grid.join(hourly, Seq("user_id", "bucket"), "left")
+    val gapRef = joined.select(col("user_id"), col("bucket"),
+        coalesce(col("n"), lit(0L)).as("n_events"),
+        last(col("s"), ignoreNulls = true).over(wPrev).as("filled_value"))
+      .orderBy(col("user_id").asc, col("bucket").asc).collect().toSeq
+    val seen = when(col("v").isNotNull, col("bucket"))
+    val interpRef = joined.withColumn("v", col("s") / col("n"))
+      .withColumn("pv", last(col("v"), ignoreNulls = true).over(wPrev))
+      .withColumn("pt", last(seen, ignoreNulls = true).over(wPrev))
+      .withColumn("nv", last(col("v"), ignoreNulls = true).over(wNext))
+      .withColumn("nt", last(seen, ignoreNulls = true).over(wNext))
+      .select(col("user_id"), col("bucket"),
+        when(col("v").isNotNull, col("v"))
+          .when(col("pv").isNull, col("nv"))
+          .when(col("nv").isNull, col("pv"))
+          .otherwise(col("pv") + (col("nv") - col("pv")) *
+            (unix_timestamp(col("bucket")) - unix_timestamp(col("pt")))
+              .cast("double") /
+            (unix_timestamp(col("nt")) - unix_timestamp(col("pt")))
+              .cast("double")).as("interp"))
+      .orderBy(col("user_id").asc, col("bucket").asc).collect().toSeq
+    val gap = EventWindows.tsGapfillEvents(ev).collect().toSeq
+    val interp = EventWindows.tsInterpolateEvents(ev).collect().toSeq
+    assert(gap === gapRef)
+    assert(interp === interpRef)
+    // the planted cases are there: one-bucket users have one row, the
+    // valueless one carries nothing, and user 4's leading and trailing
+    // hours take its nearest value
+    def rows(s: Seq[org.apache.spark.sql.Row], u: Long) =
+      s.filter(_.getLong(0) == u)
+    assert(rows(gap, 2L).map(_.getDouble(3)) === Seq(7.0))
+    assert(rows(gap, 3L).size === 1 && rows(gap, 3L).head.isNullAt(3))
+    assert(rows(interp, 3L).size === 1 && rows(interp, 3L).head.isNullAt(2))
+    val u4 = rows(interp, 4L).map(_.getDouble(2))
+    assert(u4.size === 12 && u4.take(5).forall(_ == 5.0) &&
+      u4.drop(7).forall(_ == -6.0), s"user 4: $u4")
+    assert(rows(gap, 4L).map(_.getLong(2)).sum === 6L)
+  }
+
   test("dedup_semantic equals the brute-force cell model") {
     import scala.jdk.CollectionConverters._
     val emb = graft.sources.Tables.embeddings(spark, sf)
