@@ -220,8 +220,8 @@ class Lake(val spark: SparkSession, val warehouse: String) {
       case Some(head) =>
         // through the log, so a clone head reads and counts its manifest
         val files = log.files(head)
-        val compacted = log.read(head)
-          .repartition(LakeIO.packedFileCount(files, targetFileBytes))
+        val compacted = LakeIO.packed(log.read(head),
+          LakeIO.packedFileCount(files, targetFileBytes))
         // on a capture-enabled table the content-identical rewrite
         // records an EMPTY change set, so captured range reads spanning
         // it keep working instead of refusing on a needless hole

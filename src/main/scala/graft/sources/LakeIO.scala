@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   * exact semantics of awswrangler's `overwrite_partitions`.
   *
   * Scale notes: writers inherit the frame's partitioning; no coalesce(1)
-  * here — small-file compaction is the caller's choice via
-  * `repartition(n)`. Partitioned writes use Hive-style key=value dirs so
-  * reads get partition pruning for free.
+  * here — small-file compaction is the caller's choice ([[compact]],
+  * [[compactToSize]]). Partitioned writes use Hive-style key=value dirs
+  * so reads get partition pruning for free.
   *
   * The versioned table (`saveVersion` … `vacuumVersions`) keeps its
   * on-disk layout — snapshot dirs, commit log, captures, clone manifests
@@ -239,22 +239,22 @@ object LakeIO {
       if (captureKeys.isEmpty) None else log.versions.lastOption.map(log.read)
     prev.foreach(requireAligned(_, "previous head", df, "incoming commit",
       "saveVersionCdf"))
-    log.publish { v =>
-      log.writeSnapshot(v, df)
-      val capture: Option[DataFrame] = captureKeys match {
-        // known-diff fast path (saveVersionCdfKnownDiff): the caller's
-        // exact change set IS the capture — no snapshot re-diff join
-        case Some(_) if knownDiff.isDefined && prev.isDefined =>
-          knownDiff.map(_.withColumn("_commit_version", lit(v)))
-        case Some(keys) => Some(log.capture(prev, v, keys))
-        case None if captureEmpty && log.captureEnabled =>
-          Some(df.limit(0)
-            .withColumn("_change_type", lit("none"))
-            .withColumn("_commit_version", lit(v)))
-        case None => None
-      }
-      capture.foreach(log.writeCapture(v, _))
+    // the capture of version v from the frame the commit writes, so the
+    // snapshot and capture writes run side by side (VersionLog.publishFrame)
+    val capture: Option[(DataFrame, Int) => DataFrame] = captureKeys match {
+      // known-diff fast path (saveVersionCdfKnownDiff): the caller's
+      // exact change set IS the capture — no snapshot diff join
+      case Some(_) if knownDiff.isDefined && prev.isDefined =>
+        knownDiff.map(d => (_: DataFrame, v: Int) =>
+          d.withColumn("_commit_version", lit(v)))
+      case Some(keys) => Some((frame, v) => log.capture(prev, frame, v, keys))
+      case None if captureEmpty && log.captureEnabled =>
+        Some((frame, v) => frame.limit(0)
+          .withColumn("_change_type", lit("none"))
+          .withColumn("_commit_version", lit(v)))
+      case None => None
     }
+    log.publishFrame(df, capture)
   }
 
   /** All versions EVER committed at `path` per the persistent commit
@@ -495,8 +495,8 @@ object LakeIO {
     * remaining step"): publish `df` as the next version AND record its
     * row-level changes vs the previous version ([[VersionLog.capture]])
     * AT COMMIT TIME, each row stamped with ITS OWN commit version. Cost
-    * at 100 TB: the diff is ONE keyed full-outer join of the new
-    * snapshot against the previous one (co-located and shuffle-free
+    * at 100 TB: the diff is ONE keyed full-outer join of the commit's
+    * frame against the previous snapshot (co-located and shuffle-free
     * under key-bucketed layouts) and the CDF artifact is churn-sized,
     * not table-sized.
     *
@@ -513,14 +513,14 @@ object LakeIO {
   /** [[saveVersionCdf]] for a caller that ALREADY HOLDS the commit's
     * exact change set (r19 optimization round): the capture is the
     * provided diff (re-stamped with the committed version) instead of
-    * a recomputed [[changes]] snapshot diff. The generic capture path
-    * re-reads BOTH snapshots and full-outer-joins them — O(|table|)
-    * per commit; a producer folding a known churn batch into the head
-    * (the streaming CDF commit loop) pays that join twice per commit
-    * for nothing, and at 100 TB it is the difference between
-    * O(|churn|) and O(|table|) write-time capture. This is how
-    * write-time CDF actually works in Delta: the commit RECORDS the
-    * changes it applied; it never re-diffs.
+    * a recomputed snapshot diff. The generic capture path
+    * full-outer-joins the previous head against the commit's frame —
+    * O(|table|) per commit; a producer folding a known churn batch into
+    * the head (the streaming CDF commit loop) pays that join for
+    * nothing, and at 100 TB it is the difference between O(|churn|)
+    * and O(|table|) write-time capture. This is how write-time CDF
+    * actually works in Delta: the commit RECORDS the changes it
+    * applied; it never re-diffs.
     *
     * Contract: `diff` must be the EXACT change set in the capture
     * schema (keys + value columns + `_change_type`
@@ -646,12 +646,14 @@ object LakeIO {
     * `lake_apply_changes` gate) — the property that lets any downstream
     * replica advance by shipping ONLY the delta. One keyed anti-join +
     * a union; at 100 TB with key-bucketed layouts both are co-located.
+    * The removed keys need no `distinct`: a left-anti join ignores
+    * duplicates on its right side.
     */
   def applyChanges(target: DataFrame, cdf: DataFrame,
       keys: Seq[String]): DataFrame = {
     val removed = cdf
       .filter(col("_change_type").isin("delete", "update_preimage"))
-      .select(keys.map(col): _*).distinct()
+      .select(keys.map(col): _*)
     val added = cdf
       .filter(col("_change_type").isin("insert", "update_postimage"))
       .drop("_change_type", "_commit_version")
@@ -835,7 +837,14 @@ object LakeIO {
     * their file budget). `compactToSize` below is the bin-packing flavor.
     */
   def compact(spark: SparkSession, path: String, targetFileCount: Int): Unit =
-    rewrite(spark.read.parquet(path).repartition(targetFileCount), path)
+    rewrite(packed(spark.read.parquet(path), targetFileCount), path)
+
+  /** `df` in `n` partitions for a compaction write: merged without a
+    * shuffle (`coalesce`) when the read has at least `n`, and split by a
+    * round-robin shuffle only when files must be split.
+    */
+  private[graft] def packed(df: DataFrame, n: Int): DataFrame =
+    if (n <= df.rdd.getNumPartitions) df.coalesce(n) else df.repartition(n)
 
   /** Recursive data-file listing (skips `_SUCCESS`/`.crc` bookkeeping
     * AND anything under a `_`/`.`-prefixed directory — the commit-log
@@ -890,8 +899,8 @@ object LakeIO {
     * problem where it actually lives. Returns (filesBefore, filesAfter).
     *
     * Scale: listing is metadata-only; each rewrite is one distributed
-    * read→repartition→write with no driver-side data movement
-    * ([[rewrite]]'s swap).
+    * read→coalesce→write ([[packed]]; a shuffle only when files must be
+    * split) with no driver-side data movement ([[rewrite]]'s swap).
     */
   def compactToSize(spark: SparkSession, path: String,
       targetFileBytes: Long): (Int, Int) = {
@@ -910,7 +919,7 @@ object LakeIO {
       else partDirs.map(d => d.getPath -> Some(s"$tmpRoot/${d.getPath.getName}"))
     rewrites.foreach { case (dir, tmp) =>
       val n = packedFileCount(dataFiles(spark, dir.toString), targetFileBytes)
-      rewrite(spark.read.parquet(dir.toString).repartition(n), dir.toString, tmp)
+      rewrite(packed(spark.read.parquet(dir.toString), n), dir.toString, tmp)
     }
     fs.delete(new Path(tmpRoot), true)
     (before, dataFiles(spark, path).length)

@@ -4,10 +4,13 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFooterReader, ParquetReadSupport}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{DataType, StructType}
+import scala.util.control.NonFatal
+import graft.operators.GraphOps
 
 /** The one owner of the versioned-table layout at `path` — every path,
   * listing, publish and capture of a versioned table goes through here
@@ -34,13 +37,24 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *      data write (no parquet-dir collision, no version aliasing). The
   *      reservation also burns the number: [[next]] reads in-flight
   *      markers, so even a crashed commit's n is never reused.
-  *   2. WRITE — the snapshot dir `v=<n>`, then (captured commits) the
-  *      capture `_cdf/v=<n>`. While the in-flight marker exists the
-  *      version is INVISIBLE: [[versions]] subtracts in-flight numbers,
-  *      so no reader resolves a half-written snapshot as latest and no
-  *      capture guard counts it as a commit. The capture lands BEFORE the
-  *      commit becomes visible — a failed capture cannot leave a
-  *      committed-but-uncaptured version.
+  *   2. WRITE — the snapshot dir `v=<n>` and (captured commits) the
+  *      capture `_cdf/v=<n>`, AT THE SAME TIME ([[publishFrame]]): the
+  *      capture is built from the commit's own frame, never read back
+  *      from the snapshot, so neither write waits for the other. The
+  *      snapshot is written on the caller's thread and the capture on a
+  *      fresh one, and both are joined before the seal. If either write
+  *      throws, the other is waited for, then the commit aborts
+  *      ([[reclaim]] plus deleting the reservation) and the first error
+  *      is rethrown. DETERMINISM RULE: a diff against the frame is exact
+  *      only when two evaluations of the frame give the same rows, so a
+  *      frame whose analyzed plan is not deterministic, or that reads
+  *      the current time (which Spark fixes separately per query), is
+  *      materialized once and both writes read that copy. While the
+  *      in-flight marker exists the version is INVISIBLE: [[versions]]
+  *      subtracts in-flight numbers, so no reader resolves a half-written
+  *      snapshot as latest and no capture guard counts it as a commit.
+  *      The capture lands BEFORE the commit becomes visible — a failed
+  *      capture cannot leave a committed-but-uncaptured version.
   *   3. SEAL — rename `_inflight_v=<n>` → `v=<n>` in `_commits/`: one
   *      atomic metadata op that publishes snapshot and capture together.
   *      Sealed markers are the commit log ([[commits]]) and are NEVER
@@ -235,6 +249,59 @@ private[graft] final class VersionLog(spark: SparkSession, path: String) {
     }
   }
 
+  /** Publishes `df` as the next version ([[publish]]), with the capture
+    * `capture(frame, v)` builds from the frame when there is one. The two
+    * writes overlap (step 2 of the commit protocol): the snapshot on the
+    * caller's thread, the capture on one fresh thread per commit. A
+    * volatile frame ([[VersionLog.volatile]]) is materialized once for
+    * both and released afterwards.
+    */
+  def publishFrame(df: DataFrame,
+      capture: Option[(DataFrame, Int) => DataFrame]): Int = {
+    val frame =
+      if (capture.isDefined && VersionLog.volatile(df))
+        df.localCheckpoint(eager = true)
+      else df
+    try publish { v =>
+      capture.map(_(frame, v)) match {
+        case Some(changes) =>
+          alongside(v)(writeCapture(v, changes))(writeSnapshot(v, frame))
+        case None => writeSnapshot(v, frame)
+      }
+    } finally if (frame ne df) GraphOps.unpersistCheckpoint(frame)
+  }
+
+  /** Runs `there` on a fresh thread and `here` on the caller's, and
+    * returns once both have ended; the error raised first is rethrown
+    * with any later one suppressed (a fatal error on the caller's thread
+    * propagates as it is, once the writer has ended). Never a pooled
+    * thread: Spark copies the caller's local properties (job group, job
+    * tags, scheduler pool) into a thread only when it is created, and
+    * those keep the writer's jobs charged to the commit. The join
+    * outlasts an interrupt, so an abort never reclaims a dir the writer
+    * is still writing.
+    */
+  private def alongside(v: Int)(there: => Unit)(here: => Unit): Unit = {
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    def record(e: Throwable): Unit =
+      if (!failure.compareAndSet(null, e)) failure.get.addSuppressed(e)
+    val writer = new Thread(() => there, s"graft-commit-writer $path v=$v")
+    writer.setDaemon(true)
+    // whatever ends the writer, a fatal error included, lands here
+    writer.setUncaughtExceptionHandler((_, e) => record(e))
+    writer.start()
+    try here
+    catch { case NonFatal(e) => record(e) }
+    finally {
+      var interrupted = false
+      while (writer.isAlive)
+        try writer.join()
+        catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread.interrupt()
+    }
+    Option(failure.get).foreach(e => throw e)
+  }
+
   /** Deletes version `v`'s snapshot dir and its capture (retention and
     * abort); the commit-log entry stays.
     */
@@ -244,15 +311,17 @@ private[graft] final class VersionLog(spark: SparkSession, path: String) {
     ()
   }
 
-  /** The capture rule: on the first commit (no `prev`) every row of `v`
-    * is an insert, otherwise the capture is the diff of `prev` → `v`.
+  /** The capture rule for version `v`, whose rows are `next`: on the
+    * first commit (no `prev`) every row is an insert, otherwise the
+    * capture is the diff of `prev` → `next`.
     */
-  def capture(prev: Option[DataFrame], v: Int, keys: Seq[String]): DataFrame =
+  def capture(prev: Option[DataFrame], next: DataFrame, v: Int,
+      keys: Seq[String]): DataFrame =
     prev match {
-      case None => read(v)
+      case None => next
         .withColumn("_change_type", lit("insert"))
         .withColumn("_commit_version", lit(v))
-      case Some(p) => LakeIO.snapshotDiff(p, read(v), keys, v)
+      case Some(p) => LakeIO.snapshotDiff(p, next, keys, v)
     }
 
   def writeSnapshot(v: Int, df: DataFrame): Unit =
@@ -326,6 +395,17 @@ private[graft] object VersionLog {
         .get(ParquetReadSupport.SPARK_METADATA_KEY))
       .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
       .collect { case s: StructType => s }
+  }
+
+  /** Whether two evaluations of `df` may give different rows: its
+    * analyzed plan, subqueries included, holds a nondeterministic
+    * expression or reads the current time (Spark fixes that separately
+    * for each query).
+    */
+  private def volatile(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.analyzed
+    (plan +: plan.subqueriesAll).exists(p =>
+      !p.deterministic || p.containsPattern(TreePattern.CURRENT_LIKE))
   }
 
   private def readLines(fs: FileSystem, p: Path): Seq[String] = {

@@ -1612,7 +1612,8 @@ object Streams {
               "reconstructible; the captured feed over ranges spanning " +
               "it will refuse (honestly)")
           log.writeCapture(v,
-            log.capture(Option.when(v > 0)(log.read(v - 1)), v, keys))
+            log.capture(Option.when(v > 0)(log.read(v - 1)), log.read(v), v,
+              keys))
         }
       }
     }

@@ -111,6 +111,105 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(LakeIO.saveVersion(snap((2L, 2.0)), root) === 1)
   }
 
+  test("a capture-side failure aborts clean: the snapshot written beside " +
+      "it is reclaimed, nothing is sealed, and the writer thread is gone") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft_capture_abort").toString
+    val keys = Seq("k")
+    LakeIO.saveVersionCdf(snap((1L, 10.0), (2L, 20.0)), root, keys) // v0
+    // a planted capture dir: v=1's capture write (ErrorIfExists) fails
+    // while its snapshot write, running beside it, succeeds
+    snap((9L, 9.0)).write.parquet(s"$root/_cdf/v=1")
+    val e = intercept[Exception] {
+      LakeIO.saveVersionCdf(snap((1L, 11.0), (2L, 20.0)), root, keys)
+    }
+    assert(e.getMessage.contains("already exists"), e.getMessage)
+    assert(!new java.io.File(s"$root/v=1").exists())
+    assert(LakeIO.listInflight(spark, root).isEmpty)
+    assert(!new java.io.File(s"$root/_commits/v=1").exists())
+    assert(LakeIO.listCommits(spark, root) === Seq(0))
+    assert(LakeIO.listVersions(spark, root) === Seq(0))
+    assert(LakeIO.loadVersion(spark, root).filter(col("k") === 1)
+      .collect().head.getDouble(1) === 10.0)
+    val writers = Thread.getAllStackTraces.keySet.asScala.filter(t =>
+      t.getName.startsWith("graft-commit-writer") && t.getName.contains(root))
+    assert(writers.forall(!_.isAlive), s"writer still alive: $writers")
+    // the number was reclaimed: the retry publishes v=1 with its capture
+    assert(LakeIO.saveVersionCdf(snap((1L, 11.0), (2L, 20.0)), root,
+      keys) === 1)
+    assert(LakeIO.capturedChanges(spark, root, 0, 1).count() === 2)
+  }
+
+  test("volatile frames (rand(), current_timestamp(), a nondeterministic " +
+      "UDF) are captured exactly: the feed replays to the snapshot, as a " +
+      "first commit and as a later captured commit") {
+    import org.apache.spark.sql.DataFrame
+    val keys = Seq("k")
+    // rand() is seeded once per column and current_timestamp() fixed
+    // once per query; the UDF differs on every evaluation
+    val noise = udf(() => java.util.UUID.randomUUID.toString)
+      .asNondeterministic()
+    def same(a: DataFrame, b: DataFrame) =
+      a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
+    Seq("rand" -> rand(), "current_timestamp" -> current_timestamp(),
+        "udf" -> noise()).foreach { case (name, c) =>
+      val root = Files.createTempDirectory(s"graft_volatile_$name").toString
+      val ids = spark.range(0, 200).select(col("id").as("k"))
+      LakeIO.saveVersionCdf(ids.withColumn("x", c), root, keys) // v0
+      // v1: every even key takes a fresh value, key 0 leaves, 500 enters
+      val next = LakeIO.loadVersion(spark, root).filter(col("k") =!= 0)
+        .withColumn("x", when(col("k") % 2 === 0, c).otherwise(col("x")))
+        .unionByName(spark.range(500, 501).select(col("id").as("k"))
+          .withColumn("x", c))
+      LakeIO.saveVersionCdf(next, root, keys) // v1
+      val v0 = LakeIO.loadVersion(spark, root, Some(0))
+      assert(same(LakeIO.replayChanges(v0.limit(0),
+        LakeIO.capturedChanges(spark, root, -1, 0), keys), v0),
+        s"$name: first commit")
+      assert(same(LakeIO.replayChanges(v0,
+        LakeIO.capturedChanges(spark, root, 0, 1), keys),
+        LakeIO.loadVersion(spark, root, Some(1))), s"$name: captured commit")
+    }
+  }
+
+  test("a captured commit builds its capture from the frame: no query of " +
+      "the commit scans a file under its own new version") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = Files.createTempDirectory("graft_capture_scan").toString
+    val keys = Seq("k")
+    LakeIO.saveVersionCdf(snap((1L, 1.0), (2L, 2.0)), root, keys) // v0
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        qe.analyzed.foreach {
+          case l: LogicalRelation => l.relation match {
+            case h: HadoopFsRelation =>
+              h.location.rootPaths.foreach(p => scanned.add(p.toString))
+            case _ => ()
+          }
+          case _ => ()
+        }
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.Instrument.drain(sc)
+    spark.listenerManager.register(listener)
+    try {
+      assert(LakeIO.saveVersionCdf(snap((1L, 1.5), (3L, 3.0)), root,
+        keys) === 1)
+      org.apache.spark.graft.Instrument.drain(sc)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val ours = scanned.asScala.toSeq.filter(_.contains(root))
+    // the diff read the previous head, and nothing read the new version
+    assert(ours.exists(_.endsWith("/v=0")), s"no scan of v=0: $ours")
+    assert(!ours.exists(_.endsWith("/v=1")), s"v=1 was read back: $ours")
+  }
+
   test("saveVersionCdf validates schema BEFORE any write (ADVICE r18 " +
       "medium): a drifted commit refuses with head untouched, no hole") {
     val root = Files.createTempDirectory("graft_prevalidate").toString

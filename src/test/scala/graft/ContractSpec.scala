@@ -263,6 +263,18 @@ class ContractSpec extends AnyFunSuite {
     assert(found.exists(_._2), "VersionLog no longer names the layout")
   }
 
+  test("new Thread( in src/main only in VersionLog (the commit writer) " +
+      "and Scratch (the shutdown hook): commit concurrency stays in one " +
+      "module") {
+    val allowed = Set("graft/sources/VersionLog.scala", "graft/Scratch.scala")
+    val found = codeLines("new Thread(", Nil).map(_._1)
+    val offenders = found.filterNot(at => allowed(at.takeWhile(_ != ':')))
+    assert(offenders.isEmpty, "start threads only in VersionLog's commit " +
+      s"writer or Scratch's shutdown hook:\n${offenders.mkString("\n")}")
+    assert(found.map(_.takeWhile(_ != ':')).toSet === allowed,
+      s"expected one thread site in each of $allowed: $found")
+  }
+
   test("version and capture dirs are read only through VersionLog: no " +
       "other code line names a capture dir or a table log's version dir") {
     val log = "graft/sources/VersionLog.scala" -> "final class VersionLog("

@@ -703,7 +703,7 @@ class PlanShapeSpec extends AnyFunSuite {
       Seq((1L, 1.5, "a"), (3L, 3.0, "c")).toDF("k", "x", "s"), root)
     // the diff the captured commit of v=1 would write
     val log = new graft.sources.VersionLog(spark, root)
-    val diff = log.capture(Some(log.read(0)), 1, Seq("k"))
+    val diff = log.capture(Some(log.read(0)), log.read(1), 1, Seq("k"))
     val p = diff.queryExecution.optimizedPlan
     val gen = p.collectFirst { case g: Generate => g }
     assert(gen.isDefined, s"no Generate in the diff plan:\n$p")
