@@ -839,12 +839,15 @@ object LakeIO {
   def compact(spark: SparkSession, path: String, targetFileCount: Int): Unit =
     rewrite(packed(spark.read.parquet(path), targetFileCount), path)
 
-  /** `df` in `n` partitions for a compaction write: merged without a
-    * shuffle (`coalesce`) when the read has at least `n`, and split by a
-    * round-robin shuffle only when files must be split.
+  /** `df` in `n` partitions for a compaction write. One file is merged
+    * without a shuffle (`coalesce(1)`); several take a round-robin
+    * shuffle, which spreads the rows evenly. A `coalesce(n)` would merge
+    * the read's partitions by count, not by bytes, so one large input
+    * file among many small ones would leave one output file far larger
+    * than the others.
     */
   private[graft] def packed(df: DataFrame, n: Int): DataFrame =
-    if (n <= df.rdd.getNumPartitions) df.coalesce(n) else df.repartition(n)
+    if (n == 1) df.coalesce(1) else df.repartition(n)
 
   /** Recursive data-file listing (skips `_SUCCESS`/`.crc` bookkeeping
     * AND anything under a `_`/`.`-prefixed directory — the commit-log
@@ -899,8 +902,8 @@ object LakeIO {
     * problem where it actually lives. Returns (filesBefore, filesAfter).
     *
     * Scale: listing is metadata-only; each rewrite is one distributed
-    * read→coalesce→write ([[packed]]; a shuffle only when files must be
-    * split) with no driver-side data movement ([[rewrite]]'s swap).
+    * read→write with no driver-side data movement ([[rewrite]]'s swap),
+    * and a shuffle only when it writes more than one file ([[packed]]).
     */
   def compactToSize(spark: SparkSession, path: String,
       targetFileBytes: Long): (Int, Int) = {

@@ -4,7 +4,14 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UserDefinedExpression
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct,
+  Filter, Join, LocalRelation, LogicalPlan, Project, Range, Repartition,
+  RepartitionByExpression, ResolvedHint, Sort, SubqueryAlias, Union, View}
 import org.apache.spark.sql.catalyst.trees.TreePattern
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFooterReader, ParquetReadSupport}
 import org.apache.spark.sql.functions.lit
@@ -46,10 +53,11 @@ import graft.operators.GraphOps
   *      throws, the other is waited for, then the commit aborts
   *      ([[reclaim]] plus deleting the reservation) and the first error
   *      is rethrown. DETERMINISM RULE: a diff against the frame is exact
-  *      only when two evaluations of the frame give the same rows, so a
-  *      frame whose analyzed plan is not deterministic, or that reads
-  *      the current time (which Spark fixes separately per query), is
-  *      materialized once and both writes read that copy. While the
+  *      only when two evaluations of the frame give the same rows, so
+  *      every frame but a stable one (scans, projections, filters,
+  *      joins, unions, sorts, repartitions and grouping-only aggregates
+  *      over deterministic built-in expressions, [[VersionLog.volatile]])
+  *      is materialized once and both writes read that copy. While the
   *      in-flight marker exists the version is INVISIBLE: [[versions]]
   *      subtracts in-flight numbers, so no reader resolves a half-written
   *      snapshot as latest and no capture guard counts it as a commit.
@@ -397,15 +405,40 @@ private[graft] object VersionLog {
       .collect { case s: StructType => s }
   }
 
-  /** Whether two evaluations of `df` may give different rows: its
-    * analyzed plan, subqueries included, holds a nondeterministic
-    * expression or reads the current time (Spark fixes that separately
-    * for each query).
+  /** Whether two evaluations of `df` may give different rows, so a
+    * capture diffed against a second evaluation could miss what the
+    * snapshot holds. `df` is STABLE only when every node of its analyzed
+    * plan, subqueries included, gives rows that depend on nothing but
+    * its input rows (a scan of files, local rows or a finished
+    * checkpoint; a projection, filter, join, union, sort, repartition or
+    * grouping-only aggregate) over deterministic built-in expressions
+    * that do not read the current time (Spark fixes that separately per
+    * query). Every other frame is volatile: a dedup, limit, sample,
+    * window or aggregate function may keep different rows or sum floats
+    * in a different order on each evaluation, a user-defined function
+    * may not declare that it is nondeterministic, and an unfinished RDD
+    * is recomputed from whatever made it. Any rewrite the optimizer makes
+    * of a stable plan gives the same rows, so the analyzed plan decides.
     */
-  private def volatile(df: DataFrame): Boolean = {
+  private[graft] def volatile(df: DataFrame): Boolean = {
     val plan = df.queryExecution.analyzed
-    (plan +: plan.subqueriesAll).exists(p =>
-      !p.deterministic || p.containsPattern(TreePattern.CURRENT_LIKE))
+    (plan +: plan.subqueriesAll).exists(_.exists(node => !stable(node)))
+  }
+
+  private def stable(node: LogicalPlan): Boolean = {
+    val rowsFromInput = node match {
+      case _: Project | _: Filter | _: Join | _: Union | _: Distinct |
+           _: Sort | _: Repartition | _: RepartitionByExpression |
+           _: SubqueryAlias | _: View | _: ResolvedHint |
+           _: LogicalRelation | _: LocalRelation | _: Range => true
+      case a: Aggregate => !a.aggregateExpressions.exists(
+        _.exists(_.isInstanceOf[AggregateExpression]))
+      case r: LogicalRDD => r.rdd.isCheckpointed
+      case _ => false
+    }
+    rowsFromInput && node.expressions.forall(e => e.deterministic &&
+      !e.containsPattern(TreePattern.CURRENT_LIKE) &&
+      !e.exists(_.isInstanceOf[UserDefinedExpression]))
   }
 
   private def readLines(fs: FileSystem, p: Path): Seq[String] = {

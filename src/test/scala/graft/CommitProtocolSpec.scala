@@ -140,28 +140,51 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(LakeIO.capturedChanges(spark, root, 0, 1).count() === 2)
   }
 
-  test("volatile frames (rand(), current_timestamp(), a nondeterministic " +
-      "UDF) are captured exactly: the feed replays to the snapshot, as a " +
-      "first commit and as a later captured commit") {
+  test("frames two evaluations can answer differently (rand(), " +
+      "current_timestamp(), user functions, a dedup over conflicting " +
+      "duplicates, a limit, a sample, a window, an aggregate function) are " +
+      "materialized once: the feed replays to the snapshot, as a first " +
+      "commit and as a later captured commit") {
     import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    import graft.sources.VersionLog
     val keys = Seq("k")
-    // rand() is seeded once per column and current_timestamp() fixed
-    // once per query; the UDF differs on every evaluation
-    val noise = udf(() => java.util.UUID.randomUUID.toString)
-      .asNondeterministic()
     def same(a: DataFrame, b: DataFrame) =
       a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
-    Seq("rand" -> rand(), "current_timestamp" -> current_timestamp(),
-        "udf" -> noise()).foreach { case (name, c) =>
-      val root = Files.createTempDirectory(s"graft_volatile_$name").toString
-      val ids = spark.range(0, 200).select(col("id").as("k"))
-      LakeIO.saveVersionCdf(ids.withColumn("x", c), root, keys) // v0
-      // v1: every even key takes a fresh value, key 0 leaves, 500 enters
-      val next = LakeIO.loadVersion(spark, root).filter(col("k") =!= 0)
-        .withColumn("x", when(col("k") % 2 === 0, c).otherwise(col("x")))
-        .unionByName(spark.range(500, 501).select(col("id").as("k"))
-          .withColumn("x", c))
-      LakeIO.saveVersionCdf(next, root, keys) // v1
+    // 4000 rows over 8 partitions: unique keys, or 200 keys with 20
+    // conflicting rows each
+    val rows = spark.range(0, 4000).repartition(8)
+      .select(col("id").as("k"), col("id").cast("double").as("x"))
+    val dups = rows.withColumn("k", col("k") % 200)
+    // rand() is seeded once per column and current_timestamp() fixed
+    // once per query; `noise` says it differs on every evaluation, and
+    // `clock` does too while Spark takes it for deterministic
+    val noise = udf(() => java.util.UUID.randomUUID.toString)
+      .asNondeterministic()
+    val clock = udf((k: Long) => (System.nanoTime() + k).toDouble)
+    val frames = Seq[(String, DataFrame, DataFrame => DataFrame)](
+      ("rand", rows, _.withColumn("x", rand())),
+      ("current_timestamp", rows, _.withColumn("x", current_timestamp())),
+      ("nondeterministic_udf", rows, _.withColumn("x", noise())),
+      ("dropDuplicates", dups, _.dropDuplicates("k")),
+      ("limit", rows, _.limit(150)),
+      ("sample", rows, _.sample(0.5)),
+      ("window", dups, _.withColumn("rn", row_number().over(
+        Window.partitionBy("k").orderBy(col("x") % 2)))
+        .filter(col("rn") === 1).drop("rn")),
+      ("aggregate", dups, _.groupBy("k").agg(first("x").as("x"))),
+      ("unmarked_udf", rows, _.withColumn("x", clock(col("k")))))
+    val head = spark.range(0, 200).select(col("id").as("k"),
+      col("id").cast("double").as("x"))
+    // a stable frame (lake_maintain's shape) is evaluated twice instead
+    assert(!VersionLog.volatile(head.join(head.filter(col("k") < 3), keys,
+      "left_anti").unionByName(head.filter(col("k") < 3))))
+    frames.foreach { case (name, in, f) =>
+      assert(VersionLog.volatile(f(in)), s"$name: counted stable")
+      val root = Files.createTempDirectory(s"graft_ordered_$name").toString
+      LakeIO.saveVersionCdf(f(in), root, keys) // v0
+      // v1 keeps the same shape over a changed input
+      LakeIO.saveVersionCdf(f(in.filter(col("x") =!= 7.0)), root, keys)
       val v0 = LakeIO.loadVersion(spark, root, Some(0))
       assert(same(LakeIO.replayChanges(v0.limit(0),
         LakeIO.capturedChanges(spark, root, -1, 0), keys), v0),

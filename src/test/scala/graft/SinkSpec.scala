@@ -84,6 +84,28 @@ class SinkSpec extends AnyFunSuite {
     assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
   }
 
+  test("compactToSize over skewed input files writes even files") {
+    val out = tmp() + "/t"
+    val df = Tables.orders(spark, sf)
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+    // one file holding half the rows, then 24 small ones
+    val big = df.filter(col("o_orderkey") % 2 === 0)
+    LakeIO.saveDataset(big.coalesce(1), out)
+    LakeIO.appendDataset(df.exceptAll(big).repartition(24), out)
+    val bytes = LakeIO.dataFiles(spark, out).map(_.getLen).sum
+    val (before, after) = LakeIO.compactToSize(spark, out, bytes / 3 + 1)
+    assert(before === 25)
+    assert(after === 3)
+    val sizes = LakeIO.dataFiles(spark, out).map(_.getLen)
+    assert(sizes.max < 2 * sizes.min, s"uneven files: $sizes")
+    val back = spark.read.parquet(out)
+    assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
+    // one target file is merged without a shuffle
+    LakeIO.compactToSize(spark, out, bytes * 2)
+    assert(LakeIO.dataFiles(spark, out).length === 1)
+    assert(spark.read.parquet(out).count() === df.count())
+  }
+
   test("compactToSize on a Hive layout compacts per-partition, keeps pruning") {
     val out = tmp() + "/t"
     val nat = Tables.nation(spark, sf)
