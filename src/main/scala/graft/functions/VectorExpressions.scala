@@ -265,7 +265,7 @@ case class FloatVecLshBits(child: Expression, nBits: Int)
   * bias = −‖cent‖²/2 this is min-L2 PQ code assignment reading the
   * subvector IN PLACE — the slice+concat formulation allocated two
   * arrays per row per subspace and dominated the 200k-vector probe
-  * (Round12Probe: 4.7 s of a 4.9 s assignment was allocation).
+  * (SCALE.md: 4.7 s of a 4.9 s assignment was allocation).
   * Arithmetic is bit-identical to that formulation: products
   * accumulate left-to-right over the subrange, the bias adds LAST —
   * exactly the oracle's `list_sum(products) - ‖c‖²/2`.

@@ -511,14 +511,36 @@ object Joins {
     * (unboundedPreceding, -1) to get each bucket's carry-IN, and take
     * coalesce(within-bucket carry, carry-in). Exactly equivalent (the
     * carry is a prefix scan; the rollup is its segment tree), costs two
-    * narrow shuffles of the same keyed layout, and is measured in
-    * AsOfSkewProbe: identical checksum, max-task 2.1 s → 1.1 s and wall
-    * 6.0 s → 4.4 s with a planted user owning half of 8M rows — the gap
-    * widens linearly with the hot user's share. Not applied to the
-    * declared queries: the fixture's user distribution is uniform, and
-    * the split costs more than it saves below ~10⁶ rows per user.
+    * narrow shuffles of the same keyed layout, and is measured (SCALE.md,
+    * as-of hot-user window skew): identical checksum, max-task 2.1 s →
+    * 1.1 s and wall 6.0 s → 4.4 s with a planted user owning half of 8M
+    * rows — the gap widens linearly with the hot user's share. Not
+    * applied to the declared queries: the fixture's user distribution is
+    * uniform, and the split costs more than it saves below ~10⁶ rows per
+    * user.
     */
   def joinAsOf(spark: SparkSession, sfDir: String): DataFrame = {
+    val tagged = asOfSides(spark, sfDir)
+    val w = Window.partitionBy("ukey")
+      .orderBy(col("at_ts").asc, col("side").asc, col("o_key").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    tagged
+      .withColumn("asof_orderkey", last(col("o_key"), ignoreNulls = true).over(w))
+      .filter(col("side") === 1)
+      .select(col("event_id"), col("ukey").as("user_id"),
+        col("asof_orderkey"))
+      .orderBy(col("event_id").asc)
+  }
+
+  /** The as-of family's input: purchase events at their date and orders
+    * at their order date over one (ukey, at_ts, event_id, o_key) schema,
+    * unioned with a `side` tag. Orders take side 0, so at the same
+    * timestamp an order sorts before the event and is visible to it ("at
+    * or before"); `eventsFirst` swaps the tags for the forward join,
+    * whose descending sort then shows a same-date order ("at or after").
+    */
+  private def asOfSides(spark: SparkSession, sfDir: String,
+      eventsFirst: Boolean = false): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id").as("ukey"),
@@ -529,19 +551,9 @@ object Joins {
         col("o_orderdate").as("at_ts"),
         lit(null).cast("long").as("event_id"),
         col("o_orderkey").as("o_key"))
-    // Orders sort before events at the same timestamp (side=0 < 1) so an
-    // order on the event's own date is visible to it ("at or before").
-    val tagged = ord.withColumn("side", lit(0))
-      .unionByName(ev.withColumn("side", lit(1)))
-    val w = Window.partitionBy("ukey")
-      .orderBy(col("at_ts").asc, col("side").asc, col("o_key").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tagged
-      .withColumn("asof_orderkey", last(col("o_key"), ignoreNulls = true).over(w))
-      .filter(col("side") === 1)
-      .select(col("event_id"), col("ukey").as("user_id"),
-        col("asof_orderkey"))
-      .orderBy(col("event_id").asc)
+    val (first, second) = if (eventsFirst) (ev, ord) else (ord, ev)
+    first.withColumn("side", lit(0))
+      .unionByName(second.withColumn("side", lit(1)))
   }
 
   /** `join_asof_tolerance` — as-of join with a match bound (pandas
@@ -556,18 +568,7 @@ object Joins {
     */
   def joinAsOfTolerance(spark: SparkSession, sfDir: String,
       tolDays: Int = Joins.AsOfTolDays): DataFrame = {
-    val ev = Tables.events(spark, sfDir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("ukey"),
-        to_date(col("ts")).cast("timestamp").as("at_ts"),
-        col("event_id"), lit(null).cast("long").as("o_key"))
-    val ord = Tables.orders(spark, sfDir)
-      .select(col("o_custkey").as("ukey"),
-        col("o_orderdate").as("at_ts"),
-        lit(null).cast("long").as("event_id"),
-        col("o_orderkey").as("o_key"))
-    val tagged = ord.withColumn("side", lit(0))
-      .unionByName(ev.withColumn("side", lit(1)))
+    val tagged = asOfSides(spark, sfDir)
       .withColumn("o_ts", when(col("side") === 0, col("at_ts")))
     val w = Window.partitionBy("ukey")
       .orderBy(col("at_ts").asc, col("side").asc, col("o_key").asc)
@@ -681,20 +682,7 @@ object Joins {
     * operator would plan.
     */
   def joinAsOfForward(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = Tables.events(spark, sfDir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("ukey"),
-        to_date(col("ts")).cast("timestamp").as("at_ts"),
-        col("event_id"), lit(null).cast("long").as("o_key"))
-    val ord = Tables.orders(spark, sfDir)
-      .select(col("o_custkey").as("ukey"),
-        col("o_orderdate").as("at_ts"),
-        lit(null).cast("long").as("event_id"),
-        col("o_orderkey").as("o_key"))
-    // Events sort before orders at the same timestamp (side=0 < 1) so an
-    // order on the event's own date is visible to it ("at or after").
-    val tagged = ev.withColumn("side", lit(0))
-      .unionByName(ord.withColumn("side", lit(1)))
+    val tagged = asOfSides(spark, sfDir, eventsFirst = true)
     val w = Window.partitionBy("ukey")
       .orderBy(col("at_ts").desc, col("side").desc, col("o_key").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -919,18 +907,7 @@ object Joins {
     */
   def joinAsOfSplit(spark: SparkSession, sfDir: String,
       bucketDays: Long = 64L): DataFrame = {
-    val ev = Tables.events(spark, sfDir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("ukey"),
-        to_date(col("ts")).cast("timestamp").as("at_ts"),
-        col("event_id"), lit(null).cast("long").as("o_key"))
-    val ord = Tables.orders(spark, sfDir)
-      .select(col("o_custkey").as("ukey"),
-        col("o_orderdate").as("at_ts"),
-        lit(null).cast("long").as("event_id"),
-        col("o_orderkey").as("o_key"))
-    val tagged = ord.withColumn("side", lit(0))
-      .unionByName(ev.withColumn("side", lit(1)))
+    val tagged = asOfSides(spark, sfDir)
       .withColumn("__pts", unix_millis(col("at_ts")) * 2 + col("side"))
     carryLastRangeSplit(tagged, "ukey", "__pts", "o_key",
         bucketWidth = 2L * 86400000L * bucketDays, out = "asof_orderkey")
@@ -941,7 +918,7 @@ object Joins {
   }
 
   /** Library form of the hot-user mitigation the as-of family's scaladoc
-    * documents (VERDICT r7 #6; measured in AsOfSkewProbe): the forward
+    * documents (VERDICT r7 #6; measured in SCALE.md): the forward
     * carry `last(valCol, ignoreNulls) over (partitionBy keyCol orderBy
     * tsCol)` computed as RANGE-SPLIT + BOUNDARY CARRY, so one
     * pathological key's timeline becomes ceil(range/bucketWidth)

@@ -543,7 +543,7 @@ object SimSearch {
     * that's the compression): the stride sample caps at the first 256
     * entries so the per-row assignment cost is a CONSTANT 256·(sub+1)·m
     * flops at any corpus size (an uncapped stride codebook grew with
-    * the corpus and made the index build superlinear — Round12Probe).
+    * the corpus and made the index build superlinear — SCALE.md).
     * A no-op at the fixture sizes (C ≤ 16), mirrored as ORDER BY/LIMIT
     * in the oracle CTEs.
     */
@@ -598,7 +598,7 @@ object SimSearch {
       sub: Int, embCol: Column): Seq[Column] =
     (0 until m).map { s =>
       // in-place subrange kernel (no per-row slice/concat allocation —
-      // Round12Probe measured those dominating the assignment); bias
+      // SCALE.md's PQ rows measured those dominating the assignment); bias
       // −‖c_s‖²/2 adds last, same arithmetic as the oracle
       graft.functions.VectorExpressions.nearestCentroidSliceCol(
         embCol,
@@ -2705,7 +2705,7 @@ object SimSearch {
     * bucket-locally; the survivor filter is a keyed LEFT ANTI join.
     *
     * The codebook SIZE is the scaling knob, and it cuts both ways
-    * (Round12cProbe, measured at 20k→200k vectors): a fixed STRIDE
+    * (SCALE.md, measured at 20k→200k vectors): a fixed STRIDE
     * keeps pair work linear (expected cell = stride) but grows C with
     * N, so the O(C·d)-per-row assignment goes quadratic in total
     * (cells 160→1,591, wall 3→22 s); fixed C keeps assignment linear

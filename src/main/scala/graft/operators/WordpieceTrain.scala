@@ -19,8 +19,8 @@ import graft.sources.Tables
   * shape — HuggingFace/SentencePiece trainers operate on word counts):
   * the one corpus-proportional stage is the (word, wf) aggregate;
   * every merge iteration runs over the Heaps-sublinear distinct-word
-  * frame (Round16Probe: CONSTANT on the saturated fixture while
-  * tokens grow 10×). The iterations run in [[BpeTrain.mergeLoop]] (its
+  * frame (SCALE.md: CONSTANT on the saturated fixture while tokens
+  * grow 10×). The iterations run in [[BpeTrain.mergeLoop]] (its
   * engine-exact boundary-flanked re-segmentation, here at char
   * granularity — normText chars can never contain the control-char
   * markers); this trainer supplies only the score: TWO keyed

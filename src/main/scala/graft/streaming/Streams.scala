@@ -55,7 +55,7 @@ import graft.operators.TimeSeries
   * which needs new data to advance). TTL requires
   * TimeMode.ProcessingTime — see `Streams.runningTotalsWithTtl`.
   */
-class RunningTotalProcessor(ttl: TTLConfig = TTLConfig.NONE)
+class RunningTotalProcessor(ttl: TTLConfig)
     extends StatefulProcessor[
       Long, (Long, Long, Double), (Long, Long, Double)] {
   @transient private var total: ValueState[Double] = _
@@ -789,21 +789,6 @@ object Streams {
       .select(col("w.start").as("win_start"), col("event_type"),
         col("n_events"))
 
-  /** `stream_session` — 30-minute-gap session windows per user (native
-    * session_window; batch gap-and-island equivalent:
-    * EventWindows.sessionize).
-    */
-  def sessionCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"),
-        col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,4)")).cast("double")
-          .as("session_value"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("n_events"), col("session_value"))
-
   /** `stream_watermark_late` / `stream_dedup` — stateful dedup on
     * event_id bounded by the watermark: late duplicates (and late rows
     * beyond the watermark) are dropped; state is evicted as the
@@ -904,18 +889,6 @@ object Streams {
       .select(col("event_id"), col("user_id"), col("c_mktsegment"),
         col("value"))
 
-  /** Streaming form of `dedup_incremental`: incoming documents
-    * stream-static LEFT ANTI join the existing corpus's content-hash
-    * set — the other stateless stream-static join class (anti, vs the
-    * inner enrichment above): still no join state or watermark, the
-    * static hash set re-plans per micro-batch, so newly compacted
-    * corpus hashes are picked up batch-over-batch. Equivalence with
-    * the batch operator is StreamingSpec-asserted.
-    */
-  def incrementalDedupStream(newDocs: DataFrame,
-      existingHashes: DataFrame): DataFrame =
-    graft.operators.TextOps.newContent(newDocs, existingHashes)
-
   /** Documents as a micro-batch file stream (streaming reads need an
     * explicit schema; the glob pins the one fixture file).
     */
@@ -959,24 +932,6 @@ object Streams {
       .groupByKey(_._1)
   }
 
-  private def runningTotals(events: DataFrame, processor: RunningTotalProcessor,
-      timeMode: TimeMode): DataFrame =
-    purchasesByUser(events)
-      .transformWithState(processor, timeMode, OutputMode.Append())(
-        Encoders.product[(Long, Long, Double)])
-      .toDF("user_id", "event_id", "running_purchases")
-
-  /** `stream_stateful` on the Spark 4 arbitrary-state API
-    * (transformWithState + ValueState, RocksDB-backed): same semantics as
-    * `runningPurchaseTotals`, with typed per-key state the store can
-    * checkpoint/evict independently of the micro-batch. Requires
-    * `spark.sql.streaming.stateStore.providerClass =
-    * ...RocksDBStateStoreProvider` (jar verified present).
-    */
-  def runningPurchaseTotalsTws(spark: SparkSession,
-      events: DataFrame): DataFrame =
-    runningTotals(events, new RunningTotalProcessor, TimeMode.None())
-
   /** `stream_state_ttl` — running purchase totals whose keyed state
     * expires `ttlMs` after its last write ([[RunningTotalProcessor]]
     * with a TTL).
@@ -988,8 +943,12 @@ object Streams {
     */
   def runningTotalsWithTtl(spark: SparkSession, events: DataFrame,
       ttlMs: Long): DataFrame =
-    runningTotals(events, new RunningTotalProcessor(
-      TTLConfig(java.time.Duration.ofMillis(ttlMs))), TimeMode.ProcessingTime())
+    purchasesByUser(events)
+      .transformWithState(new RunningTotalProcessor(
+        TTLConfig(java.time.Duration.ofMillis(ttlMs))),
+        TimeMode.ProcessingTime(), OutputMode.Append())(
+        Encoders.product[(Long, Long, Double)])
+      .toDF("user_id", "event_id", "running_purchases")
 
   /** `stream_session_timer` — timer-closed sessions over the events
     * stream (SessionTimerProcessor). Requires a watermark: event-time
@@ -1441,26 +1400,6 @@ object Streams {
       graft.Memo.ScratchDir(new java.io.File(tbl).getParent)
     }
     s"${dir.path}/table"
-  }
-
-  /** Core of [[streamCdfApplyOk]] over explicit commit snapshots —
-    * the planted-churn harness for StreamingSpec's commit-ordering
-    * tests. Builds the captured table, streams commits (i, i+1] as
-    * micro-batch i into a foreachBatch replica fold, and returns the
-    * final replica bound to the CALLER's session.
-    */
-  private[graft] def streamCdfApplyCore(spark: SparkSession,
-      name: String, snapshots: Seq[DataFrame],
-      keys: Seq[String]): DataFrame = {
-    require(snapshots.size >= 2, "need at least two commits to stream")
-    streamCdfApplyFromTable(spark, name, keys) { dir =>
-      val tbl = s"$dir/table"
-      snapshots.foreach { s =>
-        graft.sources.LakeIO.saveVersionCdf(s.repartition(4), tbl, keys)
-        ()
-      }
-      tbl
-    }
   }
 
   /** The consumer harness over a captured table (`table` gets the

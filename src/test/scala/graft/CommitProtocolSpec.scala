@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.LakeIO
+import graft.sources.{LakeIO, VersionLog}
 
 /** Round-19 commit protocol (VERDICT r18 #1 + ADVICE r18): the
   * versioned lake's single-writer assumption is ENFORCED by a commit
@@ -19,10 +18,10 @@ class CommitProtocolSpec extends AnyFunSuite {
 
   test("reservation: the second writer of the same version number " +
       "fails LOUD at reserve time, before any data write") {
-    val root = Files.createTempDirectory("graft_reserve").toString
-    LakeIO.reserveCommit(spark, root, 0)
+    val root = Scratch.dir("graft_reserve")
+    new VersionLog(spark, root).reserve(0)
     val e = intercept[IllegalStateException] {
-      LakeIO.reserveCommit(spark, root, 0)
+      new VersionLog(spark, root).reserve(0)
     }
     assert(e.getMessage.contains("already reserved")
       && e.getMessage.contains("CONCURRENT WRITER"), e.getMessage)
@@ -34,7 +33,7 @@ class CommitProtocolSpec extends AnyFunSuite {
 
   test("racing writers never alias a version: N concurrent saveVersion " +
       "calls yield distinct versions or loud failures; log ≡ snapshots") {
-    val root = Files.createTempDirectory("graft_race").toString
+    val root = Scratch.dir("graft_race")
     LakeIO.saveVersion(snap((1L, 0.0)), root) // v0 seeds the chain
     val n = 4
     val barrier = new java.util.concurrent.CyclicBarrier(n)
@@ -64,8 +63,8 @@ class CommitProtocolSpec extends AnyFunSuite {
     // entries, no unlogged snapshot dirs (crash-free run ⇒ clean aborts)
     val published = LakeIO.listVersions(spark, root)
     assert(published.toSet === (successes :+ 0).toSet)
-    assert(LakeIO.listCommits(spark, root) === published)
-    assert(LakeIO.listInflight(spark, root).isEmpty)
+    assert(new VersionLog(spark, root).commits === published)
+    assert(new VersionLog(spark, root).inflight.isEmpty)
     // every published version reads back whole
     published.foreach { v =>
       assert(LakeIO.loadVersion(spark, root, Some(v)).count() >= 1)
@@ -74,12 +73,12 @@ class CommitProtocolSpec extends AnyFunSuite {
 
   test("crash recovery: a reserved-but-unsealed commit is invisible — " +
       "not latest, not a commit, number burned not reused") {
-    val root = Files.createTempDirectory("graft_crash").toString
+    val root = Scratch.dir("graft_crash")
     val keys = Seq("k")
     LakeIO.saveVersionCdf(snap((1L, 10.0)), root, keys) // v0
     // simulate a writer that crashed between data write and seal:
     // reservation marker present, data dir present, no sealed entry
-    LakeIO.reserveCommit(spark, root, 1)
+    new VersionLog(spark, root).reserve(1)
     snap((1L, 99.0)).write.parquet(s"$root/v=1")
     // readers never resolve the unsealed snapshot as latest
     assert(LakeIO.listVersions(spark, root) === Seq(0))
@@ -97,7 +96,7 @@ class CommitProtocolSpec extends AnyFunSuite {
 
   test("a failed commit ABORTS clean: data write failure reclaims the " +
       "number, leaves no partial dir, no inflight marker") {
-    val root = Files.createTempDirectory("graft_abort").toString
+    val root = Scratch.dir("graft_abort")
     LakeIO.saveVersion(snap((1L, 1.0)), root) // v0
     val poison = spark.range(1)
       .withColumn("boom",
@@ -105,7 +104,7 @@ class CommitProtocolSpec extends AnyFunSuite {
           .otherwise(lit(1)))
     intercept[Exception] { LakeIO.saveVersion(poison.toDF(), root) }
     assert(LakeIO.listVersions(spark, root) === Seq(0))
-    assert(LakeIO.listInflight(spark, root).isEmpty)
+    assert(new VersionLog(spark, root).inflight.isEmpty)
     assert(!new java.io.File(s"$root/v=1").exists())
     // clean abort reclaimed the number — nothing ever referenced it
     assert(LakeIO.saveVersion(snap((2L, 2.0)), root) === 1)
@@ -114,7 +113,7 @@ class CommitProtocolSpec extends AnyFunSuite {
   test("a capture-side failure aborts clean: the snapshot written beside " +
       "it is reclaimed, nothing is sealed, and the writer thread is gone") {
     import scala.jdk.CollectionConverters._
-    val root = Files.createTempDirectory("graft_capture_abort").toString
+    val root = Scratch.dir("graft_capture_abort")
     val keys = Seq("k")
     LakeIO.saveVersionCdf(snap((1L, 10.0), (2L, 20.0)), root, keys) // v0
     // a planted capture dir: v=1's capture write (ErrorIfExists) fails
@@ -125,9 +124,9 @@ class CommitProtocolSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("already exists"), e.getMessage)
     assert(!new java.io.File(s"$root/v=1").exists())
-    assert(LakeIO.listInflight(spark, root).isEmpty)
+    assert(new VersionLog(spark, root).inflight.isEmpty)
     assert(!new java.io.File(s"$root/_commits/v=1").exists())
-    assert(LakeIO.listCommits(spark, root) === Seq(0))
+    assert(new VersionLog(spark, root).commits === Seq(0))
     assert(LakeIO.listVersions(spark, root) === Seq(0))
     assert(LakeIO.loadVersion(spark, root).filter(col("k") === 1)
       .collect().head.getDouble(1) === 10.0)
@@ -147,7 +146,6 @@ class CommitProtocolSpec extends AnyFunSuite {
       "commit and as a later captured commit") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.expressions.Window
-    import graft.sources.VersionLog
     val keys = Seq("k")
     def same(a: DataFrame, b: DataFrame) =
       a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
@@ -181,7 +179,7 @@ class CommitProtocolSpec extends AnyFunSuite {
       "left_anti").unionByName(head.filter(col("k") < 3))))
     frames.foreach { case (name, in, f) =>
       assert(VersionLog.volatile(f(in)), s"$name: counted stable")
-      val root = Files.createTempDirectory(s"graft_ordered_$name").toString
+      val root = Scratch.dir(s"graft_ordered_$name")
       LakeIO.saveVersionCdf(f(in), root, keys) // v0
       // v1 keeps the same shape over a changed input
       LakeIO.saveVersionCdf(f(in.filter(col("x") =!= 7.0)), root, keys)
@@ -201,7 +199,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
       LogicalRelation}
     import org.apache.spark.sql.util.QueryExecutionListener
-    val root = Files.createTempDirectory("graft_capture_scan").toString
+    val root = Scratch.dir("graft_capture_scan")
     val keys = Seq("k")
     LakeIO.saveVersionCdf(snap((1L, 1.0), (2L, 2.0)), root, keys) // v0
     val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -235,7 +233,7 @@ class CommitProtocolSpec extends AnyFunSuite {
 
   test("saveVersionCdf validates schema BEFORE any write (ADVICE r18 " +
       "medium): a drifted commit refuses with head untouched, no hole") {
-    val root = Files.createTempDirectory("graft_prevalidate").toString
+    val root = Scratch.dir("graft_prevalidate")
     val keys = Seq("k")
     LakeIO.saveVersionCdf(snap((1L, 10.0), (2L, 20.0)), root, keys) // v0
     // added column: refused pre-commit
@@ -256,7 +254,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     // head untouched, numbering untouched, feed commit-complete: the
     // failures left NO committed-but-uncaptured version behind
     assert(LakeIO.listVersions(spark, root) === Seq(0))
-    assert(LakeIO.listCommits(spark, root) === Seq(0))
+    assert(new VersionLog(spark, root).commits === Seq(0))
     assert(LakeIO.saveVersionCdf(snap((1L, 11.0), (2L, 20.0)), root,
       keys) === 1)
     assert(LakeIO.capturedChanges(spark, root, 0, 1).count() === 2)
@@ -275,7 +273,7 @@ class CommitProtocolSpec extends AnyFunSuite {
 
   test("capturedChanges (head, head]: the caught-up consumer's poll is " +
       "an EMPTY feed in the capture schema, not an exception (ADVICE r18)") {
-    val root = Files.createTempDirectory("graft_caughtup").toString
+    val root = Scratch.dir("graft_caughtup")
     val keys = Seq("k")
     LakeIO.saveVersionCdf(snap((1L, 10.0)), root, keys) // v0
     LakeIO.saveVersionCdf(snap((1L, 12.0)), root, keys) // v1
@@ -292,7 +290,7 @@ class CommitProtocolSpec extends AnyFunSuite {
   test("stream fence repair (ADVICE r18): a replayed commit whose " +
       "capture is missing is REPAIRED from retained snapshots, not " +
       "skipped into a permanent hole") {
-    val root = Files.createTempDirectory("graft_fencerepair").toString
+    val root = Scratch.dir("graft_fencerepair")
     val keys = Seq("k")
     val tbl = s"$root/t"
     LakeIO.saveVersionCdf(snap((1L, 10.0), (2L, 20.0)), tbl, keys) // v0
@@ -326,7 +324,7 @@ class CommitProtocolSpec extends AnyFunSuite {
 
   test("compaction rewrite commit is atomic with its empty capture: " +
       "the captured feed spans it without refusing") {
-    val root = Files.createTempDirectory("graft_rewrite").toString
+    val root = Scratch.dir("graft_rewrite")
     val lake = Lake(spark, root)
     val keys = Seq("k")
     lake.saveVersionedCdf(snap((1L, 10.0), (2L, 20.0))
@@ -346,7 +344,7 @@ class CommitProtocolSpec extends AnyFunSuite {
 
   test("saveVersionCdfKnownDiff: the known-diff capture is row-identical " +
       "to the capture the generic snapshot re-diff would have written") {
-    val root = Files.createTempDirectory("graft_knowndiff").toString + "/t"
+    val root = Scratch.dir("graft_knowndiff") + "/t"
     val keys = Seq("k")
     val v0 = snap((1L, 1.0), (2L, 2.0), (3L, 3.0))
     val v1 = snap((1L, 1.0), (2L, 2.5), (4L, 4.0)) // update 2, drop 3, insert 4
@@ -374,61 +372,47 @@ class CommitProtocolSpec extends AnyFunSuite {
   test("versioned reads take the schema from one footer: every version " +
       "and capture read equals Spark's inferred read field for field and " +
       "starts no job") {
-    import graft.sources.{Tables, VersionLog}
+    import graft.sources.Tables
     import org.apache.spark.sql.DataFrame
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     // builds `read`, counting the jobs it starts, and compares its schema
     // with the inferred read of the same paths
     def check(what: String, paths: Seq[String])(read: => DataFrame): Unit = {
-      org.apache.spark.graft.Instrument.drain(sc)
-      jobs.set(0)
-      val got = read.schema
-      org.apache.spark.graft.Instrument.drain(sc)
-      assert(jobs.get === 0, s"$what: building the read started jobs")
+      val (got, jobs) = SpecUtil.jobsDuring(spark)(read.schema)
+      assert(jobs === 0L, s"$what: building the read started jobs")
       val want = spark.read.parquet(paths: _*).schema
       assert(got.fields.toSeq === want.fields.toSeq,
         s"$what:\n${got.treeString}\nvs inferred\n${want.treeString}")
     }
-    sc.addSparkListener(counter)
-    try {
-      val root = Scratch.dir("schema_rule")
-      val sf01 = new java.io.File(TestSpark.sf).getParent + "/sf0.1"
-      Seq("customer", "documents", "embeddings", "events", "lineitem",
-          "nation", "orders", "part", "region", "supplier").foreach { t =>
-        val log = new VersionLog(spark, s"$root/$t")
-        LakeIO.saveVersion(Tables.table(spark, sf01, t), s"$root/$t")
-        check(t, Seq(log.dir(0).toString))(log.read(0))
-      }
-      val empty = new VersionLog(spark, s"$root/empty")
-      LakeIO.saveVersion(Tables.table(spark, sf01, "orders").limit(0),
-        s"$root/empty")
-      check("zero-row version", Seq(empty.dir(0).toString))(empty.read(0))
-      // a hand-partitioned version (files under v=0/p=.../) and a
-      // shallow clone of it, which reads through its manifest
-      Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "p", "x")
-        .write.partitionBy("p").parquet(s"$root/src/v=0")
-      val src = new VersionLog(spark, s"$root/src")
-      check("partitioned version", Seq(src.dir(0).toString))(src.read(0))
-      LakeIO.shallowClone(spark, s"$root/src", 0, s"$root/clone")
-      val clone = new VersionLog(spark, s"$root/clone")
-      check("clone manifest", clone.files(0).map(_.getPath.toString))(
-        clone.read(0))
-      // a multi-commit capture range
-      val cdf = s"$root/cdf"
-      Seq(snap((1L, 1.0), (2L, 2.0)), snap((1L, 1.5), (3L, 3.0)),
-          snap((1L, 1.5), (3L, 4.0), (5L, 5.0))).foreach { v =>
-        LakeIO.saveVersionCdf(v, cdf, Seq("k"))
-      }
-      val captures = Seq(1, 2).map(v => s"$cdf/_cdf/v=$v")
-      check("capture range", captures)(
-        LakeIO.capturedChanges(spark, cdf, 0, 2))
-    } finally sc.removeSparkListener(counter)
+    val root = Scratch.dir("schema_rule")
+    val sf01 = new java.io.File(TestSpark.sf).getParent + "/sf0.1"
+    Seq("customer", "documents", "embeddings", "events", "lineitem",
+        "nation", "orders", "part", "region", "supplier").foreach { t =>
+      val log = new VersionLog(spark, s"$root/$t")
+      LakeIO.saveVersion(Tables.table(spark, sf01, t), s"$root/$t")
+      check(t, Seq(log.dir(0).toString))(log.read(0))
+    }
+    val empty = new VersionLog(spark, s"$root/empty")
+    LakeIO.saveVersion(Tables.table(spark, sf01, "orders").limit(0),
+      s"$root/empty")
+    check("zero-row version", Seq(empty.dir(0).toString))(empty.read(0))
+    // a hand-partitioned version (files under v=0/p=.../) and a
+    // shallow clone of it, which reads through its manifest
+    Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "p", "x")
+      .write.partitionBy("p").parquet(s"$root/src/v=0")
+    val src = new VersionLog(spark, s"$root/src")
+    check("partitioned version", Seq(src.dir(0).toString))(src.read(0))
+    LakeIO.shallowClone(spark, s"$root/src", 0, s"$root/clone")
+    val clone = new VersionLog(spark, s"$root/clone")
+    check("clone manifest", clone.files(0).map(_.getPath.toString))(
+      clone.read(0))
+    // a multi-commit capture range
+    val cdf = s"$root/cdf"
+    Seq(snap((1L, 1.0), (2L, 2.0)), snap((1L, 1.5), (3L, 3.0)),
+        snap((1L, 1.5), (3L, 4.0), (5L, 5.0))).foreach { v =>
+      LakeIO.saveVersionCdf(v, cdf, Seq("k"))
+    }
+    val captures = Seq(1, 2).map(v => s"$cdf/_cdf/v=$v")
+    check("capture range", captures)(
+      LakeIO.capturedChanges(spark, cdf, 0, 2))
   }
 }

@@ -104,13 +104,14 @@ class ContractSpec extends AnyFunSuite {
         offenders.mkString(", "))
   }
 
-  /** Every code line under src/main/scala that contains `needle`, as
-    * (file:line, inside one of `bodies`); a body is a (file, declaration)
-    * pair, spanning as [[ContractSpec.bodySpan]] says.
+  /** Every code line under `under` (src/main/scala by default) that
+    * contains `needle`, as (file:line, inside one of `bodies`); a body
+    * is a (file, declaration) pair, spanning as [[ContractSpec.bodySpan]]
+    * says.
     */
-  private def codeLines(needle: String,
-      bodies: Seq[(String, String)]): Seq[(String, Boolean)] = {
-    val root = java.nio.file.Paths.get("src/main/scala")
+  private def codeLines(needle: String, bodies: Seq[(String, String)],
+      under: String = "src/main/scala"): Seq[(String, Boolean)] = {
+    val root = java.nio.file.Paths.get(under)
     val files = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     files.flatMap { f =>
@@ -195,6 +196,35 @@ class ContractSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"get scratch space from Scratch.dir: ${offenders.mkString(", ")}")
+  }
+
+  /** Code lines under src/test/scala containing `needle`, outside this
+    * spec (whose guards spell the needles) and outside `allowed` files.
+    */
+  private def testLines(needle: String, allowed: Set[String]): Seq[String] =
+    codeLines(needle, Nil, "src/test/scala").map(_._1).filterNot(at =>
+      (allowed + "graft/ContractSpec.scala").exists(f => at.startsWith(f + ":")))
+
+  test("scratch space in src/test comes only from Scratch too: specs " +
+      "take Scratch.dir, so a Tier-1 run leaves nothing in java.io.tmpdir") {
+    val offenders = Seq("createTempDirectory", "createTempFile",
+      "\"java.io.tmpdir\"", "\"/dev/shm\"")
+      .flatMap(testLines(_, Set.empty))
+    assert(offenders.isEmpty,
+      s"get spec scratch space from Scratch.dir: ${offenders.mkString(", ")}")
+  }
+
+  test("src/test holds one main (graft.ScaleHarness) and one session " +
+      "builder (TestSpark): no one-off probe builds its own SparkSession") {
+    val mains = testLines("def main(", Set("graft/ScaleHarness.scala"))
+    assert(mains.isEmpty, "run scale measurements through graft.ScaleHarness, " +
+      s"not another test main: ${mains.mkString(", ")}")
+    val builders = testLines("SparkSession.builder()", Set("graft/TestSpark.scala"))
+    assert(builders.isEmpty, "specs share TestSpark.spark; mains take " +
+      s"Scratch.driverSession(): ${builders.mkString(", ")}")
+    assert(codeLines("def main(", Nil, "src/test/scala")
+      .exists(_._1.startsWith("graft/ScaleHarness.scala:")),
+      "graft.ScaleHarness no longer defines its main")
   }
 
   test("SimSearch's ANN core is written once: the cosine score, the " +

@@ -847,7 +847,6 @@ class DedupSpec extends AnyFunSuite {
     // 10 planted clusters, ids shuffled so the stride picks arbitrary
     // members (duplicating some clusters, missing others) while
     // k-means|| recovers the true centers.
-    import spark.implicits._
     val rnd = new scala.util.Random(11)
     val nClusters = 10; val per = 50; val dim = 16
     val centers =
@@ -1073,7 +1072,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("dedup_semantic_chunk: a copied passage drops at chunk " +
       "granularity; doc-level dedup keeps both docs (containment)") {
-    import spark.implicits._
     // doc 1: 128 tokens; doc 2: doc 1's FIRST 64 TOKENS verbatim (one
     // full 64-token chunk window) + 64 fresh tokens — the partial-
     // plagiarism shape chunk-level SemDeDup exists for

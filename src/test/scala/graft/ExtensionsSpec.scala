@@ -53,7 +53,6 @@ class ExtensionsSpec extends AnyFunSuite {
     // 3 = 0b11 spreads to even bits 0b0101 = 5; 5 = 0b101 spreads to
     // 0b010001 = 17, shifted to odd bits = 34; 5 | 34 = 39
     assert(spark.sql("SELECT zorder2(3, 5) AS z").head().getInt(0) === 39)
-    import spark.implicits._
     import org.apache.spark.sql.functions.col
     val viaColumn = Seq((3, 5)).toDF("a", "b")
       .select(graft.functions.ZOrder.morton2(col("a"), col("b"))).head().getInt(0)
@@ -166,8 +165,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("Lake.query sees the SQL kernels (user-facing path)") {
-    val lake = Lake(spark, java.nio.file.Files
-      .createTempDirectory("graft_ext").toString)
+    val lake = Lake(spark, Scratch.dir("graft_ext"))
       .attachFixtures(TestSpark.sf)
     val r = lake.query(
       """SELECT vec_id, round(vec_norm(embedding), 4) AS l2

@@ -461,7 +461,7 @@ class FunctionSpec extends AnyFunSuite {
   }
 
   test("multimodal asset schema round-trips through parquet with binary intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mm").toString
+    val dir = Scratch.dir("graft_mm")
     val assets = Multimodal.syntheticAssets(spark, sf).limit(20)
     assets.write.mode("overwrite").parquet(s"$dir/assets")
     val back = spark.read.parquet(s"$dir/assets")

@@ -14,7 +14,7 @@ class FuzzyGroupsSpec extends AnyFunSuite {
 
   /** Write a planted customer table and run joinFuzzy over it. */
   private def fuzzyOn(rows: Seq[(Long, Int, String)]) = {
-    val dir = java.nio.file.Files.createTempDirectory("fuzzy").toString
+    val dir = Scratch.dir("fuzzy")
     rows.toDF("c_custkey", "c_nationkey", "c_name")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     Joins.joinFuzzy(spark, dir)
@@ -109,7 +109,7 @@ class FuzzyGroupsSpec extends AnyFunSuite {
     // Planted partition with ties: GROUPS 1 PRECEDING must include ALL
     // rows of the current order-key peer group and ALL rows of the
     // previous one — regardless of how many rows either group has.
-    val dir = java.nio.file.Files.createTempDirectory("groups").toString
+    val dir = Scratch.dir("groups")
     val rows = Seq(
       // (custkey, orderkey, date, price)
       (1L, 10L, "1995-01-01", 10.0),

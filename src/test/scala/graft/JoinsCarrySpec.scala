@@ -6,7 +6,7 @@ import graft.operators.Joins
 
 /** [[Joins.carryLastRangeSplit]] ≡ the single-window carry — the library
   * form of the as-of hot-user mitigation (VERDICT r7 #6; measured in
-  * AsOfSkewProbe). The split must be a pure re-plan: identical output on
+  * SCALE.md). The split must be a pure re-plan: identical output on
   * every row, across bucket widths, with nulls, null-only buckets,
   * empty buckets, and a hot key.
   */

@@ -1,8 +1,8 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.sources.{LakeIO, Tables, VersionLog}
 
 /** The novlake-shaped user journey end-to-end: attach a database, run
   * SQL, save a derived dataset (plain / partitioned / append /
@@ -10,23 +10,20 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class LakeSpec extends AnyFunSuite {
   val spark = TestSpark.spark
+  import spark.implicits._
 
   private def newLake(): Lake =
     Lake(spark, Scratch.dir("lake"))
       .attachFixtures(TestSpark.sf)
 
   test("scd2Apply: change closes+opens, no-op is silent, insert starts at the new version") {
-    import spark.implicits._
     import org.apache.spark.sql.functions._
     def dimOf(rows: Seq[(Long, String, Int, Option[Int], Boolean)]) =
       rows.toDF("k", "attr", "valid_from", "valid_to", "is_current")
-    val v1 = dimOf(Seq(
-      (1L, "a", 1, None, true),
-      (2L, "b", 1, None, true),
+    val v1 = dimOf(Seq((1L, "a", 1, None, true), (2L, "b", 1, None, true),
       (3L, "c", 1, None, true)))
     val upd2 = Seq((1L, "a"), (2L, "X"), (4L, "d")).toDF("k", "attr")
-    val v2 = graft.sources.LakeIO.scd2Apply(v1, upd2, Seq("k"),
-      Seq("attr"), newVersion = 2)
+    val v2 = LakeIO.scd2Apply(v1, upd2, Seq("k"), Seq("attr"), newVersion = 2)
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2),
         if (r.isNullAt(3)) None else Some(r.getInt(3)),
@@ -38,7 +35,7 @@ class LakeSpec extends AnyFunSuite {
       (3L, "c", 1, None, true),        // untouched
       (4L, "d", 2, None, true)))       // inserted
     // a second round stacks history: key 2 changes again
-    val v3 = graft.sources.LakeIO.scd2Apply(v2,
+    val v3 = LakeIO.scd2Apply(v2,
       Seq((2L, "Y")).toDF("k", "attr"), Seq("k"), Seq("attr"),
       newVersion = 3)
     assert(snap(v3.filter(col("k") === 2L)) === Set(
@@ -74,7 +71,6 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("upsert: source wins on key, unmatched target rows survive") {
-    import spark.implicits._
     val lake = newLake()
     lake.saveDataset(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), "t")
     val after = lake.upsert(Seq((2L, "B"), (4L, "d")).toDF("id", "v"),
@@ -88,7 +84,6 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("versioned snapshots: immutable history, latest resolution, time travel") {
-    import spark.implicits._
     val lake = newLake()
     assert(lake.saveVersioned(Seq((1L, "x")).toDF("id", "v"), "snap") === 0)
     assert(lake.saveVersioned(Seq((1L, "y"), (2L, "z")).toDF("id", "v"),
@@ -145,13 +140,12 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("forUser: per-user warehouses are isolated under a shared root") {
-    val root = Files.createTempDirectory("graft_users").toString
+    val root = Scratch.dir("graft_users")
     val alice = Lake.forUser(spark, "alice", Some(root))
       .attachFixtures(TestSpark.sf)
     val bob = Lake.forUser(spark, "bob", Some(root))
     assert(alice.warehouse === s"$root/user_alice")
-    alice.saveDataset(
-      alice.query("SELECT o_orderkey FROM orders LIMIT 7"), "t")
+    alice.saveDataset(alice.query("SELECT o_orderkey FROM orders LIMIT 7"), "t")
     assert(alice.load("t").count() === 7)
     intercept[Exception](bob.load("t").count()) // bob can't see alice's t
     intercept[IllegalArgumentException](
@@ -181,7 +175,6 @@ class LakeSpec extends AnyFunSuite {
 
   test("error paths: unknown save mode refuses; missing table load raises cleanly") {
     val lake = newLake()
-    import spark.implicits._
     val df = Seq((1L, "a")).toDF("id", "v")
     intercept[IllegalArgumentException](
       lake.saveDataset(df, "t", mode = "overwite")) // typo must not overwrite
@@ -190,7 +183,6 @@ class LakeSpec extends AnyFunSuite {
 
   test("vacuum + history: retention keeps the newest snapshots, history reflects it") {
     val lake = newLake()
-    import spark.implicits._
     (0 until 3).foreach(i =>
       lake.saveVersioned(Seq((i.toLong, s"v$i")).toDF("id", "v"), "snaps"))
     val h0 = lake.history("snaps").orderBy("version").collect()
@@ -206,16 +198,15 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("changes: CDF between pinned versions classifies churn; applying it to v0 reconstructs v1") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_cdf").toString
+    val root = Scratch.dir("graft_cdf")
     val v0 = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0),
       (4L, "d", 40.0)).toDF("k", "s", "x")
     // v1: key 2 deleted, key 3 repriced, key 5 inserted, 1/4 unchanged
     val v1 = Seq((1L, "a", 10.0), (3L, "c", 33.0), (4L, "d", 40.0),
       (5L, "e", 50.0)).toDF("k", "s", "x")
-    graft.sources.LakeIO.saveVersion(v0, root)
-    graft.sources.LakeIO.saveVersion(v1, root)
-    val cdf = graft.sources.LakeIO.changes(spark, root, 0, 1, Seq("k"))
+    LakeIO.saveVersion(v0, root)
+    LakeIO.saveVersion(v1, root)
+    val cdf = LakeIO.changes(spark, root, 0, 1, Seq("k"))
     val byType = cdf.collect()
       .map(r => (r.getAs[String]("_change_type"), r.getAs[Long]("k")))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -228,9 +219,8 @@ class LakeSpec extends AnyFunSuite {
       .map(_.getInt(0)).toSeq === Seq(1))
     // the CDF is a complete delta: applyChanges(v0, CDF) ≡ v1 (the
     // replication contract, via the library API)
-    val rebuilt = graft.sources.LakeIO.applyChanges(
-      graft.sources.LakeIO.loadVersion(spark, root, Some(0)),
-      graft.sources.LakeIO.changes(spark, root, 0, 1, Seq("k")),
+    val rebuilt = LakeIO.applyChanges(LakeIO.loadVersion(spark, root, Some(0)),
+      LakeIO.changes(spark, root, 0, 1, Seq("k")),
       Seq("k"))
     assert(rebuilt.exceptAll(v1).count() === 0)
     assert(v1.exceptAll(rebuilt).count() === 0)
@@ -238,12 +228,10 @@ class LakeSpec extends AnyFunSuite {
 
   test("shallow clone: zero data-file copies, pins survive source " +
       "writes, clone-of-clone flattens to real files") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_clone").toString
+    val root = Scratch.dir("graft_clone")
     val v0 = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s")
-    graft.sources.LakeIO.saveVersion(v0, s"$root/src")
-    val cv = graft.sources.LakeIO.shallowClone(spark, s"$root/src", 0,
-      s"$root/c1")
+    LakeIO.saveVersion(v0, s"$root/src")
+    val cv = LakeIO.shallowClone(spark, s"$root/src", 0, s"$root/c1")
     assert(cv === 0)
     // zero-copy: the clone version dir holds ONE _manifest, no parquet
     val cdir = new java.io.File(s"$root/c1/v=0")
@@ -251,28 +239,27 @@ class LakeSpec extends AnyFunSuite {
     assert(names.count(_ == "_manifest") === 1, s"$names")
     assert(!names.exists(_.endsWith(".parquet")), s"$names")
     // content equality through the transparent loadVersion path
-    val got = graft.sources.LakeIO.loadVersion(spark, s"$root/c1", Some(0))
+    val got = LakeIO.loadVersion(spark, s"$root/c1", Some(0))
     assert(got.exceptAll(v0).count() === 0)
     assert(v0.exceptAll(got).count() === 0)
     // the source moves forward; the clone pin does not
-    graft.sources.LakeIO.saveVersion(
-      Seq((9L, "z")).toDF("k", "s"), s"$root/src")
-    assert(graft.sources.LakeIO.loadVersion(spark, s"$root/c1", Some(0))
+    LakeIO.saveVersion(Seq((9L, "z")).toDF("k", "s"), s"$root/src")
+    assert(LakeIO.loadVersion(spark, s"$root/c1", Some(0))
       .count() === 3)
     // clone-of-clone: the manifest chain flattens to the REAL files,
     // so a c1 deletion cannot strand c2 (only source retention can)
-    graft.sources.LakeIO.shallowClone(spark, s"$root/c1", 0, s"$root/c2")
+    LakeIO.shallowClone(spark, s"$root/c1", 0, s"$root/c2")
     val mf2 = scala.io.Source.fromFile(s"$root/c2/v=0/_manifest")
       .getLines().toList
     assert(mf2.nonEmpty && mf2.forall(_.contains("/src/v=0/")),
       s"clone-of-clone must list source data files: $mf2")
-    assert(graft.sources.LakeIO.loadVersion(spark, s"$root/c2", Some(0))
+    assert(LakeIO.loadVersion(spark, s"$root/c2", Some(0))
       .count() === 3)
     // history counts the clone version through its manifest: the source
     // version's files and bytes (none of them copied — the listing above)
-    val h = graft.sources.LakeIO.versionHistory(spark, s"$root/c1")
+    val h = LakeIO.versionHistory(spark, s"$root/c1")
       .collect().head
-    val srcFiles = graft.sources.LakeIO.dataFiles(spark, s"$root/src/v=0")
+    val srcFiles = LakeIO.dataFiles(spark, s"$root/src/v=0")
     assert(h.getInt(1) === srcFiles.size &&
       h.getLong(2) === srcFiles.map(_.getLen).sum,
       s"clone history must count the manifest's files and bytes: $h")
@@ -280,8 +267,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("write-time CDF: per-commit attribution, directory-pruned range " +
       "read, and commit-ordered replay reconstructs the head") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_wcdf").toString
+    val root = Scratch.dir("graft_wcdf")
     val keys = Seq("k")
     val v0 = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "x")
     // commit 1: key 2 updated; commit 2: key 2 DELETED + key 4 inserted
@@ -291,11 +277,11 @@ class LakeSpec extends AnyFunSuite {
     // commit-by-commit
     val v1 = Seq((1L, 10.0), (2L, 22.0), (3L, 30.0)).toDF("k", "x")
     val v2 = Seq((1L, 10.0), (3L, 30.0), (4L, 40.0)).toDF("k", "x")
-    graft.sources.LakeIO.saveVersionCdf(v0, root, keys)
-    graft.sources.LakeIO.saveVersionCdf(v1, root, keys)
-    graft.sources.LakeIO.saveVersionCdf(v2, root, keys)
+    LakeIO.saveVersionCdf(v0, root, keys)
+    LakeIO.saveVersionCdf(v1, root, keys)
+    LakeIO.saveVersionCdf(v2, root, keys)
     // per-commit attribution: each change row carries ITS commit
-    val feed = graft.sources.LakeIO.capturedChanges(spark, root, 0, 2)
+    val feed = LakeIO.capturedChanges(spark, root, 0, 2)
     val rows = feed.collect().map(r => (r.getAs[Long]("k"),
       r.getAs[String]("_change_type"), r.getAs[Int]("_commit_version")))
     assert(rows.toSet === Set(
@@ -304,40 +290,39 @@ class LakeSpec extends AnyFunSuite {
     // the range prunes commit 0's insert feed out (directory prune)
     assert(!rows.exists(_._3 == 0))
     // ...and the full range sees it: 3 base inserts stamped 0
-    val all = graft.sources.LakeIO.capturedChanges(spark, root, -1, 2)
+    val all = LakeIO.capturedChanges(spark, root, -1, 2)
     assert(all.filter(col("_commit_version") === 0)
       .collect().forall(_.getAs[String]("_change_type") == "insert"))
     assert(all.count() === 3 + 4)
     // commit-granularity is REAL: the snapshot diff over the same range
     // cannot see commit 1 (key 2's update is erased by its deletion)
-    val diff = graft.sources.LakeIO.changes(spark, root, 0, 2, keys)
+    val diff = LakeIO.changes(spark, root, 0, 2, keys)
     assert(!diff.collect().exists(_.getAs[Long]("k") == 2L)
       || diff.filter(col("k") === 2L).collect()
         .forall(_.getAs[String]("_change_type") == "delete"))
     // replay folds commit-by-commit: v0 + captured(0,2] == v2
-    val rebuilt = graft.sources.LakeIO.replayChanges(
-      graft.sources.LakeIO.loadVersion(spark, root, Some(0)), feed, keys)
+    val rebuilt = LakeIO.replayChanges(
+      LakeIO.loadVersion(spark, root, Some(0)), feed, keys)
     assert(rebuilt.exceptAll(v2).count() === 0)
     assert(v2.exceptAll(rebuilt).count() === 0)
     // ...and a single-pass applyChanges over the same multi-commit feed
     // really does corrupt (resurrects key 2) — the documented hazard
-    val naive = graft.sources.LakeIO.applyChanges(
-      graft.sources.LakeIO.loadVersion(spark, root, Some(0)), feed, keys)
+    val naive = LakeIO.applyChanges(
+      LakeIO.loadVersion(spark, root, Some(0)), feed, keys)
     assert(naive.filter(col("k") === 2L).count() > 0,
       "expected the naive single-pass apply to resurrect the deleted key")
     // a saveVersion-only table has no capture — the error says so and
     // points at both remedies (write-time capture or snapshot diff)
-    val plain = Files.createTempDirectory("graft_nocdf").toString
-    graft.sources.LakeIO.saveVersion(v0, plain)
+    val plain = Scratch.dir("graft_nocdf")
+    LakeIO.saveVersion(v0, plain)
     val err = intercept[IllegalArgumentException] {
-      graft.sources.LakeIO.capturedChanges(spark, plain, 0, 1)
+      LakeIO.capturedChanges(spark, plain, 0, 1)
     }
     assert(err.getMessage.contains("saveVersionCdf")
       && err.getMessage.contains("changes()"), err.getMessage)
   }
 
   test("facade: changes/applyChanges/restore compose through Lake (the user surface)") {
-    import spark.implicits._
     val lake = newLake()
     val v0 = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
     val v1 = Seq((1L, "a"), (2L, "B"), (3L, "c")).toDF("k", "s")
@@ -356,7 +341,6 @@ class LakeSpec extends AnyFunSuite {
 
   test("facade: the round-18 lake surface composes through Lake — " +
       "captured commits, clone, branch merge-back, evolved reads") {
-    import spark.implicits._
     val lake = newLake()
     val v0 = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
     val v1 = Seq((1L, "a"), (2L, "B"), (3L, "c")).toDF("k", "s")
@@ -390,22 +374,21 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("restore: rollback is a forward publish — bad versions stay pinned-readable, CDF sees the undo") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_restore").toString
+    val root = Scratch.dir("graft_restore")
     val v0 = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "x")
     val v1 = Seq((1L, 99.0), (2L, 20.0)).toDF("k", "x") // bad backfill
-    graft.sources.LakeIO.saveVersion(v0, root)
-    graft.sources.LakeIO.saveVersion(v1, root)
-    val nv = graft.sources.LakeIO.restoreVersion(spark, root, 0)
+    LakeIO.saveVersion(v0, root)
+    LakeIO.saveVersion(v1, root)
+    val nv = LakeIO.restoreVersion(spark, root, 0)
     assert(nv === 2)
     // latest content == v0; the bad v1 remains pinned-readable
-    val latest = graft.sources.LakeIO.loadVersion(spark, root, None)
+    val latest = LakeIO.loadVersion(spark, root, None)
     assert(latest.exceptAll(v0).count() === 0 &&
       v0.exceptAll(latest).count() === 0)
-    assert(graft.sources.LakeIO.loadVersion(spark, root, Some(1))
+    assert(LakeIO.loadVersion(spark, root, Some(1))
       .count() === 2)
     // the CDF across the restore is exactly the undo of the bad write
-    val undo = graft.sources.LakeIO.changes(spark, root, 1, 2, Seq("k"))
+    val undo = LakeIO.changes(spark, root, 1, 2, Seq("k"))
       .collect().map(r => (r.getLong(0), r.getAs[String]("_change_type")))
       .toSet
     assert(undo === Set((1L, "update_preimage"), (1L, "update_postimage"),
@@ -413,13 +396,12 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("changes: multi-version range diffs ENDPOINTS (flip-flops vanish, version stamps the range end)") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_cdf_mv").toString
+    val root = Scratch.dir("graft_cdf_mv")
     val v0 = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "x")
     val v1 = Seq((1L, 99.0), (2L, 20.0), (3L, 30.0)).toDF("k", "x")
     val v2 = Seq((1L, 10.0), (2L, 20.0), (3L, 33.0)).toDF("k", "x")
-    Seq(v0, v1, v2).foreach(graft.sources.LakeIO.saveVersion(_, root))
-    val cdf = graft.sources.LakeIO.changes(spark, root, 0, 2, Seq("k"))
+    Seq(v0, v1, v2).foreach(LakeIO.saveVersion(_, root))
+    val cdf = LakeIO.changes(spark, root, 0, 2, Seq("k"))
       .collect().map(r => (r.getLong(0), r.getAs[String]("_change_type"),
         r.getAs[Int]("_commit_version")))
     // key 1 flip-flopped (10 -> 99 -> 10): a snapshot diff sees no
@@ -431,15 +413,14 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("changes: null-safe value compare emits no phantom updates") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_cdf_null").toString
+    val root = Scratch.dir("graft_cdf_null")
     val v0 = Seq((1L, Option.empty[String]), (2L, Some("b")))
       .toDF("k", "s")
     val v1 = Seq((1L, Option.empty[String]), (2L, Option.empty[String]))
       .toDF("k", "s")
-    graft.sources.LakeIO.saveVersion(v0, root)
-    graft.sources.LakeIO.saveVersion(v1, root)
-    val cdf = graft.sources.LakeIO.changes(spark, root, 0, 1, Seq("k"))
+    LakeIO.saveVersion(v0, root)
+    LakeIO.saveVersion(v1, root)
+    val cdf = LakeIO.changes(spark, root, 0, 1, Seq("k"))
     // key 1: null == null → unchanged, no rows; key 2: b → null update
     assert(cdf.filter(col("k") === 1L).count() === 0)
     assert(cdf.filter(col("k") === 2L).count() === 2)
@@ -453,16 +434,14 @@ class LakeSpec extends AnyFunSuite {
         Option[(Option[Double], Seq[Double])])*) =
       vals.toDF("k", "d", "s", "n")
     val nan = Double.NaN
-    val a = rows(
-      (1L, Some(nan), None, None),
+    val a = rows((1L, Some(nan), None, None),
       (2L, Some(-0.0), Some("x"), Some(inner(Some(-0.0), Seq(0.0)))),
       (3L, None, None, Some(inner(None, Seq(nan)))),
       (4L, Some(1.0), None, Some(inner(Some(1.0), Seq(1.0, 2.0)))),
       (5L, None, Some("y"), Some(inner(Some(nan), Nil))),
       (6L, Some(2.0), Some("gone"), None),
       (8L, Some(nan), Some("z"), Some(inner(None, Seq(1.0)))))
-    val b = rows(
-      (1L, Some(nan), None, None),
+    val b = rows((1L, Some(nan), None, None),
       (2L, Some(0.0), Some("x"), Some(inner(Some(0.0), Seq(-0.0)))),
       (3L, None, None, Some(inner(None, Seq(nan)))),
       (4L, Some(1.0), None, Some(inner(Some(1.0), Seq(2.0, 1.0)))),
@@ -470,8 +449,8 @@ class LakeSpec extends AnyFunSuite {
       (7L, None, Some("new"), Some(inner(None, Nil))),
       (8L, Some(nan), Some("z"), None))
     val evo = Scratch.dir("cdf_values")
-    graft.sources.LakeIO.saveVersion(a, evo)
-    graft.sources.LakeIO.saveVersion(b, evo)
+    LakeIO.saveVersion(a, evo)
+    LakeIO.saveVersion(b, evo)
     // reference: a whole-row null-safe struct compare decides updates
     def reference(x: DataFrame, y: DataFrame): DataFrame = {
       val valCols = Seq("d", "s", "n")
@@ -493,10 +472,9 @@ class LakeSpec extends AnyFunSuite {
           col("ch.t").as("_change_type") :+ lit(1).as("_commit_version"): _*)
     }
     def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
-    val got = graft.sources.LakeIO.changes(spark, evo, 0, 1, Seq("k"))
-    val want = reference(
-      graft.sources.LakeIO.loadVersion(spark, evo, Some(0)),
-      graft.sources.LakeIO.loadVersion(spark, evo, Some(1)))
+    val got = LakeIO.changes(spark, evo, 0, 1, Seq("k"))
+    val want = reference(LakeIO.loadVersion(spark, evo, Some(0)),
+      LakeIO.loadVersion(spark, evo, Some(1)))
     assert(sorted(got) === sorted(want))
     // keys 4, 5, 8 update; 6 deletes; 7 inserts; 1, 2, 3 are unchanged
     assert(got.select("k").distinct().collect().map(_.getLong(0)).sorted
@@ -505,7 +483,6 @@ class LakeSpec extends AnyFunSuite {
 
   test("append with mergeSchema evolves the dataset schema (drifted batch)") {
     val lake = newLake()
-    import spark.implicits._
     lake.saveDataset(Seq((1L, "a")).toDF("id", "v"), "evolve")
     // a later batch gains a column; Hive-less parquet appends are
     // schema-on-read — mergeSchema reconciles at scan time
@@ -521,7 +498,6 @@ class LakeSpec extends AnyFunSuite {
 
   test("saveDataset registration is durable: visible from a different session") {
     val lake = newLake()
-    import spark.implicits._
     lake.saveDataset(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "durable_t")
     // a catalog TABLE (not a temp view): a sibling session on the same
     // context resolves it — a temp view would throw TABLE_OR_VIEW_NOT_FOUND
@@ -540,7 +516,6 @@ class LakeSpec extends AnyFunSuite {
 
   test("attachWarehouse: a fresh process over the same warehouse sees saved tables") {
     val lake = newLake()
-    import spark.implicits._
     lake.saveDataset(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "marts.wh_t")
     lake.saveDataset(
       Seq((1L, "x", "A"), (2L, "y", "B")).toDF("id", "v", "part"),
@@ -616,8 +591,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("memo caches refresh on corpus rewrite (fingerprint-keyed, no clearCaches)") {
     import graft.operators.MinHashDedup
-    import graft.sources.Tables
-    val dir = Files.createTempDirectory("graft_fp").toString
+    val dir = Scratch.dir("graft_fp")
     val docs = Tables.documents(spark, TestSpark.sf)
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val n1 = MinHashDedup.dedupCluster(spark, dir, threshold = 0.2).count()
@@ -636,7 +610,7 @@ class LakeSpec extends AnyFunSuite {
     val g1 = SimSearch.simsearchGraph(spark, dir).collect().toSeq
     val kept = emb.filter(col("vec_id") % 2 === 0)
     kept.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val freshDir = Files.createTempDirectory("graft_fp").toString
+    val freshDir = Scratch.dir("graft_fp")
     kept.write.parquet(s"$freshDir/embeddings.parquet")
     val g2 = SimSearch.simsearchGraph(spark, dir).collect().toSeq
     assert(g2 === SimSearch.simsearchGraph(spark, freshDir).collect().toSeq,
@@ -646,7 +620,6 @@ class LakeSpec extends AnyFunSuite {
 
   test("preview works on map-typed (unorderable) columns") {
     val lake = newLake()
-    import spark.implicits._
     val withMap = Seq((2L, "b"), (1L, "a")).toDF("id", "v")
       .withColumn("meta", map(lit("k"), col("v")))
     lake.saveDataset(withMap, "mapped")
@@ -665,7 +638,7 @@ class LakeSpec extends AnyFunSuite {
     // merge_scd2). This pins the exclusion to the exact Spark error so a
     // Spark upgrade that starts planning MERGE surfaces as a test
     // failure, not a silently stale doc (VERDICT r10 #6).
-    graft.sources.Tables.registerAll(spark, TestSpark.sf)
+    Tables.registerAll(spark, TestSpark.sf)
     val mergeSql =
       """MERGE INTO %s t USING region s ON t.n_regionkey = s.r_regionkey
         |WHEN MATCHED THEN UPDATE SET t.n_name = s.r_name""".stripMargin
@@ -677,7 +650,7 @@ class LakeSpec extends AnyFunSuite {
       eView.getMessage.contains("MERGE INTO TABLE"), eView.getMessage)
     // catalog parquet table (saveAsTable) — same missing capability
     spark.sql("DROP TABLE IF EXISTS merge_probe_tbl")
-    graft.sources.Tables.nation(spark, TestSpark.sf)
+    Tables.nation(spark, TestSpark.sf)
       .write.format("parquet").saveAsTable("merge_probe_tbl")
     val eTable = intercept[UnsupportedOperationException] {
       spark.sql(mergeSql.format("merge_probe_tbl")).collect()
@@ -688,10 +661,8 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("audit: one-pass generic DQ report with planted nulls and duplicate keys") {
-    import spark.implicits._
     val lake = newLake()
-    val df = Seq(
-      (1L, Some("a")), (2L, Some("b")), (2L, None), (3L, Some("c")))
+    val df = Seq((1L, Some("a")), (2L, Some("b")), (2L, None), (3L, Some("c")))
       .toDF("k", "v")
     lake.saveDataset(df, "audit_probe")
     val rows = lake.audit("audit_probe", uniqueKeys = Seq("k"))
@@ -726,7 +697,6 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("audit: range and fk check classes (round 12) count planted violations, range rides the one aggregate") {
-    import spark.implicits._
     val lake = newLake()
     lake.saveDataset(Seq((1L, 5.0, 10L), (2L, 55.0, 20L), (3L, -1.0, 99L))
       .toDF("k", "amount", "ref_k"), "audit_facts")
@@ -777,8 +747,7 @@ class LakeSpec extends AnyFunSuite {
   test("Lake.report: one-pass grouping-sets card matches direct groupBy") {
     import org.apache.spark.sql.functions._
     val lake = newLake()
-    val rep = lake.report("documents", Seq("lang", "source"),
-      Seq("n_chars"))
+    val rep = lake.report("documents", Seq("lang", "source"), Seq("n_chars"))
     rep.collect() // drive the plan for the scan pin below
     val docs = spark.table("documents")
     // grand total
@@ -812,7 +781,6 @@ class LakeSpec extends AnyFunSuite {
 
   test("Lake.report survives hostile column names (quotes, dots, backticks)") {
     import org.apache.spark.sql.functions._
-    import spark.implicits._
     val lake = newLake()
     val df = Seq(("a", 1L), ("a", 2L), ("b", 3L))
       .toDF("it's.dim", "the`sum")
@@ -828,45 +796,37 @@ class LakeSpec extends AnyFunSuite {
 
   test("clone-aware vacuum: a pinned version refuses to vacuum naming " +
       "the clone; vacuums not touching the pin proceed") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_cvac").toString
-    graft.sources.LakeIO.saveVersion(
-      Seq((1L, "a")).toDF("k", "s"), s"$root/src")
-    graft.sources.LakeIO.saveVersion(
-      Seq((2L, "b")).toDF("k", "s"), s"$root/src")
-    graft.sources.LakeIO.saveVersion(
-      Seq((3L, "c"), (4L, "d")).toDF("k", "s"), s"$root/src")
+    val root = Scratch.dir("graft_cvac")
+    LakeIO.saveVersion(Seq((1L, "a")).toDF("k", "s"), s"$root/src")
+    LakeIO.saveVersion(Seq((2L, "b")).toDF("k", "s"), s"$root/src")
+    LakeIO.saveVersion(Seq((3L, "c"), (4L, "d")).toDF("k", "s"), s"$root/src")
     // the clone pins the LATEST version (v=2)
-    graft.sources.LakeIO.shallowClone(spark, s"$root/src", 2, s"$root/c1")
+    LakeIO.shallowClone(spark, s"$root/src", 2, s"$root/c1")
     // vacuum keep=1 drops v0/v1 — neither pinned — and proceeds
-    assert(graft.sources.LakeIO.vacuumVersions(
-      spark, s"$root/src", keep = 1) === Seq(0, 1))
+    assert(LakeIO.vacuumVersions(spark, s"$root/src", keep = 1) === Seq(0, 1))
     // the source moves forward; now keep=1 would drop the pinned v=2
-    graft.sources.LakeIO.saveVersion(
-      Seq((5L, "e")).toDF("k", "s"), s"$root/src")
+    LakeIO.saveVersion(Seq((5L, "e")).toDF("k", "s"), s"$root/src")
     val err = intercept[IllegalStateException] {
-      graft.sources.LakeIO.vacuumVersions(spark, s"$root/src", keep = 1)
+      LakeIO.vacuumVersions(spark, s"$root/src", keep = 1)
     }
     assert(err.getMessage.contains("v=2")
       && err.getMessage.contains(s"$root/c1"), err.getMessage)
     // the refusal deleted NOTHING (the guard runs before any deletion)
-    assert(graft.sources.LakeIO.listVersions(spark, s"$root/src")
+    assert(LakeIO.listVersions(spark, s"$root/src")
       === Seq(2, 3))
-    assert(graft.sources.LakeIO.loadVersion(spark, s"$root/c1", Some(0))
+    assert(LakeIO.loadVersion(spark, s"$root/c1", Some(0))
       .count() === 2)
   }
 
   test("clone-aware vacuum: stale pins garbage-collect, clone-of-clone " +
       "pins the ORIGINAL source, unpinned vacuums proceed") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_cvac2").toString
+    val root = Scratch.dir("graft_cvac2")
     val v0 = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
-    graft.sources.LakeIO.saveVersion(v0, s"$root/src")
-    graft.sources.LakeIO.saveVersion(
-      Seq((3L, "c")).toDF("k", "s"), s"$root/src")
+    LakeIO.saveVersion(v0, s"$root/src")
+    LakeIO.saveVersion(Seq((3L, "c")).toDF("k", "s"), s"$root/src")
     // clone pins src/v=0; clone-of-clone must pin src too (flattened)
-    graft.sources.LakeIO.shallowClone(spark, s"$root/src", 0, s"$root/c1")
-    graft.sources.LakeIO.shallowClone(spark, s"$root/c1", 0, s"$root/c2")
+    LakeIO.shallowClone(spark, s"$root/src", 0, s"$root/c1")
+    LakeIO.shallowClone(spark, s"$root/c1", 0, s"$root/c2")
     val pins = new java.io.File(s"$root/src/_clones").listFiles()
       .map(_.getName).filter(_.startsWith("_pin_")).toSeq
     assert(pins.size === 2, s"both clones must pin at src: $pins")
@@ -879,7 +839,7 @@ class LakeSpec extends AnyFunSuite {
     }
     rm(new java.io.File(s"$root/c1"))
     val err = intercept[IllegalStateException] {
-      graft.sources.LakeIO.vacuumVersions(spark, s"$root/src", keep = 1)
+      LakeIO.vacuumVersions(spark, s"$root/src", keep = 1)
     }
     assert(err.getMessage.contains(s"$root/c2"), err.getMessage)
     // the stale c1 pin was garbage-collected by that attempt
@@ -887,16 +847,14 @@ class LakeSpec extends AnyFunSuite {
       .count(_.getName.startsWith("_pin_")) === 1)
     // delete c2 too → no live pins; the same vacuum now proceeds
     rm(new java.io.File(s"$root/c2"))
-    assert(graft.sources.LakeIO.vacuumVersions(
-      spark, s"$root/src", keep = 1) === Seq(0))
-    assert(graft.sources.LakeIO.listVersions(spark, s"$root/src")
+    assert(LakeIO.vacuumVersions(spark, s"$root/src", keep = 1) === Seq(0))
+    assert(LakeIO.listVersions(spark, s"$root/src")
       === Seq(1))
   }
 
   test("shallow clone of a zero-data-file source version fails fast at " +
       "clone time, not at first read") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_cempty").toString
+    val root = Scratch.dir("graft_cempty")
     // every Spark write leaves at least one schema-bearing parquet file
     // (even a 0-row frame), so a zero-DATA-FILE version dir only arises
     // from a hand-built / externally-pruned layout — build one. Before
@@ -905,51 +863,48 @@ class LakeSpec extends AnyFunSuite {
     // manifest'; now the CLONE call refuses, naming the cause.
     assert(new java.io.File(s"$root/src/v=0").mkdirs())
     val err = intercept[IllegalArgumentException] {
-      graft.sources.LakeIO.shallowClone(spark, s"$root/src", 0,
-        s"$root/c1")
+      LakeIO.shallowClone(spark, s"$root/src", 0, s"$root/c1")
     }
     assert(err.getMessage.contains("no data files"), err.getMessage)
     // nothing was published at the clone path
-    assert(graft.sources.LakeIO.listVersions(spark, s"$root/c1").isEmpty)
+    assert(LakeIO.listVersions(spark, s"$root/c1").isEmpty)
     // and a 0-ROW (but one-file) version clones and reads fine
     val empty = Seq.empty[(Long, String)].toDF("k", "s")
-    graft.sources.LakeIO.saveVersion(empty, s"$root/src2")
-    graft.sources.LakeIO.shallowClone(spark, s"$root/src2", 0,
-      s"$root/c2")
-    assert(graft.sources.LakeIO.loadVersion(spark, s"$root/c2", Some(0))
+    LakeIO.saveVersion(empty, s"$root/src2")
+    LakeIO.shallowClone(spark, s"$root/src2", 0, s"$root/c2")
+    assert(LakeIO.loadVersion(spark, s"$root/c2", Some(0))
       .count() === 0)
   }
 
   test("capturedChanges refuses a range spanning an uncaptured commit; " +
       "restoreVersionCdf keeps the feed commit-complete") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_mixcdf").toString
+    val root = Scratch.dir("graft_mixcdf")
     val keys = Seq("k")
     val v0 = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "x")
     val v1 = Seq((1L, 10.0), (2L, 22.0)).toDF("k", "x")
-    graft.sources.LakeIO.saveVersionCdf(v0, root, keys)
-    graft.sources.LakeIO.saveVersionCdf(v1, root, keys)
+    LakeIO.saveVersionCdf(v0, root, keys)
+    LakeIO.saveVersionCdf(v1, root, keys)
     // a plain saveVersion sneaks in an uncaptured commit v=2
-    graft.sources.LakeIO.saveVersion(v0, root)
+    LakeIO.saveVersion(v0, root)
     val err = intercept[IllegalArgumentException] {
-      graft.sources.LakeIO.capturedChanges(spark, root, 0, 2)
+      LakeIO.capturedChanges(spark, root, 0, 2)
     }
     assert(err.getMessage.contains("v=2")
       && err.getMessage.contains("no write-time CDF"), err.getMessage)
     // a range that stops BEFORE the hole still reads fine
-    assert(graft.sources.LakeIO.capturedChanges(spark, root, 0, 1)
+    assert(LakeIO.capturedChanges(spark, root, 0, 1)
       .count() === 2) // key 2's pre+postimage
     // restoreVersionCdf rolls back WITH capture: the new commit v=3
     // records the v2→v0-content diff and the (2, 3] range reads it
-    val rv = graft.sources.LakeIO.restoreVersionCdf(spark, root, 1, keys)
+    val rv = LakeIO.restoreVersionCdf(spark, root, 1, keys)
     assert(rv === 3)
-    val feed = graft.sources.LakeIO.capturedChanges(spark, root, 2, 3)
+    val feed = LakeIO.capturedChanges(spark, root, 2, 3)
     assert(feed.collect().map(_.getAs[String]("_change_type")).toSet
       === Set("update_preimage", "update_postimage"))
     // and the replay invariant holds across the captured tail
-    val rebuilt = graft.sources.LakeIO.replayChanges(
-      graft.sources.LakeIO.loadVersion(spark, root, Some(2)), feed, keys)
-    val head = graft.sources.LakeIO.loadVersion(spark, root, Some(3))
+    val rebuilt = LakeIO.replayChanges(
+      LakeIO.loadVersion(spark, root, Some(2)), feed, keys)
+    val head = LakeIO.loadVersion(spark, root, Some(3))
     assert(rebuilt.exceptAll(head).count() === 0
       && head.exceptAll(rebuilt).count() === 0)
   }
@@ -957,9 +912,7 @@ class LakeSpec extends AnyFunSuite {
   test("retention × CDF (VERDICT r17 #1): the commit log survives vacuum " +
       "— a vacuumed uncaptured commit still refuses; dropped commits' " +
       "_cdf is reaped; the retained tail keeps replaying") {
-    import graft.sources.LakeIO
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_cdfvac").toString
+    val root = Scratch.dir("graft_cdfvac")
     val keys = Seq("k")
     def snap(xs: (Long, Double)*) = xs.toDF("k", "x")
     LakeIO.saveVersionCdf(snap((1L, 10.0), (2L, 20.0)), root, keys) // v0
@@ -971,7 +924,7 @@ class LakeSpec extends AnyFunSuite {
     // a listVersions-based guard no longer sees the uncaptured commit
     assert(LakeIO.vacuumVersions(spark, root, keep = 1) === Seq(0, 1, 2, 3))
     // the append-only commit log still records every commit ever made
-    assert(LakeIO.listCommits(spark, root) === Seq(0, 1, 2, 3, 4))
+    assert(new VersionLog(spark, root).commits === Seq(0, 1, 2, 3, 4))
     // _cdf retention rode snapshot retention: dropped commits reaped,
     // the retained head's capture intact
     def cdfExists(v: Int) = new java.io.File(s"$root/_cdf/v=$v").exists()
@@ -999,9 +952,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("shallow clone pins NESTED/partitioned version layouts at the " +
       "v=* ancestor, and refuses un-pinnable sources (ADVICE r17)") {
-    import graft.sources.LakeIO
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_nestpin").toString
+    val root = Scratch.dir("graft_nestpin")
     // hand-build a version whose data files sit under v=0/p=.../ — the
     // old parent-only pin filter registered NOTHING for this layout
     Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "p", "x")
@@ -1033,17 +984,14 @@ class LakeSpec extends AnyFunSuite {
     val err2 = intercept[IllegalArgumentException] {
       LakeIO.shallowClone(spark, s"$root/bad", 0, s"$root/badclone")
     }
-    assert(err2.getMessage.contains("not under any v=<n>"),
-      err2.getMessage)
+    assert(err2.getMessage.contains("not under any v=<n>"), err2.getMessage)
     // the refused clone aborted clean: no reservation, no clone dir
-    assert(LakeIO.listInflight(spark, s"$root/badclone").isEmpty)
+    assert(new VersionLog(spark, s"$root/badclone").inflight.isEmpty)
     assert(!new java.io.File(s"$root/badclone/v=0").exists())
   }
 
   test("history counts a partitioned version's nested files and a shallow " +
       "clone's manifest entries") {
-    import graft.sources.LakeIO
-    import spark.implicits._
     val root = Scratch.dir("lake_history")
     // a version whose data files sit under v=0/p=.../
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "p")
@@ -1061,8 +1009,6 @@ class LakeSpec extends AnyFunSuite {
 
   test("compact on a table whose head is a shallow clone reads and counts " +
       "the head through its manifest") {
-    import graft.sources.LakeIO
-    import spark.implicits._
     val lake = newLake()
     val src = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("k", "s")
     lake.saveVersioned(src.repartition(4), "csrc")
@@ -1084,8 +1030,6 @@ class LakeSpec extends AnyFunSuite {
   test("three-way merge: the full conflict matrix (update/update, " +
       "update/delete, delete/update, delete/delete, insert/insert, " +
       "one-side edits, identical edits)") {
-    import graft.sources.LakeIO
-    import spark.implicits._
     def t(rows: (Long, String)*) = rows.toDF("k", "v")
     val base = t(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d",
       5L -> "e", 6L -> "f", 9L -> "i")
@@ -1099,8 +1043,7 @@ class LakeSpec extends AnyFunSuite {
       9L -> "Z", 7L -> "g", 8L -> "h")
     val theirs = t(1L -> "B", 2L -> "Y", 3L -> "C", 6L -> "f",
       9L -> "Z", 7L -> "G", 8L -> "h")
-    val outcome = LakeIO.threeWayMergeOutcome(base, ours, theirs,
-      Seq("k"))
+    val outcome = LakeIO.threeWayMergeOutcome(base, ours, theirs, Seq("k"))
     val byKey = outcome.collect().map(r => r.getLong(0) ->
       ((if (r.isNullAt(1)) None else Some(r.getString(1))),
         r.getBoolean(2), r.getBoolean(3))).toMap
@@ -1116,12 +1059,11 @@ class LakeSpec extends AnyFunSuite {
     assert(byKey(9L) === ((Some("Z"), true, false)))  // identical upd
     assert(byKey.size === 9)
     // mergeBranch publishes the merged snapshot on the source chain
-    val root = Files.createTempDirectory("graft_merge3").toString
+    val root = Scratch.dir("graft_merge3")
     LakeIO.saveVersion(base, root)            // src v0 = base
     LakeIO.saveVersion(theirs, s"$root/br")   // branch head
     LakeIO.saveVersion(ours, root)            // src head
-    val (v, _) = LakeIO.mergeBranch(spark, root, s"$root/br", 0,
-      Seq("k"))
+    val (v, _) = LakeIO.mergeBranch(spark, root, s"$root/br", 0, Seq("k"))
     assert(v === 2)
     val merged = LakeIO.loadVersion(spark, root, Some(v)).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -1131,13 +1073,11 @@ class LakeSpec extends AnyFunSuite {
 
   test("merge-back on a CDF table: capture=true keeps the feed " +
       "commit-complete; a plain publish would poison every spanning range") {
-    import graft.sources.LakeIO
-    import spark.implicits._
     def t(rows: (Long, String)*) = rows.toDF("k", "v")
     val base = t(1L -> "a", 2L -> "b", 3L -> "c")
     val ours = t(1L -> "A", 2L -> "b", 3L -> "c")    // ours edits key 1
     val theirs2 = t(1L -> "a", 2L -> "b", 3L -> "C") // theirs edits key 3
-    val root = Files.createTempDirectory("graft_mergecdf").toString
+    val root = Scratch.dir("graft_mergecdf")
     LakeIO.saveVersionCdf(base, root, Seq("k"))       // src v0 captured
     LakeIO.saveVersion(theirs2, s"$root/br")          // branch head
     LakeIO.saveVersionCdf(ours, root, Seq("k"))       // src v1 captured
@@ -1155,7 +1095,7 @@ class LakeSpec extends AnyFunSuite {
     assert(head.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       === Map(1L -> "A", 2L -> "b", 3L -> "C"))
     // the contrast: an UNCAPTURED merge on the same shape refuses
-    val root2 = Files.createTempDirectory("graft_mergecdf2").toString
+    val root2 = Scratch.dir("graft_mergecdf2")
     LakeIO.saveVersionCdf(base, root2, Seq("k"))
     LakeIO.saveVersion(theirs2, s"$root2/br")
     LakeIO.saveVersionCdf(ours, root2, Seq("k"))
@@ -1168,8 +1108,6 @@ class LakeSpec extends AnyFunSuite {
 
   test("randomized reference: three-way merge matches a literal " +
       "per-key Scala model over random churn (5 seeded corpora)") {
-    import graft.sources.LakeIO
-    import spark.implicits._
     for (seed <- 1 to 5) {
       val rnd = new scala.util.Random(seed * 7919L)
       val baseKeys = (0L until 60L).filter(_ => rnd.nextDouble() < 0.7)
@@ -1223,8 +1161,6 @@ class LakeSpec extends AnyFunSuite {
   test("compact on a captured table records an EMPTY change set — " +
       "spanning range reads keep working instead of refusing on the " +
       "content-identical rewrite") {
-    import graft.sources.LakeIO
-    import spark.implicits._
     val lake = newLake()
     lake.saveVersionedCdf(Seq((1L, "a"), (2L, "b")).toDF("k", "s"),
       "cc", Seq("k"))
@@ -1244,22 +1180,18 @@ class LakeSpec extends AnyFunSuite {
     // a NON-captured table's compact still writes no _cdf at all
     lake.saveVersioned(Seq((9L, "z")).toDF("k", "s"), "plainv")
     lake.compact("plainv", targetFileBytes = 1L << 20)
-    assert(!new java.io.File(
-      lake.warehouse + "/plainv/_cdf").exists())
+    assert(!new java.io.File(lake.warehouse + "/plainv/_cdf").exists())
   }
 
   test("duplicate source keys: upsert and scd2Apply REFUSE a multi-" +
       "match batch (Delta MERGE parity) instead of landing both rows") {
-    import graft.sources.LakeIO
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_dupkeys").toString
+    val root = Scratch.dir("graft_dupkeys")
     Seq((1L, "a"), (2L, "b")).toDF("k", "s").write.parquet(s"$root/t")
     val dup = Seq((2L, "B1"), (2L, "B2"), (3L, "c")).toDF("k", "s")
     val e1 = intercept[Exception] {
       LakeIO.upsert(dup, s"$root/t", Seq("k"))
     }
-    assert(e1.getMessage.contains("multiple source rows"),
-      e1.getMessage)
+    assert(e1.getMessage.contains("multiple source rows"), e1.getMessage)
     // the refusal is all-or-nothing: the target is untouched
     assert(spark.read.parquet(s"$root/t").count() === 2)
     // a deduped batch then lands normally
@@ -1273,15 +1205,12 @@ class LakeSpec extends AnyFunSuite {
       LakeIO.scd2Apply(dim, Seq((1L, "x"), (1L, "y")).toDF("k", "attr"),
         Seq("k"), Seq("attr"), 2).count()
     }
-    assert(e2.getMessage.contains("multiple source rows"),
-      e2.getMessage)
+    assert(e2.getMessage.contains("multiple source rows"), e2.getMessage)
   }
 
   test("schema drift: diff and merge REFUSE drifted snapshots instead " +
       "of silently dropping the new column; loadVersionEvolved aligns") {
-    import graft.sources.LakeIO
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_schemaevo").toString
+    val root = Scratch.dir("graft_schemaevo")
     LakeIO.saveVersion(Seq((1L, 10.0), (2L, 20.0)).toDF("k", "x"), root)
     LakeIO.saveVersion(
       Seq((1L, 10.0, "a"), (3L, 30.0, "c")).toDF("k", "x", "tag"), root)
@@ -1292,8 +1221,7 @@ class LakeSpec extends AnyFunSuite {
     }
     assert(e1.getMessage.contains("schemas differ"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
-      LakeIO.threeWayMergeOutcome(
-        LakeIO.loadVersion(spark, root, Some(0)),
+      LakeIO.threeWayMergeOutcome(LakeIO.loadVersion(spark, root, Some(0)),
         LakeIO.loadVersion(spark, root, Some(1)),
         LakeIO.loadVersion(spark, root, Some(0)), Seq("k"))
     }
@@ -1309,9 +1237,7 @@ class LakeSpec extends AnyFunSuite {
     val byType = diff.collect()
       .map(r => (r.getAs[String]("_change_type"), r.getAs[Long]("k"),
         Option(r.getAs[String]("tag")))).toSet
-    assert(byType === Set(
-      ("insert", 3L, Some("c")),
-      ("delete", 2L, None),
+    assert(byType === Set(("insert", 3L, Some("c")), ("delete", 2L, None),
       ("update_preimage", 1L, None),
       ("update_postimage", 1L, Some("a"))), s"got $byType")
   }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.DataFrame
@@ -21,7 +20,7 @@ class MemoSpec extends AnyFunSuite {
     df.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id
 
   private def emptyDir(): String =
-    Files.createTempDirectory("graft_memo").toString
+    Scratch.dir("graft_memo")
 
   /** Runs body with a listener counting unpersist calls per RDD id;
     * `count` drains the listener bus first.

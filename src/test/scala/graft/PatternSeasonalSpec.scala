@@ -12,6 +12,7 @@ import graft.operators.{EventWindows, SimSearch}
   */
 class PatternSeasonalSpec extends AnyFunSuite {
   val spark = TestSpark.spark
+  import spark.implicits._
   val sf = TestSpark.sf
 
   private def hu(x: Double, scale: Int): Double =
@@ -100,7 +101,6 @@ class PatternSeasonalSpec extends AnyFunSuite {
 
   test("ts_stl: components reconstruct the day (identity) and a planted " +
       "weekday effect is recovered under a trend that fools raw means") {
-    import spark.implicits._
     // identity on the fixture: value == trend + seasonal + residual
     // up to the rounding slack (4dp value, 6dp components)
     EventWindows.tsStl(spark, sf).collect().foreach { r =>
@@ -175,7 +175,6 @@ class PatternSeasonalSpec extends AnyFunSuite {
 
   test("ts_forecast equals the literal fold on randomized series " +
       "(falling trends force negative-dividend divisions)") {
-    import spark.implicits._
     val rnd = new scala.util.Random(41)
     (1 to 5).foreach { trial =>
       val rows = (for {
@@ -232,7 +231,6 @@ class PatternSeasonalSpec extends AnyFunSuite {
 
   test("event_attribution: last prior click wins, equal-ts tie rules, " +
       "lookback expiry, and unattributed purchases drop") {
-    import spark.implicits._
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val ev = Seq(
       // user 1: two clicks then a purchase — the LATER click wins
@@ -261,7 +259,6 @@ class PatternSeasonalSpec extends AnyFunSuite {
 
   test("ts_forecast_seasonal equals the literal Holt-Winters fold, beats " +
       "Holt linear on planted weekly seasonality, and skips short series") {
-    import spark.implicits._
     // planted weekly cycle + trend: one event per day, value =
     // 100 + 2*d + 40*sin-ish weekly pattern (integer-friendly plateau)
     val weekly = Array(0.0, 30.0, 60.0, 40.0, 10.0, -40.0, -70.0)
@@ -313,7 +310,6 @@ class PatternSeasonalSpec extends AnyFunSuite {
 
   test("ts_seasonal equals a literal weekday-mean model on randomized " +
       "frames (property)") {
-    import spark.implicits._
     val rnd = new scala.util.Random(67)
     (1 to 4).foreach { trial =>
       val rows = (for {
@@ -353,7 +349,6 @@ class PatternSeasonalSpec extends AnyFunSuite {
 
   test("ts_changepoint equals the literal CUSUM fold and fires on a " +
       "planted level shift (not before it)") {
-    import spark.implicits._
     val rnd = new scala.util.Random(61)
     // steady level 100 for 30 days, then a +60 shift for 20 days —
     // plus a falling series exercising the negative-side statistic
@@ -411,7 +406,6 @@ class PatternSeasonalSpec extends AnyFunSuite {
   test("ts_gapfill and ts_interpolate equal the grid-window formulas on " +
       "planted rows (null-valued buckets, one-bucket users, leading and " +
       "trailing gaps)") {
-    import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     def at(h: Int, m: Int = 0) = java.sql.Timestamp.valueOf(
       java.time.LocalDateTime.of(2024, 3, 1, 0, 0).plusHours(h.toLong)
@@ -527,7 +521,6 @@ class PatternSeasonalSpec extends AnyFunSuite {
 
   test("dedup_semantic drops planted 0.95+ near-duplicates, keeps " +
       "the lowest id, and never drops across cells") {
-    import spark.implicits._
     val rnd = new scala.util.Random(23)
     val dim = 16
     def vec(): Array[Float] = Array.fill(dim)(rnd.nextGaussian().toFloat)
@@ -554,7 +547,6 @@ class PatternSeasonalSpec extends AnyFunSuite {
 
   test("dedup_semantic equals the brute-force model on randomized " +
       "frames across strides and thresholds (property)") {
-    import spark.implicits._
     val rnd = new scala.util.Random(53)
     (1 to 5).foreach { trial =>
       val dim = 4 + rnd.nextInt(12)
@@ -596,7 +588,6 @@ class PatternSeasonalSpec extends AnyFunSuite {
 
   test("dedup_semantic with the LEARNED k-means codebook still drops " +
       "every planted near-duplicate (the SemDeDup production config)") {
-    import spark.implicits._
     val rnd = new scala.util.Random(31)
     val dim = 16
     // 4 well-separated gaussian clusters + near-copies: k-means cells
@@ -653,7 +644,6 @@ class PatternSeasonalSpec extends AnyFunSuite {
 
   test("dedup_semantic pair work scales LINEARLY with the corpus " +
       "(executed-metric pin: cell-local pairs, never all-pairs)") {
-    import spark.implicits._
     val dim = 16
     // gaussian base + 1% planted near-copies: `dropped` must be
     // non-empty, else AQE's empty-relation propagation folds the anti

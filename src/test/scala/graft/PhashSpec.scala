@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SpecUtil.randText
 import graft.operators.Multimodal
 
 /** Perceptual near-dup (`multimodal_phash`): planted near-identical
@@ -18,11 +19,6 @@ class PhashSpec extends AnyFunSuite {
       .select(col("asset_id"), encode(col("s"), "UTF-8").as("blob"))
 
   // deterministic pseudo-random printable text, seeded per asset
-  private def randText(seed: Long, n: Int): String = {
-    val rnd = new scala.util.Random(seed)
-    (0 until n).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
-  }
-
   test("planted near-identical asset pairs are found; unrelated are not") {
     val base = randText(42L, 300)
     // near-dup: flip a handful of chars INSIDE the 252-char window —

@@ -11,6 +11,7 @@ import graft.operators.{Aggregates, Joins, Relational}
   */
 class PlanShapeSpec extends AnyFunSuite {
   val spark = TestSpark.spark
+  import spark.implicits._
   val sf = TestSpark.sf
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
@@ -530,7 +531,6 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("TopKPerGroupExec equals the window formulation on random tied data") {
     import org.apache.spark.sql.functions.{col, row_number}
-    import spark.implicits._
     GraftExtensions.install(spark)
     (1 to 4).foreach { seed =>
       val rnd = new scala.util.Random(seed)
@@ -559,16 +559,15 @@ class PlanShapeSpec extends AnyFunSuite {
     // BEFORE the scan. Assert the subquery-shaped partition filter is in
     // the plan and that the join result is correct.
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = Scratch.dir("graft_dpp")
     graft.sources.LakeIO.savePartitioned(
       graft.sources.Tables.orders(spark, sf)
         .select("o_orderkey", "o_totalprice", "o_orderstatus"),
       dir, Seq("o_orderstatus"))
     val fact = spark.read.parquet(dir)
-    import spark.implicits._
     // the dim must be a real scan: a local relation would constant-fold
     // its filter away and leave no selective predicate for the DPP rule
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dppdim").toString
+    val dimDir = Scratch.dir("graft_dppdim")
     Seq(("F", "finished"), ("P", "pending")).toDF("st", "label")
       .write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir).filter(col("label") === "finished")
@@ -695,7 +694,6 @@ class PlanShapeSpec extends AnyFunSuite {
       "full-outer join sits below the Generate that builds change rows") {
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualNullSafe}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join}
-    import spark.implicits._
     val root = Scratch.dir("diff_plan")
     graft.sources.LakeIO.saveVersionCdf(
       Seq((1L, 1.0, "a"), (2L, 2.0, "b")).toDF("k", "x", "s"), root, Seq("k"))

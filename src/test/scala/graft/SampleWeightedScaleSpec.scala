@@ -23,7 +23,7 @@ class SampleWeightedScaleSpec extends AnyFunSuite {
     * that survives on constant weights).
     */
   private def plant(n: Long): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"swscale_$n").toString
+    val dir = Scratch.dir(s"swscale_$n")
     spark.range(1, n + 1)
       .select(col("id").as("o_orderkey"),
         ((col("id") * 37 % 99991).cast("double") / 100.0 + 1.0)

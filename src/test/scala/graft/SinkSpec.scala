@@ -56,17 +56,6 @@ class SinkSpec extends AnyFunSuite {
       nat.filter(col("n_regionkey") =!= 0).count())
   }
 
-  test("compact reduces file count, preserves rows") {
-    val out = tmp() + "/t"
-    val df = Tables.orders(spark, sf).repartition(8)
-    LakeIO.saveDataset(df, out)
-    val before = new java.io.File(out).list().count(_.endsWith(".parquet"))
-    LakeIO.compact(spark, out, 1)
-    val after = new java.io.File(out).list().count(_.endsWith(".parquet"))
-    assert(after < before)
-    assert(spark.read.parquet(out).count() === df.count())
-  }
-
   test("compactToSize bin-packs by bytes; content round-trips exactly") {
     val out = tmp() + "/t"
     val df = Tables.orders(spark, sf)
@@ -100,8 +89,9 @@ class SinkSpec extends AnyFunSuite {
     assert(sizes.max < 2 * sizes.min, s"uneven files: $sizes")
     val back = spark.read.parquet(out)
     assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
-    // one target file is merged without a shuffle
-    LakeIO.compactToSize(spark, out, bytes * 2)
+    // one target file is merged without a shuffle: fewer files, same rows
+    val (before1, after1) = LakeIO.compactToSize(spark, out, bytes * 2)
+    assert(after1 === 1 && after1 < before1)
     assert(LakeIO.dataFiles(spark, out).length === 1)
     assert(spark.read.parquet(out).count() === df.count())
   }

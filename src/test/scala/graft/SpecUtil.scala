@@ -41,6 +41,34 @@ object SpecUtil {
     now
   }
 
+  /** `body`'s result and the number of Spark jobs it started (listener
+    * events drained before and after, so no other work is counted).
+    */
+  def jobsDuring[T](spark: org.apache.spark.sql.SparkSession)(
+      body: => T): (T, Long) = {
+    val jobs = new java.util.concurrent.atomic.AtomicLong()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.Instrument.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      val r = body
+      org.apache.spark.graft.Instrument.drain(sc)
+      (r, jobs.get())
+    } finally sc.removeSparkListener(counter)
+  }
+
+  /** `n` random lowercase letters drawn from `seed`. */
+  def randText(seed: Long, n: Int): String = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
+  }
+
   /** The sample_hash md5-prefix rank (8-hex form), reimplemented
     * independently of the library (java MessageDigest, not Spark
     * functions) for reference models.

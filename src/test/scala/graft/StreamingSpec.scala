@@ -29,12 +29,71 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
   }
 
+  /** `body` on the RocksDB state store, which transformWithState's
+    * multi-column-family state needs; the previous provider is restored.
+    */
+  private def withRocksDb[T](body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Replays the fixture's events through `scores` into memory table
+    * `name` as two file batches: the events, then one sentinel event
+    * `sentinelHours` after the last, whose watermark closes every real
+    * bucket. The processors' MapState and ValueState need the RocksDB
+    * store's column families.
+    */
+  private def replayWithSentinel(name: String, sentinelHours: Long)(
+      scores: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : Unit = {
+    val ev = graft.sources.Tables.events(spark, TestSpark.sf)
+    val dir = Scratch.dir(name)
+    val feed = new java.io.File(s"$dir/feed"); feed.mkdirs()
+    ev.coalesce(1).write.parquet(s"$dir/b1")
+    val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+    val sentinelTs = new Timestamp(maxTs.getTime + sentinelHours * 3600 * 1000)
+    spark.range(1).select(lit(-1L).as("event_id"),
+      lit(sentinelTs).as("ts"), lit(-1L).as("user_id"),
+      lit("__sentinel").as("event_type"), lit(0.0).as("value"),
+      lit("{}").as("props")).write.parquet(s"$dir/b2")
+    def deliver(batch: String): Unit =
+      new java.io.File(s"$dir/$batch").listFiles()
+        .filter(_.getName.endsWith(".parquet")).zipWithIndex
+        .foreach { case (f, i) =>
+          java.nio.file.Files.move(f.toPath,
+            new java.io.File(feed, s"$batch-$i.parquet").toPath)
+        }
+    val stream = spark.readStream.schema(ev.schema).parquet(feed.toString)
+    withRocksDb {
+      val q = scores(stream).writeStream.format("memory")
+        .queryName(name).start()
+      try Seq("b1", "b2").foreach { b => deliver(b); q.processAllAvailable() }
+      finally q.stop()
+    }
+  }
+
+  /** The planted-churn consumer harness: publishes `snapshots` as a
+    * captured table, streams commits (i, i+1] as micro-batch i into the
+    * foreachBatch replica fold, and returns the final replica.
+    */
+  private def streamCdfApplyCore(name: String,
+      snapshots: Seq[org.apache.spark.sql.DataFrame],
+      keys: Seq[String]): org.apache.spark.sql.DataFrame =
+    Streams.streamCdfApplyFromTable(spark, name, keys) { dir =>
+      val tbl = s"$dir/table"
+      snapshots.foreach(s =>
+        graft.sources.LakeIO.saveVersionCdf(s.repartition(4), tbl, keys))
+      tbl
+    }
+
   test("tumbling window: streaming result equals batch form (file replay)") {
     val sfd = TestSpark.sf
-    val stream = Streams.tumblingCounts(Streams.eventsFileStream(spark, sfd))
-    val q = stream.writeStream.format("memory").queryName("tumb")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
+    runToTable(Streams.tumblingCounts(Streams.eventsFileStream(spark, sfd)),
+      "tumb", "complete")
     val streamed = spark.table("tumb")
       .orderBy("win_start", "event_type").collect().toSeq
     val batch = EventWindows.tumbling(spark, sfd)
@@ -45,10 +104,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming OHLC bars equal the batch ts_resample (file replay)") {
     val sfd = TestSpark.sf
-    val stream = Streams.ohlcBars(Streams.eventsFileStream(spark, sfd))
-    val q = stream.writeStream.format("memory").queryName("ohlc")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
+    runToTable(Streams.ohlcBars(Streams.eventsFileStream(spark, sfd)),
+      "ohlc", "complete")
     val streamed = spark.table("ohlc")
       .orderBy("event_type", "win_start").collect().toSeq
     val batch = graft.operators.EventWindows
@@ -70,42 +127,7 @@ class StreamingSpec extends AnyFunSuite {
     // batch pushes the watermark past every real bucket so the full
     // fixture finalizes (the watermarkLateOk delivery shape).
     val sfd = TestSpark.sf
-    val ev = graft.sources.Tables.events(spark, sfd)
-    val dir = java.nio.file.Files.createTempDirectory("graft_anom").toString
-    val feed = new java.io.File(s"$dir/feed"); feed.mkdirs()
-    ev.coalesce(1).write.parquet(s"$dir/b1")
-    val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-    val sentinelTs = new Timestamp(maxTs.getTime + 24L * 3600 * 1000)
-    spark.range(1).select(lit(-1L).as("event_id"),
-      lit(sentinelTs).as("ts"), lit(-1L).as("user_id"),
-      lit("__sentinel").as("event_type"), lit(0.0).as("value"),
-      lit("{}").as("props")).write.parquet(s"$dir/b2")
-    def deliver(batch: String): Unit =
-      new java.io.File(s"$dir/$batch").listFiles()
-        .filter(_.getName.endsWith(".parquet")).zipWithIndex
-        .foreach { case (f, i) =>
-          java.nio.file.Files.move(f.toPath,
-            new java.io.File(feed, s"$batch-$i.parquet").toPath)
-        }
-    val stream = spark.readStream.schema(ev.schema).parquet(feed.toString)
-    // transformWithState's MapState + ValueState need the multi-column-
-    // family store (RocksDB) — the established transformWithState
-    // test conf shape
-    val prev = spark.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = Streams.anomalyScores(stream).writeStream.format("memory")
-        .queryName("anom").outputMode("append").start()
-      try Seq("b1", "b2").foreach { b => deliver(b); q.processAllAvailable() }
-      finally q.stop()
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    replayWithSentinel("anom", sentinelHours = 24)(Streams.anomalyScores)
     val streamed = spark.table("anom")
       .filter(col("event_type") =!= "__sentinel")
       .select("event_type", "bucket", "bucket_value", "z", "anomaly")
@@ -124,39 +146,7 @@ class StreamingSpec extends AnyFunSuite {
     // DAY end (the hourly test's 24h margin is too tight for daily
     // buckets).
     val sfd = TestSpark.sf
-    val ev = graft.sources.Tables.events(spark, sfd)
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
-    val feed = new java.io.File(s"$dir/feed"); feed.mkdirs()
-    ev.coalesce(1).write.parquet(s"$dir/b1")
-    val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-    val sentinelTs = new Timestamp(maxTs.getTime + 72L * 3600 * 1000)
-    spark.range(1).select(lit(-1L).as("event_id"),
-      lit(sentinelTs).as("ts"), lit(-1L).as("user_id"),
-      lit("__sentinel").as("event_type"), lit(0.0).as("value"),
-      lit("{}").as("props")).write.parquet(s"$dir/b2")
-    def deliver(batch: String): Unit =
-      new java.io.File(s"$dir/$batch").listFiles()
-        .filter(_.getName.endsWith(".parquet")).zipWithIndex
-        .foreach { case (f, i) =>
-          java.nio.file.Files.move(f.toPath,
-            new java.io.File(feed, s"$batch-$i.parquet").toPath)
-        }
-    val stream = spark.readStream.schema(ev.schema).parquet(feed.toString)
-    val prev = spark.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = Streams.driftScores(stream).writeStream.format("memory")
-        .queryName("drift").outputMode("append").start()
-      try Seq("b1", "b2").foreach { b => deliver(b); q.processAllAvailable() }
-      finally q.stop()
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    replayWithSentinel("drift", sentinelHours = 72)(Streams.driftScores)
     val streamed = spark.table("drift")
       .filter(col("event_type") =!= "__sentinel")
       .select(col("event_type"),
@@ -177,40 +167,9 @@ class StreamingSpec extends AnyFunSuite {
     // day scores the two-sided integer CUSUM. The batch twin pins the
     // SAME fixed window (refDays = Some(7)).
     val sfd = TestSpark.sf
+    replayWithSentinel("cpoint", sentinelHours = 72)(
+      Streams.changepointScores(_, refDays = 7))
     val ev = graft.sources.Tables.events(spark, sfd)
-    val dir = java.nio.file.Files.createTempDirectory("graft_cp").toString
-    val feed = new java.io.File(s"$dir/feed"); feed.mkdirs()
-    ev.coalesce(1).write.parquet(s"$dir/b1")
-    val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-    val sentinelTs = new Timestamp(maxTs.getTime + 72L * 3600 * 1000)
-    spark.range(1).select(lit(-1L).as("event_id"),
-      lit(sentinelTs).as("ts"), lit(-1L).as("user_id"),
-      lit("__sentinel").as("event_type"), lit(0.0).as("value"),
-      lit("{}").as("props")).write.parquet(s"$dir/b2")
-    def deliver(batch: String): Unit =
-      new java.io.File(s"$dir/$batch").listFiles()
-        .filter(_.getName.endsWith(".parquet")).zipWithIndex
-        .foreach { case (f, i) =>
-          java.nio.file.Files.move(f.toPath,
-            new java.io.File(feed, s"$batch-$i.parquet").toPath)
-        }
-    val stream = spark.readStream.schema(ev.schema).parquet(feed.toString)
-    val prev = spark.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = Streams.changepointScores(stream, refDays = 7)
-        .writeStream.format("memory")
-        .queryName("cpoint").outputMode("append").start()
-      try Seq("b1", "b2").foreach { b => deliver(b); q.processAllAvailable() }
-      finally q.stop()
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
     val streamed = spark.table("cpoint")
       .filter(col("event_type") =!= "__sentinel")
       .select(col("event_type"),
@@ -261,8 +220,7 @@ class StreamingSpec extends AnyFunSuite {
     val clicks = MemoryStream[Clk]
     val purchases = MemoryStream[Pur]
     val q = Streams.clickPurchaseJoinOuter(clicks.toDF(), purchases.toDF())
-      .writeStream.format("memory").queryName("ssouter")
-      .outputMode("append").start()
+      .writeStream.format("memory").queryName("ssouter").start()
     // user 1: purchase with a click 10 min earlier → inner match
     // user 2: purchase with NO click in the preceding 30 min
     clicks.addData(Clk(1, 100, ts("2025-01-01 09:50:00")))
@@ -333,8 +291,7 @@ class StreamingSpec extends AnyFunSuite {
     val clicks = MemoryStream[Clk]
     val purchases = MemoryStream[Pur]
     val q = Streams.clickPurchaseJoinFull(clicks.toDF(), purchases.toDF())
-      .writeStream.format("memory").queryName("ssfull")
-      .outputMode("append").start()
+      .writeStream.format("memory").queryName("ssfull").start()
     // user 1: matched pair; user 2: purchase with no click;
     // user 3: click with no purchase in the following 30 min
     clicks.addData(Clk(1, 100, ts("2025-01-01 09:50:00")),
@@ -385,7 +342,7 @@ class StreamingSpec extends AnyFunSuite {
       .distinct()
     val incoming = Streams.documentsFileStream(spark, sfd)
       .filter(col("doc_id") % 10 >= 8)
-    runToTable(Streams.incrementalDedupStream(incoming, existing),
+    runToTable(graft.operators.TextOps.newContent(incoming, existing),
       "ssdedup", "append")
     val streamed = spark.table("ssdedup").orderBy("doc_id").collect().toSeq
     val batch = graft.operators.TextOps.dedupIncremental(spark, sfd)
@@ -409,8 +366,7 @@ class StreamingSpec extends AnyFunSuite {
   test("watermark drops late data beyond the threshold") {
     val mem = MemoryStream[Ev]
     val counts = Streams.tumblingCounts(mem.toDF())
-    val q = counts.writeStream.format("memory").queryName("wmk")
-      .outputMode("append").start()
+    val q = counts.writeStream.format("memory").queryName("wmk").start()
     // window 10:00 gets 2 events
     mem.addData(
       Ev(1, ts("2025-01-01 10:00:10"), 1, "click", 1.0, "{}"),
@@ -432,8 +388,7 @@ class StreamingSpec extends AnyFunSuite {
   test("dropDuplicatesWithinWatermark removes in-watermark duplicates") {
     val mem = MemoryStream[Ev]
     val q = Streams.dedupWithWatermark(mem.toDF())
-      .writeStream.format("memory").queryName("dedup")
-      .outputMode("append").start()
+      .writeStream.format("memory").queryName("dedup").start()
     mem.addData(
       Ev(1, ts("2025-01-01 10:00:00"), 1, "click", 1.0, "{}"),
       Ev(1, ts("2025-01-01 10:00:05"), 1, "click", 1.0, "{}"), // dup id
@@ -453,8 +408,7 @@ class StreamingSpec extends AnyFunSuite {
     // exactly why state stays bounded at 100 TB stream volumes
     val mem = MemoryStream[Ev]
     val q = Streams.dedupWithWatermark(mem.toDF())
-      .writeStream.format("memory").queryName("dedup_exp")
-      .outputMode("append").start()
+      .writeStream.format("memory").queryName("dedup_exp").start()
     mem.addData(Ev(1, ts("2025-01-01 10:00:00"), 1, "click", 1.0, "{}"))
     q.processAllAvailable()
     // sentinel advances the watermark to 11:50, far past id 1's expiry
@@ -471,8 +425,7 @@ class StreamingSpec extends AnyFunSuite {
   test("flatMapGroupsWithState keeps a running per-user total across batches") {
     val mem = MemoryStream[Ev]
     val q = Streams.runningPurchaseTotals(spark, mem.toDF())
-      .writeStream.format("memory").queryName("stateful")
-      .outputMode("append").start()
+      .writeStream.format("memory").queryName("stateful").start()
     mem.addData(
       Ev(1, ts("2025-01-01 10:00:00"), 1, "purchase", 10.0, "{}"),
       Ev(2, ts("2025-01-01 10:01:00"), 2, "purchase", 5.0, "{}"))
@@ -487,39 +440,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows === Seq((1L, 1L, 10.0), (2L, 2L, 5.0), (1L, 3L, 30.0)))
   }
 
-  test("transformWithState (RocksDB) matches flatMapGroupsWithState totals") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[Ev]
-      val q = Streams.runningPurchaseTotalsTws(spark, mem.toDF())
-        .writeStream.format("memory").queryName("tws")
-        .outputMode("append").start()
-      mem.addData(
-        Ev(1, ts("2025-01-01 10:00:00"), 1, "purchase", 10.0, "{}"),
-        Ev(2, ts("2025-01-01 10:01:00"), 2, "purchase", 5.0, "{}"))
-      q.processAllAvailable()
-      mem.addData(Ev(3, ts("2025-01-01 10:02:00"), 1, "purchase", 20.0, "{}"))
-      q.processAllAvailable()
-      q.stop()
-      val rows = spark.table("tws").orderBy("event_id")
-        .as[(Long, Long, Double)].collect().toSeq
-      assert(rows === Seq((1L, 1L, 10.0), (2L, 2L, 5.0), (1L, 3L, 30.0)))
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("TTL'd state: totals accumulate within TTL, reset after eviction",
       SlowTest) {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val mem = MemoryStream[Ev]
       // TTL of 30s: batch 2 lands well within it (state survives),
       // batch 3 lands after a 35s idle gap (state evicted → restart).
@@ -534,8 +457,7 @@ class StreamingSpec extends AnyFunSuite {
       // TTL/timers), so processAllAvailable never quiesces — poll the
       // sink for the expected row count instead.
       val q = Streams.runningTotalsWithTtl(spark, mem.toDF(), ttlMs = 30000L)
-        .writeStream.format("memory").queryName("tws_ttl")
-        .outputMode("append").start()
+        .writeStream.format("memory").queryName("tws_ttl").start()
       def awaitRows(n: Long): Unit = {
         val deadline = System.currentTimeMillis() + 60000L
         while (spark.table("tws_ttl").count() < n &&
@@ -557,11 +479,6 @@ class StreamingSpec extends AnyFunSuite {
       val rows = spark.table("tws_ttl").orderBy("event_id")
         .as[(Long, Long, Double)].collect().toSeq
       assert(rows === Seq((1L, 1L, 10.0), (1L, 2L, 15.0), (1L, 3L, 7.0)))
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -584,32 +501,13 @@ class StreamingSpec extends AnyFunSuite {
 
   test("sliding windows: streaming result equals batch form (file replay)") {
     val sfd = TestSpark.sf
-    val stream = Streams.slidingCounts(Streams.eventsFileStream(spark, sfd))
-    val q = stream.writeStream.format("memory").queryName("slide")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
+    runToTable(Streams.slidingCounts(Streams.eventsFileStream(spark, sfd)),
+      "slide", "complete")
     val streamed = spark.table("slide")
       .orderBy("win_start", "event_type").collect().toSeq
     val batch = EventWindows.sliding(spark, sfd)
       .select("win_start", "event_type", "n_events")
       .collect().toSeq
-    assert(streamed === batch)
-  }
-
-  test("session windows: streaming session_window matches batch gap-and-island") {
-    val sfd = TestSpark.sf
-    val stream = Streams.sessionCounts(Streams.eventsFileStream(spark, sfd))
-    val q = stream.writeStream.format("memory").queryName("sess")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("sess")
-      .groupBy("user_id").agg(count(lit(1)).as("n_sessions"),
-        sum("n_events").as("n_events"))
-      .orderBy("user_id").as[(Long, Long, Long)].collect().toSeq
-    val batch = EventWindows.sessionize(spark, sfd)
-      .groupBy("user_id").agg(count(lit(1)).as("n_sessions"),
-        sum("n_events").as("n_events"))
-      .orderBy("user_id").as[(Long, Long, Long)].collect().toSeq
     assert(streamed === batch)
   }
 
@@ -619,8 +517,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = EventWindows.sessionFunnelAgg(
       Streams.eventsFileStream(spark, sfd)
         .withWatermark("ts", "10 minutes"), gapMinutes = 30)
-    val q = stream.writeStream.format("memory").queryName("sess_funnel")
-      .outputMode("append").start()
+    val q = stream.writeStream.format("memory").queryName("sess_funnel").start()
     q.processAllAvailable(); q.stop()
     // append mode emits only watermark-CLOSED sessions; the file replay
     // ends with the watermark at max(ts) − 10 min, so compare on the
@@ -763,7 +660,6 @@ class StreamingSpec extends AnyFunSuite {
       s.updated(120, c)
     }
     def blob(s: String) = s.getBytes("UTF-8")
-    import spark.implicits._
     val store = Seq((0L, "image/png", blob(text(1))),
       (1L, "image/png", blob(text(2))))
       .toDF("asset_id", "mime", "blob")
@@ -788,14 +684,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("timer-based sessions close when the watermark passes the gap deadline") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val mem = MemoryStream[Ev]
       val q = Streams.sessionsWithTimers(spark, mem.toDF(), gapMinutes = 30)
-        .writeStream.format("memory").queryName("tsess")
-        .outputMode("append").start()
+        .writeStream.format("memory").queryName("tsess").start()
       // session A: user 1, events at 10:00 + 10:10
       mem.addData(Ev(1, ts("2025-01-01 10:00:00"), 1, "click", 2.0, "{}"),
         Ev(2, ts("2025-01-01 10:10:00"), 1, "click", 3.0, "{}"))
@@ -816,11 +708,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(got === Set(
         (1L, ts("2025-01-01 10:00:00"), 2L, 5.0),
         (1L, ts("2025-01-01 11:30:00"), 1L, 7.0)))
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -829,14 +716,10 @@ class StreamingSpec extends AnyFunSuite {
     // the batch gap-and-island form makes it a separate earlier island.
     // gap (5 min) < watermark delay (10 min) so the late row both
     // survives watermark filtering AND predates start − gap.
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val mem = MemoryStream[Ev]
       val q = Streams.sessionsWithTimers(spark, mem.toDF(), gapMinutes = 5)
-        .writeStream.format("memory").queryName("tsess_late")
-        .outputMode("append").start()
+        .writeStream.format("memory").queryName("tsess_late").start()
       // opens session A at 12:00; watermark advances to 11:50
       mem.addData(Ev(1, ts("2025-01-01 12:00:00"), 1, "click", 2.0, "{}"))
       q.processAllAvailable()
@@ -854,19 +737,11 @@ class StreamingSpec extends AnyFunSuite {
       assert(got === Set(
         (1L, ts("2025-01-01 11:52:00"), 1L, 3.0),
         (1L, ts("2025-01-01 12:00:00"), 1L, 2.0)))
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("timer sessions equal the batch gap-and-island form for closed sessions (file replay)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val sfd = TestSpark.sf
       runToTable(
         Streams.sessionsWithTimers(spark, Streams.eventsFileStream(spark, sfd)),
@@ -884,11 +759,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(streamed.size.toDouble / batch.size >= 0.5,
         s"only ${streamed.size}/${batch.size} sessions closed — " +
           "watermark should close most of a multi-day fixture")
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -897,9 +767,9 @@ class StreamingSpec extends AnyFunSuite {
     // the lake table via Lake.upsert, so a keyed stream materializes as
     // latest-value-wins — equal to applying the same batches in order
     val lakeS = graft.Lake(spark,
-      java.nio.file.Files.createTempDirectory("graft_su_s").toString)
+      Scratch.dir("graft_su_s"))
     val lakeB = graft.Lake(spark,
-      java.nio.file.Files.createTempDirectory("graft_su_b").toString)
+      Scratch.dir("graft_su_b"))
     val seed = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("k", "tag", "v")
     lakeS.saveDataset(seed, "su.target")
@@ -940,7 +810,7 @@ class StreamingSpec extends AnyFunSuite {
     val v0 = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "x")
     val v1 = Seq((1L, 10.0), (2L, 22.0), (3L, 30.0)).toDF("k", "x")
     val v2 = Seq((1L, 10.0), (3L, 30.0), (4L, 40.0)).toDF("k", "x")
-    val got = Streams.streamCdfApplyCore(spark, "stream_cdf_spec",
+    val got = streamCdfApplyCore("stream_cdf_spec",
       Seq(v0, v1, v2), Seq("k"))
       .as[(Long, Double)].collect().toSeq.sorted
     assert(got === Seq((1L, 10.0), (3L, 30.0), (4L, 40.0)),
@@ -972,8 +842,7 @@ class StreamingSpec extends AnyFunSuite {
     val delta = emb.filter(col("vec_id") % 10 >= 8)
       .select(col("vec_id"), col("embedding"))
     val (coarse, pqCb) = SimSearch.storeCodebooks(store)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ingest_idem").toString
+    val dir = Scratch.dir("graft_ingest_idem")
     val index = s"$dir/index"
     SimSearch.encodeIvfPq(store, coarse, pqCb, 4)
       .withColumn("ingest", lit(-1L))
@@ -1029,7 +898,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("checkpointed parquet sink is exactly-once under restart (AvailableNow)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = Scratch.dir("graft_stream")
     val src = Streams.eventsFileStream(spark, TestSpark.sf)
       .select("event_id", "user_id", "value")
     val q1 = Streams.startParquetSink(src, s"$dir/out", s"$dir/ckpt")

@@ -7,6 +7,7 @@ import graft.operators.{GraphOps, TextOps}
 /** Contracts for `graph_triangles` and `mix_curriculum`. */
 class TriangleCurriculumSpec extends AnyFunSuite {
   val spark = TestSpark.spark
+  import spark.implicits._
   val sf = TestSpark.sf
 
   private def literalTriangles(
@@ -21,7 +22,6 @@ class TriangleCurriculumSpec extends AnyFunSuite {
 
   test("triangleEnum equals the literal triple scan on random graphs " +
       "(orientation theorem: each triangle exactly once)") {
-    import spark.implicits._
     val rnd = new scala.util.Random(5)
     (1 to 8).foreach { trial =>
       val n = 12 + rnd.nextInt(30)
@@ -42,7 +42,6 @@ class TriangleCurriculumSpec extends AnyFunSuite {
 
   test("triangleEnum emits ZERO wedges at a hub (degree orientation " +
       "kills the star blowup the naive u<v orientation pays)") {
-    import spark.implicits._
     // star K1,200 + one distant triangle: naive orientation wedges at
     // the hub = C(200,2) ≈ 20k; degree orientation gives the hub no
     // out-pairs, so the wedge join output is exactly the triangle set

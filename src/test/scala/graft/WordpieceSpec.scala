@@ -71,22 +71,11 @@ class WordpieceSpec extends AnyFunSuite {
       "wordpiece_fertility starts no Spark job (the vocabulary is memoized)") {
     val sf = TestSpark.sf
     WordpieceTrain.wordpieceTrain(spark, sf).collect() // warm the memo
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.graft.Instrument.drain(sc)
-    sc.addSparkListener(l)
-    try {
+    val (_, jobs) = SpecUtil.jobsDuring(spark) {
       WordpieceTrain.wordpieceEncode(spark, sf)
       WordpieceTrain.wordpieceFertility(spark, sf)
-      org.apache.spark.graft.Instrument.drain(sc)
-    } finally sc.removeSparkListener(l)
-    assert(jobs.get === 0, s"construction started ${jobs.get} job(s)")
+    }
+    assert(jobs === 0L, s"construction started $jobs job(s)")
   }
 
   test("fixture training: merges are non-trivial, encode covers every " +
